@@ -1557,7 +1557,7 @@ def _q_cosine_topk_wide(spark, sf_dir):
     element transforms (``v || 0.5v+0.125 || -v || 0.25v^2``), putting
     the wide-dims arithmetic path — the ``aggregate(zip_with(slice))``
     HOF fold that replaces the unrolled chain above
-    ``UNROLL_DIMS_LIMIT`` (`llm/similarity.py`, measured in
+    ``UNROLL_DIMS_LIMIT`` (`llm/similarity.py::_fold`, measured in
     BASELINE.md r13: the unrolled form passes the JVM JIT's 8 KB
     method limit by 64 dims and janino's 64 KB by 192) — under the
     external oracle gate. The DuckDB oracle rebuilds the identical

@@ -145,7 +145,7 @@ def semantic_contamination(
     fold (bit-identical across engines and shuffle orders); max/count
     over them are order-independent.
     """
-    from kolang_spark.llm.similarity import _as_double, _dot, _norm
+    from kolang_spark.llm.similarity import _as_double, _fold, _norm
 
     eval_id_col = eval_id_col or id_col
     eval_vec_col = eval_vec_col or vec_col
@@ -172,7 +172,7 @@ def semantic_contamination(
         F.col("_evals"),
         lambda s: F.when(
             (s["e_n"] > 0) & (F.col("_tn") > 0),
-            _dot(s["e_v"], F.col("_tv")) / (s["e_n"] * F.col("_tn")),
+            _fold(s["e_v"], F.col("_tv")) / (s["e_n"] * F.col("_tn")),
         ).otherwise(F.lit(0.0)),
     )
     return (

@@ -22,6 +22,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kolang_spark.llm.similarity import _fold
 from kolang_spark.utils import ensure_min_parallelism
 
 __all__ = ["PcaModel", "pca_fit", "pca_project", "jl_project", "jl_components"]
@@ -191,14 +192,7 @@ def pca_project(
         df.withColumn(tmp, cen)
         .withColumn(
             out_col,
-            F.transform(
-                comp_lit,
-                lambda c: F.aggregate(
-                    F.zip_with(F.col(tmp), c, lambda a, b: a * b),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-            ),
+            F.transform(comp_lit, lambda c: _fold(F.col(tmp), c)),
         )
         .drop(tmp)
     )
@@ -265,14 +259,7 @@ def jl_project(
         df.withColumn(tmp, v)
         .withColumn(
             out_col,
-            F.transform(
-                comp_lit,
-                lambda c: F.aggregate(
-                    F.zip_with(F.col(tmp), c, lambda a, b: a * b),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-            ),
+            F.transform(comp_lit, lambda c: _fold(F.col(tmp), c)),
         )
         .drop(tmp)
     )

@@ -184,7 +184,7 @@ def mmr_rerank(
     Returns ``(query_id_col, id_col, rank, mmr_fp)``, rank 1..k per
     query (fewer when the pool is smaller than ``k``).
     """
-    from kolang_spark.llm.similarity import _as_double, _dot, _norm, _safe_div_cos
+    from kolang_spark.llm.similarity import _as_double, _fold, _norm, _safe_div_cos
 
     if k < 1:
         raise ValueError("k must be >= 1")
@@ -212,7 +212,7 @@ def mmr_rerank(
     )
     a, b = cand.alias("a"), cand.alias("b")
     sim = _safe_div_cos(
-        _dot("a.__v", "b.__v", dims), F.col("a.__n"), F.col("b.__n")
+        _fold("a.__v", "b.__v", dims), F.col("a.__n"), F.col("b.__n")
     )
     sims = (
         a.join(

@@ -7,8 +7,10 @@ O(N·Q/2^planes) at a recall cost controlled by the plane count.
 
 Hot-path arithmetic is generated as **single SQL strings** (``F.expr``)
 when the embedding width is known — one py4j call, versus ~200 driver
-round trips for the equivalent Column-by-Column chain. The FORM is
-width-dispatched (:data:`UNROLL_DIMS_LIMIT`, r13): narrow vectors get
+round trips for the equivalent Column-by-Column chain. Every dot
+product, norm, squared distance and plane signature is one fold
+builder, :func:`_fold`, whose FORM is width-dispatched in that one
+place (:data:`UNROLL_DIMS_LIMIT`, r13): narrow vectors get
 an unrolled product chain (static arithmetic inside a JIT-compilable
 whole-stage-codegen method), wider ones an ``aggregate(zip_with(...))``
 fold whose tiny expression tree keeps codegen compiled and JIT-hot at
@@ -22,10 +24,12 @@ order); no pandas UDF anywhere.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import math
+import operator
 import weakref
-from typing import Optional, Union
+from typing import Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -35,7 +39,7 @@ from kolang_spark.utils import ensure_min_parallelism
 __all__ = [
     "cosine",
     "brute_force_topk",
-    "lsh_signature_hof",
+    "lsh_signature",
     "lsh_topk",
     "ivf_topk",
     "kmeans_centroids",
@@ -66,7 +70,7 @@ _Ref = Union[Column, str]
 #:   fresh-JVM A/B reads unrolled 2.6-11.1 s vs HOF 0.75-0.92 s at
 #:   dims 64-128 (2.8-13.8x) on identical data.
 #:
-#: The HOF twin (aggregate over zip_with, coefficients as array
+#: The HOF form (aggregate over zip_with, coefficients as array
 #: literals) is a tiny expression tree: always compilable, JITs as a
 #: hot loop, bit-equal values (identical left-to-right accumulation
 #: from 0.0). Unrolled only wins while the whole fused method stays
@@ -75,47 +79,86 @@ _Ref = Union[Column, str]
 UNROLL_DIMS_LIMIT = 16
 
 
-def _dot(a: _Ref, b: _Ref, dims: Optional[int] = None) -> Column:
-    """Dot product. With ``dims`` and SQL-name inputs: one unrolled
-    ``F.expr`` sum (codegen-compiled static arithmetic, built in a
-    single driver call) up to :data:`UNROLL_DIMS_LIMIT`; past it, the
-    HOF fold form (same accumulation order — bit-equal, and the
-    expression tree stays small enough for whole-stage codegen at
-    production widths, 768-4096). Fallback: interpreted ``aggregate``
-    fold for unknown widths / Column inputs."""
-    if dims is not None and isinstance(a, str) and isinstance(b, str):
-        if dims <= UNROLL_DIMS_LIMIT:
-            terms = " + ".join(f"{a}[{i}]*{b}[{i}]" for i in range(dims))
+# Element terms of a fold: the SQL template over two element refs, and
+# its Column-API twin (for lambda-variable operands).
+_TERMS = {
+    "dot": ("{x}*{y}", lambda x, y: x * y),
+    "d2": ("({x}-{y})*({x}-{y})", lambda x, y: (x - y) * (x - y)),
+}
+
+
+def _fold(
+    a: _Ref,
+    b: Union[_Ref, Sequence[float], None] = None,
+    dims: Optional[int] = None,
+    term: str = "dot",
+    prefix: bool = True,
+) -> Column:
+    """``Σ term(a[i], b[i])`` accumulated left to right from 0.0 — the
+    one kernel behind every dot product, squared norm (``b`` omitted:
+    a self-fold) and squared distance (``term="d2"``) in this package.
+
+    Form by width, the single :data:`UNROLL_DIMS_LIMIT` dispatch: up to
+    the limit an unrolled chain ``0.0 + t(a[0], b[0]) + ...``, past it
+    (or with unknown ``dims``) an ``aggregate(zip_with(...))`` fold.
+    Both accumulate in the same order, so values are bit-equal across
+    forms and against DuckDB replays evaluating in list order.
+
+    ``prefix`` folds the first ``dims`` elements: zip_with pads the
+    SHORTER side with nulls, so an over-length vector would null the
+    whole fold (and in the signature path collapse every such vector
+    onto one bucket); ``prefix=False`` folds whole arrays (PQ
+    subvectors, exactly ``dims`` long by construction). ``b`` may be a
+    literal coefficient list (inlined as double literals, never
+    sliced).
+
+    SQL-name operands with known ``dims`` build ONE ``F.expr`` string;
+    a Column operand (a HOF lambda variable) or unknown ``dims`` builds
+    through the Column API."""
+    sql_t, col_t = _TERMS[term]
+    rhs = a if b is None else b
+    unrolled = dims is not None and dims <= UNROLL_DIMS_LIMIT
+    if dims is not None and not any(isinstance(o, Column) for o in (a, rhs)):
+
+        def elem(o, i: int) -> str:
+            return f"{o}[{i}]" if isinstance(o, str) else f"{o[i]!r}D"
+
+        def whole(o) -> str:
+            if not isinstance(o, str):
+                return f"array({', '.join(f'{c!r}D' for c in o)})"
+            return f"slice({o}, 1, {dims})" if prefix else o
+
+        if unrolled:
+            terms = " + ".join(
+                sql_t.format(x=elem(a, i), y=elem(rhs, i)) for i in range(dims)
+            )
             return F.expr(f"0.0D + {terms}")
-        # slice to dims: zip_with pads the SHORTER side with nulls, so
-        # an over-length vector would null the whole fold (and in the
-        # signature path collapse every such vector onto one bucket);
-        # the unrolled form reads the dims-prefix — keep that contract
+        if b is None:
+            x2 = sql_t.format(x="x", y="x")
+            return F.expr(f"aggregate({whole(a)}, 0.0D, (acc, x) -> acc + {x2})")
+        xy = sql_t.format(x="x", y="y")
         return F.expr(
-            f"aggregate(zip_with(slice({a}, 1, {dims}), "
-            f"slice({b}, 1, {dims}), (x, y) -> x*y), 0.0D, "
-            "(acc, x) -> acc + x)"
+            f"aggregate(zip_with({whole(a)}, {whole(b)}, (x, y) -> {xy}), "
+            "0.0D, (acc, x) -> acc + x)"
         )
-    a, b = _as_col(a), _as_col(b)
+    a, rhs = _as_col(a), _as_col(rhs)
+    if unrolled:
+        out = F.lit(0.0)
+        for i in range(dims):
+            out = out + col_t(a[i], rhs[i])
+        return out
+    if prefix and dims is not None:
+        a, rhs = F.slice(a, 1, dims), F.slice(rhs, 1, dims)
+    if b is None:
+        return F.aggregate(a, F.lit(0.0), lambda acc, x: acc + col_t(x, x))
     return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+        F.zip_with(a, rhs, col_t), F.lit(0.0), lambda acc, x: acc + x
     )
 
 
 def _norm(a: _Ref, dims: Optional[int] = None) -> Column:
-    if dims is not None and isinstance(a, str):
-        if dims <= UNROLL_DIMS_LIMIT:
-            terms = " + ".join(f"{a}[{i}]*{a}[{i}]" for i in range(dims))
-            return F.expr(f"sqrt(0.0D + {terms})")
-        # dims-prefix like the unrolled form (not the whole array)
-        return F.expr(
-            f"sqrt(aggregate(slice({a}, 1, {dims}), 0.0D, "
-            "(acc, x) -> acc + x*x))"
-        )
-    a = _as_col(a)
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+    """L2 norm: the square root of :func:`_fold`'s self-fold."""
+    return F.sqrt(_fold(a, dims=dims))
 
 
 def _as_col(c: _Ref) -> Column:
@@ -132,7 +175,7 @@ def cosine(a: _Ref, b: _Ref, dims: Optional[int] = None) -> Column:
     recomputed per call — pairwise operators below precompute them once
     per vector instead.
     """
-    return _safe_div_cos(_dot(a, b, dims), _norm(a, dims), _norm(b, dims))
+    return _safe_div_cos(_fold(a, b, dims), _norm(a, dims), _norm(b, dims))
 
 
 def _safe_div_cos(dot: Column, na: Column, nb: Column) -> Column:
@@ -179,7 +222,7 @@ def brute_force_topk(
         "query_id",
         F.col("c_id").alias("vec_id"),
         _safe_div_cos(
-            _dot("q_v", "c_v", dims), F.col("q_n"), F.col("c_n")
+            _fold("q_v", "c_v", dims), F.col("q_n"), F.col("c_n")
         ).alias("cos"),
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
@@ -226,80 +269,34 @@ def lsh_signature(
     vec: str, n_planes: int, dims: int, plane_offset: int = 0
 ) -> Column:
     """Random-hyperplane sign signature (int bucket id, ``n_planes``
-    bits) over the array column named ``vec`` — one generated SQL
-    expression, plane coefficients inlined as literals.
+    bits) over the array column named ``vec``: bit ``p`` is set when
+    the :func:`_fold` dot product of the ``dims``-prefix with plane
+    ``p``'s coefficients (inlined as double literals) is >= 0.
     ``plane_offset`` selects an independent plane family (plane ids
     ``offset..offset+n_planes-1``) — the multi-table LSH lever used by
     banded variants (each band = its own plane family).
 
-    Width dispatch (r13): past :data:`UNROLL_DIMS_LIMIT` dims the
-    per-plane product chain is the same unsplittable unit that kills
-    whole-stage codegen in the scoring paths, so wide signatures route
-    to :func:`lsh_signature_hof` automatically (bit-equal values —
-    identical accumulation order).
+    The per-plane fold is width-dispatched like every other kernel:
+    past :data:`UNROLL_DIMS_LIMIT` the tiny ``aggregate(zip_with(...))``
+    tree keeps many-plane banded projections (8+ planes × several
+    bands) under whole-stage codegen's 64 KB method limit and the
+    JIT's 8 KB one; values are bit-equal either way.
 
     Memoized per active session (see ``_SIG_CACHE``): an unresolved
     Column is immutable and attachable to any DataFrame OF THE SAME
     backend, so the cache drops the repeat parse cost to zero without
     leaking Columns across session/backend boundaries."""
-    if dims > UNROLL_DIMS_LIMIT:
-        return lsh_signature_hof(vec, n_planes, dims, plane_offset)
 
     def build() -> Column:
-        plane_cases = []
+        bits = []
         for p in range(n_planes):
-            terms = " + ".join(
-                f"{vec}[{d}]*{_plane_component(plane_offset + p, d)!r}D"
-                for d in range(dims)
-            )
-            plane_cases.append(
-                f"(CASE WHEN (0.0D + {terms}) >= 0 THEN {1 << p} ELSE 0 END)"
-            )
-        return F.expr(" + ".join(plane_cases))
+            coefs = [_plane_component(plane_offset + p, d) for d in range(dims)]
+            bits.append(F.when(_fold(vec, coefs, dims) >= 0, 1 << p).otherwise(0))
+        return functools.reduce(operator.add, bits)
 
-    return _sig_cached(build, ("unrolled", vec, n_planes, dims, plane_offset))
-
-
-def lsh_signature_hof(
-    vec: str, n_planes: int, dims: int, plane_offset: int = 0
-) -> Column:
-    """Same signature values as :func:`lsh_signature` (identical
-    left-to-right accumulation from 0.0, so doubles are bit-equal),
-    expressed as ``aggregate(zip_with(...))`` folds over coefficient
-    ARRAY LITERALS instead of an unrolled product chain. The HOF form
-    evaluates interpreted — slower per row — but its expression tree
-    is tiny, so many-plane banded variants (8+ planes × several
-    bands in one projection) cannot blow whole-stage codegen's 64 KB
-    method limit the way the unrolled chain does (failed compile +
-    interpreted fallback anyway, plus seconds of wasted compile per
-    action). :func:`lsh_signature` routes here automatically above
-    :data:`UNROLL_DIMS_LIMIT` (r13 — the fresh-JVM A/B also measured
-    this form 2.8-13.8x faster from 64 dims up, where the unrolled
-    method exceeds the JIT's 8 KB limit and runs un-JITted); call it
-    directly only to force the fold at narrow widths. Memoized per
-    active session like :func:`lsh_signature`."""
-
-    def build() -> Column:
-        cases = []
-        for p in range(n_planes):
-            coefs = ", ".join(
-                f"{_plane_component(plane_offset + p, d)!r}D"
-                for d in range(dims)
-            )
-            # slice to dims: zip_with pads the shorter side with
-            # nulls, so an over-length vector would null every
-            # plane's fold and collapse onto ONE all-zero bucket —
-            # mass false duplicates downstream (r13 review); the
-            # unrolled twin reads the dims-prefix, so read it here too
-            dot = (
-                f"aggregate(zip_with(slice({vec}, 1, {dims}), "
-                f"array({coefs}), (x, c) -> x*c), "
-                f"0.0D, (a, x) -> a + x)"
-            )
-            cases.append(f"(CASE WHEN {dot} >= 0 THEN {1 << p} ELSE 0 END)")
-        return F.expr(" + ".join(cases))
-
-    return _sig_cached(build, ("hof", vec, n_planes, dims, plane_offset))
+    # the limit is part of the key: the form is fixed at build time
+    key = (UNROLL_DIMS_LIMIT, vec, n_planes, dims, plane_offset)
+    return _sig_cached(build, key)
 
 
 def lsh_topk(
@@ -366,7 +363,7 @@ def lsh_topk(
         "query_id",
         F.col("c_id").alias("vec_id"),
         _safe_div_cos(
-            _dot("q_v", "c_v", dims), F.col("q_n"), F.col("c_n")
+            _fold("q_v", "c_v", dims), F.col("q_n"), F.col("c_n")
         ).alias("cos"),
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
@@ -385,7 +382,7 @@ def _kmeans_assign(pts: DataFrame, cent_df: DataFrame, dims: int) -> DataFrame:
     shuffled one (p_id, cent_id, p_v) row per point every iteration —
     a full shuffle of the Lloyd sample per round at scale). The
     squared distance is the same left-to-right O(dims) expression
-    (:func:`_d2_cols` — unrolled at narrow widths, HOF fold past
+    (:func:`_fold` — unrolled at narrow widths, HOF fold past
     :data:`UNROLL_DIMS_LIMIT`); plan size stays independent of k (the
     centroids ride as DATA in the broadcast row, not literals; tests
     explain() this frame and assert flatness in k).
@@ -398,7 +395,9 @@ def _kmeans_assign(pts: DataFrame, cent_df: DataFrame, dims: int) -> DataFrame:
         F.transform(
             F.col("__cents__"),
             lambda c: F.struct(
-                _d2_cols(F.col("p_v"), c["g_v"], dims).alias("d2"),
+                _fold(
+                    F.col("p_v"), c["g_v"], dims, term="d2", prefix=False
+                ).alias("d2"),
                 c["cent_id"].alias("cent_id"),
             ),
         )
@@ -571,64 +570,6 @@ def _sub_slice(vec: str, j: int, dsub: int) -> Column:
     return F.slice(F.col(vec), j * dsub + 1, dsub)
 
 
-# ---------------------------------------------------------------------------
-# Column-API twins of the string-named expression builders above, for use
-# inside higher-order-function lambdas (where one operand is a lambda
-# variable, not a named column). Each mirrors its twin's accumulation
-# order EXACTLY — left-to-right from 0.0, same slice/no-slice contract —
-# so values are bit-identical and the DuckDB oracles replay unchanged.
-# They power the r13 zero-shuffle argmin forms: scoring a row against a
-# BROADCAST ARRAY of candidates per row (guide §2.4) instead of
-# fanning out candidate rows and re-collapsing them through a window or
-# groupBy exchange.
-# ---------------------------------------------------------------------------
-
-
-def _dot_cols(a: Column, b: Column, dims: int) -> Column:
-    """Bit-exact Column twin of :func:`_dot` (dims-prefix contract)."""
-    if dims <= UNROLL_DIMS_LIMIT:
-        out = F.lit(0.0)
-        for i in range(dims):
-            out = out + a[i] * b[i]
-        return out
-    return F.aggregate(
-        F.zip_with(
-            F.slice(a, 1, dims), F.slice(b, 1, dims), lambda x, y: x * y
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _d2_cols(a: Column, b: Column, dsub: int) -> Column:
-    """Bit-exact Column twin of :func:`_d2_arrays` (whole-array fold —
-    operands are exactly ``dsub`` long by construction)."""
-    if dsub <= UNROLL_DIMS_LIMIT:
-        out = F.lit(0.0)
-        for i in range(dsub):
-            out = out + (a[i] - b[i]) * (a[i] - b[i])
-        return out
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _dot_arrays_cols(a: Column, b: Column, dsub: int) -> Column:
-    """Bit-exact Column twin of :func:`_dot_arrays`."""
-    if dsub <= UNROLL_DIMS_LIMIT:
-        out = F.lit(0.0)
-        for i in range(dsub):
-            out = out + a[i] * b[i]
-        return out
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _cents_one_row(cent_df: DataFrame) -> DataFrame:
     """Collapse a small ``(cent_id, ...)`` table into ONE row holding a
     cent_id-sorted struct ARRAY — the broadcast payload of the per-row
@@ -666,7 +607,7 @@ def _nearest_cells(
         F.col("__cents__"),
         lambda c: F.struct(
             _safe_div_cos(
-                _dot_cols(F.col(vec), c["g_v"], dims), F.col(nrm), c["g_n"]
+                _fold(F.col(vec), c["g_v"], dims), F.col(nrm), c["g_n"]
             ).alias("cos"),
             c["cent_id"].alias("cell"),
         ),
@@ -738,33 +679,6 @@ def _nearest_cells(
         )
         .withColumn("cell", F.col("__probe__")["cell"])
         .drop("__cents__", "__probe__")
-    )
-
-
-def _d2_arrays(a: str, b: str, dsub: int) -> Column:
-    """Squared L2 distance between two length-``dsub`` array columns —
-    left-to-right from 0.0 (bit-replayable in DuckDB); unrolled up to
-    :data:`UNROLL_DIMS_LIMIT`, HOF fold past it (same order — at
-    dims=1536/m=8 a subspace is already 192 wide, past the measured
-    codegen boundary)."""
-    if dsub <= UNROLL_DIMS_LIMIT:
-        terms = " + ".join(
-            f"({a}[{i}]-{b}[{i}])*({a}[{i}]-{b}[{i}])" for i in range(dsub)
-        )
-        return F.expr(f"0.0D + {terms}")
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> (x-y)*(x-y)), 0.0D, "
-        "(acc, x) -> acc + x)"
-    )
-
-
-def _dot_arrays(a: str, b: str, dsub: int) -> Column:
-    if dsub <= UNROLL_DIMS_LIMIT:
-        terms = " + ".join(f"{a}[{i}]*{b}[{i}]" for i in range(dsub))
-        return F.expr(f"0.0D + {terms}")
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> x*y), 0.0D, "
-        "(acc, x) -> acc + x)"
     )
 
 
@@ -901,7 +815,9 @@ def pq_encode(
             F.transform(
                 F.col("__books__")[j],
                 lambda e: F.struct(
-                    _d2_cols(sub, e["s_v"], dsub).alias("d2"),
+                    _fold(
+                        sub, e["s_v"], dsub, term="d2", prefix=False
+                    ).alias("d2"),
                     e["code"].alias("code"),
                     e["s_v"].alias("s_v"),
                 ),
@@ -927,9 +843,7 @@ def pq_encode(
             F.transform(gb, lambda x: x["code"].cast("smallint")).alias(
                 "codes"
             ),
-            F.sqrt(
-                F.aggregate(vhat, F.lit(0.0), lambda acc, x: acc + x * x)
-            ).alias("recon_n"),
+            _norm(vhat).alias("recon_n"),
         )
     )
 
@@ -1096,7 +1010,7 @@ def ivf_pq_topk(
         q_sub = F.slice(F.col("q_v"), j * dsub + 1, dsub)
         return F.transform(
             F.col("__books__")[j],
-            lambda e: _dot_arrays_cols(q_sub, e["s_v"], dsub),
+            lambda e: _fold(q_sub, e["s_v"], dsub, prefix=False),
         )
 
     adc = F.flatten(F.array(*[_adc_j(j) for j in range(m)]))
@@ -1138,7 +1052,7 @@ def ivf_pq_topk(
         "query_id",
         "vec_id",
         _safe_div_cos(
-            _dot("q_v", "c_v", dims), F.col("q_n"), F.col("c_n")
+            _fold("q_v", "c_v", dims), F.col("q_n"), F.col("c_n")
         ).alias("cos"),
     )
     w_e = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
@@ -1226,7 +1140,7 @@ def ivf_topk(
         "query_id",
         F.col("c_id").alias("vec_id"),
         _safe_div_cos(
-            _dot("q_v", "c_v", dims), F.col("q_n"), F.col("c_n")
+            _fold("q_v", "c_v", dims), F.col("q_n"), F.col("c_n")
         ).alias("cos"),
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
@@ -1297,7 +1211,7 @@ def hard_negative_topk(
             "query_id",
             F.col("c_id").alias("vec_id"),
             _safe_div_cos(
-                _dot("q_v", "c_v", dims), F.col("q_n"), F.col("c_n")
+                _fold("q_v", "c_v", dims), F.col("q_n"), F.col("c_n")
             ).alias("cos"),
         )
     else:
@@ -1401,7 +1315,7 @@ def build_contrastive_rows(
             "query_id",
             F.col("p_vid").alias("pos_id"),
             _safe_div_cos(
-                _dot("q_v", "p_v", dims), F.col("q_n"), F.col("p_n")
+                _fold("q_v", "p_v", dims), F.col("q_n"), F.col("p_n")
             ).alias("pos_cos"),
         )
     )

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 
 __all__ = ["pagerank", "label_propagation"]
@@ -138,10 +138,6 @@ def pagerank(
     # each round's dangling mass come out of the SAME action that
     # checkpoints the new ranks (observe-fusion, the
     # connected_components trick) instead of a separate collect job.
-    try:
-        from pyspark.sql import Observation
-    except ImportError:  # pragma: no cover - Observation ships with 3.3+
-        Observation = None
     from kolang_spark.utils import iter_checkpoint, observation_value
 
     nodes = (
@@ -162,19 +158,15 @@ def pagerank(
     # node count + dangling count ride the spine checkpoint's own
     # action (observe-fusion); fallback = two explicit counts on
     # runtimes where checkpoint metrics never fire
-    n = n_dangling = None
-    if Observation is not None:
-        setup_obs = Observation()
-        nodes = nodes.observe(
-            setup_obs,
-            F.count(F.lit(1)).alias("n"),
-            F.sum((~F.col("_has_out")).cast("long")).alias("nd"),
-        )
-        nodes = iter_checkpoint(nodes, checkpoint_dir)
-        n = observation_value(setup_obs, "n", timeout=5.0)
-        n_dangling = observation_value(setup_obs, "nd", timeout=5.0)
-    else:  # pragma: no cover - pre-3.3 fallback
-        nodes = iter_checkpoint(nodes, checkpoint_dir)
+    setup_obs = Observation()
+    nodes = nodes.observe(
+        setup_obs,
+        F.count(F.lit(1)).alias("n"),
+        F.sum((~F.col("_has_out")).cast("long")).alias("nd"),
+    )
+    nodes = iter_checkpoint(nodes, checkpoint_dir)
+    n = observation_value(setup_obs, "n", timeout=5.0)
+    n_dangling = observation_value(setup_obs, "nd", timeout=5.0)
     if n is None:
         n = nodes.count()
     if n == 0:
@@ -236,21 +228,15 @@ def pagerank(
         # (observation_value) — on a runtime whose localCheckpoint runs
         # outside a tracked SQL execution the metrics never fire, and
         # the explicit aggregate below takes over instead of hanging.
-        d = None
-        if Observation is not None:
-            obs = Observation()
-            nxt = nxt.observe(
-                obs,
-                F.sum(
-                    F.when(~F.col("_has_out"), F.col("r")).otherwise(
-                        F.lit(0)
-                    )
-                ).alias("dang"),
-            )
-            ranks = iter_checkpoint(nxt, checkpoint_dir)
-            d = observation_value(obs, "dang", timeout=5.0)
-        else:  # pragma: no cover - pre-3.3 fallback
-            ranks = iter_checkpoint(nxt, checkpoint_dir)
+        obs = Observation()
+        nxt = nxt.observe(
+            obs,
+            F.sum(
+                F.when(~F.col("_has_out"), F.col("r")).otherwise(F.lit(0))
+            ).alias("dang"),
+        )
+        ranks = iter_checkpoint(nxt, checkpoint_dir)
+        d = observation_value(obs, "dang", timeout=5.0)
         if d is None:
             d = (
                 ranks.where(~F.col("_has_out"))

@@ -3,16 +3,16 @@
 
 Every similarity/dedup query in the registry runs at 16-64 dims; real
 embedding models emit 768-4096. The unrolled O(dims) expression chains
-(`llm/similarity.py::_dot/_norm/lsh_signature`) and the 64KB-codegen-
-aware HOF alternative (`lsh_signature_hof`) are DESIGNED for width,
-but nothing measures them there. This sweep times the four embedding
+and the 64KB-codegen-aware HOF fold (the two forms of
+`llm/similarity.py::_fold`, behind cosine, norms and `lsh_signature`)
+are DESIGNED for width, but nothing measures them there. This sweep times the four embedding
 paths at dims in {64, 256, 768, 1536} over a deterministic synthetic
 corpus and, at every width, asks the JVM for the generated-code
 method sizes (`debug.codegenString` exposes maxMethodCodeSize per
 WholeStageCodegen subtree) so a silent interpreted fallback at width
 shows up as a number, not a vibe:
 
-* cosine      — brute_force_topk (the unrolled _dot/_norm hot path)
+* cosine      — brute_force_topk (the dot/norm hot path)
 * lsh_topk    — unrolled lsh_signature (n_planes=8) + bucket join
 * ivf_pq_topk — PQ ADC gather (plan size ~m, not dims, after encode)
 * kmeans      — kmeans_centroids assignment (unrolled O(dims) d2)

@@ -245,25 +245,6 @@ def test_incremental_embedding_dedup_file_uri_state(spark, tmp_path):
     assert st.count() == 4  # 2 accepted vectors x 2 bands
 
 
-def test_lsh_signature_hof_equals_unrolled(spark):
-    from pyspark.sql import Row
-    from pyspark.sql import functions as F
-
-    from kolang_spark.llm.similarity import lsh_signature, lsh_signature_hof
-
-    rows = [
-        Row(v=[float(((s * 13 + d * 7) % 101) - 50) / 25.0 for d in range(64)])
-        for s in range(50)
-    ]
-    df = spark.createDataFrame(rows, "v array<double>")
-    for offset in (0, 8):
-        got = df.select(
-            lsh_signature("v", 8, 64, plane_offset=offset).alias("a"),
-            lsh_signature_hof("v", 8, 64, plane_offset=offset).alias("b"),
-        ).collect()
-        assert all(r.a == r.b for r in got), offset
-
-
 def test_incremental_embedding_malformed_vectors_get_no_bands(spark, tmp_path):
     """NULL-element / short / empty embeddings must NOT collapse into
     one all-zero-sign bucket (they'd flag unrelated junk as near-dups

@@ -3,9 +3,10 @@ item 3, measured in r13 — scripts/sweep_r13.py + BASELINE.md): the
 unrolled product-chain form blows the JVM JIT's 8 KB method limit by
 64 dims (runs in the bytecode interpreter, 3-14x slower) and janino's
 64 KB hard limit by 192 dims (whole-stage codegen silently disabled),
-so `_dot`/`_norm`/`lsh_signature`/`_d2_arrays`/`_dot_arrays` route to
-the bit-equal aggregate(zip_with(...)) HOF fold above
-UNROLL_DIMS_LIMIT. These tests pin the dispatch, the prefix-slice
+so the one fold builder `_fold` (behind `_norm`, `cosine`,
+`lsh_signature` and the IVF/PQ/k-means argmins) emits the bit-equal
+aggregate(zip_with(...)) HOF fold above UNROLL_DIMS_LIMIT. These tests
+pin the dispatch, the bit-equality of the two forms, the prefix-slice
 semantics (the zip_with null-padding trap), and — under
 ``spark.sql.codegen.fallback=false``, which turns a codegen compile
 failure into an error instead of a silent interpreted fallback — that
@@ -24,26 +25,84 @@ def _sql(col) -> str:
 def test_dispatch_forms_by_width(spark):
     lim = S.UNROLL_DIMS_LIMIT
     # at/below the limit: unrolled static chain, no HOF
-    s = _sql(S._dot("a", "b", lim))
+    s = _sql(S._fold("a", "b", lim))
     assert f"a[{lim - 1}]" in s and "aggregate" not in s
     # above: HOF fold over the dims-prefix
-    s = _sql(S._dot("a", "b", lim + 1))
+    s = _sql(S._fold("a", "b", lim + 1))
     assert "aggregate" in s and f"slice(a, 1, {lim + 1})" in s
     s = _sql(S._norm("v", lim + 1))
     assert "aggregate" in s and f"slice(v, 1, {lim + 1})" in s
     assert "aggregate" not in _sql(S._norm("v", lim))
-    # PQ subspace helpers follow the same rule on dsub
-    assert "aggregate" not in _sql(S._d2_arrays("x", "y", lim))
-    assert "aggregate" in _sql(S._d2_arrays("x", "y", lim + 1))
-    assert "aggregate" in _sql(S._dot_arrays("x", "y", lim + 1))
+    # PQ subspace folds (whole arrays) follow the same rule on dsub
+    d2 = {"term": "d2", "prefix": False}
+    assert "aggregate" not in _sql(S._fold("x", "y", lim, **d2))
+    assert "aggregate" in _sql(S._fold("x", "y", lim + 1, **d2))
+    assert "aggregate" in _sql(S._fold("x", "y", lim + 1, prefix=False))
+    # so do Column operands (the lambda-variable argmin paths)
+    x, y = F.col("x"), F.col("y")
+    assert "aggregate" not in _sql(S._fold(x, y, lim, **d2))
+    assert "aggregate" in _sql(S._fold(x, y, lim + 1, **d2))
 
 
 def test_lsh_signature_routes_to_hof_above_limit(spark):
     lim = S.UNROLL_DIMS_LIMIT
     wide = _sql(S.lsh_signature("v", 4, lim + 1))
-    assert wide == _sql(S.lsh_signature_hof("v", 4, lim + 1))
+    assert "aggregate" in wide and f"slice(v, 1, {lim + 1})" in wide
     narrow = _sql(S.lsh_signature("v", 4, lim))
     assert "aggregate" not in narrow
+
+
+def _coefs(dims):
+    return [S._plane_component(3, d) for d in range(dims)]
+
+
+# term -> columns that evaluate it over array columns a, b (both
+# exactly dims long): SQL-name operands and Column operands
+_TERM_COLS = {
+    "dot": lambda d: [S._fold("a", "b", d), S._fold(F.col("a"), F.col("b"), d)],
+    "norm": lambda d: [S._norm("a", d), S._norm(F.col("a"), d)],
+    "d2": lambda d: [
+        S._fold("a", "b", d, term="d2", prefix=False),
+        S._fold(F.col("a"), F.col("b"), d, term="d2", prefix=False),
+    ],
+    "sig": lambda d: [
+        S._fold("a", _coefs(d), d),
+        S.lsh_signature("a", 4, d, plane_offset=8),
+    ],
+}
+
+
+@pytest.mark.parametrize(
+    "dims", [1, S.UNROLL_DIMS_LIMIT, S.UNROLL_DIMS_LIMIT + 1, 64]
+)
+@pytest.mark.parametrize("term", sorted(_TERM_COLS))
+def test_fold_forms_bit_equal(spark, monkeypatch, term, dims):
+    """The unrolled chain and the HOF fold are the SAME left-to-right
+    sum from 0.0: forcing each form at every width (limit patched
+    like the negative control below) yields bit-identical doubles on
+    mixed-sign, non-dyadic vectors — ``==``, never approx — for both
+    operand kinds (SQL names and Columns)."""
+    rows = [
+        (
+            [((s * 37 + i * 11) % 97 - 48) / 7.3 for i in range(dims)],
+            [((s * 13 + i * 29) % 89 - 44) / 3.1 for i in range(dims)],
+        )
+        for s in range(8)
+    ]
+    df = spark.createDataFrame(rows, "a array<double>, b array<double>")
+    got = {}
+    for form, limit in (("unrolled", 10**9), ("fold", 0)):
+        monkeypatch.setattr(S, "UNROLL_DIMS_LIMIT", limit)
+        cols = _TERM_COLS[term](dims)
+        assert all(
+            ("aggregate" in _sql(c)) == (form == "fold") for c in cols
+        ), form
+        got[form] = df.select(
+            *[c.alias(f"c{i}") for i, c in enumerate(cols)]
+        ).collect()
+    assert got["unrolled"] == got["fold"]
+    if term != "sig":  # SQL-name and Column operands agree too
+        assert all(r.c0 == r.c1 for r in got["fold"])
 
 
 def test_hof_reads_dims_prefix_not_padded_nulls(spark):
