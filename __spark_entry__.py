@@ -104,7 +104,14 @@ def _write_two_batches(df, p1, p2, f1, f2) -> None:
     what makes this restructure safe). ``where(p1 | p2)`` keeps the
     exact old row semantics: rows matching neither predicate (or
     null) land in neither batch, exactly as the two independent
-    ``where`` writes dropped them."""
+    ``where`` writes dropped them.
+
+    Precondition: ``p1`` and ``p2`` must be DISJOINT. A row matching
+    both lands only in batch 2 (the old two-write form put it in
+    both). It is documented, not asserted: checking it would cost a
+    Spark job in every streaming query that writes its fixture here,
+    and every call site splits on one column (disjoint residues or a
+    threshold)."""
     import shutil
 
     from pyspark.sql import functions as _F
@@ -4064,7 +4071,8 @@ def _q_incremental_minhash_batches(spark, sf_dir):
 
 def _q_minhash_pinned_state_roundtrip(spark, sf_dir):
     """r12 debut: the construction-params sidecar round trip (r11
-    verdict item 1 — `kolang_spark/sources/state.py` +
+    verdict item 1 — the state protocol of `kolang_spark/sources/state.py`;
+    the minhash kind's verify step with its legacy hook is
     `llm/dedup.py::_check_and_pin_minhash_state`). The two-batch
     incremental minhash ingest of `incremental_minhash_batches`, but
     under NON-default banding (num_hashes=8, bands=4; hash_fn='md5'

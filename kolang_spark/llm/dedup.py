@@ -24,6 +24,7 @@ from kolang_spark.llm.textstats import (
     tokenize,
     word_ngrams,
 )
+from kolang_spark.sources.state import StateSpec
 from kolang_spark.utils import ColumnOrName, ensure_min_parallelism, to_col
 
 __all__ = [
@@ -1066,39 +1067,25 @@ def incremental_line_dedup(
     lines only; re-assembly is the same per-doc groupBy as the batch
     operator. Returns ``(id_col, out_col, n_kept, n_removed)``.
     """
-    marked, novel = _incremental_lines_flagged(
+    marked, novel, store = _incremental_lines_flagged(
         spark, new_df, state_path, id_col, text_col, delim
     )
-    novel.write.mode("append").parquet(state_path)
-    _ensure_line_state_pinned(spark, state_path, delim)
+    store.append(novel)
     return _rebuild_deduped_lines(new_df, marked, id_col, text_col, delim, out_col)
 
 
-def _ensure_line_state_pinned(spark, state_path: str, delim: str) -> None:
-    from kolang_spark.sources.state import ensure_state_pinned
-
-    ensure_state_pinned(spark, state_path, "line_hashes", {"delim": delim})
-
-
-def _check_line_state(spark, state_path: str, delim: str) -> None:
-    """Verify-or-pin the line-hash state's construction param (r12 —
-    the minhash guard generalized per the r11 verdict): the state's
-    keys are md5 of lines SPLIT BY ``delim``, so probing with a
-    different delimiter hashes different line boundaries — state hits
-    are missed (duplicated lines survive) and the batch's re-assembled
-    documents use the wrong separator."""
-    from kolang_spark.sources.state import check_state_meta
-
-    check_state_meta(
-        spark,
-        state_path,
-        "line_hashes",
-        {"delim": delim},
-        consequence=(
-            "line keys hashed under a different delimiter never match "
-            "the state's, so duplicated lines would silently survive"
-        ),
-    )
+# keys are md5 of lines SPLIT BY ``delim``: a different delimiter hashes
+# different line boundaries, so state hits are missed and re-assembled
+# documents use the wrong separator
+_LINE_STATE = StateSpec(
+    "line_hashes",
+    params=lambda delim: {"delim": delim},
+    schema="line_key string, batch_id bigint",
+    consequence=(
+        "line keys hashed under a different delimiter never match "
+        "the state's, so duplicated lines would silently survive"
+    ),
+)
 
 
 def _incremental_lines_flagged(
@@ -1113,24 +1100,19 @@ def _incremental_lines_flagged(
     """Shared core of :func:`incremental_line_dedup` and
     :func:`kolang_spark.streaming.sinks.line_dedup_sink`: the batch's
     per-line keep flags computed against the CURRENT state, plus the
-    batch's novel line keys — with NOTHING written, so each caller
-    controls its own crash-safety write order. ``marked`` is eagerly
-    ``localCheckpoint``-ed: the flags are pinned against whatever state
-    appends happen next and never lazily re-read the state.
+    batch's novel line keys and the verified state — with NOTHING
+    written, so each caller controls its own crash-safety write order.
+    ``marked`` is eagerly ``localCheckpoint``-ed: the flags are pinned
+    against whatever state appends happen next and never lazily
+    re-read the state.
 
-    ``exclude_batch``: ignore state rows whose ``batch_id`` equals this
-    value (rows missing the column count as foreign). The streaming
-    sink passes its foreachBatch batch_id — stable across restart
-    replays — so a batch replayed AFTER its own state append recomputes
-    the IDENTICAL flags instead of finding its own keys in state and
-    gutting every document (replay idempotence for every crash window).
-    The state read is de-duplicated regardless: a crashed replay can
+    ``exclude_batch`` is the streaming sink's replay guard
+    (:meth:`kolang_spark.sources.state.BoundState.read`). The state
+    read is de-duplicated regardless: a crashed replay can
     legitimately append the same keys twice, and duplicate state rows
     must not double-join batch lines (that would inflate ``n_removed``).
     """
     import re as _re
-
-    from kolang_spark.sources.io import path_exists
 
     lines = new_df.select(
         F.col(id_col).alias("_id"),
@@ -1141,25 +1123,13 @@ def _incremental_lines_flagged(
     keyed = lines.withColumn("_key", F.md5(F.trim(F.col("_line")))).withColumn(
         "_ws", F.trim(F.col("_line")) == ""
     )
-    _check_line_state(spark, state_path, delim)
-    if path_exists(spark, state_path):
-        # EXPLICIT read schema (advisor r12): batch operator and sink
-        # append mixed schemas (batch rows carry no batch_id), and the
-        # default single-footer schema pick could nondeterministically
-        # hide the column and silently disable the replay-idempotence
-        # filter below. Files missing batch_id read it as NULL (=
-        # foreign), deterministically, with no mergeSchema footer sweep.
-        raw = spark.read.schema("line_key string, batch_id bigint").parquet(
-            state_path
-        )
-        if exclude_batch is not None:
-            raw = raw.where(
-                F.col("batch_id").isNull()
-                | (F.col("batch_id") != F.lit(int(exclude_batch)))
-            )
-        state = raw.select(F.col("line_key").alias("__lk__")).distinct()
-    else:
-        state = spark.createDataFrame([], "__lk__ string")
+    store = _LINE_STATE.bind(spark, state_path, delim)
+    store.verify()
+    state = (
+        store.read(exclude_batch)
+        .select(F.col("line_key").alias("__lk__"))
+        .distinct()
+    )
     pre = keyed.join(
         state.withColumn("__seen__", F.lit(True)),
         keyed["_key"] == F.col("__lk__"),
@@ -1187,7 +1157,7 @@ def _incremental_lines_flagged(
         .select(F.col("_key").alias("line_key"))
         .distinct()
     )
-    return marked, novel
+    return marked, novel, store
 
 
 def _rebuild_deduped_lines(
@@ -1672,16 +1642,10 @@ def incremental_exact_dedup(
     from kolang_spark.llm.textstats import doc_fingerprint
     from kolang_spark.sources.io import fs_delete, path_exists
 
-    _check_exact_state(spark, state_path)
+    store = _EXACT_STATE.bind(spark, state_path)
+    store.verify()
     batch = new_df.withColumn("fingerprint", doc_fingerprint(text_col))
-    if path_exists(spark, state_path):
-        # explicit schema: deterministic under mixed-schema appends and
-        # immune to a foreign footer's column layout (advisor r12)
-        state = spark.read.schema("fingerprint string").parquet(
-            state_path
-        ).select(F.col("fingerprint").alias("__fp__"))
-    else:
-        state = spark.createDataFrame([], "__fp__ string")
+    state = store.read().select(F.col("fingerprint").alias("__fp__"))
     state_flagged = state.withColumn("__seen__", F.lit(True))
 
     bloom_path = None
@@ -1785,83 +1749,23 @@ def incremental_exact_dedup(
         # NOTE: compaction runs at the START of the next call (before
         # the sidecar is read), never here — the returned `marked`
         # plan still references the current bloom files
-    novel.write.mode("append").parquet(state_path)
-    _ensure_exact_state_pinned(spark, state_path)
+    store.append(novel)
     return marked
 
 
-_CDC_CONSEQUENCE = (
-    "content-defined chunk boundaries (and so chunk keys) depend on "
-    "window/mask_bits/base/mod, so keys from different parameters "
-    "never match the store's — every chunk would be reported novel "
-    "and the dedup ledger silently wrong"
+# the keys are unparameterized md5 document fingerprints (deliberately
+# not under the xxhash64 default — persisted state stays portable), so
+# there are no params to pin, but the kind stamp still refuses another
+# family's state dir, whose band keys would never match a fingerprint
+_EXACT_STATE = StateSpec(
+    "exact_fingerprints",
+    params=lambda: {},
+    schema="fingerprint string",
+    consequence=(
+        "fingerprints joined against another state family's keys "
+        "never match, so every duplicate would be silently accepted"
+    ),
 )
-
-
-def _cdc_params(window, mask_bits, base, mod) -> dict:
-    return {
-        "window": int(window),
-        "mask_bits": int(mask_bits),
-        "base": int(base),
-        "mod": int(mod),
-    }
-
-
-def _check_cdc_state(spark, state_path, window, mask_bits, base, mod) -> None:
-    """Verify-or-pin the CDC chunk store's construction params (r12 —
-    the minhash guard generalized per the r11 verdict; this family was
-    found in the same round's audit for persisted states the first
-    pass missed)."""
-    from kolang_spark.sources.state import check_state_meta
-
-    check_state_meta(
-        spark,
-        state_path,
-        "cdc_chunks",
-        _cdc_params(window, mask_bits, base, mod),
-        consequence=_CDC_CONSEQUENCE,
-    )
-
-
-def _ensure_cdc_state_pinned(
-    spark, state_path, window, mask_bits, base, mod
-) -> None:
-    from kolang_spark.sources.state import ensure_state_pinned
-
-    ensure_state_pinned(
-        spark,
-        state_path,
-        "cdc_chunks",
-        _cdc_params(window, mask_bits, base, mod),
-    )
-
-
-def _ensure_exact_state_pinned(spark, state_path: str) -> None:
-    from kolang_spark.sources.state import ensure_state_pinned
-
-    ensure_state_pinned(spark, state_path, "exact_fingerprints", {})
-
-
-def _check_exact_state(spark, state_path: str) -> None:
-    """Verify-or-pin the exact-dedup state's KIND (r12): its keys are
-    unparameterized md5 document fingerprints (deliberately not under
-    the xxhash64 flip — portability of persisted state), so there are
-    no construction params to pin, but the kind stamp still catches
-    the cross-family mistake (pointing incremental_exact_dedup at a
-    minhash/line/CMS state dir), which would otherwise join
-    fingerprints against band keys and accept everything."""
-    from kolang_spark.sources.state import check_state_meta
-
-    check_state_meta(
-        spark,
-        state_path,
-        "exact_fingerprints",
-        {},
-        consequence=(
-            "fingerprints joined against another state family's keys "
-            "never match, so every duplicate would be silently accepted"
-        ),
-    )
 
 
 def _maybe_compact_bloom(
@@ -2015,61 +1919,56 @@ def incremental_embedding_dedup(
     duplicate (r12; pre-r12 states carry no provenance — the first
     probe's params become the assertion of record).
     """
-    _check_embedding_state(spark, state_path, dims, planes_per_band, bands)
+    marked, novel, store = _incremental_embedding_flagged(
+        spark, new_df, state_path, id_col, vec_col, dims, planes_per_band, bands
+    )
+    store.append(novel)
+    return marked
+
+
+# a different random-plane family (planes_per_band/bands) or input
+# dimensionality produces band keys that never collide with the state's
+_EMBEDDING_STATE = StateSpec(
+    "embedding_signlsh",
+    params=lambda dims, planes_per_band, bands: {
+        "dims": int(dims),
+        "planes_per_band": int(planes_per_band),
+        "bands": int(bands),
+    },
+    schema="band_id int, band_key string, batch_id bigint",
+    consequence=(
+        "sign-LSH band keys from different plane families never "
+        "collide, so every duplicate would be silently accepted"
+    ),
+)
+
+
+def _incremental_embedding_flagged(
+    spark,
+    new_df: DataFrame,
+    state_path: str,
+    id_col: str,
+    vec_col: str,
+    dims: int,
+    planes_per_band: int,
+    bands: int,
+    exclude_batch: Optional[int] = None,
+):
+    """The flag computation of :func:`incremental_embedding_dedup`
+    WITHOUT the state append, shared with
+    :func:`kolang_spark.streaming.embedding_dedup_sink`: returns
+    ``(marked, novel, store)`` — see :func:`_incremental_banded_flagged`."""
+    store = _EMBEDDING_STATE.bind(
+        spark, state_path, dims, planes_per_band, bands
+    )
+    store.verify()
     banded = _embedding_band_keys(
         new_df, id_col, vec_col, dims, planes_per_band, bands
     )
     marked, novel = _incremental_banded_flagged(
-        spark, new_df, banded, state_path, id_col, "is_near_duplicate"
+        store, new_df, banded, id_col, exclude_batch
     )
-    novel.write.mode("append").parquet(state_path)
-    _ensure_embedding_state_pinned(
-        spark, state_path, dims, planes_per_band, bands
-    )
-    return marked
-
-
-def _ensure_embedding_state_pinned(
-    spark, state_path: str, dims: int, planes_per_band: int, bands: int
-) -> None:
-    from kolang_spark.sources.state import ensure_state_pinned
-
-    ensure_state_pinned(
-        spark,
-        state_path,
-        "embedding_signlsh",
-        {
-            "dims": int(dims),
-            "planes_per_band": int(planes_per_band),
-            "bands": int(bands),
-        },
-    )
-
-
-def _check_embedding_state(
-    spark, state_path: str, dims: int, planes_per_band: int, bands: int
-) -> None:
-    """Verify-or-pin the sign-LSH state's construction params (r12 —
-    the minhash hash_fn guard generalized per the r11 verdict): a
-    different random-plane family (``planes_per_band``/``bands``) or
-    input dimensionality produces band keys that never collide with
-    the state's, which would silently accept every duplicate."""
-    from kolang_spark.sources.state import check_state_meta
-
-    check_state_meta(
-        spark,
-        state_path,
-        "embedding_signlsh",
-        {
-            "dims": int(dims),
-            "planes_per_band": int(planes_per_band),
-            "bands": int(bands),
-        },
-        consequence=(
-            "sign-LSH band keys from different plane families never "
-            "collide, so every duplicate would be silently accepted"
-        ),
-    )
+    return marked, novel, store
 
 
 def duplicate_spans(
@@ -2267,19 +2166,11 @@ def incremental_minhash_dedup(
     routes through the Hadoop ``FileSystem`` API, so ``state_path``
     may be an object-store URI (``s3a://``/``hdfs://``/``abfs://``).
     """
-    marked, novel = _incremental_minhash_flagged(
+    marked, novel, store = _incremental_minhash_flagged(
         spark, new_df, state_path, id_col, text_col, n, num_hashes, bands,
         hash_fn,
     )
-    novel.write.mode("append").parquet(state_path)
-    # fast pin after the first append: the probe-time guard already
-    # verified-or-pinned any PRE-existing state, so this only stamps a
-    # state this very call created — one metadata read, no column-scan
-    # jobs (the r12 A/B measured the full re-check at ~0.5-0.8 s per
-    # sink run)
-    _ensure_minhash_state_pinned(
-        spark, state_path, hash_fn, n, num_hashes, bands
-    )
+    store.append(novel)
     return marked
 
 
@@ -2294,33 +2185,25 @@ def _hashfn_meta_path(state_path: str) -> str:
     return state_path.rstrip("/") + "/_ks_hashfn.json"
 
 
-def _ensure_minhash_state_pinned(
-    spark, state_path: str, hash_fn, n: int, num_hashes: int, bands: int
-) -> None:
-    from kolang_spark.sources.state import ensure_state_pinned
-
-    ensure_state_pinned(
-        spark,
-        state_path,
-        "minhash_bands",
-        {
-            "hash_fn": hash_fn or _DEFAULT_HASH_FN,
-            "n": int(n),
-            "num_hashes": int(num_hashes),
-            "bands": int(bands),
-        },
-    )
-
-
-_MINHASH_CONSEQUENCE = (
-    "band keys built under different MinHash construction parameters "
-    "never collide, so every duplicate would be silently accepted"
+_MINHASH_STATE = StateSpec(
+    "minhash_bands",
+    params=lambda hash_fn, n, num_hashes, bands: {
+        "hash_fn": hash_fn,
+        "n": int(n),
+        "num_hashes": int(num_hashes),
+        "bands": int(bands),
+    },
+    schema="band_id int, band_key string, batch_id bigint",
+    consequence=(
+        "band keys built under different MinHash construction parameters "
+        "never collide, so every duplicate would be silently accepted"
+    ),
 )
 
 
 def _check_and_pin_minhash_state(
     spark, state_path: str, hash_fn, n: int, num_hashes: int, bands: int
-) -> str:
+):
     """Resolve + verify the FULL construction params for a minhash
     band-key state — ``{hash_fn, n, num_hashes, bands}``. Band keys
     from a different hash function, shingle width, signature length,
@@ -2329,8 +2212,8 @@ def _check_and_pin_minhash_state(
     failure mode for a dedup operator (r11 verdict item 1: the first
     guard pinned hash_fn only). The params are pinned by the generic
     ``_ks_state.json`` sidecar (O(1) per probe, atomic write,
-    corrupt-sidecar self-healing —
-    :func:`kolang_spark.sources.state.check_state_meta`).
+    corrupt-sidecar self-healing — :mod:`kolang_spark.sources.state`);
+    this function is the kind's verify step plus its legacy hook.
 
     Legacy resolution (no valid sidecar), in order:
 
@@ -2354,23 +2237,20 @@ def _check_and_pin_minhash_state(
 
     ``hash_fn=None`` means "the package default" — distinguishable
     from an explicit choice exactly so the legacy case can refuse to
-    guess. Returns the resolved hash_fn.
+    guess. Returns the verified state, bound to the resolved hash_fn.
     """
     import json as _json
 
     from kolang_spark.sources.io import fs_read_text
-    from kolang_spark.sources.state import check_state_meta
 
     explicit = hash_fn is not None
     resolved = hash_fn or _DEFAULT_HASH_FN
     if resolved not in ("md5", "xxhash64"):
         raise ValueError("hash_fn must be 'md5' or 'xxhash64'")
-    params = {
-        "hash_fn": resolved,
-        "n": int(n),
-        "num_hashes": int(num_hashes),
-        "bands": int(bands),
-    }
+    store = _MINHASH_STATE.bind(
+        spark, state_path, resolved, n, num_hashes, bands
+    )
+    consequence = _MINHASH_STATE.consequence
 
     def _legacy():
         raw = fs_read_text(spark, _hashfn_meta_path(state_path))
@@ -2384,11 +2264,11 @@ def _check_and_pin_minhash_state(
                     raise ValueError(
                         f"minhash state at {state_path} is pinned to "
                         f"hash_fn='{pinned}', probed with "
-                        f"hash_fn='{resolved}' — {_MINHASH_CONSEQUENCE}. "
+                        f"hash_fn='{resolved}' — {consequence}. "
                         f"Pass hash_fn='{pinned}', or start a fresh "
                         "state_path."
                     )
-                return params
+                return store.params
         head = spark.read.option("mergeSchema", "true").parquet(state_path)
         if "hash_fn" in head.columns:
             fns = sorted(
@@ -2402,7 +2282,7 @@ def _check_and_pin_minhash_state(
                 raise ValueError(
                     f"minhash state at {state_path} was written with "
                     f"hash_fn={fns}, probed with hash_fn='{resolved}' — "
-                    f"{_MINHASH_CONSEQUENCE}. Pass the state's hash_fn, "
+                    f"{consequence}. Pass the state's hash_fn, "
                     "or start a fresh state_path."
                 )
         else:
@@ -2416,17 +2296,10 @@ def _check_and_pin_minhash_state(
                     "EXPLICITLY to assert what it was built with (the "
                     "assertion is then pinned for future probes)."
                 )
-        return params
+        return store.params
 
-    check_state_meta(
-        spark,
-        state_path,
-        "minhash_bands",
-        params,
-        legacy_resolve=_legacy,
-        consequence=_MINHASH_CONSEQUENCE,
-    )
-    return resolved
+    store.verify(legacy_resolve=_legacy)
+    return store
 
 
 def _incremental_minhash_flagged(
@@ -2442,9 +2315,9 @@ def _incremental_minhash_flagged(
     exclude_batch: Optional[int] = None,
 ):
     """The flag computation of :func:`incremental_minhash_dedup`
-    WITHOUT the state append: returns ``(marked, novel)`` where
+    WITHOUT the state append: returns ``(marked, novel, store)`` where
     ``novel`` is the accepted docs' band-key frame the caller must
-    append to ``state_path`` itself. Exists so sinks can order their
+    append with ``store.append`` itself. Exists so sinks can order their
     writes for crash safety (materialize flags → write output → append
     state; see :func:`kolang_spark.streaming.minhash_dedup_sink`) —
     the plain operator appends state before returning.
@@ -2455,78 +2328,50 @@ def _incremental_minhash_flagged(
     (sidecar, O(1) per probe) and every novel row additionally carries
     a ``hash_fn`` column (defense in depth; also how early-r11
     sidecar-less states are recognized)."""
-    hash_fn = _check_and_pin_minhash_state(
+    store = _check_and_pin_minhash_state(
         spark, state_path, hash_fn, n, num_hashes, bands
     )
+    hash_fn = store.params["hash_fn"]
     banded = _minhash_band_keys(
         new_df, id_col, text_col, n, num_hashes, bands, hash_fn
     )
     marked, novel = _incremental_banded_flagged(
-        spark,
-        new_df,
-        banded,
-        state_path,
-        id_col,
-        "is_near_duplicate",
-        exclude_batch=exclude_batch,
+        store, new_df, banded, id_col, exclude_batch
     )
     # stamp the state rows with the hash_fn that produced them — the
     # probe-time guard above depends on it
-    return marked, novel.withColumn("hash_fn", F.lit(hash_fn))
+    return marked, novel.withColumn("hash_fn", F.lit(hash_fn)), store
 
 
 def _incremental_banded_flagged(
-    spark,
+    store,
     new_df: DataFrame,
     banded: DataFrame,
-    state_path: str,
     id_col: str,
-    flag_col: str,
     exclude_batch: Optional[int] = None,
 ):
     """The shared core of every banded incremental dedup: given the
     batch's ``(id, band_id, band_key)`` frame (MinHash bands, sign-LSH
-    plane families, ...), flag each id seen-in-state OR
-    band-key-first-wins within the batch, and derive the accepted ids'
-    novel band keys for the caller's state append.
-
-    ``exclude_batch``: ignore state rows whose ``batch_id`` equals this
-    value (rows missing the column count as foreign) — the streaming
-    sinks pass their foreachBatch batch_id, stable across restart
-    replays, so a batch replayed AFTER its own state append recomputes
-    the IDENTICAL flags instead of flagging its own accepted docs as
-    duplicates (replay idempotence for every crash window)."""
-    from kolang_spark.sources.io import path_exists
-
-    if path_exists(spark, state_path):
-        # EXPLICIT read schema (advisor r12): batch-operator and sink
-        # appends produce mixed schemas (batch rows carry no batch_id,
-        # minhash rows carry hash_fn, embedding rows don't), and the
-        # default single-footer schema pick could nondeterministically
-        # hide batch_id and silently disable the replay-idempotence
-        # filter. Files missing batch_id read it as NULL (= foreign),
-        # deterministically, with no mergeSchema footer sweep per batch.
-        raw = spark.read.schema(
-            "band_id int, band_key string, batch_id bigint"
-        ).parquet(state_path)
-        if exclude_batch is not None:
-            raw = raw.where(
-                F.col("batch_id").isNull()
-                | (F.col("batch_id") != F.lit(int(exclude_batch)))
-            )
-        # no distinct (r13): state keys are unique by construction —
-        # accepted docs' keys are absent from the state at append time
-        # and at most one same-batch doc ever emits a given key (the
-        # first-wins window flags the rest), so the only possible
-        # duplicates are a crashed replay's double-append, which the
-        # flag algebra absorbs anyway (__seen__ is a max, __first__ a
-        # min). The distinct re-proved that invariant at the price of a
-        # full state-table exchange + aggregate EVERY batch — at scale,
-        # state >> batch, so it was the single most expensive node of
-        # the probe (guide §2.4: a distinct on already-unique data).
-        state = raw.select("band_id", F.col("band_key").alias("__sk__"))
-    else:
-        state = spark.createDataFrame([], "band_id int, __sk__ string")
+    plane families, ...) and the kind's verified ``store``, flag each
+    id ``is_near_duplicate`` when seen-in-state OR not band-key-first
+    within the batch, and derive the accepted ids' novel band keys for
+    the caller's state append. ``exclude_batch`` is the streaming
+    sinks' replay guard
+    (:meth:`kolang_spark.sources.state.BoundState.read`)."""
+    flag_col = "is_near_duplicate"
+    # no distinct (r13): state keys are unique by construction —
+    # accepted docs' keys are absent from the state at append time
+    # and at most one same-batch doc ever emits a given key (the
+    # first-wins window flags the rest), so the only possible
+    # duplicates are a crashed replay's double-append, which the
+    # flag algebra absorbs anyway (__seen__ is a max, __first__ a
+    # min). The distinct re-proved that invariant at the price of a
+    # full state-table exchange + aggregate EVERY batch — at scale,
+    # state >> batch, so it was the single most expensive node of
+    # the probe (guide §2.4: a distinct on already-unique data).
+    state = store.read(exclude_batch).select(
+        "band_id", F.col("band_key").alias("__sk__")
+    )
 
     # ONE eager pin per batch (r13; was two): the band-level frame
     # enriched with the state hit + within-batch first-wins columns is
@@ -2692,6 +2537,24 @@ def cdc_chunks(
     )
 
 
+_CDC_STATE = StateSpec(
+    "cdc_chunks",
+    params=lambda window, mask_bits, base, mod: {
+        "window": int(window),
+        "mask_bits": int(mask_bits),
+        "base": int(base),
+        "mod": int(mod),
+    },
+    schema="chunk_key string, n_bytes long",
+    consequence=(
+        "content-defined chunk boundaries (and so chunk keys) depend on "
+        "window/mask_bits/base/mod, so keys from different parameters "
+        "never match the store's — every chunk would be reported novel "
+        "and the dedup ledger silently wrong"
+    ),
+)
+
+
 def incremental_cdc_ingest(
     spark,
     new_df: DataFrame,
@@ -2736,25 +2599,10 @@ def incremental_cdc_ingest(
     carry no provenance — the first stamped probe's params become the
     assertion of record.
     """
-    from kolang_spark.sources.io import path_exists
-
-    _check_cdc_state(spark, state_path, window, mask_bits, base, mod)
+    store = _CDC_STATE.bind(spark, state_path, window, mask_bits, base, mod)
+    store.verify()
     chunks = cdc_chunks(new_df, id_col, text_col, window, mask_bits, base, mod)
-    if path_exists(spark, state_path):
-        # explicit schema, never inference: a crash DURING the very
-        # first append can leave the dir created but with zero
-        # committed parquet files — schema inference would throw on
-        # every replay (wedged state), while an explicit-schema read of
-        # an empty dir is just an empty frame, keeping the documented
-        # replay-is-harmless contract
-        state = (
-            spark.read.schema("chunk_key string, n_bytes long")
-            .parquet(state_path)
-            .select(F.col("chunk_key").alias("__ck__"))
-            .distinct()
-        )
-    else:
-        state = spark.createDataFrame([], "__ck__ string")
+    state = store.read().select(F.col("chunk_key").alias("__ck__")).distinct()
     pre = chunks.join(
         state.withColumn("__seen__", F.lit(True)),
         chunks["chunk_hash"] == F.col("__ck__"),
@@ -2773,11 +2621,12 @@ def incremental_cdc_ingest(
         .localCheckpoint(eager=True)
     )
     # rn==1 makes novel rows unique per chunk_hash by construction
-    marked.where(F.col("is_novel")).select(
-        F.col("chunk_hash").alias("chunk_key"),
-        F.col("n_bytes").cast("long").alias("n_bytes"),
-    ).write.mode("append").parquet(state_path)
-    _ensure_cdc_state_pinned(spark, state_path, window, mask_bits, base, mod)
+    store.append(
+        marked.where(F.col("is_novel")).select(
+            F.col("chunk_hash").alias("chunk_key"),
+            F.col("n_bytes").cast("long").alias("n_bytes"),
+        )
+    )
     report = (
         marked.groupBy(id_col)
         .agg(

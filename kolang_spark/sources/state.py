@@ -1,45 +1,60 @@
-"""Construction-parameter pinning for persisted operator state.
+"""One state protocol for persisted operator state.
 
-Several operators persist compact derived state between runs — MinHash
-band keys (`kolang_spark.llm.dedup.incremental_minhash_dedup`),
-sign-LSH band keys (`incremental_embedding_dedup`), kept-line hashes
-(`incremental_line_dedup`), exact-dedup fingerprints
-(`incremental_exact_dedup`), count-min sketch counters
-(`kolang_spark.streaming.sinks.cms_sink`). Every one of these states
-is only meaningful under the exact construction parameters that built
-it: band keys from a different hash function, shingle width, or plane
-count never collide with the state's keys, and CMS counters bucketed
-with a different width/salt estimate garbage. Probing with mismatched
-parameters does not error — it silently accepts every duplicate (or
-returns silently-wrong counts), the worst possible failure mode for a
-dedup operator.
+Five incremental operators and four streaming sinks keep compact
+derived state between runs in a parquet directory. Each directory
+holds one state KIND, declared once as a :class:`StateSpec` next to
+the operator that writes it:
 
-The r11 guard pinned exactly one parameter (the minhash ``hash_fn``)
-via a ``_ks_hashfn.json`` sidecar; the r11 verdict's #1 item is to
-generalize that to EVERY construction parameter of EVERY persisted
-state. This module is that generalization: one ``_ks_state.json``
-sidecar per state directory, holding ``{"kind": ..., "params": {...}}``.
+- ``exact_fingerprints`` — ``incremental_exact_dedup``; no params
+  (unparameterized md5 fingerprints, so only the kind is checked).
+- ``minhash_bands`` — ``incremental_minhash_dedup`` and
+  ``minhash_dedup_sink``; ``hash_fn, n, num_hashes, bands``.
+- ``embedding_signlsh`` — ``incremental_embedding_dedup`` and
+  ``embedding_dedup_sink``; ``dims, planes_per_band, bands``.
+- ``line_hashes`` — ``incremental_line_dedup`` and
+  ``line_dedup_sink``; ``delim``.
+- ``cdc_chunks`` — ``incremental_cdc_ingest``;
+  ``window, mask_bits, base, mod``.
+- ``cms`` — ``cms_sink``, read back by ``cms_state``;
+  ``depth, width, salt``.
 
-Contract (shared by all state families):
+A state is only meaningful under the exact parameters that built it:
+band keys from a different hash function, shingle width or plane
+family never collide with the state's keys, and CMS counters bucketed
+under a different width or salt estimate garbage. A mismatched probe
+does not error on its own — it silently accepts every duplicate (or
+returns wrong counts). So every state directory carries a
+``_ks_state.json`` sidecar ``{"kind": ..., "params": {...}}`` and
+every call runs the same sequence through :meth:`StateSpec.bind`:
 
-- **verify**: a probe against an existing state with a pinned sidecar
-  must match the sidecar's ``kind`` and every probed parameter, or it
-  raises ``ValueError`` naming the mismatched keys — before any join
-  runs against never-colliding keys.
-- **pin**: after the first state append, the writer pins its
-  parameters. The write is ATOMIC (temp name + rename, advisor r11
-  item 3): a crash mid-write leaves no half-written sidecar, so the
-  probe path can never wedge on a truncated JSON file.
-- **heal**: a missing or unparseable sidecar falls back to the state
-  family's legacy resolution (column scan, twin-sidecar migration, or
-  explicit caller assertion) and re-pins a fresh sidecar — corruption
-  costs one legacy resolution, never a permanent failure.
-- **legacy**: states written before their parameters were stamped
-  carry no provenance for them; the caller's values are pinned as the
-  assertion of record (exactly the hash_fn guard's documented escape —
-  for parameters whose package default never changed, that assertion
-  is the same trust the pre-guard code extended on every probe, and
-  every FUTURE probe is verified against it).
+1. **verify** (:func:`check_state_meta`): a probe of an existing state
+   must match the sidecar's kind and every param, else ``ValueError``
+   naming the mismatches — before any join against never-colliding
+   keys. Readers verify without pinning (:meth:`BoundState.verify_readonly`).
+2. **read** (:meth:`BoundState.read`): explicit schema, an empty frame
+   when nothing is persisted yet, and optionally without the rows a
+   replayed streaming batch appended itself.
+3. **flag**: the operator's own algebra, pinned by one eager
+   ``localCheckpoint`` before anything is written.
+4. **append** (:meth:`BoundState.append`): optional int64 ``batch_id``
+   stamp, the parquet write, then the fast pin
+   (:func:`ensure_state_pinned`) that stamps a state this call created.
+
+Sidecar rules:
+
+- **atomic pin**: the sidecar is written under a temp name and renamed
+  over the old one, so a crash never leaves a half-written sidecar and
+  a concurrent prober never sees "no sidecar".
+- **heal**: a missing or unparseable sidecar falls back to the kind's
+  legacy resolution (the minhash column scan / twin-sidecar migration;
+  for other kinds, the caller's params) and re-pins a fresh sidecar —
+  corruption costs one legacy resolution, never a permanent failure.
+- **legacy assertion of record**: a state written before its params
+  were stamped carries no provenance for them; the caller's values are
+  pinned as the assertion of record, and every later probe is verified
+  against it.
+- **zero jobs**: verify and pin on an already-pinned state are
+  driver-side file reads only, never Spark jobs.
 
 The sidecar lives INSIDE the state directory under a ``_``-prefixed
 name, which Spark's file listing skips, so the state parquet reads are
@@ -49,14 +64,17 @@ URIs (``s3a://``/``hdfs://``/``abfs://``).
 
 Reference: the reference engine persists no cross-run operator state
 (its dedup is single-run), so this module has no reference
-counterpart; the contract follows the bloom sidecar's param-meta
-pattern (`kolang_spark/llm/dedup.py` ``_write_bloom_meta``).
+counterpart; it extends the reference's parquet memoization.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Callable, Mapping, Optional
+from dataclasses import dataclass
+from typing import Any, Callable, Mapping, Optional
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 __all__ = [
     "state_meta_path",
@@ -171,29 +189,15 @@ def check_state_meta(
         return dict(params)
     meta = read_state_meta(spark, state_path)
     if meta is not None:
-        if meta["kind"] != kind:
-            raise ValueError(
-                f"state at {state_path} is pinned as kind="
-                f"'{meta['kind']}', probed as kind='{kind}' — this is a "
-                "different operator family's state; probing it would "
-                f"produce silently wrong results ({consequence}). Use "
-                "the state's own operator, or start a fresh state_path."
-            )
-        pinned = meta["params"]
-        bad = {
-            k: (pinned.get(k), v)
-            for k, v in params.items()
-            if pinned.get(k) != v
-        }
-        if bad:
-            detail = ", ".join(
-                f"{k}: pinned={p!r} probed={v!r}" for k, (p, v) in sorted(bad.items())
-            )
-            raise ValueError(
-                f"state at {state_path} was built with different "
-                f"construction parameters ({detail}) — {consequence}. "
-                "Pass the pinned values, or start a fresh state_path."
-            )
+        _check_pinned(
+            meta,
+            state_path,
+            kind,
+            params,
+            consequence,
+            "Probe with the pinned kind and values, or start a fresh "
+            "state_path.",
+        )
         return dict(params)
     resolved = dict(legacy_resolve()) if legacy_resolve is not None else dict(params)
     pin_state_meta(spark, state_path, kind, resolved)
@@ -225,18 +229,168 @@ def ensure_state_pinned(spark, state_path: str, kind: str, params: Mapping) -> N
     if meta is None:
         pin_state_meta(spark, state_path, kind, params)
         return
-    bad = {
-        k: (meta["params"].get(k), v)
-        for k, v in params.items()
-        if meta["params"].get(k) != v
-    }
-    if meta["kind"] != kind or bad:
+    _check_pinned(
+        meta,
+        state_path,
+        kind,
+        params,
+        "a concurrent writer pinned them first, so the state now holds "
+        "keys from both and cannot be trusted",
+        "Start a fresh state_path.",
+    )
+
+
+def _check_pinned(
+    meta: dict,
+    state_path: str,
+    kind: str,
+    params: Mapping,
+    consequence: str,
+    remedy: str,
+) -> None:
+    """THE sidecar mismatch comparison: raise ``ValueError`` naming
+    every difference between the pinned ``meta`` and a probe's
+    ``kind`` and ``params``. Only the probed keys are compared, so a
+    reader may verify a subset. A different kind is reported alone:
+    another family's params are not comparable."""
+    pinned = meta["params"]
+    if meta["kind"] != kind:
+        bad = {"kind": (meta["kind"], kind)}
+    else:
+        bad = {
+            k: (pinned.get(k), v) for k, v in params.items() if pinned.get(k) != v
+        }
+    if bad:
         detail = ", ".join(
-            f"{k}: pinned={p!r} ours={v!r}" for k, (p, v) in sorted(bad.items())
-        ) or f"kind: pinned={meta['kind']!r} ours={kind!r}"
-        raise ValueError(
-            f"state at {state_path} was pinned by a concurrent writer "
-            f"with different construction parameters ({detail}) — the "
-            "state now holds keys from both and cannot be trusted; "
-            "start a fresh state_path."
+            f"{k}: pinned={p!r} probed={v!r}" for k, (p, v) in sorted(bad.items())
         )
+        raise ValueError(
+            f"state at {state_path} was built with different construction "
+            f"parameters ({detail}) — {consequence}. {remedy}"
+        )
+
+
+def _write_batch(
+    df: DataFrame,
+    path: str,
+    batch_id: Optional[int] = None,
+    col: str = "batch_id",
+    own_partition: bool = False,
+) -> None:
+    """Append ``df`` to the parquet dir ``path``. With ``batch_id``,
+    every row is stamped with it as an int64 column ``col``. The cast
+    matters: py4j turns a Python int literal into IntegerType, so
+    without it the files would hold Parquet INT32 while the explicit
+    read schemas say bigint (Spark 4 widens silently, Spark 3 throws).
+    ``own_partition`` writes the batch into its own ``col`` hive
+    partition with dynamic-partition OVERWRITE, so a replayed batch
+    replaces its earlier partial instead of appending beside it."""
+    if batch_id is not None:
+        df = df.withColumn(col, F.lit(int(batch_id)).cast("long"))
+    if own_partition:
+        from kolang_spark.sources.io import overwrite_partitions
+
+        overwrite_partitions(df, path, partition_by=[col])
+    else:
+        df.write.mode("append").parquet(path)
+
+
+@dataclass(frozen=True)
+class StateSpec:
+    """One persisted-state kind, declared once next to its operator.
+
+    ``kind`` is the sidecar's kind string; ``params`` maps the
+    operator's construction arguments to the params dict the sidecar
+    pins; ``schema`` is the explicit DDL read schema (``None`` for a
+    kind whose reader does its own read); ``consequence`` says what a
+    mismatched probe would silently do, for the error message; and
+    ``own_partition`` makes each streaming batch overwrite its own
+    ``batch_id`` partition instead of appending (count-min counters
+    must be exactly-once: a replayed count would be summed in)."""
+
+    kind: str
+    params: Callable[..., dict]
+    schema: Optional[str]
+    consequence: str
+    own_partition: bool = False
+
+    def bind(self, spark, path: str, *args) -> "BoundState":
+        """This kind at ``path`` under one call's construction args."""
+        return BoundState(self, spark, path, self.params(*args))
+
+
+@dataclass(frozen=True)
+class BoundState:
+    """A :class:`StateSpec` bound to one state dir and one call's
+    params: the verify / read / append steps of the protocol."""
+
+    spec: StateSpec
+    spark: Any
+    path: str
+    params: dict
+
+    def verify(
+        self, legacy_resolve: Optional[Callable[[], Mapping]] = None
+    ) -> dict:
+        """Verify-or-pin (:func:`check_state_meta`)."""
+        return check_state_meta(
+            self.spark,
+            self.path,
+            self.spec.kind,
+            self.params,
+            legacy_resolve=legacy_resolve,
+            consequence=self.spec.consequence,
+        )
+
+    def verify_readonly(self) -> None:
+        """Compare against the pinned sidecar, if any, but never pin:
+        a reader's partial or mistaken probe pinned onto an unstamped
+        state would make every correct later writer raise."""
+        meta = read_state_meta(self.spark, self.path)
+        if meta is not None:
+            _check_pinned(
+                meta,
+                self.path,
+                self.spec.kind,
+                self.params,
+                self.spec.consequence,
+                "Read the pinned values from the sidecar instead.",
+            )
+
+    def read(self, exclude_batch: Optional[int] = None) -> DataFrame:
+        """The persisted rows under the kind's EXPLICIT schema, never
+        inference: operators and sinks append mixed schemas (operator
+        rows carry no ``batch_id``), and a single-footer schema pick
+        could nondeterministically hide a column — files missing one
+        read it as NULL, deterministically, with no footer sweep; and a
+        crash during the very first append can leave a dir with zero
+        committed files, which inference would fail on forever while
+        an explicit-schema read is just empty. A missing dir reads as
+        an empty frame.
+
+        ``exclude_batch`` drops the rows stamped with that ``batch_id``
+        (NULL-stamped rows count as foreign): a streaming batch replayed
+        after its own state append — foreachBatch ids are stable across
+        restart replays — then recomputes IDENTICAL flags instead of
+        finding its own keys in state."""
+        from kolang_spark.sources.io import path_exists
+
+        if not path_exists(self.spark, self.path):
+            return self.spark.createDataFrame([], self.spec.schema)
+        rows = self.spark.read.schema(self.spec.schema).parquet(self.path)
+        if exclude_batch is not None:
+            rows = rows.where(
+                F.col("batch_id").isNull()
+                | (F.col("batch_id") != F.lit(int(exclude_batch)))
+            )
+        return rows
+
+    def append(self, df: DataFrame, batch_id: Optional[int] = None) -> None:
+        """Write ``df`` (stamped with ``batch_id`` when given), then the
+        fast pin. Only valid after :meth:`verify` in the same call."""
+        _write_batch(df, self.path, batch_id, own_partition=self.spec.own_partition)
+        self.pin()
+
+    def pin(self) -> None:
+        """Fast pin (:func:`ensure_state_pinned`)."""
+        ensure_state_pinned(self.spark, self.path, self.spec.kind, self.params)

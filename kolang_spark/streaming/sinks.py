@@ -19,7 +19,14 @@ from __future__ import annotations
 from typing import List, Optional
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F  # noqa: F401  (parity with siblings)
+from pyspark.sql import functions as F
+
+from kolang_spark.sources.state import (
+    BoundState,
+    StateSpec,
+    _write_batch,
+    read_state_meta,
+)
 
 __all__ = [
     "upsert_sink",
@@ -32,30 +39,77 @@ __all__ = [
 ]
 
 
-def _write_sink_output(
-    out: DataFrame, output_path: str, batch_id: int, idempotent: bool
-) -> None:
-    """The dedup sinks' output write. Default: plain parquet append —
-    at-least-once (a batch replayed after a crash-post-output appends
-    its rows again; duplicates are removable downstream by id).
-    ``idempotent=True`` opts into the batch-id-keyed dynamic-partition
-    OVERWRITE idiom :func:`cms_sink` uses for its state: the output
-    table gains a ``_batch_id`` hive partition column and each replay
-    REPLACES its own partition, so the final output is exactly-once —
-    the same rows, not just no lost rows (r12 verdict item 4). Cost:
-    one directory per micro-batch (compact with
-    :func:`kolang_spark.sources.io.compact_parquet` on long streams)
-    and readers see the extra ``_batch_id`` column."""
-    if idempotent:
-        from kolang_spark.sources.io import overwrite_partitions
+def _start_foreach_batch(
+    stream_df: DataFrame, handle, checkpoint: Optional[str], available_now: bool
+):
+    """Start ``stream_df`` with ``handle(batch_df, batch_id)`` run on
+    every NON-EMPTY micro-batch; ``checkpoint`` is the streaming
+    checkpoint dir, ``available_now`` drains the source and stops.
+    Returns the started ``StreamingQuery``."""
 
-        overwrite_partitions(
-            out.withColumn("_batch_id", F.lit(int(batch_id)).cast("long")),
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            handle(batch_df, batch_id)
+
+    writer = stream_df.writeStream.foreachBatch(run)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _dedup_sink(
+    stream_df: DataFrame,
+    flagged,
+    output,
+    output_path: str,
+    idempotent_output: bool,
+    checkpoint: Optional[str],
+    available_now: bool,
+):
+    """The crash-safe batch sequence shared by the dedup sinks, in
+    write ORDER: (1) ``flagged(batch_df, batch_id)`` → ``(marked,
+    novel, store)`` computes flags against the pre-batch state and
+    pins them (its eager ``localCheckpoint``), ignoring state rows
+    stamped with this ``batch_id`` — stable across restart replays —
+    so a replay recomputes IDENTICAL flags in every crash window;
+    (2) ``output(batch_df, marked)`` appends to ``output_path``;
+    (3) ``novel`` appends to the state stamped with ``batch_id``, then
+    the fast pin. A crash between (2) and (3) costs duplicate
+    IDENTICAL output rows, never a lost row: output-before-state is
+    the deliberate inverse of the bloom sidecar's bits-first rule,
+    because the failure costs invert.
+
+    Default output is a plain parquet append — at-least-once, replay
+    duplicates are removable downstream by id. ``idempotent_output``
+    writes each batch into its own ``_batch_id`` hive partition with
+    dynamic-partition OVERWRITE, so a replay REPLACES its earlier
+    partial: exactly-once output without a table format, at the cost
+    of one directory per micro-batch (compact long streams with
+    :func:`kolang_spark.sources.io.compact_parquet`) and an extra
+    ``_batch_id`` column for readers."""
+
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        marked, novel, store = flagged(batch_df, batch_id)
+        _write_batch(
+            output(batch_df, marked),
             output_path,
-            partition_by=["_batch_id"],
+            batch_id if idempotent_output else None,
+            col="_batch_id",
+            own_partition=idempotent_output,
         )
-    else:
-        out.write.mode("append").parquet(output_path)
+        store.append(novel, batch_id)
+
+    return _start_foreach_batch(stream_df, handle, checkpoint, available_now)
+
+
+def _accepted(marked: DataFrame, keep_duplicates: bool) -> DataFrame:
+    """Sink output of the near-dup kinds: every row with its
+    ``is_near_duplicate`` flag, or only the accepted rows."""
+    if keep_duplicates:
+        return marked
+    return marked.where(~F.col("is_near_duplicate")).drop("is_near_duplicate")
 
 
 def upsert_sink(
@@ -79,8 +133,6 @@ def upsert_sink(
     from kolang_spark.sources.io import path_exists, upsert_partitioned
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         # Hadoop-FS probe, not os.path.exists: on an object-store path
         # (s3a://...) the driver-local check is always False, so every
@@ -107,12 +159,7 @@ def upsert_sink(
                 order_col=order_col,
             )
 
-    writer = stream_df.writeStream.foreachBatch(handle)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream_df, handle, checkpoint, available_now)
 
 
 def minhash_dedup_sink(
@@ -141,80 +188,37 @@ def minhash_dedup_sink(
     object-store URIs (all probes go through the Hadoop FS API).
     Returns the started ``StreamingQuery``.
 
-    Crash-safety write ORDER within a batch (the deliberate inverse of
-    the bloom sidecar's bits-first rule, because the failure costs
-    invert): (1) flags are materialized (``localCheckpoint``) while
-    the state is still pre-batch, (2) output appends, (3) state
-    appends. State rows are stamped with the foreachBatch ``batch_id``
-    (stable across restart replays) and the flag computation ignores
-    the replaying batch's OWN rows, so a replay recomputes IDENTICAL
-    flags in every crash window — before (3), the state is unchanged;
-    after (3) but before the streaming checkpoint commit, the batch's
-    own keys are excluded. Either way the only artifact is duplicate
-    IDENTICAL output rows, removable downstream by doc_id; accepted
-    docs are never lost. At-least-once output + never-lose is the
-    strongest contract a plain-parquet APPEND sink can offer;
-    ``idempotent_output=True`` upgrades the output side to
-    exactly-once without a table format: each batch writes into its
-    own ``_batch_id`` hive partition with dynamic-partition OVERWRITE,
-    so a replay REPLACES its previous partial instead of appending
-    beside it (see :func:`_write_sink_output` for the trade-offs).
+    Crash contract: (1) flags are pinned against the pre-batch state,
+    (2) output appends, (3) state appends, stamped with the
+    foreachBatch ``batch_id`` (stable across restart replays), which a
+    replay ignores — so a replay recomputes IDENTICAL flags in every
+    crash window. The only artifact is duplicate identical output
+    rows, removable downstream by doc_id; accepted docs are never
+    lost. At-least-once output + never-lose is the strongest contract
+    a plain-parquet APPEND sink can offer; ``idempotent_output=True``
+    upgrades the output to exactly-once without a table format: each
+    batch writes into its own ``_batch_id`` hive partition with
+    dynamic-partition OVERWRITE, so a replay REPLACES its previous
+    partial (one directory per micro-batch; readers see the extra
+    ``_batch_id`` column).
 
     Within-batch semantics, state growth, and the candidate-only
     flagging caveat are the batch operator's (see its docstring).
     """
+    from kolang_spark.llm.dedup import _incremental_minhash_flagged
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        from kolang_spark.llm.dedup import _incremental_minhash_flagged
-
-        spark = batch_df.sparkSession
-        # (1) the helper eagerly checkpoints the state-probed band
-        # frame before returning, so the flags derive from a pin taken
-        # against the pre-append state — re-checkpointing `marked` here
-        # would only re-materialize the whole batch (text column
-        # included) for nothing. exclude_batch makes a
-        # replayed batch ignore its OWN prior state append (batch_id is
-        # stable across restart replays), so flags are identical in
-        # EVERY crash window — including a crash after the state append
-        # but before the streaming checkpoint commit.
-        marked, novel = _incremental_minhash_flagged(
-            spark, batch_df, state_path, id_col, text_col, n, num_hashes,
-            bands, hash_fn, exclude_batch=batch_id,
-        )
-        out = (
-            marked
-            if keep_duplicates
-            else marked.where(~F.col("is_near_duplicate")).drop(
-                "is_near_duplicate"
-            )
-        )
-        # (2) output before (3) state — see docstring
-        _write_sink_output(out, output_path, batch_id, idempotent_output)
-        # cast("long"): py4j materializes a Python int literal as
-        # IntegerType, so without the cast state files hold Parquet
-        # INT32 while the explicit read schema says bigint — Spark 4.x
-        # widens silently, Spark 3.x throws
-        # SchemaColumnConvertNotSupportedException (advisor r12)
-        novel.withColumn("batch_id", F.lit(batch_id).cast("long")).write.mode(
-            "append"
-        ).parquet(state_path)
-        from kolang_spark.llm.dedup import _ensure_minhash_state_pinned
-
-        # fast pin after the first state append (no-op once present):
-        # the probe-time guard inside the flagged helper already
-        # verified any pre-existing state this batch
-        _ensure_minhash_state_pinned(
-            spark, state_path, hash_fn, n, num_hashes, bands
-        )
-
-    writer = stream_df.writeStream.foreachBatch(handle)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _dedup_sink(
+        stream_df,
+        lambda batch_df, batch_id: _incremental_minhash_flagged(
+            batch_df.sparkSession, batch_df, state_path, id_col, text_col,
+            n, num_hashes, bands, hash_fn, exclude_batch=batch_id,
+        ),
+        lambda batch_df, marked: _accepted(marked, keep_duplicates),
+        output_path,
+        idempotent_output,
+        checkpoint,
+        available_now,
+    )
 
 
 def line_dedup_sink(
@@ -241,65 +245,35 @@ def line_dedup_sink(
     through the Hadoop FS API). Returns the started
     ``StreamingQuery``.
 
-    Crash-safety write ORDER within a batch (same rationale as
-    :func:`minhash_dedup_sink`): (1) per-line keep flags are
-    materialized while the state is still pre-batch, (2) rebuilt
-    documents append to the output, (3) novel line hashes append to
-    the state, stamped with the foreachBatch ``batch_id``. Because the
-    flag computation ignores the replaying batch's OWN state rows
-    (``batch_id`` is stable across restart replays), a replay rebuilds
-    IDENTICAL documents in every crash window — duplicate output rows
-    removable downstream by ``id_col``, never the silently-emptied
-    documents a state-first order (or an unstamped state) would
-    produce.
-    ``idempotent_output=True`` upgrades the output side from
-    at-least-once to exactly-once via the batch-id-partitioned
-    overwrite (see :func:`_write_sink_output`).
+    Crash contract and ``idempotent_output`` as in
+    :func:`minhash_dedup_sink`: a replay rebuilds IDENTICAL documents
+    in every crash window — duplicate output rows removable downstream
+    by ``id_col``, never the silently-emptied documents a state-first
+    order (or an unstamped state) would produce.
 
     Within-batch semantics (state hit removes every occurrence, novel
     lines keep their first by ``(id, pos)``, whitespace-only lines
     always survive) are the batch operator's — see its docstring.
     """
+    from kolang_spark.llm.dedup import (
+        _incremental_lines_flagged,
+        _rebuild_deduped_lines,
+    )
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        from kolang_spark.llm.dedup import (
-            _incremental_lines_flagged,
-            _rebuild_deduped_lines,
-        )
-
-        spark = batch_df.sparkSession
-        # (1) flags pinned (eager localCheckpoint inside the helper);
-        # exclude_batch makes a replayed batch ignore its OWN prior
-        # state append (batch_id is stable across restart replays), so
-        # the rebuilt documents are IDENTICAL in every crash window —
-        # without it, a crash after the state append but before the
-        # streaming checkpoint commit would gut every doc on replay
-        marked, novel = _incremental_lines_flagged(
-            spark, batch_df, state_path, id_col, text_col, delim,
-            exclude_batch=batch_id,
-        )
-        out = _rebuild_deduped_lines(
+    return _dedup_sink(
+        stream_df,
+        lambda batch_df, batch_id: _incremental_lines_flagged(
+            batch_df.sparkSession, batch_df, state_path, id_col, text_col,
+            delim, exclude_batch=batch_id,
+        ),
+        lambda batch_df, marked: _rebuild_deduped_lines(
             batch_df, marked, id_col, text_col, delim, out_col
-        )
-        # (2) output before (3) state — see docstring
-        _write_sink_output(out, output_path, batch_id, idempotent_output)
-        novel.withColumn("batch_id", F.lit(batch_id).cast("long")).write.mode(
-            "append"
-        ).parquet(state_path)
-        from kolang_spark.llm.dedup import _ensure_line_state_pinned
-
-        # fast pin after the first state append (no-op once present);
-        # probes verify inside the flagged helper
-        _ensure_line_state_pinned(spark, state_path, delim)
-
-    writer = stream_df.writeStream.foreachBatch(handle)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+        ),
+        output_path,
+        idempotent_output,
+        checkpoint,
+        available_now,
+    )
 
 
 def embedding_dedup_sink(
@@ -326,73 +300,44 @@ def embedding_dedup_sink(
     band keys append to ``state_path``. Both paths may be object-store
     URIs. Returns the started ``StreamingQuery``.
 
-    Same crash-safety write order as the sibling sinks — (1) flags
-    pinned pre-state (the banded-core helper eagerly pins
-    them), (2) output appends, (3) state appends stamped with the
-    foreachBatch ``batch_id`` — and the flag computation ignores the
-    replaying batch's OWN state rows, so a replay recomputes identical
-    flags in every crash window: duplicate output rows at worst, never
-    a lost or flag-inverted accepted vector — and
-    ``idempotent_output=True`` removes even those via the batch-id-
-    partitioned overwrite (see :func:`_write_sink_output`).
+    Crash contract and ``idempotent_output`` as in
+    :func:`minhash_dedup_sink`: duplicate output rows at worst, never
+    a lost or flag-inverted accepted vector.
     Within-batch semantics (band-key-first-wins, malformed embeddings
     always accepted and never persisted) are the batch operator's.
     """
+    from kolang_spark.llm.dedup import _incremental_embedding_flagged
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        from kolang_spark.llm.dedup import (
-            _embedding_band_keys,
-            _incremental_banded_flagged,
-        )
+    return _dedup_sink(
+        stream_df,
+        lambda batch_df, batch_id: _incremental_embedding_flagged(
+            batch_df.sparkSession, batch_df, state_path, id_col, vec_col,
+            dims, planes_per_band, bands, exclude_batch=batch_id,
+        ),
+        lambda batch_df, marked: _accepted(marked, keep_duplicates),
+        output_path,
+        idempotent_output,
+        checkpoint,
+        available_now,
+    )
 
-        spark = batch_df.sparkSession
-        from kolang_spark.llm.dedup import _check_embedding_state
 
-        # verify the state's construction params BEFORE the probe —
-        # sign signatures under a different plane family never collide
-        _check_embedding_state(
-            spark, state_path, dims, planes_per_band, bands
-        )
-        banded = _embedding_band_keys(
-            batch_df, id_col, vec_col, dims, planes_per_band, bands
-        )
-        # (1) flags pinned inside the helper, pre-state; exclude_batch
-        # makes a replayed batch ignore its OWN prior state append
-        # (batch_id is stable across restart replays) — without it a
-        # crash after the state append would invert every accepted
-        # vector's flag on replay
-        marked, novel = _incremental_banded_flagged(
-            spark, batch_df, banded, state_path, id_col,
-            "is_near_duplicate", exclude_batch=batch_id,
-        )
-        out = (
-            marked
-            if keep_duplicates
-            else marked.where(~F.col("is_near_duplicate")).drop(
-                "is_near_duplicate"
-            )
-        )
-        # (2) output before (3) state — see minhash_dedup_sink
-        _write_sink_output(out, output_path, batch_id, idempotent_output)
-        novel.withColumn("batch_id", F.lit(batch_id).cast("long")).write.mode(
-            "append"
-        ).parquet(state_path)
-        from kolang_spark.llm.dedup import _ensure_embedding_state_pinned
-
-        # fast pin after the first state append (no-op once present);
-        # the pre-probe check above verified any pre-existing state
-        _ensure_embedding_state_pinned(
-            spark, state_path, dims, planes_per_band, bands
-        )
-
-    writer = stream_df.writeStream.foreachBatch(handle)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+# no read schema: ``cms_state`` reads the hive-partitioned state itself
+# and keeps the reader's PATH_NOT_FOUND for a state no batch created
+_CMS_STATE = StateSpec(
+    "cms",
+    params=lambda depth, width, salt: {
+        "depth": int(depth),
+        "width": int(width),
+        "salt": salt,
+    },
+    schema=None,
+    consequence=(
+        "count-min counters bucketed under a different depth/width/salt "
+        "estimate garbage with no error"
+    ),
+    own_partition=True,
+)
 
 
 def cms_sink(
@@ -438,37 +383,20 @@ def cms_sink(
     batch's params become the assertion of record.
     """
     from kolang_spark.operators.sketches import cms_table
-    from kolang_spark.sources.io import overwrite_partitions
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _check_cms_state(batch_df.sparkSession, state_path, depth, width, salt)
-        sk = cms_table(
-            batch_df, col, depth=depth, width=width, weight=weight, salt=salt
+        store = _CMS_STATE.bind(
+            batch_df.sparkSession, state_path, depth, width, salt
         )
-        overwrite_partitions(
-            sk.withColumn("batch_id", F.lit(int(batch_id)).cast("long")),
-            state_path,
-            partition_by=["batch_id"],
-        )
-        # fast pin after the first batch lands (no-op once present);
-        # the pre-write check above verified any pre-existing state
-        from kolang_spark.sources.state import ensure_state_pinned
-
-        ensure_state_pinned(
-            batch_df.sparkSession,
-            state_path,
-            "cms",
-            {"depth": int(depth), "width": int(width), "salt": salt},
+        store.verify()
+        store.append(
+            cms_table(
+                batch_df, col, depth=depth, width=width, weight=weight, salt=salt
+            ),
+            batch_id,
         )
 
-    writer = stream_df.writeStream.foreachBatch(handle)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream_df, handle, checkpoint, available_now)
 
 
 def cms_state(
@@ -503,31 +431,7 @@ def cms_state(
         if v is not None
     }
     if probe:
-        from kolang_spark.sources.state import read_state_meta
-
-        meta = read_state_meta(spark, state_path)
-        if meta is not None:
-            if meta["kind"] != "cms":
-                raise ValueError(
-                    f"state at {state_path} is pinned as kind="
-                    f"'{meta['kind']}', not a cms_sink state."
-                )
-            bad = {
-                k: (meta["params"].get(k), v)
-                for k, v in probe.items()
-                if meta["params"].get(k) != v
-            }
-            if bad:
-                detail = ", ".join(
-                    f"{k}: pinned={p!r} probed={v!r}"
-                    for k, (p, v) in sorted(bad.items())
-                )
-                raise ValueError(
-                    f"cms state at {state_path} was built with "
-                    f"different construction parameters ({detail}) — "
-                    f"{_CMS_CONSEQUENCE}. Use cms_state_params() for "
-                    "the pinned values."
-                )
+        BoundState(_CMS_STATE, spark, state_path, probe).verify_readonly()
     return (
         spark.read.parquet(state_path)
         .groupBy("row", "bucket")
@@ -541,28 +445,7 @@ def cms_state_params(spark, state_path: str) -> Optional[dict]:
     :func:`kolang_spark.operators.sketches.cms_estimate` instead of
     re-supplying (and possibly mis-remembering) them. ``None`` for a
     pre-r12 state that has never been re-probed by a stamping sink."""
-    from kolang_spark.sources.state import read_state_meta
-
     meta = read_state_meta(spark, state_path)
-    if meta is None or meta.get("kind") != "cms":
+    if meta is None or meta.get("kind") != _CMS_STATE.kind:
         return None
     return dict(meta["params"])
-
-
-_CMS_CONSEQUENCE = (
-    "count-min counters bucketed under a different depth/width/salt "
-    "estimate garbage with no error"
-)
-
-
-def _check_cms_state(spark, state_path: str, depth, width, salt) -> None:
-    """Verify-or-pin the CMS state's construction params (r12)."""
-    from kolang_spark.sources.state import check_state_meta
-
-    check_state_meta(
-        spark,
-        state_path,
-        "cms",
-        {"depth": int(depth), "width": int(width), "salt": salt},
-        consequence=_CMS_CONSEQUENCE,
-    )

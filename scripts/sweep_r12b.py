@@ -101,7 +101,7 @@ def main():
             best = None
             for _ in range(2):
                 t0 = time.perf_counter()
-                marked, _novel = _incremental_minhash_flagged(
+                marked, _novel, _store = _incremental_minhash_flagged(
                     spark, probe, state
                 )
                 n_dup = marked.where("is_near_duplicate").count()

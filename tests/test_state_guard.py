@@ -330,30 +330,142 @@ def test_minhash_legacy_column_scan_sees_stamped_rows_mixed_schema(
     assert ok.collect()[0].is_near_duplicate is True
 
 
-def test_pinned_state_guard_runs_zero_spark_jobs(spark, tmp_path):
-    """The A/B-backed performance contract (BASELINE.md r12): once a
-    state is pinned, both the probe-time check and the post-append
-    fast pin are pure driver-side metadata reads — ZERO Spark jobs.
-    The r11 guard's column scan (and the first r12 cut's post-append
-    full re-check) each cost jobs on the sink hot path; this pins the
-    fix structurally, not just in the bench record."""
-    from kolang_spark.llm import incremental_minhash_dedup
-    from kolang_spark.llm.dedup import (
-        _check_and_pin_minhash_state,
-        _ensure_minhash_state_pinned,
-    )
+# ---------- one call per kind: zero-job guard + on-disk format ----------
 
-    state = str(tmp_path / "mh")
-    incremental_minhash_dedup(spark, _docs(spark, 1), state)
+STATE_KINDS = ["exact", "minhash", "embedding", "lines", "cdc", "cms"]
+
+
+@pytest.fixture(scope="module", params=STATE_KINDS)
+def one_call_state(request, spark, tmp_path_factory):
+    """``(kind, state_path)`` after ONE call of the kind's writer."""
+    from kolang_spark.llm import incremental_exact_dedup
+
+    kind = request.param
+    d = tmp_path_factory.mktemp(kind)
+    if kind == "cms":
+        _run_cms_sink(spark, d, "a", depth=3, width=64, salt="s1")
+        return kind, str(d / "cms_state")
+    state = str(d / "state")
+    build = {
+        "exact": lambda: incremental_exact_dedup(spark, _docs(spark, 1), state),
+        "minhash": lambda: _mk_minhash(spark, state),
+        "embedding": lambda: _mk_embedding(spark, state),
+        "lines": lambda: _mk_lines(spark, state),
+        "cdc": lambda: _mk_cdc(spark, state),
+    }
+    build[kind]()
+    return kind, state
+
+
+def _verified(store):
+    store.verify()
+    return store
+
+
+def _guard(spark, kind, state):
+    """The kind's probe-time verify entry point → its bound state."""
+    from kolang_spark.llm.dedup import (
+        _CDC_STATE,
+        _EMBEDDING_STATE,
+        _EXACT_STATE,
+        _LINE_STATE,
+        _check_and_pin_minhash_state,
+    )
+    from kolang_spark.streaming.sinks import _CMS_STATE
+
+    if kind == "minhash":
+        return _check_and_pin_minhash_state(spark, state, None, 5, 6, 3)
+    store = {
+        "exact": lambda: _EXACT_STATE.bind(spark, state),
+        "embedding": lambda: _EMBEDDING_STATE.bind(spark, state, 8, 8, 2),
+        "lines": lambda: _LINE_STATE.bind(spark, state, "\n"),
+        "cdc": lambda: _CDC_STATE.bind(spark, state, 8, 6, 257, (1 << 31) - 1),
+        "cms": lambda: _CMS_STATE.bind(spark, state, 3, 64, "s1"),
+    }[kind]()
+    return _verified(store)
+
+
+def test_pinned_state_guard_runs_zero_spark_jobs(spark, one_call_state):
+    """The A/B-backed performance contract (BASELINE.md r12), for
+    every kind: once a state is pinned, both the probe-time verify and
+    the post-append fast pin are pure driver-side metadata reads —
+    ZERO Spark jobs. The r11 guard's column scan (and the first r12
+    cut's post-append full re-check) each cost jobs on the sink hot
+    path; this pins the fix structurally, not just in the bench
+    record."""
+    kind, state = one_call_state
     sc = spark.sparkContext
-    sc.setJobGroup("ks_guard_probe", "guard-only")
+    group = f"ks_guard_probe_{kind}"
+    sc.setJobGroup(group, "guard-only")
     try:
-        _check_and_pin_minhash_state(spark, state, None, 5, 6, 3)
-        _ensure_minhash_state_pinned(spark, state, None, 5, 6, 3)
+        _guard(spark, kind, state).pin()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("ks_guard_probe")
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert len(jobs) == 0, f"guard ran Spark jobs: {jobs}"
+
+
+# exact sidecar bytes and per-file parquet (column, type) lists written
+# by one call of each kind, as the format stood before the kinds shared
+# one state protocol: state dirs written by earlier versions must stay
+# readable and verifiable
+STATE_FORMAT = {
+    "exact": (
+        '{"kind": "exact_fingerprints", "params": {}}',
+        [("fingerprint", "string")],
+        [],
+    ),
+    "minhash": (
+        '{"kind": "minhash_bands", "params": {"bands": 3, '
+        '"hash_fn": "xxhash64", "n": 5, "num_hashes": 6}}',
+        [("band_id", "int32"), ("band_key", "string"), ("hash_fn", "string")],
+        [],
+    ),
+    "embedding": (
+        '{"kind": "embedding_signlsh", "params": {"bands": 2, "dims": 8, '
+        '"planes_per_band": 8}}',
+        [("band_id", "int32"), ("band_key", "string")],
+        [],
+    ),
+    "lines": (
+        '{"kind": "line_hashes", "params": {"delim": "\\n"}}',
+        [("line_key", "string")],
+        [],
+    ),
+    "cdc": (
+        '{"kind": "cdc_chunks", "params": {"base": 257, "mask_bits": 6, '
+        '"mod": 2147483647, "window": 8}}',
+        [("chunk_key", "string"), ("n_bytes", "int64")],
+        [],
+    ),
+    "cms": (
+        '{"kind": "cms", "params": {"depth": 3, "salt": "s1", "width": 64}}',
+        [("row", "int32"), ("bucket", "int64"), ("cnt", "int64")],
+        ["batch_id"],
+    ),
+}
+
+
+def test_state_on_disk_format_is_stable(one_call_state):
+    """The persisted format is byte-compatible across refactors of the
+    state protocol: exact sidecar JSON, every parquet file's column
+    names and physical types, and the hive partition columns."""
+    import pyarrow.parquet as pq
+
+    kind, state = one_call_state
+    sidecar, columns, partitions = STATE_FORMAT[kind]
+    with open(state_meta_path(state)) as f:
+        assert f.read() == sidecar
+    layouts, parts = set(), set()
+    for root, _, files in os.walk(state):
+        for name in files:
+            if name.endswith(".parquet"):
+                sch = pq.read_schema(os.path.join(root, name))
+                layouts.add(tuple((c, str(sch.field(c).type)) for c in sch.names))
+                if root != state:
+                    parts.add(os.path.relpath(root, state).split("=")[0])
+    assert layouts == {tuple(columns)}
+    assert sorted(parts) == partitions
 
 
 # ---------- CMS sink / reader ----------

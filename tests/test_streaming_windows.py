@@ -6,9 +6,25 @@ import datetime as dt
 import uuid
 
 import pyspark.sql.functions as F
+import pytest
 
+from kolang_spark.llm.dedup import (
+    _incremental_embedding_flagged,
+    _incremental_lines_flagged,
+    _incremental_minhash_flagged,
+    _rebuild_deduped_lines,
+    incremental_embedding_dedup,
+    incremental_line_dedup,
+    incremental_minhash_dedup,
+)
 from kolang_spark.sources.io import read_table
-from kolang_spark.streaming import sliding, tumbling
+from kolang_spark.streaming import (
+    embedding_dedup_sink,
+    line_dedup_sink,
+    minhash_dedup_sink,
+    sliding,
+    tumbling,
+)
 
 
 def _mk_events(spark):
@@ -344,88 +360,6 @@ def test_line_dedup_sink_stream_equals_batch(spark, tmp_path):
     assert s_stream == s_batch
 
 
-def test_line_dedup_crash_before_state_append_never_loses(spark, tmp_path):
-    """The sinks' documented crash contract, pinned mechanically: a
-    batch that crashes AFTER its output append but BEFORE its state
-    append recomputes the IDENTICAL keep flags on replay (duplicate
-    output rows at worst, zero loss). The negative control shows the
-    inverse order would lose data: once the state append lands, a
-    re-run of the same batch strips every line it had just recorded."""
-    from kolang_spark.llm.dedup import (
-        _incremental_lines_flagged,
-        incremental_line_dedup,
-    )
-
-    schema = "doc_id long, text string"
-    state = str(tmp_path / "state")
-    b1 = spark.createDataFrame([(1, "alpha one\nshared line")], schema)
-    incremental_line_dedup(spark, b1, state).collect()  # state = batch 1
-
-    b2 = spark.createDataFrame(
-        [(2, "shared line\nbeta two"), (3, "beta two\ngamma three")], schema
-    )
-    # crashed attempt: flags computed (and output written, conceptually)
-    # but the state append never happens
-    marked_crash, _novel = _incremental_lines_flagged(
-        spark, b2, state, "doc_id", "text", "\n"
-    )
-    crash_keeps = sorted(
-        (r["_id"], r["_pos"])
-        for r in marked_crash.where("_keep").collect()
-    )
-    # replay after the crash: the full operator (which DOES append
-    # state) must compute the same keep set — nothing lost
-    replay = incremental_line_dedup(spark, b2, state)
-    got = {r.doc_id: (r.text_deduped, r.n_kept) for r in replay.collect()}
-    assert got[2] == ("beta two", 1)        # 'shared line' was state-hit
-    assert got[3] == ("gamma three", 1)     # 'beta two' in-batch first won
-    assert len(crash_keeps) == sum(k for _t, k in got.values())
-
-    # negative control — state-first ordering WOULD lose everything:
-    # now that the replay appended state, a third run of the same batch
-    # finds all its own lines in state and strips them
-    third = incremental_line_dedup(spark, b2, state)
-    assert {r.n_kept for r in third.collect()} == {0}
-
-
-def test_minhash_crash_before_state_append_never_loses(spark, tmp_path):
-    """Same contract for the MinHash sink core: flags recomputed after
-    a crash-before-state-append match the crashed attempt's accept
-    set; after state lands, a re-run flags everything near-duplicate."""
-    from kolang_spark.llm.dedup import (
-        _incremental_minhash_flagged,
-        incremental_minhash_dedup,
-    )
-
-    schema = "doc_id long, text string"
-    state = str(tmp_path / "state")
-    t_a = "the quick brown fox jumps over the lazy dog today"
-    t_b = "completely different content with many unique words inside"
-    incremental_minhash_dedup(
-        spark, spark.createDataFrame([(1, t_a)], schema), state
-    ).collect()
-
-    b2 = spark.createDataFrame([(2, t_a), (3, t_b)], schema)
-    marked_crash, _novel = _incremental_minhash_flagged(spark, b2, state)
-    crash_accepts = sorted(
-        r.doc_id for r in marked_crash.where("NOT is_near_duplicate").collect()
-    )
-    assert crash_accepts == [3]  # 2 is a state near-dup of 1
-    replay = incremental_minhash_dedup(spark, b2, state)
-    replay_accepts = sorted(
-        r.doc_id for r in replay.where("NOT is_near_duplicate").collect()
-    )
-    assert replay_accepts == crash_accepts  # identical flags — no loss
-
-    # negative control: state now contains doc 3's bands, so a re-run
-    # of the same batch flags 3 as its own duplicate — the loss mode
-    # the output-before-state ordering exists to prevent
-    third = incremental_minhash_dedup(spark, b2, state)
-    assert sorted(
-        r.doc_id for r in third.where("NOT is_near_duplicate").collect()
-    ) == []
-
-
 def test_embedding_dedup_sink_stream_equals_batch(spark, tmp_path):
     """Streaming sign-LSH embedding ingest over two micro-batches ==
     the batch operator twice on the same batches: same flags, same
@@ -483,54 +417,6 @@ def test_embedding_dedup_sink_stream_equals_batch(spark, tmp_path):
         (r.band_id, r.band_key) for r in spark.read.parquet(state2).collect()
     )
     assert s_stream == s_batch
-
-
-def test_sink_replay_after_state_append_is_flag_idempotent(spark, tmp_path):
-    """The OTHER crash window — after the state append but before the
-    streaming checkpoint commit: because sink state rows carry the
-    (replay-stable) foreachBatch batch_id and the flag computation
-    excludes the replaying batch's own rows, the replay recomputes
-    identical flags instead of gutting its own documents. The negative
-    control (no exclusion) shows exactly the gutting this prevents."""
-    from pyspark.sql import functions as F
-
-    from kolang_spark.llm.dedup import _incremental_lines_flagged
-
-    schema = "doc_id long, text string"
-    state = str(tmp_path / "state")
-    b = spark.createDataFrame(
-        [(1, "alpha one\nbeta two"), (2, "beta two\ngamma three")], schema
-    )
-    # batch 7's first attempt: flags computed, OUTPUT written
-    # (conceptually), state appended WITH the batch stamp — then crash
-    marked1, novel1 = _incremental_lines_flagged(
-        spark, b, state, "doc_id", "text", "\n", exclude_batch=7
-    )
-    keeps1 = sorted(
-        (r["_id"], r["_pos"]) for r in marked1.where("_keep").collect()
-    )
-    novel1.withColumn("batch_id", F.lit(7)).write.mode("append").parquet(state)
-
-    # replay of batch 7: own state rows excluded -> identical flags
-    marked2, novel2 = _incremental_lines_flagged(
-        spark, b, state, "doc_id", "text", "\n", exclude_batch=7
-    )
-    keeps2 = sorted(
-        (r["_id"], r["_pos"]) for r in marked2.where("_keep").collect()
-    )
-    assert keeps2 == keeps1
-    # and the re-appended novel keys are the same set (state gains
-    # duplicates, which the de-duplicated state read tolerates)
-    assert sorted(r.line_key for r in novel2.collect()) == sorted(
-        r.line_key for r in novel1.collect()
-    )
-
-    # negative control: a DIFFERENT batch (or an unstamped replay)
-    # sees batch 7's keys and strips every non-whitespace line
-    marked3, _ = _incremental_lines_flagged(
-        spark, b, state, "doc_id", "text", "\n", exclude_batch=8
-    )
-    assert marked3.where("_keep AND NOT _ws").count() == 0
 
 
 def test_cms_sink_stream_equals_batch(spark, tmp_path):
@@ -602,42 +488,6 @@ def test_cms_sink_replay_is_idempotent(spark, tmp_path):
     assert once == twice
 
 
-def test_sink_state_batch_id_is_parquet_int64(spark, tmp_path):
-    """Advisor r13: the sinks stamp batch_id with F.lit(int), which
-    py4j materializes as IntegerType — without an explicit cast the
-    state files hold Parquet INT32 while the explicit read schema says
-    bigint, a silent Spark-4-only widening dependency (Spark 3.x
-    throws SchemaColumnConvertNotSupportedException). Assert the
-    physical type written by the minhash sink is INT64."""
-    import os
-
-    import pyarrow.parquet as pq
-    from kolang_spark.streaming import minhash_dedup_sink
-
-    schema = "doc_id long, text string"
-    src = tmp_path / "src"
-    src.mkdir()
-    spark.createDataFrame(
-        [(1, "some unique text for the int64 stamp test")], schema
-    ).coalesce(1).write.parquet(str(src / "f1"))
-    state = str(tmp_path / "state")
-    stream = spark.readStream.schema(schema).parquet(str(src) + "/*")
-    q = minhash_dedup_sink(
-        stream, state, str(tmp_path / "out"), checkpoint=str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(120)
-    files = [
-        os.path.join(root, f)
-        for root, _, fs in os.walk(state)
-        for f in fs
-        if f.endswith(".parquet")
-    ]
-    assert files, "sink wrote no state files"
-    for f in files:
-        field = pq.read_schema(f).field("batch_id")
-        assert str(field.type) == "int64", (f, field.type)
-
-
 def _delete_last_commit(ckpt: str) -> int:
     """Simulate a crash AFTER batch N's writes but BEFORE its streaming
     checkpoint commit: delete the newest <ckpt>/commits/N marker. On
@@ -675,125 +525,269 @@ def _two_batch_source(spark, tmp_path, rows1, rows2, schema):
     )
 
 
-def test_minhash_sink_idempotent_output_replay_exact_rows(spark, tmp_path):
+# ---------- the dedup-sink crash/replay contracts, once per kind ----------
+
+T_A = "the quick brown fox jumps over the lazy dog today"
+T_B = "completely different content with many unique words inside"
+T_C = "a third document that shares nothing with the others at all"
+VA = [float(i) for i in range(8)]
+VB = [float(8 - i) for i in range(8)]
+VC = [1.0, -1.0] * 4
+DOCS = "doc_id long, text string"
+VECS = "vec_id long, embedding array<double>"
+
+
+def _accepted_ids(id_col):
+    def summary(frame):
+        return sorted(
+            r[id_col] for r in frame.where("NOT is_near_duplicate").collect()
+        )
+
+    return summary
+
+
+# per kind: schema, batch 1, batch 2, the flagged core, the sink's
+# output of flagged rows, the batch operator and the sink, a summary of
+# an output, the expected summaries of batch 2 (against batch 1's state,
+# on a fresh state, and once its own rows are in state), and the
+# two-micro-batch stream of the exactly-once replay test with its
+# expected rows
+SINK_KINDS = {
+    "lines": dict(
+        schema=DOCS,
+        b1=[(1, "alpha one\nshared line")],
+        b2=[(2, "shared line\nbeta two"), (3, "beta two\ngamma three")],
+        flagged=lambda spark, b, st, exclude_batch=None: _incremental_lines_flagged(
+            spark, b, st, "doc_id", "text", "\n", exclude_batch=exclude_batch
+        ),
+        output=lambda b, marked: _rebuild_deduped_lines(
+            b, marked, "doc_id", "text", "\n", None
+        ),
+        op=incremental_line_dedup,
+        sink=line_dedup_sink,
+        summary=lambda frame: {
+            r.doc_id: (r.text_deduped, r.n_kept) for r in frame.collect()
+        },
+        # 'shared line' is a state hit; 'beta two' in-batch first wins
+        after_b1={2: ("beta two", 1), 3: ("gamma three", 1)},
+        fresh={2: ("shared line\nbeta two", 2), 3: ("gamma three", 1)},
+        stripped={2: ("", 0), 3: ("", 0)},
+        sink_kw={},
+        stream=(
+            [(1, "alpha one\nshared line")],
+            [(2, "shared line\nbeta two"), (3, "beta two\ngamma three")],
+        ),
+        out_key=lambda r: (r.doc_id, r.text_deduped, r["_batch_id"]),
+        out_first=[
+            (1, "alpha one\nshared line", 0),
+            (2, "beta two", 1),
+            (3, "gamma three", 1),
+        ],
+        id_col="doc_id",
+        replayed_twice=[1, 2, 2, 3, 3],
+    ),
+    "minhash": dict(
+        schema=DOCS,
+        b1=[(1, T_A)],
+        b2=[(2, T_A), (3, T_B)],
+        flagged=lambda spark, b, st, exclude_batch=None: _incremental_minhash_flagged(
+            spark, b, st, exclude_batch=exclude_batch
+        ),
+        output=lambda b, marked: marked,
+        op=incremental_minhash_dedup,
+        sink=minhash_dedup_sink,
+        summary=_accepted_ids("doc_id"),
+        after_b1=[3],  # 2 is a state near-dup of 1
+        fresh=[2, 3],
+        stripped=[],
+        sink_kw={},
+        stream=(
+            [(1, T_A), (2, "completely different content many unique words"),
+             (3, T_A)],
+            [(4, T_A), (5, T_C)],
+        ),
+        out_key=lambda r: (r.doc_id, r["_batch_id"]),
+        out_first=[(1, 0), (2, 0), (5, 1)],
+        id_col="doc_id",
+        replayed_twice=[1, 2, 5, 5],
+    ),
+    "embedding": dict(
+        schema=VECS,
+        b1=[(1, VA)],
+        b2=[(2, VA), (3, VC)],
+        flagged=lambda spark, b, st, exclude_batch=None: _incremental_embedding_flagged(
+            spark, b, st, "vec_id", "embedding", 8, 8, 2, exclude_batch=exclude_batch
+        ),
+        output=lambda b, marked: marked,
+        op=lambda spark, b, st: incremental_embedding_dedup(spark, b, st, dims=8),
+        sink=embedding_dedup_sink,
+        summary=_accepted_ids("vec_id"),
+        after_b1=[3],  # 2 is identical to 1: a state band hit
+        fresh=[2, 3],
+        stripped=[],
+        sink_kw={"dims": 8},
+        stream=([(1, VA), (2, VB)], [(3, VA), (4, VC)]),
+        out_key=lambda r: (r.vec_id, r["_batch_id"]),
+        out_first=[(1, 0), (2, 0), (4, 1)],
+        id_col="vec_id",
+        replayed_twice=[1, 2, 4, 4],
+    ),
+}
+
+
+@pytest.mark.parametrize("kind", list(SINK_KINDS))
+def test_crash_before_state_append_never_loses(spark, tmp_path, kind):
+    """The sinks' documented crash contract, pinned mechanically: a
+    batch that crashes AFTER its output append but BEFORE its state
+    append recomputes the IDENTICAL flags on replay (duplicate output
+    rows at worst, zero loss). The negative control shows the inverse
+    order would lose data: once the state append lands, a re-run of
+    the same batch treats everything it had just recorded as seen."""
+    k = SINK_KINDS[kind]
+    state = str(tmp_path / "state")
+    k["op"](spark, spark.createDataFrame(k["b1"], k["schema"]), state).collect()
+
+    b2 = spark.createDataFrame(k["b2"], k["schema"])
+    # crashed attempt: flags computed (and output written, conceptually)
+    # but the state append never happens
+    marked, _novel, _store = k["flagged"](spark, b2, state)
+    crash = k["summary"](k["output"](b2, marked))
+    assert crash == k["after_b1"]
+    # replay after the crash: the full operator (which DOES append
+    # state) must compute the same flags — nothing lost
+    assert k["summary"](k["op"](spark, b2, state)) == crash
+    # negative control — state-first ordering WOULD lose everything
+    assert k["summary"](k["op"](spark, b2, state)) == k["stripped"]
+
+
+@pytest.mark.parametrize("kind", list(SINK_KINDS))
+def test_sink_replay_after_state_append_is_flag_idempotent(
+    spark, tmp_path, kind
+):
+    """The OTHER crash window — after the state append but before the
+    streaming checkpoint commit: because sink state rows carry the
+    (replay-stable) foreachBatch batch_id and the flag computation
+    excludes the replaying batch's own rows, the replay recomputes
+    identical flags instead of flagging its own rows. The negative
+    control (another batch id) shows exactly the loss this prevents."""
+    k = SINK_KINDS[kind]
+    state = str(tmp_path / "state")
+    b = spark.createDataFrame(k["b2"], k["schema"])
+    # batch 7's first attempt: flags computed, OUTPUT written
+    # (conceptually), state appended WITH the batch stamp — then crash
+    marked1, novel1, store = k["flagged"](spark, b, state, exclude_batch=7)
+    first = k["summary"](k["output"](b, marked1))
+    assert first == k["fresh"]
+    novel_rows = sorted(novel1.collect())
+    store.append(novel1, 7)
+
+    # replay of batch 7: own state rows excluded -> identical flags
+    marked2, novel2, _ = k["flagged"](spark, b, state, exclude_batch=7)
+    assert k["summary"](k["output"](b, marked2)) == first
+    # and the re-appended novel keys are the same set (state gains
+    # duplicates, which the state read tolerates)
+    assert sorted(novel2.collect()) == novel_rows
+
+    # negative control: a DIFFERENT batch (or an unstamped replay)
+    # sees batch 7's keys and drops everything
+    marked3, _, _ = k["flagged"](spark, b, state, exclude_batch=8)
+    assert k["summary"](k["output"](b, marked3)) == k["stripped"]
+
+
+# state columns each sink writes, with batch_id last
+SINK_STATE_COLUMNS = {
+    "lines": ["line_key", "batch_id"],
+    "minhash": ["band_id", "band_key", "hash_fn", "batch_id"],
+    "embedding": ["band_id", "band_key", "batch_id"],
+}
+
+
+@pytest.mark.parametrize("kind", list(SINK_KINDS))
+def test_sink_state_batch_id_is_parquet_int64(spark, tmp_path, kind):
+    """Advisor r13: a batch_id stamped with F.lit(int) is IntegerType
+    under py4j — without an explicit cast the state files hold Parquet
+    INT32 while the explicit read schema says bigint, a silent
+    Spark-4-only widening dependency (Spark 3.x throws
+    SchemaColumnConvertNotSupportedException). Assert the physical
+    type every dedup sink writes is INT64, next to its state
+    columns."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    k = SINK_KINDS[kind]
+    src = tmp_path / "src"
+    src.mkdir()
+    spark.createDataFrame(k["b2"][:1], k["schema"]).coalesce(1).write.parquet(
+        str(src / "f1")
+    )
+    state = str(tmp_path / "state")
+    stream = spark.readStream.schema(k["schema"]).parquet(str(src) + "/*")
+    q = k["sink"](
+        stream, state, str(tmp_path / "out"), checkpoint=str(tmp_path / "ckpt"),
+        **k["sink_kw"],
+    )
+    q.awaitTermination(120)
+    files = [
+        os.path.join(root, f)
+        for root, _, fs in os.walk(state)
+        for f in fs
+        if f.endswith(".parquet")
+    ]
+    assert files, "sink wrote no state files"
+    for f in files:
+        schema = pq.read_schema(f)
+        assert schema.names == SINK_STATE_COLUMNS[kind], f
+        assert str(schema.field("batch_id").type) == "int64", f
+
+
+@pytest.mark.parametrize("kind", list(SINK_KINDS))
+def test_sink_idempotent_output_replay_exact_rows(spark, tmp_path, kind):
     """r12 verdict item 4: with idempotent_output=True a crash-replayed
     batch REPLACES its own _batch_id output partition, so the final
     output is EXACTLY the same rows — not merely no-lost-rows. The
     negative control shows default append-mode replay duplicating the
     replayed batch's rows (the documented at-least-once artifact)."""
-    from kolang_spark.streaming import minhash_dedup_sink
+    k = SINK_KINDS[kind]
+    sink = k["sink"]
+    b1, b2 = k["stream"]
 
-    t_a = "the quick brown fox jumps over the lazy dog today"
-    t_c = "a third document that shares nothing with the others at all"
-    schema = "doc_id long, text string"
-    b1 = [(1, t_a), (2, "completely different content many unique words"), (3, t_a)]
-    b2 = [(4, t_a), (5, t_c)]
-
-    stream = _two_batch_source(spark, tmp_path, b1, b2, schema)
+    stream = _two_batch_source(spark, tmp_path, b1, b2, k["schema"])
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = minhash_dedup_sink(
+    q = sink(
         stream, str(tmp_path / "state"), out, checkpoint=ckpt,
-        idempotent_output=True,
+        idempotent_output=True, **k["sink_kw"],
     )
     q.awaitTermination(120)
-    first = sorted(
-        (r.doc_id, r["_batch_id"]) for r in spark.read.parquet(out).collect()
-    )
-    assert [d for d, _ in first] == [1, 2, 5]
-    assert {b for _, b in first} == {0, 1}  # one hive partition per batch
+    first = sorted(k["out_key"](r) for r in spark.read.parquet(out).collect())
+    # one hive partition per batch
+    assert first == k["out_first"]
 
-    replayed = _delete_last_commit(ckpt)
-    assert replayed == 1
-    q2 = minhash_dedup_sink(
+    assert _delete_last_commit(ckpt) == 1
+    q2 = sink(
         stream, str(tmp_path / "state"), out, checkpoint=ckpt,
-        idempotent_output=True,
+        idempotent_output=True, **k["sink_kw"],
     )
     q2.awaitTermination(120)
-    second = sorted(
-        (r.doc_id, r["_batch_id"]) for r in spark.read.parquet(out).collect()
-    )
+    second = sorted(k["out_key"](r) for r in spark.read.parquet(out).collect())
     assert second == first  # exactly the same rows — not just no loss
 
     # negative control: default append mode duplicates the replayed
-    # batch's output rows (at-least-once, removable by doc_id)
+    # batch's output rows (at-least-once, removable by id)
     stream_c = _two_batch_source(
-        spark, tmp_path / "ctl", b1, b2, schema
+        spark, tmp_path / "ctl", b1, b2, k["schema"]
     )
     out_c, ckpt_c = str(tmp_path / "out_c"), str(tmp_path / "ckpt_c")
-    qc = minhash_dedup_sink(
-        stream_c, str(tmp_path / "state_c"), out_c, checkpoint=ckpt_c
+    qc = sink(
+        stream_c, str(tmp_path / "state_c"), out_c, checkpoint=ckpt_c,
+        **k["sink_kw"],
     )
     qc.awaitTermination(120)
     _delete_last_commit(ckpt_c)
-    qc2 = minhash_dedup_sink(
-        stream_c, str(tmp_path / "state_c"), out_c, checkpoint=ckpt_c
+    qc2 = sink(
+        stream_c, str(tmp_path / "state_c"), out_c, checkpoint=ckpt_c,
+        **k["sink_kw"],
     )
     qc2.awaitTermination(120)
-    dup = sorted(r.doc_id for r in spark.read.parquet(out_c).collect())
-    assert dup == [1, 2, 5, 5]  # batch 1's accepted row appended twice
-
-
-def test_line_sink_idempotent_output_replay_exact_rows(spark, tmp_path):
-    """Same exactly-once upgrade for the line-dedup sink family."""
-    from kolang_spark.streaming import line_dedup_sink
-
-    schema = "doc_id long, text string"
-    b1 = [(1, "alpha one\nshared line")]
-    b2 = [(2, "shared line\nbeta two"), (3, "beta two\ngamma three")]
-    stream = _two_batch_source(spark, tmp_path, b1, b2, schema)
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = line_dedup_sink(
-        stream, str(tmp_path / "state"), out, checkpoint=ckpt,
-        idempotent_output=True,
-    )
-    q.awaitTermination(120)
-    first = sorted(
-        (r.doc_id, r.text_deduped, r["_batch_id"])
-        for r in spark.read.parquet(out).collect()
-    )
-    assert _delete_last_commit(ckpt) == 1
-    q2 = line_dedup_sink(
-        stream, str(tmp_path / "state"), out, checkpoint=ckpt,
-        idempotent_output=True,
-    )
-    q2.awaitTermination(120)
-    second = sorted(
-        (r.doc_id, r.text_deduped, r["_batch_id"])
-        for r in spark.read.parquet(out).collect()
-    )
-    assert second == first
-
-
-def test_embedding_sink_idempotent_output_replay_exact_rows(
-    spark, tmp_path
-):
-    """Same exactly-once upgrade for the embedding-dedup sink family."""
-    from kolang_spark.streaming import embedding_dedup_sink
-
-    dims = 8
-    va = [float(i) for i in range(dims)]
-    vb = [float(dims - i) for i in range(dims)]
-    vc = [1.0, -1.0] * (dims // 2)
-    schema = "vec_id long, embedding array<double>"
-    b1 = [(1, va), (2, vb)]
-    b2 = [(3, va), (4, vc)]
-    stream = _two_batch_source(spark, tmp_path, b1, b2, schema)
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = embedding_dedup_sink(
-        stream, str(tmp_path / "state"), out, dims=dims,
-        checkpoint=ckpt, idempotent_output=True,
-    )
-    q.awaitTermination(120)
-    first = sorted(
-        (r.vec_id, r["_batch_id"]) for r in spark.read.parquet(out).collect()
-    )
-    assert _delete_last_commit(ckpt) == 1
-    q2 = embedding_dedup_sink(
-        stream, str(tmp_path / "state"), out, dims=dims,
-        checkpoint=ckpt, idempotent_output=True,
-    )
-    q2.awaitTermination(120)
-    second = sorted(
-        (r.vec_id, r["_batch_id"]) for r in spark.read.parquet(out).collect()
-    )
-    assert second == first
+    dup = sorted(r[k["id_col"]] for r in spark.read.parquet(out_c).collect())
+    assert dup == k["replayed_twice"]  # batch 1's output appended twice
