@@ -648,7 +648,7 @@ def semantic_dedup(
     # (cent_id, slice) as before — its fanout frame differs per side.
     from kolang_spark.utils import iter_checkpoint
 
-    assigned = iter_checkpoint(
+    assigned, _, _ = iter_checkpoint(
         _kmeans_assign(pts, cents, dims)
         .withColumn("nrm", _norm("p_v", dims))
         .repartition("cent_id"),
@@ -698,24 +698,6 @@ def semantic_dedup(
     )
 
 
-def _observation_changed(obs, timeout: float = 60.0) -> Optional[int]:
-    """Read ``obs.get["changed"]`` with a bounded wait.
-
-    ``Observation.get`` blocks until the observed action's metrics
-    arrive; on classic Spark they already have (the eager checkpoint ran
-    under ``withAction``), so this returns instantly. On a runtime that
-    materializes ``localCheckpoint`` outside a tracked SQL execution the
-    metrics would never fire — return ``None`` after ``timeout`` so the
-    caller falls back to an explicit count instead of hanging forever.
-    (Delegates to the generalized
-    :func:`kolang_spark.utils.observation_value`.)
-    """
-    from kolang_spark.utils import observation_value
-
-    v = observation_value(obs, "changed", timeout)
-    return None if v is None else int(v or 0)
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
@@ -756,8 +738,7 @@ def connected_components(
     out of the one groupBy, and the changed-count is collected via
     ``DataFrame.observe`` **during the eager checkpoint's own action** —
     a heavy round is therefore exactly two Spark jobs (propagate+count
-    fused, jump), a tail round exactly one. (Fallback: a plain count of
-    the checkpointed result where the runtime rejects observe.)
+    fused, jump), a tail round exactly one.
 
     Each heavy round is one equi-join + one groupBy + one small
     self-join (hash-partitioned, fully parallel); tail rounds drop the
@@ -782,7 +763,7 @@ def connected_components(
     natural no-op; checkpoint files under the dir are the caller's to
     clean. Default None keeps the fast local behavior.
     """
-    from kolang_spark.utils import release_checkpoints, tracked_local_checkpoint
+    from kolang_spark.utils import iter_checkpoint, release_checkpoints
 
     spark = edges.sparkSession
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -805,28 +786,13 @@ def connected_components(
     )
     # the vertex count rides the checkpoint's own materialization
     # (observe on the self-loop rows) instead of a separate count job
-    from pyspark.errors import PySparkException
-    from pyspark.sql import Observation
-
-    n_obs = Observation()
-    try:
-        full = full.observe(
-            n_obs,
-            F.sum((F.col("a") == F.col("b")).cast("long")).alias("n_verts"),
-        )
-    except (PySparkException, NotImplementedError):
-        n_obs = None
-    sym, sym_ids = tracked_local_checkpoint(
-        full, checkpoint_dir, keep_partitioning=True
+    sym, m, sym_ids = iter_checkpoint(
+        full,
+        checkpoint_dir,
+        keep_partitioning=True,
+        observe={"n_verts": F.sum((F.col("a") == F.col("b")).cast("long"))},
     )
-    n_verts = None
-    if n_obs is not None:
-        from kolang_spark.utils import observation_value
-
-        v = observation_value(n_obs, "n_verts", 60.0)
-        n_verts = None if v is None else int(v or 0)
-    if n_verts is None:
-        n_verts = sym.where(F.col("a") == F.col("b")).count()
+    n_verts = m["n_verts"] or 0  # NULL on an empty graph
 
     # initial labels come straight off the checkpointed self-loops —
     # no second edge scan + distinct for the vertex set
@@ -850,34 +816,21 @@ def connected_components(
         # stable-under-propagation means labels are equal across every
         # edge, i.e. constant per component — fully converged, and the
         # jump below would be a no-op, so the last round skips its join
-        # Narrow guard (round-4 verdict item 5): only a runtime that
-        # rejects observe (e.g. some Connect versions) falls back to the
-        # count job — a genuine observe failure surfaces.
-        obs = Observation()
-        try:
-            agg = agg.observe(
-                obs,
-                F.sum(
+        propagated, m, ck_ids = iter_checkpoint(
+            agg,
+            checkpoint_dir,
+            observe={
+                "changed": F.sum(
                     (F.col("lbl") != F.col("old_lbl")).cast("long")
-                ).alias("changed"),
-            )
-        except (PySparkException, NotImplementedError):
-            obs = None
-        propagated, ck_ids = tracked_local_checkpoint(agg, checkpoint_dir)
+                )
+            },
+        )
         # this round's propagation re-materialized everything the
         # previous round's checkpoints held — they are now unreadable by
         # any future plan; drop their blocks
         release_checkpoints(spark, stale_ids)
         stale_ids, live_ids = live_ids, set(ck_ids)
-        # Bounded wait: on classic Spark the eager checkpoint above
-        # already fired the observed metrics, so this returns
-        # immediately; a runtime that materialized the checkpoint
-        # outside a tracked SQL execution would otherwise block
-        # obs.get forever — time out and fall back to the count (as
-        # when observe was rejected).
-        changed = None if obs is None else _observation_changed(obs, 60.0)
-        if changed is None:
-            changed = propagated.where(F.col("lbl") != F.col("old_lbl")).count()
+        changed = m["changed"] or 0  # NULL on an empty graph
         if changed == 0:
             labels = propagated.select("id", "lbl")
             break
@@ -894,7 +847,7 @@ def connected_components(
         # pointer jump: lbl ← lbl(lbl). Labels only ever decrease, so
         # the jump is safe and deterministic; checkpointing `propagated`
         # first keeps the self-join from recomputing the aggregation.
-        labels, jump_ids = tracked_local_checkpoint(
+        labels, _, jump_ids = iter_checkpoint(
             checkpoint_dir=checkpoint_dir,
             df=propagated.alias("x")
             .join(

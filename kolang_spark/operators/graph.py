@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 __all__ = ["pagerank", "label_propagation"]
@@ -81,7 +81,9 @@ def pagerank(
     (the connected_components trick) — ONE Spark job per iteration
     total; round 0's dangling mass is pure arithmetic because initial
     ranks are uniform. No collect of node or edge data, no cross join,
-    no Python UDF.
+    no Python UDF. Each superseded round's pin is released once the next
+    one materializes, and the spine and edge pins once the loop ends,
+    so only the returned frame's pin stays in executor storage.
 
     ``broadcast_ranks=True`` hints the per-iteration ranks ⋈ edges join
     to broadcast the rank table, so the (checkpointed) edge frame is
@@ -138,7 +140,7 @@ def pagerank(
     # each round's dangling mass come out of the SAME action that
     # checkpoints the new ranks (observe-fusion, the
     # connected_components trick) instead of a separate collect job.
-    from kolang_spark.utils import iter_checkpoint, observation_value
+    from kolang_spark.utils import iter_checkpoint, release_checkpoints
 
     nodes = (
         e.select(F.col("src").alias(node_col))
@@ -155,29 +157,23 @@ def pagerank(
             node_col, F.coalesce("_has_out", F.lit(False)).alias("_has_out")
         )
     )
-    # node count + dangling count ride the spine checkpoint's own
-    # action (observe-fusion); fallback = two explicit counts on
-    # runtimes where checkpoint metrics never fire
-    setup_obs = Observation()
-    nodes = nodes.observe(
-        setup_obs,
-        F.count(F.lit(1)).alias("n"),
-        F.sum((~F.col("_has_out")).cast("long")).alias("nd"),
+    # node count + dangling count ride the spine checkpoint's own action
+    nodes, setup, spine_ids = iter_checkpoint(
+        nodes,
+        checkpoint_dir,
+        observe={
+            "n": F.count(F.lit(1)),
+            "nd": F.sum((~F.col("_has_out")).cast("long")),
+        },
     )
-    nodes = iter_checkpoint(nodes, checkpoint_dir)
-    n = observation_value(setup_obs, "n", timeout=5.0)
-    n_dangling = observation_value(setup_obs, "nd", timeout=5.0)
-    if n is None:
-        n = nodes.count()
+    n = setup["n"]
     if n == 0:
         return nodes.select(
             node_col, F.lit(0).cast("long").alias(rank_col)
         )
-    if n_dangling is None:
-        n_dangling = nodes.where(~F.col("_has_out")).count()
     # initial ranks are uniform, so round 0's dangling mass is pure
     # arithmetic on those two counts
-    dangling = (scale // n) * int(n_dangling)
+    dangling = (scale // n) * int(setup["nd"])
 
     # edges never change across iterations: attach out-degrees once and
     # pin the frame so each round scans it instead of re-joining.
@@ -191,12 +187,13 @@ def pagerank(
     e_att = e.join(outdeg, "src")
     if broadcast_ranks:
         e_att = e_att.repartition("dst")
-    e_od = iter_checkpoint(
+    e_od, _, edge_ids = iter_checkpoint(
         e_att, checkpoint_dir, keep_partitioning=broadcast_ranks
     )
 
     teleport = (scale * (damping_den - damping_num)) // (damping_den * n)
     ranks = nodes.withColumn("r", F.lit(int(scale // n)).cast("long"))
+    rank_ids = frozenset()
 
     for _ in range(iterations):
         rside = F.broadcast(ranks) if broadcast_ranks else ranks
@@ -224,27 +221,23 @@ def pagerank(
             ).cast("long").alias("r"),
         )
         # next round's dangling mass rides the checkpoint's own action:
-        # one Spark job per iteration, total. The read is BOUNDED
-        # (observation_value) — on a runtime whose localCheckpoint runs
-        # outside a tracked SQL execution the metrics never fire, and
-        # the explicit aggregate below takes over instead of hanging.
-        obs = Observation()
-        nxt = nxt.observe(
-            obs,
-            F.sum(
-                F.when(~F.col("_has_out"), F.col("r")).otherwise(F.lit(0))
-            ).alias("dang"),
+        # one Spark job per iteration, total
+        ranks, m, ids = iter_checkpoint(
+            nxt,
+            checkpoint_dir,
+            observe={
+                "dang": F.sum(
+                    F.when(~F.col("_has_out"), F.col("r")).otherwise(F.lit(0))
+                )
+            },
         )
-        ranks = iter_checkpoint(nxt, checkpoint_dir)
-        d = observation_value(obs, "dang", timeout=5.0)
-        if d is None:
-            d = (
-                ranks.where(~F.col("_has_out"))
-                .agg(F.coalesce(F.sum("r"), F.lit(0)).alias("d"))
-                .collect()[0]["d"]
-            )
-        dangling = int(d)
+        # the previous round's ranks are read by no plan any more
+        release_checkpoints(edges.sparkSession, rank_ids)
+        rank_ids = ids
+        dangling = int(m["dang"])
 
+    # the returned frame reads only the last round's pin
+    release_checkpoints(edges.sparkSession, spine_ids | edge_ids)
     return ranks.select(F.col(node_col), F.col("r").alias(rank_col))
 
 
@@ -290,7 +283,8 @@ def label_propagation(
     as a single aggregate, NO window function (a row_number window
     would sort every partition; min(struct) combines map-side). The
     label frame (|V| rows) is checkpointed per round so the plan stays
-    O(1) deep. ``broadcast_labels=True`` broadcasts the label table
+    O(1) deep, and pins the returned frame no longer reads are released
+    as in :func:`pagerank`. ``broadcast_labels=True`` broadcasts the label table
     into the per-round join when |V| fits in executor memory — the
     edge frame is then never re-shuffled. ``checkpoint_dir`` switches
     every pin (node spine, symmetrized edges, per-round labels) to a
@@ -298,7 +292,7 @@ def label_propagation(
     5 — see :func:`pagerank`); default None keeps the fast
     ``localCheckpoint`` behavior.
     """
-    from kolang_spark.utils import iter_checkpoint
+    from kolang_spark.utils import iter_checkpoint, release_checkpoints
 
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
@@ -312,7 +306,7 @@ def label_propagation(
         .unionAll(e_raw.select(F.col("v").alias(node_col)))
         .distinct()
     )
-    nodes = iter_checkpoint(nodes, checkpoint_dir)
+    nodes, _, spine_ids = iter_checkpoint(nodes, checkpoint_dir)
     # r13: pick the pinned edge layout by how each round consumes it.
     # Broadcast labels: the join is shuffle-free, so partition by the
     # AGGREGATION key ``v`` — hash(v) satisfies both the following
@@ -333,9 +327,12 @@ def label_propagation(
         .repartition(sym_key)
         .distinct()
     )
-    sym = iter_checkpoint(sym, checkpoint_dir, keep_partitioning=True)
+    sym, _, sym_ids = iter_checkpoint(
+        sym, checkpoint_dir, keep_partitioning=True
+    )
 
     labels = nodes.select(node_col, F.col(node_col).alias("__lbl__"))
+    label_ids = frozenset()
     for _ in range(iterations):
         lside = F.broadcast(labels) if broadcast_labels else labels
         # neighbor labels: edge (u → v) delivers u's current label to v
@@ -354,7 +351,7 @@ def label_propagation(
             )
             .select(F.col("v"), F.col("__best__.l").alias("__new__"))
         )
-        labels = iter_checkpoint(
+        labels, _, ids = iter_checkpoint(
             nodes.join(best, nodes[node_col] == best["v"], "left")
             .select(
                 nodes[node_col],
@@ -364,4 +361,8 @@ def label_propagation(
             ),
             checkpoint_dir,
         )
+        release_checkpoints(edges.sparkSession, label_ids)
+        label_ids = ids
+    # the returned frame reads only the last round's pin
+    release_checkpoints(edges.sparkSession, spine_ids | sym_ids)
     return labels.select(node_col, F.col("__lbl__").alias(label_col))

@@ -9,9 +9,12 @@ returning vanilla ``Column`` objects / tuples.
 
 from __future__ import annotations
 
+import threading
+from concurrent.futures import Future, TimeoutError as FutureTimeout
 from typing import Iterable, List, Sequence, Union
 
-from pyspark.sql import Column
+from pyspark.errors import PySparkException
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 ColumnOrName = Union[Column, str]
@@ -134,136 +137,147 @@ def ensure_min_parallelism(df, min_partitions: int | None = None):
     return df.repartition(target)
 
 
-def _eager_checkpoint_keep_partitioning(df, reliable: bool):
-    """Eager (local or reliable) checkpoint whose ``LogicalRDD``
-    RETAINS the child plan's hash partitioning under AQE.
+OBSERVE_WAIT_S = 60.0
+"""How long :func:`iter_checkpoint` waits for a pin's observed metrics
+before computing them with one aggregate over the pinned frame."""
 
-    ``Dataset.checkpoint`` copies ``executedPlan.outputPartitioning``
-    into the resulting ``LogicalRDD`` — but with AQE enabled the
-    executed plan is an ``AdaptiveSparkPlanExec`` whose partitioning
-    reads as unknown at capture time, so a deliberately laid-out frame
-    (e.g. an edge table repartitioned by its per-round join/agg key)
-    forgets its layout and every downstream round pays the exchange
-    again (measured: groupBy-after-checkpoint keeps its Exchange with
-    AQE on, drops it with AQE off). The checkpoint itself merely loses
-    AQE partition coalescing; its exchange count comes from
-    ``spark.sql.shuffle.partitions``, which this project keeps
-    scale-adaptive (conf/env).
 
-    r14 (VERDICT r13 item 7): the one AQE-off checkpoint plans in a
-    CLONED session — ``SparkSession.cloneSession()`` copies the full
-    runtime conf + session state but owns its own ``SQLConf``, so
-    flipping AQE off there is invisible to every other driver thread
-    (the old session-global toggle let a concurrent thread plan its
-    query without AQE for the duration of the checkpoint job). The
-    frame's logical plan is re-bound into the clone via
-    ``Dataset.ofRows`` (``private[sql]`` — public in bytecode, so
-    py4j dispatches it), checkpointed eagerly there (eager because
-    observe-fused metrics must fire in the same tracked execution —
-    the clone's listener manager is a clone-time copy of the
-    original's, so registered Observations still receive their
-    metrics; pinned by tests/test_checkpoint_dir.py), and the
-    resulting ``LogicalRDD`` plan — session-agnostic, it holds only
-    the materialized RDD — is re-wrapped in the ORIGINAL session.
-    Runtimes without JVM access (Spark Connect) fall back to the r13
-    session-global toggle, whose thread caveat is bounded by the
-    checkpoint job's duration."""
+def _jvm_session(spark):
+    """The session's JVM handle, or ``None`` on a JVM-less runtime (Spark
+    Connect sessions raise ``AttributeError`` for it)."""
+    return getattr(spark, "_jsparkSession", None)
+
+
+def iter_checkpoint(df, checkpoint_dir=None, keep_partitioning=False, observe=None):
+    """Eager lineage pin for iterative operators → ``(pinned_df, metrics,
+    rdd_ids)``.
+
+    **Local vs reliable.** By default the pin is an eager
+    ``localCheckpoint``: the fastest truncation, blocks in executor-local
+    storage, which die with their executor — fine on ``local[*]``, but on
+    a real cluster one lost executor makes the truncated lineage
+    unrecomputable. ``checkpoint_dir`` switches to a RELIABLE
+    ``checkpoint`` written under that fault-tolerant path, which survives
+    executor loss at the cost of one distributed write per pin. The
+    caller owns the directory's lifecycle. The directory rides the
+    session-global ``SparkContext.setCheckpointDir``, which has no
+    faithful restore (the getter returns the per-set UUID subdir): after
+    a call the session stays pointed there, and concurrent callers with
+    different dirs race on it. The set is skipped when the session
+    already points at ``checkpoint_dir`` (whole-path compare of the UUID
+    subdir's parent, both qualified through the Hadoop FileSystem — a
+    substring test would skip the set for ``/x/ck`` after ``/x/ck-old``),
+    so an N-round loop issues one set. Reliable pins need a classic
+    session.
+
+    **Keeping the partitioning.** ``checkpoint`` copies the executed
+    plan's output partitioning into its ``LogicalRDD``, but under AQE the
+    executed plan is an ``AdaptiveSparkPlanExec`` whose partitioning reads
+    as unknown, so a deliberately laid-out frame forgets its layout and
+    every downstream read pays the exchange again.
+    ``keep_partitioning=True`` therefore checkpoints with AQE off, in a
+    CLONED session (``cloneSession`` owns its own ``SQLConf``, so no other
+    driver thread sees the change): the logical plan is re-bound into the
+    clone with ``classic.Dataset.ofRows``, pinned there, and the resulting
+    session-agnostic ``LogicalRDD`` is re-wrapped in the original session.
+    The clone's listener manager is a copy of the original's, so observed
+    metrics still fire. Clones are not cached: a cached clone would keep a
+    stale conf, and per-call clones do not accumulate listeners. A
+    JVM-less session (Spark Connect) cannot clone and toggles AQE
+    session-wide for the duration of the pin instead.
+
+    **Metrics.** ``observe`` maps metric names to aggregate Columns over
+    ``df``; they ride the pin's own job via ``DataFrame.observe``, so a
+    convergence check costs no extra job. If the runtime rejects
+    ``observe`` or no metrics arrive within :data:`OBSERVE_WAIT_S`, the
+    same expressions run as one aggregate over the pinned frame. A metric
+    that is NULL (an empty frame) comes back as ``None``. ``metrics`` is
+    ``{}`` without ``observe``.
+
+    **Release.** ``rdd_ids`` are the persistent RDDs the pin registered
+    (empty on Spark Connect), for :func:`release_checkpoints` once no live
+    plan reads the pin: ``unpersist()`` only talks to the SQL cache
+    manager, so without release every superseded round's blocks stay
+    pinned until JVM GC. The ids are a before/after diff of the context's
+    persistent-RDD registry, so a concurrent persist from another driver
+    thread would be captured too — serialize such calls.
+    """
     spark = df.sparkSession
-    try:
-        aqe_on = (
-            str(spark.conf.get("spark.sql.adaptive.enabled", "true")).lower()
-            == "true"
+    jspark = _jvm_session(spark)
+    obs = None
+    if observe:
+        obs = Observation()
+        try:
+            df = df.observe(obs, *[c.alias(k) for k, c in observe.items()])
+        except (PySparkException, NotImplementedError):
+            obs = None
+    if checkpoint_dir is not None:
+        sc = spark.sparkContext
+        cur = sc.getCheckpointDir()
+        if cur is None or _qualify_dir(
+            spark, cur.rstrip("/").rsplit("/", 1)[0]
+        ) != _qualify_dir(spark, checkpoint_dir):
+            sc.setCheckpointDir(checkpoint_dir)
+    before = _persistent_rdd_ids(jspark)
+    out = _eager_checkpoint(
+        df, jspark, checkpoint_dir is not None, keep_partitioning
+    )
+    rdd_ids = _persistent_rdd_ids(jspark) - before
+    metrics = {} if obs is None else _observed(obs)
+    if observe and not set(observe) <= set(metrics):
+        metrics = (
+            out.agg(*[c.alias(k) for k, c in observe.items()])
+            .collect()[0]
+            .asDict()
         )
-    except Exception:  # pragma: no cover - conf access failed
-        aqe_on = False
-    if not aqe_on:
-        return df.checkpoint(eager=True) if reliable else df.localCheckpoint(
-            eager=True
-        )
-    try:
-        from pyspark.sql import DataFrame as _SparkDataFrame
+    return out, metrics, rdd_ids
 
-        jspark = spark._jsparkSession
-        jvm = spark._jvm
-        jclone = jspark.cloneSession()
-        jclone.conf().set("spark.sql.adaptive.enabled", "false")
-        ds_cls = jvm.org.apache.spark.sql.classic.Dataset
-        jdf2 = ds_cls.ofRows(
-            jclone, df._jdf.queryExecution().logical()
-        )
-        jck = jdf2.checkpoint(True) if reliable else jdf2.localCheckpoint(
-            True
-        )
-        jout = ds_cls.ofRows(jspark, jck.queryExecution().logical())
-        return _SparkDataFrame(jout, spark)
-    except Exception:  # pragma: no cover - Connect / JVM access failed
-        pass
+
+def _eager_checkpoint(df, jspark, reliable: bool, keep_partitioning: bool):
+    def pin(d):  # same call on a Python DataFrame and a JVM Dataset
+        return d.checkpoint(True) if reliable else d.localCheckpoint(True)
+
+    spark = df.sparkSession
+    if not keep_partitioning or (
+        spark.conf.get("spark.sql.adaptive.enabled", "true").lower() != "true"
+    ):
+        return pin(df)
+    if jspark is not None:
+        from py4j.java_gateway import JavaClass
+
+        # py4j resolves an unknown class to a JavaPackage: the one guard,
+        # before anything runs; errors past it propagate
+        ds_cls = spark._jvm.org.apache.spark.sql.classic.Dataset
+        if isinstance(ds_cls, JavaClass):
+            jclone = jspark.cloneSession()
+            jclone.conf().set("spark.sql.adaptive.enabled", "false")
+            jck = pin(ds_cls.ofRows(jclone, df._jdf.queryExecution().logical()))
+            jout = ds_cls.ofRows(jspark, jck.queryExecution().logical())
+            return DataFrame(jout, spark)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        return df.checkpoint(eager=True) if reliable else df.localCheckpoint(
-            eager=True
-        )
+        return pin(df)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
-def iter_checkpoint(df, checkpoint_dir=None, keep_partitioning=False):
-    """Per-iteration lineage pin for iterative operators (PageRank,
-    label propagation): eager ``localCheckpoint`` by default — the
-    fastest truncation, blocks in executor-local storage — or a
-    RELIABLE ``checkpoint`` into ``checkpoint_dir`` when given (r11
-    verdict item 5). ``localCheckpoint`` state dies with its executor:
-    fine on ``local[*]``, but on a real cluster one lost executor past
-    round 1 makes the truncated lineage unrecomputable and kills the
-    whole job. A reliable checkpoint writes each round's state to the
-    fault-tolerant ``checkpoint_dir`` filesystem (HDFS/object store)
-    and survives executor loss, at the cost of one distributed write
-    per round — opt in for long iteration chains on preemptible
-    fleets. The caller owns the directory's lifecycle (Spark only
-    auto-cleans it with ``spark.cleaner.referenceTracking
-    .cleanCheckpoints``).
+def _observed(obs) -> dict:
+    """``obs.get`` with a bounded wait: the metrics, or ``{}`` if none
+    arrived within :data:`OBSERVE_WAIT_S` (classic ``get`` blocks until
+    the observed action's metrics fire)."""
+    fut: Future = Future()
 
-    Caveats (review r12) — reliable checkpointing rides
-    ``SparkContext.setCheckpointDir``, which is SESSION-GLOBAL and has
-    no faithful restore (the getter returns the per-set UUID subdir,
-    not the value to re-set): (a) after an operator call with
-    ``checkpoint_dir``, the session's checkpoint dir stays pointed
-    there — re-issue your own ``setCheckpointDir`` before unrelated
-    ``df.checkpoint()`` calls, and don't delete the scratch dir while
-    frames that checkpointed into it are alive; (b) concurrent
-    operators in different driver threads with DIFFERENT
-    checkpoint_dirs race on the global setting — serialize them or
-    share one dir (the same one-driver-thread caveat as
-    :func:`tracked_local_checkpoint`'s release tracking). The set is
-    skipped when the session already points under ``checkpoint_dir``,
-    so an N-round loop issues one mkdir, not N.
+    def _get() -> None:
+        try:
+            fut.set_result(obs.get)
+        except BaseException as exc:  # re-raised below by fut.result()
+            fut.set_exception(exc)
 
-    ``keep_partitioning=True`` (r13): checkpoint via
-    :func:`_eager_checkpoint_keep_partitioning` so a deliberately
-    laid-out frame keeps its hash partitioning under AQE — use for
-    big frames pinned once and re-read every iteration."""
-    if checkpoint_dir is None:
-        if keep_partitioning:
-            return _eager_checkpoint_keep_partitioning(df, reliable=False)
-        return df.localCheckpoint(eager=True)
-    sc = df.sparkSession.sparkContext
+    threading.Thread(target=_get, daemon=True).start()
     try:
-        cur = sc.getCheckpointDir()
-    except Exception:  # pragma: no cover - Connect without the getter
-        cur = None
-    # cur is the fully-qualified UUID SUBDIR of the last set (possibly
-    # scheme-prefixed, e.g. file:/...). Strip the UUID leaf and compare
-    # its PARENT to checkpoint_dir on whole-path boundaries, qualifying
-    # both through the Hadoop FileSystem so schemes/relative paths
-    # normalize identically. A substring test here (advisor r12) would
-    # falsely skip the set when a *prior* dir merely contains
-    # checkpoint_dir as a path substring ('/data/ck-old' vs '/data/ck'),
-    # silently landing reliable checkpoints in the other directory.
-    if cur is None or _qualify_dir(df.sparkSession, cur.rstrip("/").rsplit("/", 1)[0]) != _qualify_dir(df.sparkSession, checkpoint_dir):
-        sc.setCheckpointDir(checkpoint_dir)
-    if keep_partitioning:
-        return _eager_checkpoint_keep_partitioning(df, reliable=True)
-    return df.checkpoint(eager=True)
+        return fut.result(OBSERVE_WAIT_S)
+    except FutureTimeout:
+        return {}
 
 
 def _qualify_dir(spark, path: str) -> str:
@@ -283,66 +297,10 @@ def _qualify_dir(spark, path: str) -> str:
     return fs.makeQualified(jpath).toString().rstrip("/")
 
 
-def tracked_local_checkpoint(df, checkpoint_dir=None, keep_partitioning=False):
-    """``localCheckpoint(eager=True)`` that also reports which RDD ids
-    the checkpoint registered, so iterative operators can *release*
-    superseded checkpoints deterministically (see
-    :func:`release_checkpoints`).
-
-    ``checkpoint_dir`` switches to a RELIABLE checkpoint (same
-    contract as :func:`iter_checkpoint`: survives executor loss, one
-    distributed write per call); reliable checkpoints pin no
-    executor-local blocks, so the returned id set is empty and
-    release is a natural no-op — checkpoint FILES under the dir are
-    the caller's to clean.
-
-    ``DataFrame.unpersist()`` only talks to the SQL cache manager and
-    leaves localCheckpoint's RDD-level blocks pinned until JVM GC — in
-    a long-lived session an iterative algorithm (connected components:
-    up to ~50 full-vertex-set checkpoints per call) accumulates
-    gigabytes of dead blocks and rides on nondeterministic
-    ContextCleaner timing. Tracking the registered ids at creation is
-    the only stable handle PySpark exposes.
-
-    Returns ``(checkpointed_df, frozenset_of_rdd_ids)``; on Spark
-    Connect (no JVM access) the id set is empty and release degrades to
-    the GC-timed behavior.
-
-    Caveat: the id set is computed as a before/after diff of the
-    context's persistent-RDD registry, so a *concurrent* persist from
-    another driver thread inside that window would be captured (and
-    later released) too. Acceptable for the iterative operators here
-    (one driver thread builds one query); in a multi-threaded driver,
-    serialize calls or skip release.
-    """
-    if checkpoint_dir is not None:
-        return (
-            iter_checkpoint(
-                df, checkpoint_dir, keep_partitioning=keep_partitioning
-            ),
-            frozenset(),
-        )
-    try:
-        jctx = df.sparkSession._jsparkSession.sparkContext()
-        before = _persistent_rdd_ids(jctx)
-    except Exception:
-        jctx = None
-        before = frozenset()
-    if keep_partitioning:
-        out = _eager_checkpoint_keep_partitioning(df, reliable=False)
-    else:
-        out = df.localCheckpoint(eager=True)
-    if jctx is None:
-        return out, frozenset()
-    try:
-        return out, frozenset(_persistent_rdd_ids(jctx) - before)
-    except Exception:
-        return out, frozenset()
-
-
-def _persistent_rdd_ids(jctx) -> frozenset:
-    m = jctx.getPersistentRDDs()
-    it = m.iterator()
+def _persistent_rdd_ids(jspark) -> frozenset:
+    if jspark is None:
+        return frozenset()
+    it = jspark.sparkContext().getPersistentRDDs().iterator()
     ids = set()
     while it.hasNext():
         ids.add(it.next()._1())
@@ -350,46 +308,17 @@ def _persistent_rdd_ids(jctx) -> frozenset:
 
 
 def release_checkpoints(spark, rdd_ids) -> None:
-    """Drop the RDD-level blocks of previously tracked localCheckpoints
-    (non-blocking). Safe to call with ids already collected by the
-    ContextCleaner; silently a no-op on Spark Connect.
+    """Drop the RDD-level blocks of pins tracked by
+    :func:`iter_checkpoint` (non-blocking). Safe to call with ids already
+    collected by the ContextCleaner; a no-op on Spark Connect.
 
-    Only release checkpoints that no live DataFrame's plan reads —
+    Only release pins that no live DataFrame's plan reads —
     localCheckpoint truncates lineage, so evicted blocks cannot be
     recomputed."""
-    try:
-        jctx = spark._jsparkSession.sparkContext()
-        m = jctx.getPersistentRDDs()
-        for pid in rdd_ids:
-            if m.contains(pid):
-                m.apply(pid).unpersist(False)
-    except Exception:
-        pass
-
-
-def observation_value(obs, key: str, timeout: float = 60.0):
-    """Read one metric from a ``pyspark.sql.Observation`` with a
-    BOUNDED wait, or ``None`` if the metrics never arrive.
-
-    ``Observation.get`` blocks until the observed action's metrics
-    fire; on classic Spark the eager action has already run them, so
-    this returns instantly. On a runtime that materializes the action
-    outside a tracked SQL execution (the hazard documented at
-    ``llm/dedup.py::_observation_changed``) the metrics never fire —
-    after ``timeout`` seconds this returns ``None`` so the caller can
-    fall back to an explicit aggregate job instead of hanging forever.
-    """
-    import threading
-
-    result: dict = {}
-
-    def _read() -> None:
-        try:
-            result["v"] = obs.get[key]
-        except Exception as exc:  # surfaced to caller as fallback
-            result["e"] = exc
-
-    t = threading.Thread(target=_read, daemon=True)
-    t.start()
-    t.join(timeout)
-    return result.get("v")
+    jspark = _jvm_session(spark)
+    if jspark is None:
+        return
+    m = jspark.sparkContext().getPersistentRDDs()
+    for pid in rdd_ids:
+        if m.contains(pid):
+            m.apply(pid).unpersist(False)

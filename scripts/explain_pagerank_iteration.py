@@ -67,13 +67,13 @@ def iteration_plan(spark, keep_partitioning: bool) -> str:
         .distinct()
         .select("node")
     )
-    nodes = iter_checkpoint(nodes)
+    nodes, _, _ = iter_checkpoint(nodes)
 
     e_att = e.join(outdeg, "src").repartition("dst")
-    e_od = iter_checkpoint(e_att, keep_partitioning=keep_partitioning)
+    e_od, _, _ = iter_checkpoint(e_att, keep_partitioning=keep_partitioning)
 
     ranks = nodes.withColumn("r", F.lit(1000).cast("long"))
-    ranks = iter_checkpoint(ranks)
+    ranks, _, _ = iter_checkpoint(ranks)
 
     in_sum = (
         e_od.join(F.broadcast(ranks), e_od["src"] == ranks["node"])

@@ -91,7 +91,7 @@ def test_iter_checkpoint_prior_substring_dir_does_not_skip_set(spark, tmp_path):
     want = str(tmp_path / "ck")
     sc.setCheckpointDir(old)
     df = spark.range(5)
-    out = iter_checkpoint(df, want)
+    out, _, _ = iter_checkpoint(df, want)
     assert out.count() == 5
     cur = sc.getCheckpointDir()  # fully-qualified UUID subdir
     parent = cur.rstrip("/").rsplit("/", 1)[0]
@@ -140,7 +140,7 @@ def test_reliable_checkpoint_survives_block_loss(spark, tmp_path):
     expect = list(range(0, 100, 7))
     df = spark.range(100).where("id % 7 = 0")
 
-    reliable = iter_checkpoint(df, str(tmp_path / "ck"))
+    reliable, _, _ = iter_checkpoint(df, str(tmp_path / "ck"))
     drop_all_blocks()
     got = sorted(r.id for r in reliable.collect())
     assert got == expect  # recomputed from checkpoint FILES
@@ -152,28 +152,21 @@ def test_reliable_checkpoint_survives_block_loss(spark, tmp_path):
 
 
 def test_keep_partitioning_checkpoint_clone_session(spark):
-    """r14 (VERDICT r13 item 7): the keep-partitioning checkpoint
-    plans its one AQE-off execution in a CLONED session, so the main
-    session's AQE conf is never toggled (the r13 form flipped the
-    session-global conf, and a concurrent driver thread planning
-    inside that window planned without AQE). Three properties, all
+    """The keep-partitioning checkpoint plans its one AQE-off execution
+    in a CLONED session, so the main session's AQE conf is never
+    toggled (a session-global toggle lets a concurrent driver thread
+    plan without AQE inside that window). Three properties, all
     load-bearing:
 
     - the checkpointed frame RETAINS its hash partitioning (a
       downstream groupBy on the layout key plans NO Exchange);
-    - an Observation attached to the checkpointed frame still fires
-      during the clone-side eager materialization (connected
-      components / pagerank fuse their convergence counts into
-      exactly this job — a silent metrics loss would become a 60 s
-      bounded wait per round);
+    - a metric observed on the frame still fires during the clone-side
+      eager materialization (connected components / pagerank fuse their
+      convergence counts into exactly this job — a silent metrics loss
+      would become a bounded wait plus a fallback job per round);
     - the MAIN session's adaptive.enabled reads true throughout.
     """
-    from pyspark.sql import Observation
-
-    from kolang_spark.utils import (
-        _eager_checkpoint_keep_partitioning,
-        observation_value,
-    )
+    from kolang_spark.utils import iter_checkpoint
 
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     df = (
@@ -181,10 +174,12 @@ def test_keep_partitioning_checkpoint_clone_session(spark):
         .select((F.col("id") % 7).alias("k"), F.col("id").alias("v"))
         .repartition("k")
     )
-    obs = Observation()
-    df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-    ck = _eager_checkpoint_keep_partitioning(df, reliable=False)
-    assert observation_value(obs, "n", timeout=30.0) == 1000
+    j0 = _job_high_water(spark)
+    ck, m, _ = iter_checkpoint(
+        df, keep_partitioning=True, observe={"n": F.count(F.lit(1))}
+    )
+    assert m == {"n": 1000}
+    assert _job_high_water(spark) - j0 == 1  # the metric rode the pin's job
     plan = (
         ck.groupBy("k")
         .agg(F.sum("v"))
@@ -195,3 +190,30 @@ def test_keep_partitioning_checkpoint_clone_session(spark):
     assert "Exchange hashpartitioning" not in plan
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert ck.count() == 1000
+
+
+def _job_high_water(spark) -> int:
+    ids = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+    return max(ids) + 1 if ids else 0
+
+
+def test_keep_partitioning_failure_after_clone_pin_raises_once(
+    spark, monkeypatch
+):
+    """A failure AFTER the clone-side checkpoint materialized (here: the
+    re-wrap into the original session) must surface, not fall through
+    to a second, session-global checkpoint of the same frame."""
+    import pytest
+
+    from kolang_spark import utils
+
+    def boom(*_a, **_k):
+        raise RuntimeError("re-wrap failed")
+
+    df = spark.range(100).repartition(4, "id")
+    monkeypatch.setattr(utils, "DataFrame", boom)
+    j0 = _job_high_water(spark)
+    with pytest.raises(RuntimeError, match="re-wrap failed"):
+        utils.iter_checkpoint(df, keep_partitioning=True)
+    assert _job_high_water(spark) - j0 == 1  # exactly one checkpoint job
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"

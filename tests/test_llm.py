@@ -642,12 +642,42 @@ def test_connected_components_merges_chains(spark):
     assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20, 23: 20}
 
 
-def test_connected_components_uses_fused_observation_count(spark, monkeypatch):
-    """The convergence count must ride the checkpoint job via Observation
-    on classic Spark (round-4 verdict item 5), and since r13 the up-front
-    n_verts count rides the GRAPH checkpoint's action the same way — so a
-    full invocation runs ZERO DataFrame.count() jobs; any count call means
-    a fused path silently degraded to its fallback."""
+def _run_graph_op(op, edges):
+    """Call an iterative graph operator on ``(id_a, id_b)`` edges."""
+    from kolang_spark.llm import connected_components
+    from kolang_spark.operators.graph import label_propagation, pagerank
+
+    calls = {
+        "connected_components": connected_components,
+        "pagerank": lambda e: pagerank(e, "id_a", "id_b", iterations=5),
+        "pagerank_broadcast": lambda e: pagerank(
+            e, "id_a", "id_b", iterations=5, broadcast_ranks=True
+        ),
+        "label_propagation": lambda e: label_propagation(
+            e, "id_a", "id_b", iterations=3
+        ),
+    }
+    return calls[op](edges)
+
+
+@pytest.mark.parametrize(
+    "op,pairs",
+    [
+        ("connected_components", [(1, 2), (2, 3), (3, 4), (10, 11)]),
+        ("connected_components", []),
+        ("pagerank", [(1, 2), (2, 3), (3, 1), (3, 4), (10, 11)]),
+        ("pagerank", []),
+    ],
+    ids=["cc", "cc-empty", "pagerank", "pagerank-empty"],
+)
+def test_iterative_operator_uses_fused_observation(spark, monkeypatch, op, pairs):
+    """Every convergence / setup metric must ride its checkpoint job via
+    ``iter_checkpoint(observe=...)`` on classic Spark — also on an empty
+    graph, whose metrics arrive as NULL rather than missing. The
+    primitive's one fallback is an aggregate over the pinned frame
+    (``DataFrame.agg``), and the operators have no count of their own,
+    so any ``agg``/``count`` call while building the result means a fused
+    path silently degraded."""
     # pyspark>=4: pyspark.sql.DataFrame is a facade; instances are the
     # classic subclass, so patch the class the instances actually use
     try:
@@ -655,25 +685,27 @@ def test_connected_components_uses_fused_observation_count(spark, monkeypatch):
     except ImportError:  # pyspark 3.x
         from pyspark.sql import DataFrame
 
-    from kolang_spark.llm import connected_components
-
+    edges = spark.createDataFrame(pairs, "id_a long, id_b long")
     calls = []
-    real_count = DataFrame.count
+    for name in ("agg", "count"):
+        real = getattr(DataFrame, name)
 
-    def counting_count(self):
-        calls.append(1)
-        return real_count(self)
+        def spy(self, *a, _real=real, _name=name, **k):
+            calls.append(_name)
+            return _real(self, *a, **k)
 
-    monkeypatch.setattr(DataFrame, "count", counting_count)
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long"
-    )
-    comp = {r["id"]: r["component"] for r in connected_components(edges).collect()}
-    assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
-    assert len(calls) == 0, (
-        f"expected no count jobs at all; saw {len(calls)} "
-        "(an Observation fast path fell back to a count)"
-    )
+        monkeypatch.setattr(DataFrame, name, spy)
+    out = _run_graph_op(op, edges)
+    monkeypatch.undo()
+    assert calls == [], f"fallback ran: {calls}"
+    rows = out.collect()
+    if not pairs:
+        assert rows == []
+    elif op == "connected_components":
+        comp = {r["id"]: r["component"] for r in rows}
+        assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+    else:
+        assert len(rows) == 6
 
 
 def test_connected_components_cycle(spark):
@@ -1013,26 +1045,32 @@ def test_connected_components_adaptive_jump_reengages_on_stall(spark):
     assert set(comp.values()) == {0}
 
 
-def test_connected_components_releases_checkpoint_blocks(spark):
-    """Superseded per-round localCheckpoints must be unpersisted
-    deterministically — only the final round's checkpoint (backing the
-    returned frame) may stay pinned. Without release, ~2 block sets per
-    round accumulate until JVM GC (memory pressure at scale)."""
-    from kolang_spark.llm import connected_components
+@pytest.mark.parametrize(
+    "op",
+    ["pagerank", "pagerank_broadcast", "label_propagation", "connected_components"],
+)
+def test_iterative_operator_releases_checkpoint_blocks(spark, op):
+    """Superseded per-round localCheckpoints — and the setup pins the
+    returned frame no longer reads — must be unpersisted
+    deterministically; only the final round's checkpoint (backing the
+    returned frame) may stay pinned. Without release, every round's
+    block set accumulates until JVM GC (memory pressure at scale)."""
+    from kolang_spark.utils import _persistent_rdd_ids
 
-    def n_persistent():
-        m = spark._jsparkSession.sparkContext().getPersistentRDDs()
-        return m.size()
-
-    before = n_persistent()
+    jspark = spark._jsparkSession
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "id_a long, id_b long"
     )
-    comp = connected_components(edges)
-    assert set(r.component for r in comp.collect()) == {0}
-    # ≥3 rounds ran (≥6 checkpoints created); all but the final round's
+    # compare id SETS: GC-driven cleanup of an earlier test's pins must
+    # not mask this call's leak
+    before = _persistent_rdd_ids(jspark)
+    rows = _run_graph_op(op, edges).collect()
+    assert len(rows) == 41
+    if op == "connected_components":
+        assert {r.component for r in rows} == {0}
+    # ≥3 rounds ran (≥5 checkpoints created); all but the final round's
     # must be gone
-    assert n_persistent() <= before + 2
+    assert len(_persistent_rdd_ids(jspark) - before) <= 2
 
 
 def test_simhash_hamming_pairs_matches_brute_force(spark, docs):
