@@ -144,12 +144,17 @@ def bpe_train(
     return merges
 
 
+# the merge table's schema, declared again when a saved artifact is
+# read back so the read infers nothing from the footers
+_MERGES_SCHEMA = "rank int, left string, right string, merged string"
+
+
 def bpe_merges_df(spark, merges: List[Tuple[str, str]]) -> DataFrame:
     """The merge table as a DataFrame ``(rank, left, right, merged)``
     — persist it next to the corpus so encode jobs don't retrain."""
     return spark.createDataFrame(
         [(i, l, r, l + r) for i, (l, r) in enumerate(merges)],
-        "rank int, left string, right string, merged string",
+        _MERGES_SCHEMA,
     )
 
 
@@ -209,7 +214,12 @@ def load_tokenizer(spark, path: str) -> List[Tuple[str, str]]:
     pinned by test and by the ``bpe_encode_loaded`` driver query.
     Fails fast if ranks are not the contiguous run 0..n-1 (a corrupt
     or hand-edited artifact would otherwise silently reorder merges)."""
-    rows = spark.read.parquet(path).select("rank", "left", "right").collect()
+    rows = (
+        spark.read.schema(_MERGES_SCHEMA)
+        .parquet(path)
+        .select("rank", "left", "right")
+        .collect()
+    )
     rows.sort(key=lambda r: r["rank"])
     if [r["rank"] for r in rows] != list(range(len(rows))):
         raise ValueError(

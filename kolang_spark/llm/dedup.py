@@ -1493,6 +1493,10 @@ def embedding_near_dup_pairs(
     )
 
 
+# the bloom sidecar's rows (``bloom_table``), declared on every read of it
+_BLOOM_SCHEMA = "bit bigint"
+
+
 def _bloom_meta_path(bloom_path: str) -> str:
     # leading underscore: Spark's file listing skips _-prefixed files,
     # so the meta can live inside the parquet dir without breaking
@@ -1635,9 +1639,9 @@ def incremental_exact_dedup(
             # plan still references (FileNotFound on the caller's first
             # action); up front, nothing holds the old file listing yet
             _maybe_compact_bloom(spark, bloom_path, bloom_bits, bloom_k)
-            bloom = spark.read.parquet(bloom_path).distinct()
+            bloom = spark.read.schema(_BLOOM_SCHEMA).parquet(bloom_path).distinct()
         else:
-            bloom = spark.createDataFrame([], "bit bigint")
+            bloom = spark.createDataFrame([], _BLOOM_SCHEMA)
         probe = bloom_might_contain(
             bloom,
             batch.select("fingerprint").distinct(),
@@ -1747,7 +1751,7 @@ def _maybe_compact_bloom(
         return
     tmp = bloom_path + "__compact_tmp"
     fs_delete(spark, tmp)
-    spark.read.parquet(bloom_path).distinct().write.parquet(tmp)
+    spark.read.schema(_BLOOM_SCHEMA).parquet(bloom_path).distinct().write.parquet(tmp)
     fs_delete(spark, bloom_path)
     if fs_rename(spark, tmp, bloom_path):
         _write_bloom_meta(spark, bloom_path, n_bits, k)

@@ -5,18 +5,38 @@ Parity: ``/root/reference/kolang/dataframe_functions.py`` D2
 (``pandas_to_spark``, :96-134) and D6 (``load_or_calculate_parquet``,
 :257-373). The reference's own IO surface is parquet-only (inside D6) —
 everything else delegates to Spark's readers, and so do we.
+
+Schema policy for parquet reads. ``spark.read.parquet(path)`` without a
+schema runs a one-task Spark job that reads the footers, on every call.
+A layout the library wrote itself is read under its declared schema
+(``spark.read.schema(S).parquet(p)``: state dirs, tokenizer artifacts,
+bloom sidecars). Every other library parquet read (:func:`read_table`,
+:func:`compact_parquet`, :func:`load_or_calculate_parquet`,
+:func:`upsert_partitioned`) goes through one memo that infers the
+schema once per unchanged input and declares it on later reads. The
+memo key is the qualified path, the root ``FileStatus`` modification
+time, the root ``ContentSummary`` (length, file count, directory
+count), the reader options, and the session confs that change parquet
+inference (:data:`_INFERENCE_CONFS`). The assumption: rewriting the
+input changes the root mtime or the content summary.
 """
 
 from __future__ import annotations
 
 import itertools
 import os
+import threading
+from collections import OrderedDict
 from typing import Any, Callable, Dict, List, Optional
 
 import pandas as pd
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from kolang_spark.utils import _jvm_session
 
 __all__ = [
     "read_table",
@@ -68,10 +88,18 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     If the conf is off, a pyarrow fallback (driver-side, local-test only)
     casts nanos→micros before handing Spark the data.
+
+    The schema is inferred once per unchanged file (module docstring):
+    a later read of the same table declares the memoized schema and
+    starts no Spark job. The memo key is the qualified path, the root
+    modification time, the root content summary (length, file count,
+    directory count) and the parquet-inference confs, so a rewrite must
+    change the mtime or the content summary to be seen. For ``events``
+    the key is taken while the nanos conf is applied.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name != "events":
-        return spark.read.parquet(path)
+        return _read_parquet(spark, path)
 
     # The nanos conf is runtime-settable; apply it here so any session —
     # the driver's correctness harness included — can read `events`
@@ -89,7 +117,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     read_err: Optional[Exception] = None
     try:
         spark.conf.set(conf_key, "true")
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
         df.schema  # force schema resolution while the conf is in effect
     except Exception as exc:
         read_err = exc
@@ -168,6 +196,69 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return out.withColumn(
         "ts_ms", F.expr("unix_micros(cast(ts as timestamp)) div 1000")
     )
+
+
+_SCHEMA_MEMO_MAX = 256
+"""Entries the parquet schema memo of :func:`_read_parquet` keeps; past
+it the oldest entry is evicted first."""
+
+# Session confs whose value changes the schema parquet inference
+# returns (timestamp/binary mapping, footer merging, name resolution,
+# partition-value types); each one is part of the memo key.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+_schema_memo: "OrderedDict[tuple, T.StructType]" = OrderedDict()
+_schema_memo_lock = threading.Lock()
+
+
+def _read_parquet(spark: SparkSession, path: str, **options: Any) -> DataFrame:
+    """``spark.read.options(**options).parquet(path)`` that infers the
+    schema once per unchanged input (module docstring) and declares it
+    on every later read, so a memo hit starts no Spark job.
+
+    The fingerprint is two filesystem calls on the root whatever the
+    file count (``getFileStatus`` + ``getContentSummary``). An entry is
+    inserted only after inference succeeded. A missing path, and a
+    JVM-less session (no Hadoop FS), read plainly — the former keeps
+    the reader's own PATH_NOT_FOUND."""
+    reader = spark.read.options(**options)
+    pair = _hadoop_fs(spark, path)
+    if pair is None:
+        return reader.parquet(path)
+    fs, jpath = pair
+    try:
+        status = fs.getFileStatus(jpath)
+        summary = fs.getContentSummary(jpath)
+    except Py4JJavaError as exc:
+        if not _is_missing(spark, exc):
+            raise
+        return reader.parquet(path)
+    key = (
+        fs.makeQualified(jpath).toString(),
+        status.getModificationTime(),
+        summary.getLength(),
+        summary.getFileCount(),
+        summary.getDirectoryCount(),
+        tuple(sorted(options.items())),
+        tuple(spark.conf.get(k) for k in _INFERENCE_CONFS),
+    )
+    schema = _schema_memo.get(key)
+    if schema is not None:
+        return reader.schema(schema).parquet(path)
+    df = reader.parquet(path)
+    with _schema_memo_lock:
+        _schema_memo[key] = df.schema
+        while len(_schema_memo) > _SCHEMA_MEMO_MAX:
+            _schema_memo.popitem(last=False)
+    return df
 
 
 def read_tables(spark: SparkSession, sf_dir: str) -> Dict[str, DataFrame]:
@@ -276,20 +367,28 @@ def path_exists(spark: SparkSession, path: str) -> bool:
 
 def _hadoop_fs(spark: SparkSession, path: str):
     """``(FileSystem, Path)`` for ``path`` through the JVM gateway, or
-    ``None`` when the gateway is unreachable (Spark Connect). Callers
-    fall back to driver-local ``os``/``shutil`` equivalents — correct
-    there only for local paths, which is all a Connect-local test
-    touches. This is the single chokepoint every state-management file
-    op in the repo routes through, so object-store URIs
-    (``s3a://``/``hdfs://``/``abfs://``) behave identically to local
-    paths everywhere."""
-    try:
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        return jpath.getFileSystem(hconf), jpath
-    except Exception:
+    ``None`` on a JVM-less session (Spark Connect). Callers fall back to
+    driver-local ``os``/``shutil`` equivalents there — correct only for
+    local paths, which is all a Connect-local test touches. On classic
+    Spark errors propagate: a scheme whose FileSystem is not on the
+    classpath raises instead of reading as "absent". This is the single
+    chokepoint every state-management file op in the repo routes
+    through, so object-store URIs (``s3a://``/``hdfs://``/``abfs://``)
+    behave identically to local paths everywhere."""
+    if _jvm_session(spark) is None:
         return None
+    sc = spark.sparkContext
+    jpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(sc._jsc.hadoopConfiguration()), jpath
+
+
+def _is_missing(spark: SparkSession, exc: Py4JJavaError) -> bool:
+    """Whether a JVM error is ``java.io.FileNotFoundException``."""
+    return is_instance_of(
+        spark.sparkContext._gateway,
+        exc.java_exception,
+        "java.io.FileNotFoundException",
+    )
 
 
 def fs_delete(spark: SparkSession, path: str, recursive: bool = True) -> bool:
@@ -329,11 +428,9 @@ def fs_rename(spark: SparkSession, src: str, dst: str) -> bool:
         except OSError:
             return False
     fs, jsrc = pair
-    dpair = _hadoop_fs(spark, dst)
-    if dpair is None:  # unparseable dst → contract says False, not raise
-        return False
-    try:
-        return bool(fs.rename(jsrc, dpair[1]))
+    try:  # an unparseable dst is a failed rename too: False, not raise
+        jdst = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(dst)
+        return bool(fs.rename(jsrc, jdst))
     except Exception:
         return False
 
@@ -429,9 +526,10 @@ def fs_list_files(
 ) -> List[tuple]:
     """Filesystem-agnostic file listing: ``(full_path, size_bytes)``
     pairs, optionally filtered by ``suffix`` and recursive. Empty list
-    when the path is missing. Driver-side — for directory-level state
-    management (compaction thresholds, file sizing), not data reads;
-    the listing cost is the same one every parquet scan already pays."""
+    when the path is missing; any other filesystem error raises.
+    Driver-side — for directory-level state management (compaction
+    thresholds, file sizing), not data reads; the listing cost is the
+    same one every parquet scan already pays."""
     pair = _hadoop_fs(spark, path)
     out: List[tuple] = []
     if pair is None:
@@ -467,7 +565,9 @@ def fs_list_files(
                 name = st.getPath().getName()
                 if suffix is None or name.endswith(suffix):
                     out.append((st.getPath().toString(), int(st.getLen())))
-    except Exception:
+    except Py4JJavaError as exc:
+        if not _is_missing(spark, exc):
+            raise
         return []
     return sorted(out)
 
@@ -642,7 +742,7 @@ def compact_parquet(
     part_cols: list[str] = [
         seg.split("=", 1)[0] for seg in rel.split("/")[:-1] if "=" in seg
     ]
-    df = spark.read.parquet(path)
+    df = _read_parquet(spark, path)
     if part_cols:
         # cluster by partition key so each partition directory compacts
         # to ~1 file, and re-apply partitionBy to keep pruning intact
@@ -753,7 +853,7 @@ def load_or_calculate_parquet(
             for f in futures:
                 f.result()
 
-    return spark.read.option("basePath", path).parquet(path)
+    return _read_parquet(spark, path, basePath=path)
 
 
 def upsert_partitioned(
@@ -832,7 +932,11 @@ def upsert_partitioned(
     if not affected:
         return 0
 
-    target = spark.read.format(format).load(path)
+    target = (
+        _read_parquet(spark, path)
+        if format == "parquet"
+        else spark.read.format(format).load(path)
+    )
     # literal partition predicates → the scan prunes to exactly the
     # affected directories (an OR of per-partition conjunctions)
     part_pred = None

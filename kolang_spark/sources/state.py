@@ -301,8 +301,8 @@ class StateSpec:
 
     ``kind`` is the sidecar's kind string; ``params`` maps the
     operator's construction arguments to the params dict the sidecar
-    pins; ``schema`` is the explicit DDL read schema (``None`` for a
-    kind whose reader does its own read); ``consequence`` says what a
+    pins; ``schema`` is the explicit DDL read schema, so no state read
+    infers one from the footers; ``consequence`` says what a
     mismatched probe would silently do, for the error message; and
     ``own_partition`` makes each streaming batch overwrite its own
     ``batch_id`` partition instead of appending (count-min counters
@@ -310,7 +310,7 @@ class StateSpec:
 
     kind: str
     params: Callable[..., dict]
-    schema: Optional[str]
+    schema: str
     consequence: str
     own_partition: bool = False
 

@@ -322,8 +322,9 @@ def embedding_dedup_sink(
     )
 
 
-# no read schema: ``cms_state`` reads the hive-partitioned state itself
-# and keeps the reader's PATH_NOT_FOUND for a state no batch created
+# ``cms_state`` reads the hive-partitioned state itself under this
+# schema, keeping the reader's PATH_NOT_FOUND for a state no batch
+# created (``BoundState.read`` would return an empty frame instead)
 _CMS_STATE = StateSpec(
     "cms",
     params=lambda depth, width, salt: {
@@ -331,7 +332,7 @@ _CMS_STATE = StateSpec(
         "width": int(width),
         "salt": salt,
     },
-    schema=None,
+    schema="row int, bucket bigint, cnt bigint, batch_id bigint",
     consequence=(
         "count-min counters bucketed under a different depth/width/salt "
         "estimate garbage with no error"
@@ -433,7 +434,8 @@ def cms_state(
     if probe:
         BoundState(_CMS_STATE, spark, state_path, probe).verify_readonly()
     return (
-        spark.read.parquet(state_path)
+        spark.read.schema(_CMS_STATE.schema)
+        .parquet(state_path)
         .groupBy("row", "bucket")
         .agg(F.sum("cnt").alias("cnt"))
     )

@@ -123,15 +123,14 @@ def ensure_min_parallelism(df, min_partitions: int | None = None):
     check short-circuits and this is a no-op — the shuffle is only paid
     exactly when the input cannot otherwise use the cluster.
     """
-    try:
-        sc = df.sparkSession.sparkContext
-        target = min_partitions or sc.defaultParallelism
-        current = df.rdd.getNumPartitions()
-    except Exception:
+    spark = df.sparkSession
+    if _jvm_session(spark) is None:
         # Spark Connect: no sparkContext/rdd access. We cannot probe the
         # input split count, and an unconditional repartition would tax
         # well-partitioned production inputs — leave the plan unchanged.
         return df
+    target = min_partitions or spark.sparkContext.defaultParallelism
+    current = df.rdd.getNumPartitions()
     if current >= target:
         return df
     return df.repartition(target)

@@ -47,3 +47,12 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def jobs_started(spark, fn):
+    """``(fn(), Spark jobs fn started)``, read from the DAG scheduler's
+    job-id counter (exact; the status tracker can drop evicted jobs)."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = dag.nextJobId()
+    out = fn()
+    return out, dag.nextJobId() - j0

@@ -9,7 +9,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from tests.conftest import examples
+from tests.conftest import examples, jobs_started
 from pyspark.sql import Row
 
 from kolang_spark.llm.bpe import (
@@ -245,7 +245,10 @@ def test_save_load_tokenizer_roundtrip(spark, tmp_path):
     merges = bpe_train(df, num_merges=12, max_words=100)
     path = str(tmp_path / "tok")
     save_tokenizer(merges, path, spark=spark)
-    loaded = load_tokenizer(spark, path)
+    # the artifact is read under its declared schema: the collect is
+    # the only job
+    loaded, n_jobs = jobs_started(spark, lambda: load_tokenizer(spark, path))
+    assert n_jobs == 1
     assert loaded == merges
     a = [r.bpe_tokens for r in bpe_encode(df, merges).collect()]
     b = [r.bpe_tokens for r in bpe_encode(df, loaded).collect()]

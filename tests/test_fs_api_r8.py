@@ -102,6 +102,20 @@ def test_fs_list_files_file_uri(spark, tmp_path):
     assert sum(sz for _, sz in rec) == 12
 
 
+def test_unknown_scheme_raises(spark, tmp_path):
+    """A scheme whose FileSystem is not on the classpath is an error,
+    not an absent path: a state dir there must not read as empty."""
+    from py4j.protocol import Py4JJavaError
+
+    for probe in (path_exists, fs_list_files):
+        with pytest.raises(Py4JJavaError, match="nosuchfs"):
+            probe(spark, "nosuchfs://b/x")
+    # the documented rename contract is kept: an unparseable dst is a
+    # failed rename (False), not an error
+    (tmp_path / "src").write_text("x")
+    assert fs_rename(spark, _furi(str(tmp_path / "src")), "") is False
+
+
 def _docs(spark, rows):
     return spark.createDataFrame(
         [Row(doc_id=i, text=t) for i, t in rows], "doc_id long, text string"

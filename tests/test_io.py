@@ -1,8 +1,11 @@
-"""Testdata readers: all tables load; events nanos shim works."""
+"""Testdata readers: all tables load; events nanos shim works; the
+parquet schema memo infers once per unchanged input."""
 
 import pytest
 
+from kolang_spark.sources import io
 from kolang_spark.sources.io import TABLE_NAMES, read_table, read_tables
+from tests.conftest import jobs_started
 
 
 def test_all_tables_load(spark, sf_dir):
@@ -10,6 +13,56 @@ def test_all_tables_load(spark, sf_dir):
     assert set(tables) == set(TABLE_NAMES)
     for name, df in tables.items():
         assert df.count() > 0, name
+
+
+@pytest.mark.parametrize("name", TABLE_NAMES)
+def test_memo_hit_read_equals_fresh_read(spark, sf_dir, name):
+    """A memo hit declares the schema the miss inferred: same schema,
+    same rows, and no Spark job at read time."""
+    io._schema_memo.clear()
+    fresh, n_fresh = jobs_started(spark, lambda: read_table(spark, sf_dir, name))
+    hit, n_hit = jobs_started(spark, lambda: read_table(spark, sf_dir, name))
+    assert (n_fresh, n_hit) == (1, 0)
+    assert hit.schema == fresh.schema
+    assert sorted(hit.collect(), key=repr) == sorted(fresh.collect(), key=repr)
+
+
+def test_read_table_sees_rewrite_at_same_path(spark, tmp_path):
+    """Rewriting the table in place changes the root mtime and content
+    summary, so the next read infers the new schema."""
+    path = str(tmp_path / "t.parquet")
+    spark.createDataFrame([(1,)], "a long").write.parquet(path)
+    assert read_table(spark, str(tmp_path), "t").columns == ["a"]
+    spark.createDataFrame([("x", 2.5)], "b string, c double").write.mode(
+        "overwrite"
+    ).parquet(path)
+    back = read_table(spark, str(tmp_path), "t")
+    assert back.schema.simpleString() == "struct<b:string,c:double>"
+    assert [tuple(r) for r in back.collect()] == [("x", 2.5)]
+
+
+def test_inference_conf_flip_misses_memo(spark, tmp_path):
+    """``spark.sql.parquet.binaryAsString`` changes what inference
+    returns, so it is part of the memo key."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    key = "spark.sql.parquet.binaryAsString"
+    # written without Spark's schema metadata, which would override the
+    # conf: a foreign writer's plain binary column
+    pq.write_table(
+        pa.table({"v": pa.array([b"hi"], pa.binary())}),
+        str(tmp_path / "b.parquet"),
+    )
+    first = read_table(spark, str(tmp_path), "b")
+    assert dict(first.dtypes)["v"] == "binary"
+    spark.conf.set(key, "true")
+    try:
+        flipped, n = jobs_started(spark, lambda: read_table(spark, str(tmp_path), "b"))
+    finally:
+        spark.conf.unset(key)
+    assert n == 1
+    assert dict(flipped.dtypes)["v"] == "string"
 
 
 def test_events_ts_normalized(spark, sf_dir):

@@ -7,6 +7,7 @@ import uuid
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.errors import AnalysisException
 
 from kolang_spark.llm.dedup import (
     _incremental_embedding_flagged,
@@ -25,6 +26,7 @@ from kolang_spark.streaming import (
     sliding,
     tumbling,
 )
+from tests.conftest import jobs_started
 
 
 def _mk_events(spark):
@@ -445,7 +447,11 @@ def test_cms_sink_stream_equals_batch(spark, tmp_path):
     )
     q.awaitTermination(120)
 
-    merged = cms_state(spark, state)
+    # the state is read under its declared schema: no inference job
+    merged, n_jobs = jobs_started(spark, lambda: cms_state(spark, state))
+    assert n_jobs == 0
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        cms_state(spark, str(tmp_path / "no_batch_landed"))
     both = spark.createDataFrame(b1 + b2, schema)
     direct = cms_table(both, "user", depth=3, width=64)
     got = sorted((r.row, r.bucket, r.cnt) for r in merged.collect())
