@@ -3802,7 +3802,7 @@ def _q_multimodal_blob_embed_ann(spark, sf_dir):
     """The full multimodal chain: pack blobs → Arrow-batched REAL
     feature extraction (strided byte-fold signature) → LSH ANN top-k
     over the resulting vectors. Oracle-backed since round 7 despite
-    the sanctioned mapInPandas stage: the fold is exact integer
+    the sanctioned Arrow row stage: the fold is exact integer
     arithmetic (per-residue byte sums are < 2^53 so numpy's pairwise
     mean equals any-order SQL SUM bit-for-bit, and the trailing
     /r /255.0 divisions are replayed in the same order), so DuckDB
@@ -3910,7 +3910,7 @@ def _q_weighted_sample_documents(spark, sf_dir):
 def _q_multimodal_audio_frames(spark, sf_dir):
     """Short-time audio frame features (`kolang_spark/llm/multimodal.py
     ::audio_frame_features`): spec-valid WAV blobs synthesized natively
-    from doc_id, then the sanctioned Arrow `mapInPandas` stage frames
+    from doc_id, then the sanctioned Arrow row stage frames
     the PCM (len 32 / hop 16) and emits exact-integer features (energy,
     zero crossings, peak). The oracle re-derives every sample value
     closed-form from doc_id and replays the framing in SQL. The one
@@ -11383,7 +11383,7 @@ def oracle_sql() -> dict[str, str]:
         #   sessionize_stream_semantics (session-window assignment),
         #   hll_users_monthly (HLL estimates differ by design),
         #   ann_lsh_topk (approximate by design),
-        #   multimodal_blob_embed_ann (mapInPandas feature stage feeding
+        #   multimodal_blob_embed_ann (Arrow feature stage feeding
         #   an approximate ANN; the decode itself is oracle-backed via
         #   multimodal_decode above).
     }

@@ -9,9 +9,19 @@ conventions.
 
 Design rule carried over from the core: **hash-native, UDF-free column
 algebra wherever possible** — shingling, MinHash, SimHash, Jaccard and
-cosine are all pure Catalyst expressions here, so they run JVM-side with
-whole-stage codegen at 100 TB. Python (Arrow-batched ``mapInPandas``)
-appears only where semantics require it (multimodal decode stubs).
+cosine are all pure Catalyst expressions here, so they run JVM-side at
+100 TB. Dot products, norms and distances up to
+``similarity.UNROLL_DIMS_LIMIT`` (16) dimensions unroll into arithmetic
+that whole-stage codegen compiles; wider vectors fold through
+``aggregate(zip_with)``, which Spark interprets (no codegen).
+
+Python runs only where per-byte work has no Catalyst expression: the
+real media decoders and codec synthesizers in :mod:`.multimodal`, the
+WARC record walk and CDC chunking. All of them cross one Arrow row
+boundary, :func:`kolang_spark.utils._map_rows`. Three Arrow stages of
+other shapes remain: BPE's pandas UDF for tokenizer-scale merge tables,
+MMR re-ranking's ``applyInPandas`` and the streaming
+``applyInPandasWithState`` operators.
 """
 
 from kolang_spark.llm.dedup import (  # noqa: F401

@@ -376,8 +376,8 @@ def encode_text(
     return [x for x in enc.split(SEP) if x not in ("", BOUND)]
 
 
-#: above this merge count, bpe_encode(engine="auto") switches from the
-#: nested-replace Column expression to the Arrow batch path: each merge
+#: above this merge count, bpe_encode switches from the nested-replace
+#: Column expression to the Arrow batch path: each merge
 #: costs FIXPOINT_PASSES Catalyst nodes, and a real 32k-merge vocab
 #: would build a ~100k-node expression tree that analysis/codegen
 #: cannot digest. 64 merges ≈ 200 nodes — comfortably inside codegen.
@@ -389,33 +389,25 @@ def bpe_encode(
     merges: List[Tuple[str, str]],
     text_col: str = "text",
     out_col: str = "bpe_tokens",
-    engine: str = "auto",
 ) -> DataFrame:
     """Apply a trained merge table: adds ``out_col``
     (``array<string>`` of subword tokens, word-boundary-aware, merges
     in rank order). Empty/whitespace-only text → empty array.
 
-    Engines (identical results, property-tested equal):
+    The engine is chosen at plan time from the merge count (identical
+    results, property-tested equal):
 
-    - ``"column"`` — pure Column algebra, no UDF, no shuffle, inside
-      whole-stage codegen; the right choice for small merge tables
+    - up to ``COLUMN_ENGINE_MAX_MERGES`` merges — pure Column algebra,
+      no UDF, no shuffle, inside whole-stage codegen; small merge tables
       (demo/analysis vocabularies, the oracle queries).
-    - ``"arrow"`` — one Arrow-batched pandas UDF applying the same
+    - beyond it — one Arrow-batched pandas UDF applying the same
       semantics in Python; the PRODUCTION path for real vocabularies
       (32k+ merges), where the per-merge Catalyst nodes of the column
       engine would blow up the expression tree. Still embarrassingly
       parallel, no shuffle; the merge table ships once per executor in
       the task closure (a few MB at tokenizer scale).
-    - ``"auto"`` (default) — ``column`` up to
-      ``COLUMN_ENGINE_MAX_MERGES`` merges, ``arrow`` beyond.
     """
-    if engine not in ("auto", "column", "arrow"):
-        raise ValueError("engine must be 'auto', 'column', or 'arrow'")
-    if engine == "auto":
-        engine = (
-            "column" if len(merges) <= COLUMN_ENGINE_MAX_MERGES else "arrow"
-        )
-    if engine == "column":
+    if len(merges) <= COLUMN_ENGINE_MAX_MERGES:
         enc = _bpe_enc_col(F.col(text_col), merges)
         toks = F.filter(
             F.split(enc, SEP), lambda x: (x != "") & (x != BOUND)

@@ -13,8 +13,10 @@ explicitly (oracle isolation), noted per function.
 
 from __future__ import annotations
 
+import hashlib
 from typing import List, Optional
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -25,7 +27,12 @@ from kolang_spark.llm.textstats import (
     word_ngrams,
 )
 from kolang_spark.sources.state import StateSpec
-from kolang_spark.utils import ColumnOrName, ensure_min_parallelism, to_col
+from kolang_spark.utils import (
+    ColumnOrName,
+    _map_rows,
+    ensure_min_parallelism,
+    to_col,
+)
 
 __all__ = [
     "exact_dedup",
@@ -2412,13 +2419,14 @@ def cdc_chunks(
     boundary decision independent and the SQL oracle replay closed-
     form).
 
-    Execution: Arrow ``mapInPandas`` with a vectorized numpy kernel —
-    the engine's sanctioned Python boundary for byte-level numeric
-    work (the multimodal decoders' category). This is a measured
-    decision, not a shortcut: the pure-Column formulations were built
-    first and benched — a per-position HOF fold evaluates interpreted
-    lambdas per byte (~2 µs/byte: 11 s for 5 000 ×300 B docs; the
-    zipped-shifted-arrays variant 25 s) while the numpy window loop is
+    Execution: a vectorized numpy kernel per document, handed to
+    :func:`kolang_spark.utils._map_rows` — the library's one Arrow row
+    boundary, for byte-level numeric work (the multimodal decoders'
+    category). This is a measured decision, not a shortcut: the
+    pure-Column formulations were built first and benched — a
+    per-position HOF fold evaluates interpreted lambdas per byte
+    (~2 µs/byte: 11 s for 5 000 ×300 B docs; the zipped-shifted-arrays
+    variant 25 s) while the numpy window loop is
     ``window`` vectorized multiply-adds per document (<0.5 s same
     corpus). Per-batch memory is O(batch bytes); hashes/boundaries are
     integer-exact, so the DuckDB oracle still replays every boundary
@@ -2441,57 +2449,37 @@ def cdc_chunks(
         f"n_bytes int, chunk_hash string"
     )
 
-    def chunk_batches(batches):
-        import hashlib
-
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            ids, idxs, starts, lens, hashes = [], [], [], [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                raw = (text or "").encode("utf-8")
-                n = len(raw)
-                if n == 0:
-                    continue
-                if n >= window:
-                    b = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-                    acc = np.zeros(n - window + 1, dtype=np.int64)
-                    # h(i) = Σ_j b[i-w+1+j]·base^(w-1-j) mod m — the
-                    # same value a sequential rolling update yields;
-                    # mod per term keeps everything < 2^40
-                    for j in range(window):
-                        acc = (acc + b[j : n - window + 1 + j] * powers[j]) % mod
-                    cuts = np.nonzero(acc % div == 0)[0] + window
-                    cuts = cuts[cuts < n]
-                else:
-                    cuts = np.empty(0, dtype=np.int64)
-                bounds = np.concatenate(([0], cuts, [n]))
-                hx = raw.hex().upper()
-                for k in range(len(bounds) - 1):
-                    s, e = int(bounds[k]), int(bounds[k + 1])
-                    ids.append(doc_id)
-                    idxs.append(k)
-                    starts.append(s)
-                    lens.append(e - s)
-                    hashes.append(
-                        hashlib.md5(hx[2 * s : 2 * e].encode()).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "chunk_idx": idxs,
-                    "start_byte": starts,
-                    "n_bytes": lens,
-                    "chunk_hash": hashes,
-                }
+    def chunks(doc_id, text):
+        raw = (text or "").encode("utf-8")
+        n = len(raw)
+        if n == 0:
+            return
+        if n >= window:
+            b = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+            acc = np.zeros(n - window + 1, dtype=np.int64)
+            # h(i) = Σ_j b[i-w+1+j]·base^(w-1-j) mod m — the same value
+            # a sequential rolling update yields; mod per term keeps
+            # everything < 2^40
+            for j in range(window):
+                acc = (acc + b[j : n - window + 1 + j] * powers[j]) % mod
+            cuts = np.nonzero(acc % div == 0)[0] + window
+            cuts = cuts[cuts < n]
+        else:
+            cuts = np.empty(0, dtype=np.int64)
+        bounds = np.concatenate(([0], cuts, [n]))
+        hx = raw.hex().upper()
+        for k in range(len(bounds) - 1):
+            s, e = int(bounds[k]), int(bounds[k + 1])
+            yield (
+                doc_id,
+                k,
+                s,
+                e - s,
+                hashlib.md5(hx[2 * s : 2 * e].encode()).hexdigest(),
             )
 
-    return (
-        ensure_min_parallelism(df)
-        .select(id_col, text_col)
-        .mapInPandas(chunk_batches, schema=schema)
-    )
+    src = ensure_min_parallelism(df).select(id_col, text_col)
+    return _map_rows(src, schema, chunks)
 
 
 _CDC_STATE = StateSpec(

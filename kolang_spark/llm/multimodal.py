@@ -6,14 +6,13 @@ The decode step is REAL: :func:`decode_image` parses binary P6 PPM,
 24-bit uncompressed BMP, PNG (8-bit RGB/RGBA, stdlib ``zlib`` inflate +
 numpy scanline unfiltering for all five filter types), and baseline
 JPEG (stream-defined huffman + quant tables, per-MCU entropy decode,
-dequant, numpy IDCT, Rec.601 color convert) payloads inside
-``mapInPandas`` — header parse, stride/padding removal, bottom-up row
+dequant, numpy IDCT, Rec.601 color convert) payloads at the Arrow row
+boundary — header parse, stride/padding removal, bottom-up row
 flip, BGR→RGB reorder, Sub/Up/Average/Paeth reversal — and returns
 decoded dimensions plus pixel statistics that an independent oracle can
 predict. Formats outside these come back as
 ``format='unknown'`` with NULL dimensions (no exception mid-pipeline at
-scale). ``fake=True`` remains only as a test shim for exercising batch
-plumbing with arbitrary (non-image) bytes.
+scale).
 
 :func:`synth_ppm_blobs` and :func:`synth_png_blobs` build *real* image
 bytes natively in Column expressions (headers via ``encode``/hex
@@ -25,20 +24,24 @@ decoded value closed-form from the id.
 Scale posture: binary payloads ride the scan (parquet binary columns are
 page-compressed and column-pruned like any other); metadata-only queries
 never deserialize payload bytes; Arrow batching keeps the Python
-boundary amortized (one buffer per ~10k rows, not per row). The decode
-itself is the one sanctioned Python stage in the engine — per-byte media
-parsing has no Catalyst expression.
+boundary amortized (one buffer per ~10k rows, not per row). Every decoder
+and codec synthesizer here is a per-blob function handed to
+:func:`kolang_spark.utils._map_rows`, the library's one Arrow row
+boundary, which owns the batch loop, the NULL-blob → ``b""`` poison-blob
+contract and the output assembly — per-byte media parsing has no
+Catalyst expression.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional, Tuple
+from typing import Optional, Tuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from kolang_spark.utils import _map_rows
 
 __all__ = [
     "pack_blob",
@@ -1023,20 +1026,16 @@ def synth_jpeg_blobs(
         (8 * (i % 2 + 1)).cast("int").alias("__h__"),
     )
 
-    def synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for did, w_, h_ in zip(pdf["doc_id"], pdf["__w__"], pdf["__h__"]):
-                bw_, bh_ = w_ // 8, h_ // 8
-                img = np.zeros((h_, w_), dtype=np.uint8)
-                for b in range(bw_ * bh_):
-                    v = 2 * ((int(did) * 17 + b * 29) % 128)
-                    by, bx = divmod(b, bw_)
-                    img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = v
-                blobs.append(_encode_jpeg_gray(img))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], out: blobs})
+    def synth(did, w_, h_):
+        bw_, bh_ = w_ // 8, h_ // 8
+        img = np.zeros((h_, w_), dtype=np.uint8)
+        for b in range(bw_ * bh_):
+            v = 2 * ((did * 17 + b * 29) % 128)
+            by, bx = divmod(b, bw_)
+            img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = v
+        yield did, _encode_jpeg_gray(img)
 
-    return src.mapInPandas(synth_batches, schema=f"doc_id long, {out} binary")
+    return _map_rows(src, f"doc_id long, {out} binary", synth)
 
 
 def _parse_image(b: bytes) -> Optional[Tuple[str, int, int, int, np.ndarray]]:
@@ -1084,6 +1083,13 @@ def _parse_wav(b: bytes) -> Optional[Tuple[int, int, np.ndarray]]:
     return (rate, chans, samples)
 
 
+def _px_stats(px: np.ndarray) -> Tuple[int, Optional[int], Optional[float]]:
+    """``(sum, first, mean)`` of a decoded pixel or palette-index array;
+    ``first``/``mean`` are NULL for an empty array."""
+    s = int(px.sum(dtype=np.int64))
+    return (s, int(px[0]), s / px.size) if px.size else (s, None, None)
+
+
 _DECODE_SCHEMA = (
     "doc_id long, format string, width int, height int, n_channels int, "
     "n_bytes long, sum_pixel long, first_pixel int, mean_pixel double"
@@ -1100,9 +1106,8 @@ def decode_image(
     df: DataFrame,
     blob_col: str = "content",
     id_col: str = "doc_id",
-    fake: bool = False,
 ) -> DataFrame:
-    """Decode image blobs via Arrow-batched ``mapInPandas``: P6 PPM and
+    """Decode image blobs at the Arrow row boundary: P6 PPM and
     24-bit BMP are parsed for real (numpy header + pixel parse, stride
     and bottom-up handling, BGR→RGB); anything else yields
     ``format='unknown'`` with NULL dimensions rather than failing the
@@ -1114,61 +1119,21 @@ def decode_image(
     ``mean_pixel``). All are oracle-predictable for
     :func:`synth_ppm_blobs` payloads.
 
-    ``fake=True`` is a TEST SHIM ONLY: deterministic header-derived
-    pseudo-dimensions for exercising batch plumbing with non-image bytes.
-
-    The UDF boundary here is the *legitimate* use of Python: per-byte
-    media decoding has no Catalyst expression. Batches arrive as Arrow
-    buffers (zero-copy binary), one pandas frame per ~10k rows.
+    The Python boundary here is the *legitimate* use of Python: per-byte
+    media decoding has no Catalyst expression. Batches cross as Arrow
+    buffers through :func:`kolang_spark.utils._map_rows`, ~10k rows each.
     """
     src = df.select(F.col(id_col).alias("doc_id"), F.col(blob_col).alias("blob"))
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n_rows = len(pdf)
-            fmt = np.empty(n_rows, dtype=object)
-            width = np.full(n_rows, None, dtype=object)
-            height = np.full(n_rows, None, dtype=object)
-            chans = np.full(n_rows, None, dtype=object)
-            nbytes = np.zeros(n_rows, dtype=np.int64)
-            sumpx = np.full(n_rows, None, dtype=object)
-            firstpx = np.full(n_rows, None, dtype=object)
-            meanpx = np.full(n_rows, None, dtype=object)
-            for i, b in enumerate(pdf["blob"]):
-                b = bytes(b) if b is not None else b""
-                nbytes[i] = len(b)
-                if fake:  # test shim: pseudo-dims from header bytes
-                    fmt[i] = "fake"
-                    width[i] = 16 + (b[0] if len(b) else 0)
-                    height[i] = 16 + (b[1] if len(b) > 1 else 0)
-                    chans[i] = 3
-                    continue
-                parsed = _parse_image(b)
-                if parsed is None:
-                    fmt[i] = "unknown"
-                    continue
-                f_, w_, h_, c_, px = parsed
-                fmt[i] = f_
-                width[i], height[i], chans[i] = w_, h_, c_
-                s = int(px.sum(dtype=np.int64))
-                sumpx[i] = s
-                firstpx[i] = int(px[0]) if px.size else None
-                meanpx[i] = s / px.size if px.size else None
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "format": fmt,
-                    "width": width,
-                    "height": height,
-                    "n_channels": chans,
-                    "n_bytes": nbytes,
-                    "sum_pixel": sumpx,
-                    "first_pixel": firstpx,
-                    "mean_pixel": meanpx,
-                }
-            )
+    def decode(did, b):
+        parsed = _parse_image(b)
+        if parsed is None:
+            yield (did, "unknown", None, None, None, len(b), None, None, None)
+            return
+        f_, w_, h_, c_, px = parsed
+        yield (did, f_, w_, h_, c_, len(b)) + _px_stats(px)
 
-    return src.mapInPandas(decode_batches, schema=_DECODE_SCHEMA)
+    return _map_rows(src, _DECODE_SCHEMA, decode)
 
 
 def _gif_lzw_decode(buf: bytes, min_code_size: int, limit: int):
@@ -1314,7 +1279,7 @@ def decode_gif_frames(
     id_col: str = "doc_id",
     include_pixels: bool = False,
 ) -> DataFrame:
-    """Multi-frame container decode via Arrow-batched ``mapInPandas``:
+    """Multi-frame container decode at the Arrow row boundary:
     one output row per GIF frame — the video-shaped sibling of
     :func:`decode_image` (a frame stream is the decode side of
     :func:`sample_frames`' index spine). Real parse: container walk +
@@ -1337,49 +1302,17 @@ def decode_gif_frames(
     src = df.select(F.col(id_col).alias("doc_id"), F.col(blob_col).alias("blob"))
     schema = _GIF_FRAME_SCHEMA + (", indices array<int>" if include_pixels else "")
 
-    def frame_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, b in zip(pdf["doc_id"], pdf["blob"]):
-                b = bytes(b) if b is not None else b""
-                parsed = _parse_gif(b)
-                if parsed is None:
-                    base = (did, None, 0, None, None, None, None, None, None, None)
-                    rows.append(base + ((None,) if include_pixels else ()))
-                    continue
-                _, _, _, frames = parsed
-                for fi, (w, h, delay, idx) in enumerate(frames):
-                    s = int(idx.sum(dtype=np.int64))
-                    base = (
-                        did,
-                        fi,
-                        len(frames),
-                        w,
-                        h,
-                        delay,
-                        w * h,
-                        s,
-                        int(idx[0]) if idx.size else None,
-                        s / idx.size if idx.size else None,
-                    )
-                    if include_pixels:
-                        base = base + ([int(x) for x in idx],)
-                    rows.append(base)
-            cols = [
-                "doc_id",
-                "frame_idx",
-                "n_frames",
-                "width",
-                "height",
-                "delay_cs",
-                "n_pixels",
-                "sum_index",
-                "first_index",
-                "mean_index",
-            ] + (["indices"] if include_pixels else [])
-            yield pd.DataFrame(rows, columns=cols)
+    def frames(did, b):
+        parsed = _parse_gif(b)
+        if parsed is None:
+            yield (did, None, 0) + (None,) * (7 + include_pixels)
+            return
+        decoded = parsed[3]
+        for fi, (w, h, delay, idx) in enumerate(decoded):
+            row = (did, fi, len(decoded), w, h, delay, w * h) + _px_stats(idx)
+            yield row + ((idx.tolist(),) if include_pixels else ())
 
-    return src.mapInPandas(frame_batches, schema=schema)
+    return _map_rows(src, schema, frames)
 
 
 def frame_index_ahash(indices: "F.Column") -> "F.Column":
@@ -1539,25 +1472,19 @@ def synth_avi_blobs(
         (40000 + 1000 * (i % 5)).cast("int").alias("__us__"),
     )
 
-    def synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for did, w_, h_, nf_, us_ in zip(
-                pdf["doc_id"], pdf["__w__"], pdf["__h__"], pdf["__nf__"], pdf["__us__"]
-            ):
-                bw_, bh_ = w_ // 8, h_ // 8
-                frames = []
-                for f in range(int(nf_)):
-                    img = np.zeros((h_, w_), dtype=np.uint8)
-                    for b in range(bw_ * bh_):
-                        v = 2 * ((int(did) * 17 + f * 31 + b * 29) % 128)
-                        by, bx = divmod(b, bw_)
-                        img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = v
-                    frames.append(_encode_jpeg_gray(img))
-                blobs.append(_build_avi(frames, int(w_), int(h_), int(us_)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], out: blobs})
+    def synth(did, w_, h_, nf_, us_):
+        bw_, bh_ = w_ // 8, h_ // 8
+        frames = []
+        for f in range(nf_):
+            img = np.zeros((h_, w_), dtype=np.uint8)
+            for b in range(bw_ * bh_):
+                v = 2 * ((did * 17 + f * 31 + b * 29) % 128)
+                by, bx = divmod(b, bw_)
+                img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = v
+            frames.append(_encode_jpeg_gray(img))
+        yield did, _build_avi(frames, w_, h_, us_)
 
-    return src.mapInPandas(synth_batches, schema=f"doc_id long, {out} binary")
+    return _map_rows(src, f"doc_id long, {out} binary", synth)
 
 
 def _parse_avi(b: bytes):
@@ -1621,7 +1548,7 @@ def decode_avi_frames(
     id_col: str = "doc_id",
     include_pixels: bool = False,
 ) -> DataFrame:
-    """MJPEG-in-AVI container decode via Arrow-batched ``mapInPandas``:
+    """MJPEG-in-AVI container decode at the Arrow row boundary:
     one output row per video frame — :func:`decode_gif_frames`' sibling
     for the RIFF container family (VERDICT r9 Next 6). The RIFF walk
     (:func:`_parse_avi`) collects each ``##dc`` movi chunk; every
@@ -1641,57 +1568,25 @@ def decode_avi_frames(
     src = df.select(F.col(id_col).alias("doc_id"), F.col(blob_col).alias("blob"))
     schema = _AVI_FRAME_SCHEMA + (", pixels array<int>" if include_pixels else "")
 
-    def frame_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, b in zip(pdf["doc_id"], pdf["blob"]):
-                b = bytes(b) if b is not None else b""
-                parsed = _parse_avi(b)
-                decoded = []
-                if parsed is not None:
-                    usec, _, payloads = parsed
-                    for p in payloads:
-                        img = _parse_jpeg(p)
-                        if img is None:
-                            decoded = None
-                            break
-                        decoded.append(img)
-                if parsed is None or decoded is None:
-                    base = (did, None, 0, None, None, None, None, None, None, None)
-                    rows.append(base + ((None,) if include_pixels else ()))
-                    continue
-                for fi, (_, w, h, _, px) in enumerate(decoded):
-                    s = int(px.sum(dtype=np.int64))
-                    base = (
-                        did,
-                        fi,
-                        len(decoded),
-                        w,
-                        h,
-                        usec,
-                        w * h,
-                        s,
-                        int(px[0]) if px.size else None,
-                        s / px.size if px.size else None,
-                    )
-                    if include_pixels:
-                        base = base + ([int(x) for x in px],)
-                    rows.append(base)
-            cols = [
-                "doc_id",
-                "frame_idx",
-                "n_frames",
-                "width",
-                "height",
-                "usec_per_frame",
-                "n_pixels",
-                "sum_pixel",
-                "first_pixel",
-                "mean_pixel",
-            ] + (["pixels"] if include_pixels else [])
-            yield pd.DataFrame(rows, columns=cols)
+    def frames(did, b):
+        parsed = _parse_avi(b)
+        decoded = []
+        if parsed is not None:
+            usec, _, payloads = parsed
+            for p in payloads:
+                img = _parse_jpeg(p)
+                if img is None:
+                    decoded = None
+                    break
+                decoded.append(img)
+        if parsed is None or decoded is None:
+            yield (did, None, 0) + (None,) * (7 + include_pixels)
+            return
+        for fi, (_, w, h, _, px) in enumerate(decoded):
+            row = (did, fi, len(decoded), w, h, usec, w * h) + _px_stats(px)
+            yield row + ((px.tolist(),) if include_pixels else ())
 
-    return src.mapInPandas(frame_batches, schema=schema)
+    return _map_rows(src, schema, frames)
 
 
 def block_downsample(
@@ -1761,7 +1656,7 @@ def decode_audio(
     blob_col: str = "content",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Decode audio blobs via Arrow-batched ``mapInPandas``: RIFF/WAVE
+    """Decode audio blobs at the Arrow row boundary: RIFF/WAVE
     PCM-16 is parsed for real (chunk walk, fmt/data extraction, numpy
     int16 samples); anything else yields ``format='unknown'`` with NULL
     audio fields — same poison-blob contract as :func:`decode_image`.
@@ -1773,50 +1668,23 @@ def decode_audio(
     """
     src = df.select(F.col(id_col).alias("doc_id"), F.col(blob_col).alias("blob"))
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n_rows = len(pdf)
-            fmt = np.empty(n_rows, dtype=object)
-            rate = np.full(n_rows, None, dtype=object)
-            chans = np.full(n_rows, None, dtype=object)
-            nsamp = np.full(n_rows, None, dtype=object)
-            nbytes = np.zeros(n_rows, dtype=np.int64)
-            dur = np.full(n_rows, None, dtype=object)
-            ssum = np.full(n_rows, None, dtype=object)
-            first = np.full(n_rows, None, dtype=object)
-            peak = np.full(n_rows, None, dtype=object)
-            for i, b in enumerate(pdf["blob"]):
-                b = bytes(b) if b is not None else b""
-                nbytes[i] = len(b)
-                parsed = _parse_wav(b)
-                if parsed is None:
-                    fmt[i] = "unknown"
-                    continue
-                r_, c_, s = parsed
-                frames = s.size // c_
-                fmt[i] = "wav"
-                rate[i], chans[i], nsamp[i] = r_, c_, frames
-                dur[i] = frames / r_
-                if s.size:
-                    ssum[i] = int(s.sum(dtype=np.int64))
-                    first[i] = int(s[0])
-                    peak[i] = int(np.abs(s.astype(np.int32)).max())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "format": fmt,
-                    "sample_rate": rate,
-                    "n_channels": chans,
-                    "n_samples": nsamp,
-                    "n_bytes": nbytes,
-                    "duration_s": dur,
-                    "sum_sample": ssum,
-                    "first_sample": first,
-                    "peak_abs": peak,
-                }
+    def decode(did, b):
+        parsed = _parse_wav(b)
+        if parsed is None:
+            yield (did, "unknown", None, None, None, len(b)) + (None,) * 4
+            return
+        r_, c_, s = parsed
+        frames = s.size // c_
+        stats = (None, None, None)
+        if s.size:
+            stats = (
+                int(s.sum(dtype=np.int64)),
+                int(s[0]),
+                int(np.abs(s.astype(np.int32)).max()),
             )
+        yield (did, "wav", r_, c_, frames, len(b), frames / r_) + stats
 
-    return src.mapInPandas(decode_batches, schema=_AUDIO_SCHEMA)
+    return _map_rows(src, _AUDIO_SCHEMA, decode)
 
 
 # ------------------------------------------------------------ features
@@ -1827,62 +1695,35 @@ def extract_features(
     blob_col: str = "content",
     id_col: str = "doc_id",
     dims: int = 64,
-    fake: bool = False,
 ) -> DataFrame:
     """Blob → feature vector (``array<double>``), Arrow-batched — the
     bridge from the multimodal convention into the similarity stack
     (output feeds :func:`kolang_spark.llm.similarity.lsh_topk` /
     ``brute_force_topk`` unchanged).
 
-    Real path (default): image blobs (PPM/BMP) are decoded and
-    featurized from their *pixel* bytes; any other payload is featurized
-    from its raw bytes. The feature fold is a strided positional mean —
-    ``f[k] = mean(values at indices ≡ k mod dims) / 255`` (zero-padded
-    to a multiple of ``dims``) — a real, content- and layout-sensitive
-    signature that is deterministic under any partitioning. Not a neural
+    Image blobs (PPM/BMP/PNG/baseline JPEG) are decoded and featurized
+    from their *pixel* bytes; any other payload (a NULL blob included, as
+    empty bytes) is featurized from its raw bytes. The feature fold is a
+    strided positional mean — ``f[k] = mean(values at indices ≡ k mod
+    dims) / 255`` (zero-padded to a multiple of ``dims``) — a real,
+    content- and layout-sensitive signature that is deterministic under any partitioning. Not a neural
     encoder; swap the fold for one when a model runtime is available —
     the Arrow plumbing is identical.
-
-    ``fake=True`` is a test shim (md5-seeded random vector per blob).
     """
-    import hashlib
-
     src = df.select(F.col(id_col).alias("doc_id"), F.col(blob_col).alias("blob"))
     schema = "doc_id long, features array<double>"
 
-    def _fold(values: np.ndarray) -> list:
+    def embed(did, b):
+        parsed = _parse_image(b)
+        values = parsed[4] if parsed is not None else np.frombuffer(b, np.uint8)
         if values.size == 0:
-            return [0.0] * dims
+            yield did, [0.0] * dims
+            return
         pad = (-values.size) % dims
         v = np.pad(values.astype(np.float64), (0, pad))
-        return (v.reshape(-1, dims).mean(axis=0) / 255.0).tolist()
+        yield did, (v.reshape(-1, dims).mean(axis=0) / 255.0).tolist()
 
-    def embed_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if fake:
-
-                def vec(b: bytes):
-                    b = bytes(b) if b is not None else b""  # poison-blob
-                    seed = int.from_bytes(hashlib.md5(b).digest()[:8], "big")
-                    return np.random.default_rng(seed).random(dims).tolist()
-
-            else:
-
-                def vec(b: bytes):
-                    b = bytes(b) if b is not None else b""
-                    parsed = _parse_image(b)
-                    values = (
-                        parsed[4]
-                        if parsed is not None
-                        else np.frombuffer(b, dtype=np.uint8)
-                    )
-                    return _fold(values)
-
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "features": pdf["blob"].map(vec)}
-            )
-
-    return src.mapInPandas(embed_batches, schema=schema)
+    return _map_rows(src, schema, embed)
 
 
 def sample_frames(
@@ -1895,7 +1736,7 @@ def sample_frames(
     """Frame-sampling plumbing for video blobs: one output row per
     sampled frame index. The index spine is a native
     ``sequence``+``explode`` (no Python); actual frame extraction would
-    chain :func:`decode_image`-style ``mapInPandas`` on the exploded
+    chain a :func:`decode_image`-style Arrow decode on the exploded
     rows. Duration defaults to a bytes-derived deterministic stand-in
     when no duration column exists (stub container, same plumbing)."""
     duration = (
@@ -1931,9 +1772,8 @@ def audio_frame_features(
 ) -> DataFrame:
     """Short-time frame features over decoded PCM audio — the framing
     stage every spectrogram/MFCC pipeline starts with, run inside the
-    same sanctioned Arrow ``mapInPandas`` boundary as
-    :func:`decode_audio` (DSP over raw bytes has no Catalyst
-    expression).
+    same sanctioned Arrow row boundary as :func:`decode_audio` (DSP over
+    raw bytes has no Catalyst expression).
 
     One output row per **full** frame (length ``frame_len``, stride
     ``hop``; a trailing partial frame is dropped, the standard STFT
@@ -1964,40 +1804,28 @@ def audio_frame_features(
         raise ValueError("hop must be >= 1")
     src = df.select(F.col(id_col).alias("doc_id"), F.col(blob_col).alias("blob"))
 
-    def frame_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fidx, energy, zcr, peak, dom = [], [], [], [], [], []
-            for doc_id, b in zip(pdf["doc_id"], pdf["blob"]):
-                b = bytes(b) if b is not None else b""
-                parsed = _parse_wav(b)
-                if parsed is None:
-                    continue
-                _, chans, s = parsed
-                mono = s[::chans].astype(np.int64)
-                n = mono.size
-                f = 0
-                while f * hop + frame_len <= n:
-                    fr = mono[f * hop : f * hop + frame_len]
-                    ids.append(int(doc_id))
-                    fidx.append(f)
-                    energy.append(int((fr * fr).sum()))
-                    zcr.append(int(((fr[:-1] * fr[1:]) < 0).sum()))
-                    peak.append(int(np.abs(fr).max()))
-                    mag = np.abs(np.fft.rfft(fr.astype(np.float64)))
-                    dom.append(int(np.argmax(mag[1:])) + 1)
-                    f += 1
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(fidx, dtype="int32"),
-                    "energy": pd.Series(energy, dtype="int64"),
-                    "zero_crossings": pd.Series(zcr, dtype="int32"),
-                    "peak_abs": pd.Series(peak, dtype="int32"),
-                    "dominant_bin": pd.Series(dom, dtype="int32"),
-                }
+    def frames(did, b):
+        parsed = _parse_wav(b)
+        if parsed is None:
+            return
+        _, chans, s = parsed
+        mono = s[::chans].astype(np.int64)
+        n = mono.size
+        f = 0
+        while f * hop + frame_len <= n:
+            fr = mono[f * hop : f * hop + frame_len]
+            mag = np.abs(np.fft.rfft(fr.astype(np.float64)))
+            yield (
+                did,
+                f,
+                int((fr * fr).sum()),
+                int(((fr[:-1] * fr[1:]) < 0).sum()),
+                int(np.abs(fr).max()),
+                int(np.argmax(mag[1:])) + 1,
             )
+            f += 1
 
-    return src.mapInPandas(frame_batches, schema=_AUDIO_FRAME_SCHEMA)
+    return _map_rows(src, _AUDIO_FRAME_SCHEMA, frames)
 
 
 _RESIZE_SCHEMA = (
@@ -2014,8 +1842,8 @@ def resize_image(
     height: int = 8,
 ) -> DataFrame:
     """Decode + resize per image blob — the thumbnail/normalization
-    step before batched feature extraction, run inside the sanctioned
-    Arrow ``mapInPandas`` boundary (PPM/BMP/PNG/baseline-JPEG via the
+    step before batched feature extraction, run at the sanctioned
+    Arrow row boundary (PPM/BMP/PNG/baseline-JPEG via the
     same parsers as :func:`decode_image`).
 
     Resize is **exact-integer nearest-neighbor at cell centers** —
@@ -2035,46 +1863,22 @@ def resize_image(
         raise ValueError("width and height must be >= 1")
     src = df.select(F.col(id_col).alias("doc_id"), F.col(blob_col).alias("blob"))
 
-    def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ys_base = 2 * np.arange(height) + 1
-        xs_base = 2 * np.arange(width) + 1
-        for pdf in batches:
-            n_rows = len(pdf)
-            fmt = np.empty(n_rows, dtype=object)
-            sw = np.full(n_rows, None, dtype=object)
-            sh = np.full(n_rows, None, dtype=object)
-            nc = np.full(n_rows, None, dtype=object)
-            px_out = np.full(n_rows, None, dtype=object)
-            for i, b in enumerate(pdf["blob"]):
-                b = bytes(b) if b is not None else b""
-                parsed = _parse_image(b)
-                if parsed is None:
-                    fmt[i] = "unknown"
-                    continue
-                kind, w, h, ch, px = parsed
-                fmt[i], sw[i], sh[i], nc[i] = kind, w, h, ch
-                arr = px.reshape(h, w, ch)
-                ys = ys_base * h // (2 * height)
-                xs = xs_base * w // (2 * width)
-                px_out[i] = [int(v) for v in arr[np.ix_(ys, xs)].reshape(-1)]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "format": fmt,
-                    "src_width": sw,
-                    "src_height": sh,
-                    "width": np.where(
-                        np.array([f != "unknown" for f in fmt]), width, None
-                    ),
-                    "height": np.where(
-                        np.array([f != "unknown" for f in fmt]), height, None
-                    ),
-                    "n_channels": nc,
-                    "pixels": px_out,
-                }
-            )
+    ys_base = 2 * np.arange(height) + 1
+    xs_base = 2 * np.arange(width) + 1
 
-    return src.mapInPandas(resize_batches, schema=_RESIZE_SCHEMA)
+    def resize(did, b):
+        parsed = _parse_image(b)
+        if parsed is None:
+            yield (did, "unknown") + (None,) * 6
+            return
+        kind, w, h, ch, px = parsed
+        arr = px.reshape(h, w, ch)
+        ys = ys_base * h // (2 * height)
+        xs = xs_base * w // (2 * width)
+        pixels = arr[np.ix_(ys, xs)].reshape(-1).tolist()
+        yield did, kind, w, h, width, height, ch, pixels
+
+    return _map_rows(src, _RESIZE_SCHEMA, resize)
 
 
 _AHASH_SCHEMA = "doc_id long, format string, width int, height int, ahash long"
@@ -2089,7 +1893,7 @@ def image_ahash(
     """Perceptual average-hash (aHash) per image blob — the standard
     cheap near-duplicate fingerprint for image corpora (resize →
     grayscale → threshold against the mean → one bit per cell), run
-    inside the sanctioned Arrow ``mapInPandas`` boundary.
+    at the sanctioned Arrow row boundary.
 
     This variant is **exact-integer end to end** so an independent
     engine can reproduce every bit:
@@ -2113,41 +1917,23 @@ def image_ahash(
         raise ValueError("grid must be in 1..8 (hash must fit one long)")
     src = df.select(F.col(id_col).alias("doc_id"), F.col(blob_col).alias("blob"))
 
-    def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n_rows = len(pdf)
-            fmt = np.empty(n_rows, dtype=object)
-            wd = np.full(n_rows, None, dtype=object)
-            ht = np.full(n_rows, None, dtype=object)
-            hsh = np.full(n_rows, None, dtype=object)
-            for i, b in enumerate(pdf["blob"]):
-                b = bytes(b) if b is not None else b""
-                parsed = _parse_image(b)
-                if parsed is None:
-                    fmt[i] = "unknown"
-                    continue
-                kind, w, h, ch, px = parsed
-                fmt[i], wd[i], ht[i] = kind, w, h
-                arr = px.reshape(h, w, ch).astype(np.int64)
-                gray = arr[:, :, :3].sum(axis=2) if ch >= 3 else arr[:, :, 0]
-                ys = (2 * np.arange(grid) + 1) * h // (2 * grid)
-                xs = (2 * np.arange(grid) + 1) * w // (2 * grid)
-                v = gray[np.ix_(ys, xs)]
-                bits = (grid * grid * v > v.sum()).astype(np.uint64)
-                code = np.uint64(0)
-                for r in range(grid):
-                    for c in range(grid):
-                        if bits[r, c]:
-                            code |= np.uint64(1) << np.uint64(r * grid + c)
-                hsh[i] = int(np.int64(code))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "format": fmt,
-                    "width": wd,
-                    "height": ht,
-                    "ahash": hsh,
-                }
-            )
+    def ahash(did, b):
+        parsed = _parse_image(b)
+        if parsed is None:
+            yield did, "unknown", None, None, None
+            return
+        kind, w, h, ch, px = parsed
+        arr = px.reshape(h, w, ch).astype(np.int64)
+        gray = arr[:, :, :3].sum(axis=2) if ch >= 3 else arr[:, :, 0]
+        ys = (2 * np.arange(grid) + 1) * h // (2 * grid)
+        xs = (2 * np.arange(grid) + 1) * w // (2 * grid)
+        v = gray[np.ix_(ys, xs)]
+        bits = (grid * grid * v > v.sum()).astype(np.uint64)
+        code = np.uint64(0)
+        for r in range(grid):
+            for c in range(grid):
+                if bits[r, c]:
+                    code |= np.uint64(1) << np.uint64(r * grid + c)
+        yield did, kind, w, h, int(np.int64(code))
 
-    return src.mapInPandas(hash_batches, schema=_AHASH_SCHEMA)
+    return _map_rows(src, _AHASH_SCHEMA, ahash)

@@ -21,7 +21,13 @@ __all__ = [
     "find_global_windows",
 ]
 
-_PYTHON_EVAL_NODES = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas")
+_PYTHON_EVAL_NODES = (
+    "BatchEvalPython",
+    "ArrowEvalPython",
+    "MapInPandas",
+    "MapInArrow",
+    "FlatMapGroupsInPandas",
+)
 
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:

@@ -9,10 +9,10 @@ a blob starting with the gzip magic is decompressed as the
 concatenated per-record gzip members real ``.warc.gz`` Common Crawl
 shards use (``gunzip_members``). The parser is a hand-rolled
 record walker over raw bytes — header block to ``\\r\\n\\r\\n``,
-``Content-Length`` payload slice, 4-byte record separator — run inside
-the sanctioned Arrow ``mapInPandas`` boundary (a byte-offset walk has
-no Catalyst expression), the same boundary contract as the image/audio
-decoders in :mod:`kolang_spark.llm.multimodal`.
+``Content-Length`` payload slice, 4-byte record separator — handed per
+blob to :func:`kolang_spark.utils._map_rows`, the library's one Arrow row
+boundary (a byte-offset walk has no Catalyst expression), which the
+image/audio decoders in :mod:`kolang_spark.llm.multimodal` cross too.
 
 Scale posture mirrors ``read_blobs``: one task per shard file, so
 parallelism = shard count (Common Crawl segments ship ~1 GiB shards in
@@ -22,11 +22,12 @@ land the parsed records into parquet once and run from there.
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from kolang_spark.utils import _map_rows
 
 __all__ = ["parse_warc", "parse_warc_bytes", "gunzip_members"]
 
@@ -71,7 +72,7 @@ _SCHEMA = (
 
 def parse_warc_bytes(b: bytes) -> List[Tuple]:
     """Parse one WARC file's bytes into record tuples (pure function —
-    unit-testable without Spark; the Arrow stage maps it per blob).
+    unit-testable without Spark; :func:`parse_warc` maps it per blob).
 
     Per record: ``(record_idx, warc_type, target_uri, warc_date,
     http_status, content_type, body)``. For ``response`` records whose
@@ -165,28 +166,10 @@ def parse_warc(
     """Explode a WARC blob column into records — see
     :func:`parse_warc_bytes` for the per-blob contract. Output columns:
     ``(id_col, record_idx, warc_type, target_uri, warc_date,
-    http_status, content_type, body)``."""
+    http_status, content_type, body)``; a NULL blob is empty bytes and
+    yields no rows. Runs at the one Arrow row boundary,
+    :func:`kolang_spark.utils._map_rows`."""
     src = df.select(F.col(id_col).alias("doc_id"), F.col(blob_col).alias("blob"))
-
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                b = bytes(blob) if blob is not None else b""
-                for rec in parse_warc_bytes(b):
-                    rows.append((doc_id, *rec))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "record_idx",
-                    "warc_type",
-                    "target_uri",
-                    "warc_date",
-                    "http_status",
-                    "content_type",
-                    "body",
-                ],
-            )
-
-    return src.mapInPandas(walk, schema=_SCHEMA)
+    return _map_rows(
+        src, _SCHEMA, lambda did, b: ((did, *r) for r in parse_warc_bytes(b))
+    )

@@ -1,4 +1,6 @@
-"""Shared helpers: str/Column coercion and list normalization.
+"""Shared helpers: str/Column coercion, list normalization, the one
+Arrow row boundary (:func:`_map_rows`) and the iterative-operator pin
+(:func:`iter_checkpoint`).
 
 Parity note: the reference coerces through ``kolang.column_functions.col``
 (``/root/reference/kolang/column_functions.py:12-24``), which returns a
@@ -43,11 +45,6 @@ def to_col_list(
     if isinstance(cols, (str, Column)):
         return [to_col(cols)]
     return to_cols(cols)
-
-
-def name_of(c: ColumnOrName, fallback: str = "value") -> str:
-    """Best-effort name for aliasing: the string itself, else a fallback."""
-    return c if isinstance(c, str) else fallback
 
 
 def broadcast_join_nullsafe(left, right, keys: Sequence[str], how: str = "inner"):
@@ -134,6 +131,51 @@ def ensure_min_parallelism(df, min_partitions: int | None = None):
     if current >= target:
         return df
     return df.repartition(target)
+
+
+def _map_rows(df: DataFrame, schema: str, fn) -> DataFrame:
+    """The library's one Arrow row boundary: ``fn`` maps each input row of
+    ``df`` to zero or more output rows of the DDL ``schema``.
+
+    Python runs only where per-byte work has no Catalyst expression (the
+    media codecs in :mod:`kolang_spark.llm.multimodal`, the WARC record
+    walk, CDC chunking), and every such site crosses here, so the
+    crossing has one owner:
+
+    - ``fn(*row)`` receives one input row's values in column order as
+      plain Python objects and yields output tuples in ``schema`` order.
+      A NULL ``binary`` value arrives as ``b""`` (the poison-blob
+      contract: a decoder sees empty bytes, never ``None``).
+    - Each input Arrow batch becomes one output batch (``mapInArrow``),
+      so row order within a partition is kept. Every output column is
+      built as ``pa.array(values, type=<schema field type>)``: a
+      ``long`` stays exact next to NULLs, where a pandas frame would
+      round it through float64.
+    """
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import BinaryType, StructType
+
+    out = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(out)
+    binary = [isinstance(f.dataType, BinaryType) for f in df.schema.fields]
+
+    def batches(it):
+        import pyarrow as pa
+
+        for batch in it:
+            cols = [
+                [b"" if v is None else v for v in c.to_pylist()] if is_bin
+                else c.to_pylist()
+                for c, is_bin in zip(batch.columns, binary)
+            ]
+            rows = [t for row in zip(*cols) for t in fn(*row)]
+            values = list(zip(*rows)) or [()] * len(arrow)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(v, type=f.type) for v, f in zip(values, arrow)],
+                schema=arrow,
+            )
+
+    return df.mapInArrow(batches, out)
 
 
 OBSERVE_WAIT_S = 60.0

@@ -164,8 +164,15 @@ def test_encode_exact_model_property(spark, texts, num_merges):
         assert "".join(got[i]) == norm.replace(" ", "")
 
 
-def test_encode_engines_agree_and_null_propagates(spark):
-    from pyspark.sql import functions as F
+def test_encode_engines_agree_and_null_propagates(spark, monkeypatch):
+    import kolang_spark.llm.bpe as B
+
+    def encode(engine):
+        # the engine is picked at plan time from the merge count: force
+        # each form by moving the threshold past (or below) this table
+        limit = {"column": 10**9, "arrow": 0}[engine]
+        monkeypatch.setattr(B, "COLUMN_ENGINE_MAX_MERGES", limit)
+        return bpe_encode(df, merges)
 
     texts = [
         "low lower lowest",
@@ -180,23 +187,17 @@ def test_encode_engines_agree_and_null_propagates(spark):
         "doc_id long, text string",
     )
     merges = [("l", "o"), ("lo", "w"), ("a", "b"), ("ab", "ab")]
-    col = {
-        r.doc_id: r.bpe_tokens
-        for r in bpe_encode(df, merges, engine="column").collect()
-    }
-    arr = {
-        r.doc_id: r.bpe_tokens
-        for r in bpe_encode(df, merges, engine="arrow").collect()
-    }
+    col = {r.doc_id: r.bpe_tokens for r in encode("column").collect()}
+    arr = {r.doc_id: r.bpe_tokens for r in encode("arrow").collect()}
     assert col == arr
     assert col[3] is None  # NULL in -> NULL out, both engines
     for i, t in enumerate(texts):
         assert col[i] == encode_text(t, merges), (i, t)
     # plan check: the column engine stays UDF-free, the arrow engine is
     # a single ArrowEvalPython (never a row-at-a-time BatchEvalPython)
-    plan_col = bpe_encode(df, merges, engine="column")._jdf.queryExecution().executedPlan().toString()
+    plan_col = encode("column")._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan_col and "BatchEvalPython" not in plan_col
-    plan_arr = bpe_encode(df, merges, engine="arrow")._jdf.queryExecution().executedPlan().toString()
+    plan_arr = encode("arrow")._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" in plan_arr and "BatchEvalPython" not in plan_arr
 
 

@@ -22,7 +22,13 @@ from kolang_spark.llm import (
     word_ngrams,
     tokenize,
 )
-from kolang_spark.llm.multimodal import blob_metadata, decode_image, pack_blob, sample_frames
+from kolang_spark.llm.multimodal import (
+    blob_metadata,
+    decode_image,
+    pack_blob,
+    sample_frames,
+    synth_ppm_blobs,
+)
 from kolang_spark.sources.io import read_table
 
 
@@ -261,13 +267,20 @@ def test_multimodal_pack_and_metadata(spark, docs):
     assert r.n_bytes > 0 and len(r.header_hex) == 8
 
 
-def test_decode_image_fake_pipeline(spark, docs):
-    packed = pack_blob(docs.select("doc_id", "text").limit(20), "text")
-    out = decode_image(packed, fake=True).collect()
+def test_decode_image_synth_ppm_pipeline(spark):
+    packed = synth_ppm_blobs(spark.range(0, 20).selectExpr("id AS doc_id"))
+    out = decode_image(packed).collect()
     assert len(out) == 20
-    assert all(r.width >= 16 and r.height >= 16 and r.n_channels == 3 for r in out)
-    # deterministic: same input → same fake dims
-    out2 = decode_image(packed, fake=True).collect()
+    # real dims: synth_ppm_blobs lays out width 4 + id % 8, height 4 + id % 5
+    assert all(
+        r.format == "ppm"
+        and r.width == 4 + r.doc_id % 8
+        and r.height == 4 + r.doc_id % 5
+        and r.n_channels == 3
+        for r in out
+    )
+    # deterministic: same input → same decoded rows
+    out2 = decode_image(packed).collect()
     assert sorted(map(tuple, out)) == sorted(map(tuple, out2))
 
 
@@ -763,15 +776,16 @@ def test_extract_features_deterministic_and_chains_to_ann(spark, docs):
     from kolang_spark.llm import brute_force_topk
     from kolang_spark.llm.multimodal import extract_features, pack_blob
 
+    # text blobs take the raw-byte fold (no image header)
     packed = pack_blob(docs.select("doc_id", "text").limit(50), "text")
     f1 = {r["doc_id"]: r["features"] for r in
-          extract_features(packed, dims=8, fake=True).collect()}
+          extract_features(packed, dims=8).collect()}
     f2 = {r["doc_id"]: r["features"] for r in
-          extract_features(packed.repartition(5), dims=8, fake=True).collect()}
+          extract_features(packed.repartition(5), dims=8).collect()}
     assert f1 == f2  # same content → same vector, any partitioning
     assert all(len(v) == 8 for v in f1.values())
 
-    feats = extract_features(packed, dims=8, fake=True)
+    feats = extract_features(packed, dims=8)
     out = brute_force_topk(
         feats, feats.limit(2), k=2,
         id_col="doc_id", vec_col="features",

@@ -2,8 +2,8 @@
 
 Enforces the engine's stated execution rules (SURVEY §4): no
 row-at-a-time Python evaluation anywhere (``BatchEvalPython``), Arrow
-``MapInPandas`` only in the explicitly-UDF-sanctioned multimodal decode,
-and no cartesian products.
+map/eval nodes only in the explicitly-UDF-sanctioned queries below, one
+library call site for the Arrow row boundary, and no cartesian products.
 """
 
 import re
@@ -112,9 +112,31 @@ def test_no_python_row_eval_and_no_cartesian(spark, name):
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF"
     if name not in PANDAS_ALLOWED:
         assert not re.search(
-            r"MapInPandas|ArrowEvalPython|FlatMap(Co)?GroupsInPandas", plan
+            r"MapIn(Pandas|Arrow)|ArrowEvalPython|FlatMap(Co)?GroupsInPandas",
+            plan,
         ), f"{name}: unexpected Python boundary"
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
+
+
+def test_one_arrow_row_boundary_call_site():
+    """Every media codec, the WARC walk and CDC chunking cross into
+    Python through ``utils._map_rows``: the library source holds
+    exactly one ``mapInPandas``/``mapInArrow`` call, inside it."""
+    import inspect
+    import pathlib
+
+    import kolang_spark
+    from kolang_spark import utils
+
+    call = re.compile(r"\.mapIn(Pandas|Arrow)\(")
+    root = pathlib.Path(kolang_spark.__file__).parent
+    hits = [
+        (str(p.relative_to(root)), m.group(0))
+        for p in sorted(root.rglob("*.py"))
+        for m in call.finditer(p.read_text())
+    ]
+    assert hits == [("utils.py", ".mapInArrow(")], hits
+    assert call.search(inspect.getsource(utils._map_rows))
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))

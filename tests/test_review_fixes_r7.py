@@ -165,15 +165,16 @@ def test_write_table_csv_header_false_respected(spark, tmp_path):
     assert lines == ["1,a"]  # no header row
 
 
-def test_extract_features_fake_handles_null_blob(spark):
+def test_extract_features_handles_null_blob(spark):
     from kolang_spark.llm.multimodal import extract_features
 
     df = spark.createDataFrame(
         [(1, bytearray(b"x")), (2, None)], "doc_id long, content binary"
     )
     out = {r.doc_id: r.features
-           for r in extract_features(df, dims=4, fake=True).collect()}
+           for r in extract_features(df, dims=4).collect()}
     assert len(out[1]) == 4 and len(out[2]) == 4  # no TypeError
+    assert out[2] == [0.0] * 4  # a NULL blob folds as empty bytes
 
 
 def test_assert_no_shuffle_join_allows_broadcast_exchange(spark):

@@ -317,13 +317,31 @@ def test_image_ahash_golden_and_poison(spark):
 
 def test_image_ahash_matches_numpy_reference(spark):
     """Full 8x8 hash over the synth PPM corpus vs an independent pure-
-    numpy reimplementation (incl. two's-complement bit-63 packing)."""
+    numpy reimplementation (incl. two's-complement bit-63 packing) —
+    alone, and sharing one Arrow batch with NULL and non-image blobs,
+    so the poison rows' NULL hashes sit in the same output column as
+    bit-63 hashes (a float64 detour would round those)."""
     import numpy as np
 
     from kolang_spark.llm.multimodal import image_ahash, synth_ppm_blobs
 
     df = spark.range(0, 40).selectExpr("id AS doc_id")
     got = {r.doc_id: r.ahash for r in image_ahash(synth_ppm_blobs(df)).collect()}
+    poison = spark.createDataFrame(
+        [(100, None), (101, bytearray(b"not an image")), (102, bytearray())],
+        "doc_id long, content binary",
+    )
+    mixed = {
+        r.doc_id: r
+        for r in image_ahash(
+            synth_ppm_blobs(df).unionByName(poison).coalesce(1)
+        ).collect()
+    }
+    assert len(mixed) == 43
+    for i in (100, 101, 102):
+        r = mixed[i]
+        assert (r.format, r.width, r.height, r.ahash) == ("unknown", None, None, None)
+    assert any(got[i] < 0 for i in range(40))  # bit 63 is in the batch
     for i in range(40):
         w, h = 4 + i % 8, 4 + i % 5
         px = np.array(
@@ -339,6 +357,7 @@ def test_image_ahash_matches_numpy_reference(spark):
                 code |= 1 << b
         expect = code - (1 << 64) if code >= (1 << 63) else code
         assert got[i] == expect, i
+        assert mixed[i].ahash == expect, i
 
 
 def test_hamming_pairs_banded_equals_brute(spark):
