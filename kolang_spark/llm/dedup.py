@@ -1021,11 +1021,13 @@ def incremental_line_dedup(
     output, never lose state; all path probes route through the Hadoop
     ``FileSystem`` API so ``state_path`` may be an object-store URI.
 
-    Scale shape: the state join is a hash equi-join on the 32-char
-    key (the accumulated corpus TEXT is never rescanned); the
-    within-batch keep-first window partitions by line key over batch
-    lines only; re-assembly is the same per-doc groupBy as the batch
-    operator. Returns ``(id_col, out_col, n_kept, n_removed)``.
+    Scale shape: the state probe is one ExistenceJoin on the 32-char
+    key with the state as the build side — broadcast when small,
+    shuffled above the broadcast threshold (the accumulated corpus
+    TEXT is never rescanned); the within-batch keep-first window
+    partitions by line key over batch lines only; re-assembly is the
+    same per-doc groupBy as the batch operator. Returns ``(id_col,
+    out_col, n_kept, n_removed)``.
     """
     marked, novel, store = _incremental_lines_flagged(
         spark, new_df, state_path, id_col, text_col, delim
@@ -1067,10 +1069,11 @@ def _incremental_lines_flagged(
     re-read the state.
 
     ``exclude_batch`` is the streaming sink's replay guard
-    (:meth:`kolang_spark.sources.state.BoundState.read`). The state
-    read is de-duplicated regardless: a crashed replay can
-    legitimately append the same keys twice, and duplicate state rows
-    must not double-join batch lines (that would inflate ``n_removed``).
+    (:meth:`kolang_spark.sources.state.BoundState.read`). A crashed
+    replay can legitimately append the same keys twice; the probe
+    (:meth:`kolang_spark.sources.state.BoundState.seen`) emits one
+    row per batch line whatever the state holds, so duplicate state
+    rows cannot inflate ``n_removed``.
     """
     import re as _re
 
@@ -1085,26 +1088,13 @@ def _incremental_lines_flagged(
     )
     store = _LINE_STATE.bind(spark, state_path, delim)
     store.verify()
-    state = (
-        store.read(exclude_batch)
-        .select(F.col("line_key").alias("__lk__"))
-        .distinct()
-    )
-    pre = keyed.join(
-        state.withColumn("__seen__", F.lit(True)),
-        keyed["_key"] == F.col("__lk__"),
-        "left",
-    ).drop("__lk__")
+    pre = store.seen(keyed, {"_key": "line_key"}, exclude_batch)
     w = Window.partitionBy("_key").orderBy("_id", "_pos")
     marked = (
         pre.withColumn("_rn", F.row_number().over(w))
         .withColumn(
             "_keep",
-            F.col("_ws")
-            | (
-                (F.col("_rn") == 1)
-                & ~F.coalesce("__seen__", F.lit(False))
-            ),
+            F.col("_ws") | ((F.col("_rn") == 1) & ~F.col("__seen__")),
         )
         .drop("__seen__", "_rn")
     )
@@ -1500,53 +1490,12 @@ def embedding_near_dup_pairs(
     )
 
 
-# the bloom sidecar's rows (``bloom_table``), declared on every read of it
-_BLOOM_SCHEMA = "bit bigint"
-
-
-def _bloom_meta_path(bloom_path: str) -> str:
-    # leading underscore: Spark's file listing skips _-prefixed files,
-    # so the meta can live inside the parquet dir without breaking
-    # reads. Plain '/' join, never os.path — the path may be a
-    # fully-qualified object-store URI.
-    return bloom_path.rstrip("/") + "/_ks_bloom_meta.json"
-
-
-def _write_bloom_meta(spark, bloom_path: str, n_bits: int, k: int) -> None:
-    import json
-
-    from kolang_spark.sources.io import fs_write_text
-
-    fs_write_text(
-        spark, _bloom_meta_path(bloom_path), json.dumps({"n_bits": n_bits, "k": k})
-    )
-
-
-def _bloom_meta_matches(spark, bloom_path: str, n_bits: int, k: int) -> bool:
-    import json
-
-    from kolang_spark.sources.io import fs_read_text, path_exists
-
-    if not path_exists(spark, bloom_path):
-        return False
-    raw = fs_read_text(spark, _bloom_meta_path(bloom_path))
-    if raw is None:
-        return False
-    try:
-        meta = json.loads(raw)
-    except ValueError:
-        return False
-    return meta.get("n_bits") == n_bits and meta.get("k") == k
-
-
 def incremental_exact_dedup(
     spark,
     new_df: DataFrame,
     state_path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bloom_bits: Optional[int] = None,
-    bloom_k: int = 3,
 ) -> DataFrame:
     """Exact dedup for INCREMENTAL ingest: flag each new document
     against the fingerprints of everything already accepted, then
@@ -1563,156 +1512,46 @@ def incremental_exact_dedup(
 
     Scale shape: the state table holds ONE md5 row per distinct
     document ever accepted (~16 bytes + overhead vs the full text);
-    the membership check is an equi-join on the fingerprint —
-    hash-partitioned both sides, no broadcast assumption, AQE handles
-    the sizes.
-
-    ``bloom_bits`` enables the extreme-state-size pre-filter: a Bloom
-    bit table (:func:`kolang_spark.operators.sketches.bloom_table`) is
-    persisted NEXT TO the state (``<state_path>_bloom``, merged
-    incrementally — merging = appending the novel fingerprints' bits)
-    and each batch probes it first. Bloom "absent" is certain, so only
-    the maybe rows take the fingerprint equi-join — with a typical
-    dedup-heavy batch that maybe-set is small enough to broadcast, so
-    the billion-row state is *scanned but never shuffled*. False
-    positives only cost a redundant join probe, never a wrong flag
-    (the equi-join re-verifies every maybe); results are byte-equal to
-    the unfiltered path. The sidecar is a *derived cache* with
-    self-healing semantics: its parameters are recorded in an in-dir
-    meta file, and any mismatch (different ``bloom_bits``/``bloom_k``,
-    foreign or half-written dir) triggers a rebuild from state; a
-    bloom-less run invalidates the sidecar (it could not keep it in
-    sync, and a stale sidecar would mean permanent false negatives);
-    and past 64 files the append-only bit table compacts back to its
-    ≤ ``bloom_bits``-row distinct form. Every crash window loses at
-    most the cache, never correctness.
+    the membership check is one ExistenceJoin on the fingerprint
+    (:meth:`kolang_spark.sources.state.BoundState.seen`) with the state
+    as the build side — broadcast while it is under
+    ``spark.sql.autoBroadcastJoinThreshold``, shuffled (sort-merge)
+    above it.
 
     The returned frame is eagerly ``localCheckpoint``-ed: the flags
     feed both the state append and the caller's first action, which
-    would otherwise each re-run the batch scan + state join + window
-    (and the whole bloom probe chain). This trades one batch-sized
-    write to executor-local storage for the recompute — the batch is
-    the small side by definition (the state is what's billion-row) —
-    and it also immunizes the returned frame against the next call's
-    sidecar compaction deleting files a lazy plan would still
-    reference (see :func:`_maybe_compact_bloom`).
+    would otherwise each re-run the batch scan + state probe + window.
+    This trades one batch-sized write to executor-local storage for
+    the recompute — the batch is the small side by definition (the
+    state is what's billion-row).
 
-    All state/sidecar file management routes through the Hadoop
+    All state file management routes through the Hadoop
     ``FileSystem`` API (:func:`kolang_spark.sources.io.path_exists`
     and friends), so ``state_path`` may be an object-store URI
     (``s3a://``/``hdfs://``/``abfs://``) — the probes behave
     identically to local paths.
     """
     from kolang_spark.llm.textstats import doc_fingerprint
-    from kolang_spark.sources.io import fs_delete, path_exists
 
     store = _EXACT_STATE.bind(spark, state_path)
     store.verify()
     batch = new_df.withColumn("fingerprint", doc_fingerprint(text_col))
-    state = store.read().select(F.col("fingerprint").alias("__fp__"))
-    state_flagged = state.withColumn("__seen__", F.lit(True))
-
-    bloom_path = None
-    if bloom_bits is None:
-        # the bloom sidecar is a CACHE derived from state; a bloom-less
-        # run appends fingerprints the sidecar would never see, so a
-        # surviving sidecar would later report them "certainly absent"
-        # — permanent false negatives. Invalidate it; the next
-        # bloom-enabled run rebuilds from state.
-        fs_delete(spark, state_path.rstrip("/") + "_bloom")
-        pre = batch.join(
-            state_flagged, batch["fingerprint"] == state["__fp__"], "left"
-        ).drop("__fp__")
-    else:
-        from kolang_spark.operators.sketches import (
-            bloom_might_contain,
-            bloom_table,
-        )
-
-        bloom_path = state_path.rstrip("/") + "_bloom"
-        if not _bloom_meta_matches(spark, bloom_path, bloom_bits, bloom_k):
-            # sidecar missing, param-mismatched, or meta-less (written
-            # by an older/foreign process): rebuild from state — the
-            # sidecar is derivable, so rebuilding is always correct
-            fs_delete(spark, bloom_path)
-            if path_exists(spark, state_path):
-                bloom_table(
-                    state, "__fp__", n_bits=bloom_bits, k=bloom_k
-                ).write.mode("overwrite").parquet(bloom_path)
-                _write_bloom_meta(spark, bloom_path, bloom_bits, bloom_k)
-        if path_exists(spark, bloom_path):
-            # compact BEFORE reading: compacting after the batch was
-            # flagged would delete files the returned DataFrame's lazy
-            # plan still references (FileNotFound on the caller's first
-            # action); up front, nothing holds the old file listing yet
-            _maybe_compact_bloom(spark, bloom_path, bloom_bits, bloom_k)
-            bloom = spark.read.schema(_BLOOM_SCHEMA).parquet(bloom_path).distinct()
-        else:
-            bloom = spark.createDataFrame([], _BLOOM_SCHEMA)
-        probe = bloom_might_contain(
-            bloom,
-            batch.select("fingerprint").distinct(),
-            "fingerprint",
-            n_bits=bloom_bits,
-            k=bloom_k,
-        ).select(F.col("item").alias("__pf__"), "might_contain")
-        b2 = batch.join(
-            probe, batch["fingerprint"] == F.col("__pf__"), "left"
-        ).drop("__pf__")
-        maybe_flag = F.coalesce("might_contain", F.lit(False))
-        maybes = b2.where(maybe_flag)
-        certain = b2.where(~maybe_flag).withColumn(
-            "__seen__", F.lit(None).cast("boolean")
-        )
-        pre = (
-            maybes.join(
-                state_flagged,
-                maybes["fingerprint"] == state["__fp__"],
-                "left",
-            )
-            .drop("__fp__")
-            .unionByName(certain)
-            .drop("might_contain")
-        )
-
+    pre = store.seen(batch, {"fingerprint": "fingerprint"})
     w = Window.partitionBy("fingerprint").orderBy(id_col)
     marked = (
         pre.withColumn("__rn__", F.row_number().over(w))
-        .withColumn(
-            "is_duplicate",
-            F.coalesce("__seen__", F.lit(False)) | (F.col("__rn__") > 1),
-        )
+        .withColumn("is_duplicate", F.col("__seen__") | (F.col("__rn__") > 1))
         .drop("__seen__", "__rn__")
     )
     # pin the flagged batch once: it feeds the novel-state write below
     # AND the caller's first action, which would otherwise each re-run
-    # the batch scan + state join + window (and, with bloom, the whole
-    # probe chain)
+    # the batch scan + state probe + window
     marked = marked.localCheckpoint(eager=True)
     novel = (
         marked.where(~F.col("is_duplicate"))
         .select("fingerprint")
         .distinct()
     )
-    if bloom_path is not None:
-        # freeze the novel set once: it feeds two writes, and the state
-        # append below must not be re-read by the bloom append's plan.
-        # Write ORDER matters for crash safety: bloom bits first — a
-        # crash between the appends leaves bits without fingerprints
-        # (harmless false positives); the reverse would leave state
-        # fingerprints the bloom can't see (false negatives = missed
-        # duplicates forever).
-        novel = novel.localCheckpoint(eager=True)
-        from kolang_spark.operators.sketches import bloom_table as _bt
-
-        _bt(novel, "fingerprint", n_bits=bloom_bits, k=bloom_k).write.mode(
-            "append"
-        ).parquet(bloom_path)
-        if not path_exists(spark, _bloom_meta_path(bloom_path)):
-            _write_bloom_meta(spark, bloom_path, bloom_bits, bloom_k)
-        # NOTE: compaction runs at the START of the next call (before
-        # the sidecar is read), never here — the returned `marked`
-        # plan still references the current bloom files
     store.append(novel)
     return marked
 
@@ -1730,43 +1569,6 @@ _EXACT_STATE = StateSpec(
         "never match, so every duplicate would be silently accepted"
     ),
 )
-
-
-def _maybe_compact_bloom(
-    spark, bloom_path: str, n_bits: int, k: int, max_files: int = 64
-) -> None:
-    """Keep the append-only bloom sidecar bounded: each batch appends
-    its novel bits, so without compaction the dir grows one file per
-    batch and O(k·accepted) rows — at exactly the extreme-state scale
-    the pre-filter targets. Past ``max_files`` parquet files, rewrite
-    to the ≤ ``n_bits``-row distinct bit table (tmp-dir + swap). Runs
-    at the START of an ingest call, before the sidecar is read — never
-    after, when the just-returned DataFrame's plan still references
-    the old files. Corollary for callers: a batch's returned DataFrame
-    holds a lazy reference to the sidecar files that were live when it
-    was flagged — materialize it (any action, or ``localCheckpoint``)
-    before the NEXT ingest call when ``bloom_bits`` is set, or that
-    later call's compaction can delete files the stale plan still
-    points at (FileNotFound on the deferred action). A crash mid-swap
-    only loses the CACHE: the next bloom-enabled call sees a
-    missing/meta-less dir and rebuilds from state, so every failure
-    mode self-heals to correct behavior."""
-    from kolang_spark.sources.io import fs_delete, fs_list_files, fs_rename
-
-    files = fs_list_files(spark, bloom_path, suffix=".parquet")
-    if len(files) <= max_files:
-        return
-    tmp = bloom_path + "__compact_tmp"
-    fs_delete(spark, tmp)
-    spark.read.schema(_BLOOM_SCHEMA).parquet(bloom_path).distinct().write.parquet(tmp)
-    fs_delete(spark, bloom_path)
-    if fs_rename(spark, tmp, bloom_path):
-        _write_bloom_meta(spark, bloom_path, n_bits, k)
-    # on rename failure: leave the path ABSENT rather than writing the
-    # meta into a data-less dir — a meta-only dir would pass the meta
-    # check and then crash every read forever; absent self-heals (the
-    # next call's meta-mismatch branch rebuilds from state, and the
-    # orphaned tmp is deleted at the next compaction)
 
 
 def _embedding_band_keys(
@@ -1869,11 +1671,10 @@ def incremental_embedding_dedup(
     matters. Malformed embeddings (NULL, short, or containing NULL
     elements) are always accepted and never persisted.
 
-    Scale shape: identical to the MinHash variant — one equi-join on
-    (band_id, band_key) against state, one band-partitioned window,
-    both hash-partitioned; state grows by ``bands`` rows per accepted
-    vector; ``state_path`` may be an object-store URI (Hadoop FS
-    probes).
+    Scale shape: identical to the MinHash variant — one ExistenceJoin
+    probe on (band_id, band_key) against state, one band-partitioned
+    window; state grows by ``bands`` rows per accepted vector;
+    ``state_path`` may be an object-store URI (Hadoop FS probes).
 
     The state's construction params ``{dims, planes_per_band, bands}``
     are pinned by the ``_ks_state.json`` sidecar
@@ -2122,10 +1923,11 @@ def incremental_minhash_dedup(
     S-curve's selectivity; chain a Jaccard verify on the flagged subset
     when precision matters more than a second look at the text.
 
-    Scale shape: one equi-join on (band_id, band_key) against state,
-    one band-partitioned window for the within-batch rule — both
-    hash-partitioned, no broadcast assumption. State grows by ``bands``
-    rows per accepted doc; compact it periodically with
+    Scale shape: one ExistenceJoin probe on (band_id, band_key)
+    against state, with the state as the build side (broadcast when
+    small, shuffled above the broadcast threshold), and one
+    band-partitioned window for the within-batch rule. State grows by
+    ``bands`` rows per accepted doc; compact it periodically with
     :func:`kolang_spark.sources.io.compact_parquet`. The state probe
     routes through the Hadoop ``FileSystem`` API, so ``state_path``
     may be an object-store URI (``s3a://``/``hdfs://``/``abfs://``).
@@ -2323,24 +2125,10 @@ def _incremental_banded_flagged(
     sinks' replay guard
     (:meth:`kolang_spark.sources.state.BoundState.read`)."""
     flag_col = "is_near_duplicate"
-    # no distinct (r13): state keys are unique by construction —
-    # accepted docs' keys are absent from the state at append time
-    # and at most one same-batch doc ever emits a given key (the
-    # first-wins window flags the rest), so the only possible
-    # duplicates are a crashed replay's double-append, which the
-    # flag algebra absorbs anyway (__seen__ is a max, __first__ a
-    # min). The distinct re-proved that invariant at the price of a
-    # full state-table exchange + aggregate EVERY batch — at scale,
-    # state >> batch, so it was the single most expensive node of
-    # the probe (guide §2.4: a distinct on already-unique data).
-    state = store.read(exclude_batch).select(
-        "band_id", F.col("band_key").alias("__sk__")
-    )
-
     # ONE eager pin per batch (r13; was two): the band-level frame
     # enriched with the state hit + within-batch first-wins columns is
     # materialized once — banding (the dominant per-row cost), the
-    # state probe join and the band window all run exactly once per
+    # state probe and the band window all run exactly once per
     # batch, and the flags stay pinned against the caller's state
     # appends (they derive deterministically from this checkpoint, no
     # lazy state re-read). The per-doc flag groupBy is re-derived by
@@ -2350,20 +2138,15 @@ def _incremental_banded_flagged(
     # second-scale intervals; one more cluster-wide sync at 100 TB).
     w = Window.partitionBy("band_id", "band_key").orderBy("id")
     enriched = (
-        banded.join(
-            state.withColumn("__seen__", F.lit(True)),
-            (banded["band_id"] == state["band_id"])
-            & (banded["band_key"] == state["__sk__"]),
-            "left",
+        store.seen(
+            banded, {"band_id": "band_id", "band_key": "band_key"}, exclude_batch
         )
-        .drop(state["band_id"])
-        .drop("__sk__")
         .withColumn("__first__", F.min("id").over(w))
         .localCheckpoint(eager=True)
     )
     flags = enriched.groupBy("id").agg(
         (
-            F.max(F.coalesce(F.col("__seen__"), F.lit(False)).cast("int"))
+            F.max(F.col("__seen__").cast("int"))
             + F.max((F.col("__first__") < F.col("id")).cast("int"))
             > 0
         ).alias(flag_col)
@@ -2382,10 +2165,6 @@ def _incremental_banded_flagged(
     # window's first-wins rule flags every one but the min id, so at
     # most one accepted doc ever emits a given key. A distinct here
     # re-proved that at the price of one more exchange per batch.
-    # Deriving novel from `enriched` is fanout-safe: an unflagged doc's
-    # rows matched NO state key (exactly one row each), and any row a
-    # duplicate state key could fan out belongs to a flagged doc the
-    # anti-join drops.
     novel = enriched.join(
         flags.where(F.col(flag_col)).select("id"), "id", "left_anti"
     ).select("band_id", "band_key")
@@ -2527,15 +2306,17 @@ def incremental_cdc_ingest(
     append, the append happens before return, and the state probe
     routes through the Hadoop ``FileSystem`` API (``state_path`` may
     be an object-store URI); a crashed-and-replayed batch can
-    duplicate output, never lose state, and the de-duplicated state
-    read keeps duplicate appends harmless.
+    duplicate output, never lose state, and duplicate appends are
+    harmless (the probe emits one row per chunk however many state
+    rows match).
 
-    Scale shape: the state join is a hash equi-join on the 32-char
-    key (stored chunk CONTENT is never rescanned); the within-batch
-    first-wins window partitions by chunk hash over batch chunks only.
-    Returns one row per input document: ``(id_col, n_chunks,
-    n_novel_chunks, total_bytes, novel_bytes, dup_bytes)``; empty
-    documents get all zeros.
+    Scale shape: the state probe is one ExistenceJoin on the 32-char
+    key with the state as the build side — broadcast when small,
+    shuffled above the broadcast threshold (stored chunk CONTENT is
+    never rescanned); the within-batch first-wins window partitions
+    by chunk hash over batch chunks only. Returns one row per input
+    document: ``(id_col, n_chunks, n_novel_chunks, total_bytes,
+    novel_bytes, dup_bytes)``; empty documents get all zeros.
 
     The store's construction params ``{window, mask_bits, base, mod}``
     are pinned by the ``_ks_state.json`` sidecar (r12): chunk
@@ -2547,12 +2328,7 @@ def incremental_cdc_ingest(
     store = _CDC_STATE.bind(spark, state_path, window, mask_bits, base, mod)
     store.verify()
     chunks = cdc_chunks(new_df, id_col, text_col, window, mask_bits, base, mod)
-    state = store.read().select(F.col("chunk_key").alias("__ck__")).distinct()
-    pre = chunks.join(
-        state.withColumn("__seen__", F.lit(True)),
-        chunks["chunk_hash"] == F.col("__ck__"),
-        "left",
-    ).drop("__ck__")
+    pre = store.seen(chunks, {"chunk_hash": "chunk_key"})
     w = Window.partitionBy("chunk_hash").orderBy(
         F.col(id_col), F.col("chunk_idx")
     )
@@ -2560,7 +2336,7 @@ def incremental_cdc_ingest(
         pre.withColumn("__rn__", F.row_number().over(w))
         .withColumn(
             "is_novel",
-            (F.col("__rn__") == 1) & ~F.coalesce("__seen__", F.lit(False)),
+            (F.col("__rn__") == 1) & ~F.col("__seen__"),
         )
         .drop("__seen__", "__rn__")
         .localCheckpoint(eager=True)

@@ -29,14 +29,18 @@ every call runs the same sequence through :meth:`StateSpec.bind`:
 
 1. **verify** (:func:`check_state_meta`): a probe of an existing state
    must match the sidecar's kind and every param, else ``ValueError``
-   naming the mismatches — before any join against never-colliding
+   naming the mismatches — before any probe against never-colliding
    keys. Readers verify without pinning (:meth:`BoundState.verify_readonly`).
 2. **read** (:meth:`BoundState.read`): explicit schema, an empty frame
    when nothing is persisted yet, and optionally without the rows a
    replayed streaming batch appended itself.
-3. **flag**: the operator's own algebra, pinned by one eager
-   ``localCheckpoint`` before anything is written.
-4. **append** (:meth:`BoundState.append`): optional int64 ``batch_id``
+3. **probe** (:meth:`BoundState.seen`): the one way a batch asks the
+   state "have you seen these keys?" — a non-null ``__seen__`` per
+   batch row, from one ExistenceJoin against the read (no join at all
+   while nothing is persisted).
+4. **flag**: the operator's own algebra over ``__seen__``, pinned by
+   one eager ``localCheckpoint`` before anything is written.
+5. **append** (:meth:`BoundState.append`): optional int64 ``batch_id``
    stamp, the parquet write, then the fast pin
    (:func:`ensure_state_pinned`) that stamps a state this call created.
 
@@ -70,7 +74,9 @@ counterpart; it extends the reference's parquet memoization.
 from __future__ import annotations
 
 import json
+import operator
 from dataclasses import dataclass
+from functools import reduce
 from typing import Any, Callable, Mapping, Optional
 
 from pyspark.sql import DataFrame
@@ -322,7 +328,7 @@ class StateSpec:
 @dataclass(frozen=True)
 class BoundState:
     """A :class:`StateSpec` bound to one state dir and one call's
-    params: the verify / read / append steps of the protocol."""
+    params: the verify / read / probe / append steps of the protocol."""
 
     spec: StateSpec
     spark: Any
@@ -384,6 +390,41 @@ class BoundState:
                 | (F.col("batch_id") != F.lit(int(exclude_batch)))
             )
         return rows
+
+    def seen(
+        self,
+        batch: DataFrame,
+        keys: Mapping[str, str],
+        exclude_batch: Optional[int] = None,
+    ) -> DataFrame:
+        """``batch`` plus a non-null boolean ``__seen__``: whether the
+        state holds a row equal to the batch row on every ``keys`` pair
+        (batch column → state column), over :meth:`read`'s rows.
+
+        With nothing persisted yet every row reads ``false`` — no join,
+        no state scan. Otherwise ``__seen__`` is a correlated ``EXISTS``,
+        which Spark plans as an ExistenceJoin with the state as the
+        build side (broadcast when small, sort-merge above the
+        threshold): exactly one output row per batch row, so duplicate
+        state rows — a crashed replay's double append — cannot fan the
+        batch out. Both sides are renamed to private names first: an
+        outer reference whose name the subquery can also resolve is
+        silently bound inside it, leaving an uncorrelated ``EXISTS``
+        that reads ``true`` for every row."""
+        from kolang_spark.sources.io import path_exists
+
+        if not path_exists(self.spark, self.path):
+            return batch.withColumn("__seen__", F.lit(False))
+        sk = [f"__sk{i}__" for i in range(len(keys))]
+        bk = [f"__bk{i}__" for i in range(len(keys))]
+        state = self.read(exclude_batch).select(
+            *[F.col(s).alias(k) for s, k in zip(keys.values(), sk)]
+        )
+        probe = batch.select("*", *[batch[b].alias(k) for b, k in zip(keys, bk)])
+        match = reduce(
+            operator.and_, [F.col(s) == F.col(b).outer() for s, b in zip(sk, bk)]
+        )
+        return probe.withColumn("__seen__", state.where(match).exists()).drop(*bk)
 
     def append(self, df: DataFrame, batch_id: Optional[int] = None) -> None:
         """Write ``df`` (stamped with ``batch_id`` when given), then the

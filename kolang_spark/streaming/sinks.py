@@ -77,9 +77,8 @@ def _dedup_sink(
     (2) ``output(batch_df, marked)`` appends to ``output_path``;
     (3) ``novel`` appends to the state stamped with ``batch_id``, then
     the fast pin. A crash between (2) and (3) costs duplicate
-    IDENTICAL output rows, never a lost row: output-before-state is
-    the deliberate inverse of the bloom sidecar's bits-first rule,
-    because the failure costs invert.
+    IDENTICAL output rows, never a lost row: the state never holds a
+    key whose document has not reached the output.
 
     Default output is a plain parquet append — at-least-once, replay
     duplicates are removable downstream by id. ``idempotent_output``

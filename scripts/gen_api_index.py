@@ -43,7 +43,7 @@ SCALE_NOTES = {
     "simhash_hamming_pairs": "pigeonhole band equi-join; xxhash64 default (r11 sweep)",
     "incremental_minhash_dedup": "batch × compact band-key state equi-join; hash_fn-stamped state (r11)",
     "minhash_dedup_sink": "streaming foreachBatch over the incremental band-key join; replay-idempotent (r9)",
-    "incremental_exact_dedup": "fingerprint anti-join vs state, optional in-scan Bloom prefilter; flat sweep to 240k docs (r7/r8)",
+    "incremental_exact_dedup": "one ExistenceJoin probe vs the fingerprint state (`BoundState.seen`); flat sweep to 240k docs (r7/r8)",
     "exact_dedup": "one hash-groupBy on the fingerprint (r7)",
     "embedding_near_dup_pairs": "labeled O(n²) exact baseline, size-guarded >100k — use the LSH variant at scale (r9)",
     "embedding_near_dup_pairs_lsh": "sign-LSH band equi-join; candidate cost tracks bands (r8)",

@@ -122,8 +122,7 @@ def _docs(spark, rows):
     )
 
 
-@pytest.mark.parametrize("bloom_bits", [None, 256])
-def test_incremental_exact_dedup_file_uri_state(spark, tmp_path, bloom_bits):
+def test_incremental_exact_dedup_file_uri_state(spark, tmp_path):
     """The flagship fix: state probed through a file:-URI path must be
     SEEN on batch 2 (pre-fix, the os.path probe returned False for the
     URI and every batch was all-novel)."""
@@ -131,36 +130,16 @@ def test_incremental_exact_dedup_file_uri_state(spark, tmp_path, bloom_bits):
 
     state = _furi(str(tmp_path / "state"))
     b1 = _docs(spark, [(1, "alpha beta"), (2, "gamma delta"), (3, "alpha beta")])
-    r1 = incremental_exact_dedup(
-        spark, b1, state, bloom_bits=bloom_bits
-    ).select("doc_id", "is_duplicate").collect()
+    r1 = incremental_exact_dedup(spark, b1, state).select(
+        "doc_id", "is_duplicate"
+    ).collect()
     assert {r.doc_id: r.is_duplicate for r in r1} == {1: False, 2: False, 3: True}
     # batch 2: doc 4 repeats batch-1 text -> must be flagged via state
     b2 = _docs(spark, [(4, "alpha beta"), (5, "epsilon zeta")])
-    r2 = incremental_exact_dedup(
-        spark, b2, state, bloom_bits=bloom_bits
-    ).select("doc_id", "is_duplicate").collect()
+    r2 = incremental_exact_dedup(spark, b2, state).select(
+        "doc_id", "is_duplicate"
+    ).collect()
     assert {r.doc_id: r.is_duplicate for r in r2} == {4: True, 5: False}
-    if bloom_bits:
-        # sidecar + meta live next to the URI state path
-        assert path_exists(spark, state + "_bloom")
-        assert fs_read_text(
-            spark, state + "_bloom/_ks_bloom_meta.json"
-        ) is not None
-
-
-def test_incremental_exact_bloomless_invalidates_uri_sidecar(spark, tmp_path):
-    from kolang_spark.llm.dedup import incremental_exact_dedup
-
-    state = _furi(str(tmp_path / "state"))
-    b1 = _docs(spark, [(1, "a b"), (2, "c d")])
-    incremental_exact_dedup(spark, b1, state, bloom_bits=256).count()
-    assert path_exists(spark, state + "_bloom")
-    # a bloom-less run must invalidate the sidecar (stale bloom would
-    # mean permanent false negatives) — through the URI path
-    b2 = _docs(spark, [(3, "e f")])
-    incremental_exact_dedup(spark, b2, state, bloom_bits=None).count()
-    assert not path_exists(spark, state + "_bloom")
 
 
 def test_incremental_minhash_file_uri_state(spark, tmp_path):
@@ -177,26 +156,6 @@ def test_incremental_minhash_file_uri_state(spark, tmp_path):
     b2 = _docs(spark, [(3, text)])
     r2 = incremental_minhash_dedup(spark, b2, state)
     assert r2.where("doc_id = 3").head().is_near_duplicate is True
-
-
-def test_bloom_compaction_file_uri(spark, tmp_path):
-    """Push the sidecar past the compaction threshold with file:-URI
-    paths: listing, delete, rename, and meta rewrite all through the
-    JVM route."""
-    from kolang_spark.llm.dedup import _maybe_compact_bloom, incremental_exact_dedup
-
-    state = _furi(str(tmp_path / "state"))
-    for i in range(3):
-        df = _docs(spark, [(10 * i + j, f"doc {i} {j} text") for j in range(3)])
-        incremental_exact_dedup(spark, df, state, bloom_bits=128).count()
-    bloom = state + "_bloom"
-    n_before = len(fs_list_files(spark, bloom, suffix=".parquet"))
-    assert n_before >= 3
-    rows_before = spark.read.parquet(bloom).distinct().count()
-    _maybe_compact_bloom(spark, bloom, 128, 3, max_files=1)
-    assert len(fs_list_files(spark, bloom, suffix=".parquet")) < n_before
-    assert spark.read.parquet(bloom).distinct().count() == rows_before
-    assert fs_read_text(spark, bloom + "/_ks_bloom_meta.json") is not None
 
 
 def test_compact_parquet_file_uri(spark, tmp_path):

@@ -1337,86 +1337,6 @@ def test_incremental_exact_dedup_across_batches(spark, tmp_path):
     assert spark.read.parquet(state).count() == 3
 
 
-def test_incremental_exact_dedup_bloom_prefilter(spark, tmp_path):
-    """The bloom_bits knob must be flag-for-flag identical to the
-    unfiltered path (no false negatives: every maybe is re-verified by
-    the real equi-join), maintain the persisted bit table
-    incrementally, and transparently upgrade a legacy bloom-less
-    state dir."""
-    import os
-
-    from kolang_spark.llm import incremental_exact_dedup
-
-    rows1 = [(1, "same text"), (2, "same  TEXT"), (3, "other")]
-    rows2 = [(10, "Same Text"), (11, "brand new"), (12, "brand  NEW")]
-    b1 = spark.createDataFrame(rows1, "doc_id long, text string")
-    b2 = spark.createDataFrame(rows2, "doc_id long, text string")
-
-    # reference: the unfiltered path over the same two batches
-    plain = str(tmp_path / "plain")
-    ref1 = {r.doc_id: r.is_duplicate for r in
-            incremental_exact_dedup(spark, b1, plain).collect()}
-    ref2 = {r.doc_id: r.is_duplicate for r in
-            incremental_exact_dedup(spark, b2, plain).collect()}
-
-    bl = str(tmp_path / "bl")
-    got1 = {r.doc_id: r.is_duplicate for r in
-            incremental_exact_dedup(spark, b1, bl, bloom_bits=256).collect()}
-    assert got1 == ref1
-    assert os.path.exists(bl + "_bloom")
-    bits_after_1 = spark.read.parquet(bl + "_bloom").distinct().count()
-    assert 0 < bits_after_1 <= 2 * 3  # ≤ k bits per accepted fingerprint
-    got2 = {r.doc_id: r.is_duplicate for r in
-            incremental_exact_dedup(spark, b2, bl, bloom_bits=256).collect()}
-    assert got2 == ref2
-    assert spark.read.parquet(bl).count() == 3
-    # the novel batch-2 fingerprint's bits were appended
-    assert spark.read.parquet(bl + "_bloom").distinct().count() >= bits_after_1
-
-    # legacy upgrade: state written WITHOUT bloom, then probed WITH it
-    up = str(tmp_path / "up")
-    incremental_exact_dedup(spark, b1, up).collect()
-    assert not os.path.exists(up + "_bloom")
-    got = {r.doc_id: r.is_duplicate for r in
-           incremental_exact_dedup(spark, b2, up, bloom_bits=256).collect()}
-    assert got == ref2
-    assert os.path.exists(up + "_bloom")
-
-    # STALENESS (review finding): a bloom-less run between bloom runs
-    # appends fingerprints the sidecar never saw — it must invalidate
-    # the cache, or a later bloom run would miss those duplicates
-    # forever
-    b3 = spark.createDataFrame([(20, "late arrival")],
-                               "doc_id long, text string")
-    incremental_exact_dedup(spark, b3, up).collect()  # no bloom knob
-    assert not os.path.exists(up + "_bloom")  # cache invalidated
-    b4 = spark.createDataFrame([(21, "LATE  arrival")],
-                               "doc_id long, text string")
-    got4 = {r.doc_id: r.is_duplicate for r in
-            incremental_exact_dedup(spark, b4, up, bloom_bits=256).collect()}
-    assert got4 == {21: True}  # rebuilt-from-state bloom sees doc 20
-
-    # parameter change: sidecar rebuilds (meta mismatch), flags stay
-    # correct
-    b5 = spark.createDataFrame([(22, "late ARRIVAL "), (23, "fresh")],
-                               "doc_id long, text string")
-    got5 = {r.doc_id: r.is_duplicate for r in
-            incremental_exact_dedup(spark, b5, up, bloom_bits=512,
-                                    bloom_k=2).collect()}
-    assert got5 == {22: True, 23: False}
-
-    # forced compaction keeps the bit table semantics intact
-    from kolang_spark.llm.dedup import _maybe_compact_bloom
-
-    bits_before = spark.read.parquet(up + "_bloom").distinct().count()
-    _maybe_compact_bloom(spark, up + "_bloom", 512, 2, max_files=0)
-    assert spark.read.parquet(up + "_bloom").distinct().count() == bits_before
-    got6 = {r.doc_id: r.is_duplicate for r in
-            incremental_exact_dedup(spark, b5, up, bloom_bits=512,
-                                    bloom_k=2).collect()}
-    assert got6 == {22: True, 23: True}  # both now duplicates of state
-
-
 def test_incremental_minhash_dedup_across_batches(spark, tmp_path):
     """Cross-batch near-dup replay: batch 2 is flagged against batch
     1's persisted band keys without rescanning batch 1's text; flagged

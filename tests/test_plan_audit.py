@@ -139,6 +139,80 @@ def test_one_arrow_row_boundary_call_site():
     assert call.search(inspect.getsource(utils._map_rows))
 
 
+def test_one_state_probe_call_site():
+    """Every incremental dedup kind asks its state "seen?" through
+    ``BoundState.seen``: ``llm/dedup.py`` holds no state ``.read(``
+    call of its own, so no hand-written join (and no whole-state
+    ``distinct()``) can probe a state read."""
+    import inspect
+    import pathlib
+
+    from kolang_spark.llm import dedup
+    from kolang_spark.sources.state import BoundState
+
+    src = pathlib.Path(dedup.__file__).read_text()
+    assert not re.findall(r"\.read\(", src)
+    assert len(re.findall(r"\bstore\.seen\(", src)) == 4  # banded covers two kinds
+    seen = inspect.getsource(BoundState.seen)
+    assert "self.read(" in seen and ".exists()" in seen
+
+
+def _plan_nodes(node):
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def _scanned_paths(node):
+    return [
+        n.relation().location().rootPaths().toString()
+        for n in _plan_nodes(node)
+        if n.nodeName() == "LogicalRelation"
+    ]
+
+
+@pytest.mark.parametrize("kind", ["exact", "lines", "cdc", "minhash", "embedding"])
+def test_state_probe_plan(spark, tmp_path, monkeypatch, kind):
+    """The flagged frame each kind pins (its one eager
+    ``localCheckpoint``): with no state dir there is no join and no
+    state scan; with a state there is exactly one join, an
+    ExistenceJoin whose build side scans the state with no aggregate
+    above the scan. A batch key the state lacks still reads unseen —
+    an outer reference bound inside the subquery would flag it."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    from tests.test_state_guard import PROBE_KINDS, _probe_ops
+
+    schema, b1, b2, summary, expect = PROBE_KINDS[kind]
+    op = _probe_ops()[kind]
+    pinned = []
+    pin = ClassicDataFrame.localCheckpoint
+
+    def spy(df, *args, **kwargs):
+        pinned.append(df._jdf.queryExecution().optimizedPlan())
+        return pin(df, *args, **kwargs)
+
+    monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", spy)
+    state = str(tmp_path / "state")
+    op(spark, spark.createDataFrame(b1, schema), state).collect()
+    [plan] = pinned
+    assert not [n for n in _plan_nodes(plan) if n.nodeName() == "Join"]
+    assert not [p for p in _scanned_paths(plan) if state in p]
+
+    pinned.clear()
+    out = op(spark, spark.createDataFrame(b2, schema), state)
+    [plan] = pinned
+    joins = [n for n in _plan_nodes(plan) if n.nodeName() == "Join"]
+    assert [j.joinType().toString().split("(")[0] for j in joins] == [
+        "ExistenceJoin"
+    ]
+    build = joins[0].right()
+    assert [p for p in _scanned_paths(build) if state in p]
+    assert not [n for n in _plan_nodes(build) if n.nodeName() == "Aggregate"]
+    assert summary(out) == expect
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_no_single_partition_window_regressions(spark, name):
     """No driver query may grow a single-partition Window outside the

@@ -247,6 +247,105 @@ def test_exact_state_kind_guard_catches_cross_family_probe(spark, tmp_path):
         incremental_minhash_dedup(spark, _docs(spark, 2), ex_state)
 
 
+# ---------- the one state probe (BoundState.seen), per kind ----------
+
+
+def _probe_ops():
+    from kolang_spark.llm import (
+        incremental_embedding_dedup,
+        incremental_exact_dedup,
+        incremental_line_dedup,
+        incremental_minhash_dedup,
+    )
+    from kolang_spark.llm.dedup import incremental_cdc_ingest
+
+    return {
+        "exact": incremental_exact_dedup,
+        "lines": incremental_line_dedup,
+        "cdc": incremental_cdc_ingest,
+        "minhash": incremental_minhash_dedup,
+        "embedding": lambda spark, b, st: incremental_embedding_dedup(
+            spark, b, st, dims=8
+        ),
+    }
+
+
+_OTHER = "completely different content with many unique words inside"
+_VA = [float(i) for i in range(8)]
+_VC = [1.0, -1.0] * 4
+
+# per kind: the batches' schema, batch 1 (written to state), batch 2
+# (its first row hits batch 1's state keys, the others carry keys the
+# state lacks), a summary of batch 2's output and its expected value
+PROBE_KINDS = {
+    "exact": (
+        "doc_id long, text string",
+        [(1, TEXT)],
+        [(2, TEXT), (3, _OTHER)],
+        lambda f: {r.doc_id: r.is_duplicate for r in f.collect()},
+        {2: True, 3: False},
+    ),
+    "lines": (
+        "doc_id long, text string",
+        [(1, "alpha one\nshared line")],
+        [(2, "shared line\nbeta two"), (3, "beta two\ngamma three")],
+        lambda f: {
+            r.doc_id: (r.text_deduped, r.n_kept, r.n_removed) for r in f.collect()
+        },
+        {2: ("beta two", 1, 1), 3: ("gamma three", 1, 1)},
+    ),
+    "cdc": (
+        "doc_id long, text string",
+        [(1, TEXT)],
+        [(2, TEXT), (3, _OTHER)],
+        lambda f: {r.doc_id: (r.novel_bytes, r.dup_bytes) for r in f.collect()},
+        {2: (0, len(TEXT)), 3: (len(_OTHER), 0)},
+    ),
+    "minhash": (
+        "doc_id long, text string",
+        [(1, TEXT)],
+        [(2, TEXT), (3, _OTHER)],
+        lambda f: {r.doc_id: r.is_near_duplicate for r in f.collect()},
+        {2: True, 3: False},
+    ),
+    "embedding": (
+        "vec_id long, embedding array<double>",
+        [(1, _VA)],
+        [(2, _VA), (3, _VC)],
+        lambda f: {r.vec_id: r.is_near_duplicate for r in f.collect()},
+        {2: True, 3: False},
+    ),
+}
+
+
+@pytest.mark.parametrize("kind", list(PROBE_KINDS))
+def test_replay_doubled_state_changes_no_flag_or_count(spark, tmp_path, kind):
+    """A crashed replay can leave every state file appended twice. The
+    probe answers one row per batch row however many state rows match,
+    so a doubled state gives output identical to the single one —
+    every flag, every kept line and every byte count."""
+    import shutil
+
+    schema, b1, b2, summary, expect = PROBE_KINDS[kind]
+    op = _probe_ops()[kind]
+    once, twice = str(tmp_path / "once"), str(tmp_path / "twice")
+    op(spark, spark.createDataFrame(b1, schema), once).collect()
+    shutil.copytree(once, twice)
+    for name in os.listdir(twice):
+        if name.endswith(".parquet"):
+            shutil.copy(
+                os.path.join(twice, name), os.path.join(twice, "replay-" + name)
+            )
+    n_once = spark.read.parquet(once).count()
+    assert n_once > 0 and spark.read.parquet(twice).count() == 2 * n_once
+
+    outs = [op(spark, spark.createDataFrame(b2, schema), st) for st in (once, twice)]
+    assert sorted(outs[1].collect()) == sorted(outs[0].collect())
+    assert outs[1].count() == len(b2)
+    # batch 2 really hits the doubled keys
+    assert summary(outs[1]) == expect
+
+
 def test_minhash_r11_twin_sidecar_migrates(spark, tmp_path):
     """A state pinned only by the r11 `_ks_hashfn.json` (no
     `_ks_state.json`): a matching-hash probe works and upgrades the
