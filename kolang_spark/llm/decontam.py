@@ -145,25 +145,19 @@ def semantic_contamination(
     fold (bit-identical across engines and shuffle orders); max/count
     over them are order-independent.
     """
-    from kolang_spark.llm.similarity import _as_double, _fold, _norm
+    from kolang_spark.llm.similarity import _fold, _vectors
 
     eval_id_col = eval_id_col or id_col
     eval_vec_col = eval_vec_col or vec_col
     packed = (
-        eval_df.select(
-            F.col(eval_id_col).alias("e_id"),
-            _as_double(F.col(eval_vec_col)).alias("e_v"),
-        )
-        .withColumn("e_n", _norm(F.col("e_v")))
+        _vectors(eval_df, eval_id_col, eval_vec_col, None, "e", "e_id")
         .agg(
             F.sort_array(
                 F.collect_list(F.struct("e_id", "e_v", "e_n"))
             ).alias("_evals")
         )
     )
-    t = train.select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("_tv")
-    ).withColumn("_tn", _norm(F.col("_tv")))
+    t = _vectors(train, id_col, vec_col, None, "t", id_col)
     # zero-norm vectors (a common upstream-encoder failure artifact)
     # have undefined cosine: score them 0 (never contaminating /
     # contaminated) instead of dividing by zero, which crashes the
@@ -171,8 +165,8 @@ def semantic_contamination(
     coss = F.transform(
         F.col("_evals"),
         lambda s: F.when(
-            (s["e_n"] > 0) & (F.col("_tn") > 0),
-            _fold(s["e_v"], F.col("_tv")) / (s["e_n"] * F.col("_tn")),
+            (s["e_n"] > 0) & (F.col("t_n") > 0),
+            _fold(s["e_v"], F.col("t_v")) / (s["e_n"] * F.col("t_n")),
         ).otherwise(F.lit(0.0)),
     )
     return (

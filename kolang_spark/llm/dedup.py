@@ -531,27 +531,14 @@ def embedding_near_dup_pairs_lsh(
 
     Returns ``(id_a, id_b, cos)`` with ``id_a < id_b``.
     """
-    from kolang_spark.llm.similarity import (
-        _fold,
-        _norm,
-        _safe_div_cos,
-        lsh_signature,
-    )
+    from kolang_spark.llm.similarity import _cos, _vectors, lsh_signature
     from kolang_spark.utils import pushdown_fence
 
-    v = (
-        ensure_min_parallelism(df)
-        .select(
-            F.col(id_col).alias("id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-        )
-        .withColumn("nrm", _norm("v", dims))
-        .withColumn("bucket", lsh_signature("v", n_planes, dims))
-    )
+    v = _vectors(
+        ensure_min_parallelism(df), id_col, vec_col, dims, "x", "id"
+    ).withColumn("bucket", lsh_signature("x_v", n_planes, dims))
     a, b = v.alias("a"), v.alias("b")
-    cos = _safe_div_cos(
-        _fold("a.v", "b.v", dims), F.col("a.nrm"), F.col("b.nrm")
-    )
+    cos = _cos("a.x", "b.x", dims)
     return (
         a.join(
             b,
@@ -621,10 +608,9 @@ def semantic_dedup(
     """
     from kolang_spark.llm.similarity import (
         _as_double,
-        _fold,
+        _cos,
         _kmeans_assign,
         _norm,
-        _safe_div_cos,
         kmeans_centroids,
     )
     from kolang_spark.utils import pushdown_fence
@@ -657,7 +643,7 @@ def semantic_dedup(
 
     assigned, _, _ = iter_checkpoint(
         _kmeans_assign(pts, cents, dims)
-        .withColumn("nrm", _norm("p_v", dims))
+        .withColumn("p_n", _norm("p_v", dims))
         .repartition("cent_id"),
         keep_partitioning=True,
     )
@@ -681,9 +667,7 @@ def semantic_dedup(
             F.col("b.p_id") < F.col("a.p_id")
         )
     a, b = a_side.alias("a"), b_side.alias("b")
-    cos = _safe_div_cos(
-        _fold("a.p_v", "b.p_v", dims), F.col("a.nrm"), F.col("b.nrm")
-    )
+    cos = _cos("a.p", "b.p", dims)
     hits = (
         a.join(b, join_cond)
         .select(
@@ -1437,13 +1421,13 @@ def embedding_near_dup_pairs(
 
     Inside the quadratic loop the engineering is still tight: norms are
     precomputed once per vector and carried through the join, and with
-    ``dims`` the dot product is width-dispatched static arithmetic
-    (`llm/similarity.py::UNROLL_DIMS_LIMIT`),
-    codegen-compiled.
+    ``dims`` the dot product is one width-dispatched SQL expression
+    (`llm/similarity.py::UNROLL_DIMS_LIMIT`: codegen arithmetic up to
+    the limit, the interpreted HOF fold past it).
 
     Returns ``(id_a, id_b, cos)`` with ``id_a < id_b``.
     """
-    from kolang_spark.llm.similarity import _fold, _norm, _safe_div_cos
+    from kolang_spark.llm.similarity import _cos, _fold, _vectors
     from kolang_spark.utils import pushdown_fence
 
     if on_exceed not in ("raise", "warn"):
@@ -1463,13 +1447,9 @@ def embedding_near_dup_pairs(
 
             warnings.warn(msg, stacklevel=2)
 
-    v = ensure_min_parallelism(df).select(
-        F.col(id_col).alias("id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    ).withColumn("nrm", _norm("v", dims))
+    v = _vectors(ensure_min_parallelism(df), id_col, vec_col, dims, "x", "id")
     a, b = v.alias("a"), v.alias("b")
-    dot = _fold("a.v", "b.v", dims)
-    cos = _safe_div_cos(dot, F.col("a.nrm"), F.col("b.nrm"))
+    cos = _cos("a.x", "b.x", dims)
     # two-stage filter: the multiplied form `dot ≥ t·|a||b|` prunes the
     # O(n²) candidate stream with one compare and no division; the exact
     # `cos ≥ t` re-check on the few survivors preserves boundary/NULL
@@ -1477,7 +1457,9 @@ def embedding_near_dup_pairs(
     # without it Catalyst folds them (and thus the whole dot product)
     # into the nested-loop join condition, where evaluation is
     # interpreted per ordered pair and then repeated in the projection.
-    pre = pushdown_fence(dot - threshold * F.col("a.nrm") * F.col("b.nrm"))
+    pre = pushdown_fence(
+        _fold("a.x_v", "b.x_v", dims) - threshold * F.col("a.x_n") * F.col("b.x_n")
+    )
     return (
         a.join(b, F.col("a.id") < F.col("b.id"))
         .where(pre >= 0)

@@ -21,9 +21,10 @@ aggregation and bit-for-bit replayable by a SQL oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kolang_spark.llm.similarity import _cos, _rank_topk, _vectors
 from kolang_spark.llm.textstats import tokenize
 
 __all__ = ["bm25_topk", "mmr_rerank", "retrieval_metrics"]
@@ -119,12 +120,8 @@ def bm25_topk(
         .groupBy("query_id", "__d__")
         .agg(F.sum("__c__").cast("long").alias("__s__"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__s__").desc(), F.col("__d__")
-    )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        _rank_topk(scored, k, score="__s__", item="__d__")
         .select(
             "query_id",
             F.col("__d__").alias(id_col),
@@ -184,16 +181,12 @@ def mmr_rerank(
     Returns ``(query_id_col, id_col, rank, mmr_fp)``, rank 1..k per
     query (fewer when the pool is smaller than ``k``).
     """
-    from kolang_spark.llm.similarity import _as_double, _fold, _norm, _safe_div_cos
-
     if k < 1:
         raise ValueError("k must be >= 1")
     if not 0 < lam_num <= lam_den:
         raise ValueError("need 0 < lam_num <= lam_den")
 
-    vecs = vectors.select(
-        F.col(id_col).alias("__d_id"), _as_double(F.col(vec_col)).alias("__v")
-    ).withColumn("__n", _norm("__v", dims))
+    vecs = _vectors(vectors, id_col, vec_col, dims, "__d", "__d_id")
     cand = (
         candidates.select(
             F.col(query_id_col).alias("q_id"),
@@ -205,15 +198,13 @@ def mmr_rerank(
             "q_id",
             "d_id",
             F.floor(F.col("__rel") * scale).cast("long").alias("rel_fp"),
-            "__v",
-            "__n",
+            "__d_v",
+            "__d_n",
         )
         .localCheckpoint(eager=False)
     )
     a, b = cand.alias("a"), cand.alias("b")
-    sim = _safe_div_cos(
-        _fold("a.__v", "b.__v", dims), F.col("a.__n"), F.col("b.__n")
-    )
+    sim = _cos("a.__d", "b.__d", dims)
     sims = (
         a.join(
             b,

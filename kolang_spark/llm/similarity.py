@@ -13,13 +13,21 @@ builder, :func:`_fold`, whose FORM is width-dispatched in that one
 place (:data:`UNROLL_DIMS_LIMIT`, r13): narrow vectors get
 an unrolled product chain (static arithmetic inside a JIT-compilable
 whole-stage-codegen method), wider ones an ``aggregate(zip_with(...))``
-fold whose tiny expression tree keeps codegen compiled and JIT-hot at
-production widths (768-4096) — the unrolled chain passes the JVM
-JIT's 8 KB method limit long before janino's 64 KB hard limit, and an
-un-JITted chain measured 3-14x slower than the fold. All forms
-accumulate left-to-right from 0.0, so values are bit-identical across
-the implementations (and against a DuckDB oracle evaluating in list
-order); no pandas UDF anywhere.
+fold. ``ArrayAggregate``/``ZipWith``/``ArrayTransform`` are
+``CodegenFallback`` expressions, so the fold is evaluated INTERPRETED
+inside the compiled stage — and is still the faster form past 16
+dims: the unrolled chain passes the JVM JIT's 8 KB method limit long
+before janino's 64 KB hard limit, and an un-JITted chain measured
+3-14x slower than the fold. All forms accumulate left-to-right from
+0.0, so values are bit-identical across the implementations (and
+against a DuckDB oracle evaluating in list order); no pandas UDF
+anywhere.
+
+Every search and pair operator is built from the same three frame
+helpers: :func:`_vectors` (the operand projection: id, double vector,
+norm), :func:`_cos` (the zero-safe pair cosine over two such sides)
+and :func:`_rank_topk` (the one ranking rule: score desc NULL last,
+ties to the smaller id, rank 1..k per query).
 """
 
 from __future__ import annotations
@@ -71,9 +79,11 @@ _Ref = Union[Column, str]
 #:   dims 64-128 (2.8-13.8x) on identical data.
 #:
 #: The HOF form (aggregate over zip_with, coefficients as array
-#: literals) is a tiny expression tree: always compilable, JITs as a
-#: hot loop, bit-equal values (identical left-to-right accumulation
-#: from 0.0). Unrolled only wins while the whole fused method stays
+#: literals) is a tiny expression tree that never bloats the generated
+#: method; it is a CodegenFallback (evaluated interpreted inside the
+#: compiled stage), yet measured faster than the un-JITted chain, with
+#: bit-equal values (identical left-to-right accumulation from 0.0).
+#: Unrolled only wins while the whole fused method stays
 #: JIT-compilable — measured true at 16 dims (lsh 8-plane signature
 #: 0.89 vs 1.62 s), gone by 64. Hence 16.
 UNROLL_DIMS_LIMIT = 16
@@ -169,11 +179,11 @@ def cosine(a: _Ref, b: _Ref, dims: Optional[int] = None) -> Column:
     """Cosine similarity of two double-array columns.
 
     Pass ``dims`` (and plain column names) when the embedding width is
-    fixed and known — the normal case: the expression becomes static
-    arithmetic whole-stage codegen compiles AND the JIT keeps hot
-    (width-dispatched, :data:`UNROLL_DIMS_LIMIT`). Norms here are
-    recomputed per call — pairwise operators below precompute them once
-    per vector instead.
+    fixed and known — the normal case: the expression is built as one
+    SQL string, width-dispatched by :data:`UNROLL_DIMS_LIMIT` (static
+    codegen arithmetic up to the limit, the interpreted HOF fold past
+    it). Norms here are recomputed per call — pairwise operators below
+    precompute them once per vector instead (:func:`_vectors`).
     """
     return _safe_div_cos(_fold(a, b, dims), _norm(a, dims), _norm(b, dims))
 
@@ -189,6 +199,56 @@ def _safe_div_cos(dot: Column, na: Column, nb: Column) -> Column:
 
 def _as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
+
+
+def _vectors(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dims: Optional[int],
+    side: str,
+    id_as: str,
+) -> DataFrame:
+    """The operand projection of every dense-vector operator:
+    ``(id_as, {side}_v, {side}_n)`` — the id, the vector as
+    ``array<double>`` and its L2 norm, computed once per vector (not
+    once per pair). :func:`_cos` scores two such sides."""
+    v = f"{side}_v"
+    return df.select(
+        F.col(id_col).alias(id_as), _as_double(F.col(vec_col)).alias(v)
+    ).withColumn(f"{side}_n", _norm(v, dims))
+
+
+def _cos(a: str, b: str, dims: Optional[int]) -> Column:
+    """Cosine of two :func:`_vectors` sides named by prefix — ``"q"``,
+    or alias-qualified ``"a.p"`` in a self-join. A zero vector scores
+    NULL (see :func:`_safe_div_cos`)."""
+    return _safe_div_cos(
+        _fold(f"{a}_v", f"{b}_v", dims), F.col(f"{a}_n"), F.col(f"{b}_n")
+    )
+
+
+def _scored(pairs: DataFrame, dims: Optional[int]) -> DataFrame:
+    """``(query_id, vec_id, cos)`` of a frame joining a ``q`` query
+    side to a ``c`` corpus side (``c_id`` the corpus id)."""
+    return pairs.select(
+        "query_id", F.col("c_id").alias("vec_id"), _cos("q", "c", dims).alias("cos")
+    )
+
+
+def _rank_topk(
+    scored: DataFrame,
+    k: int,
+    score: str = "cos",
+    item: str = "vec_id",
+    rank: str = "rank",
+) -> DataFrame:
+    """The family's one ranking rule: per ``query_id``, ``score``
+    descending (NULL last — Spark's ``desc`` default), ties to the
+    smaller ``item``; keeps the rows ranked 1..k, the rank in column
+    ``rank``."""
+    w = Window.partitionBy("query_id").orderBy(F.col(score).desc(), F.col(item))
+    return scored.withColumn(rank, F.row_number().over(w)).where(F.col(rank) <= k)
 
 
 def brute_force_topk(
@@ -207,29 +267,14 @@ def brute_force_topk(
     side by construction) → per-query window top-k. The corpus is never
     shuffled; ranking ties break deterministically by corpus id. Norms
     are computed once per vector (attribute-bound), not once per pair;
-    with ``dims`` the dot product is static codegen arithmetic.
+    with ``dims`` the dot product is one width-dispatched SQL
+    expression (:data:`UNROLL_DIMS_LIMIT`).
 
     Returns ``(query_id, vec_id, cos, rank)``, rank 1..k.
     """
-    corpus = ensure_min_parallelism(df).select(
-        F.col(id_col).alias("c_id"), _as_double(F.col(vec_col)).alias("c_v")
-    ).withColumn("c_n", _norm("c_v", dims))
-    qs = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        _as_double(F.col(query_vec_col)).alias("q_v"),
-    ).withColumn("q_n", _norm("q_v", dims))
-    scored = corpus.crossJoin(F.broadcast(qs)).select(
-        "query_id",
-        F.col("c_id").alias("vec_id"),
-        _safe_div_cos(
-            _fold("q_v", "c_v", dims), F.col("q_n"), F.col("c_n")
-        ).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    corpus = _vectors(ensure_min_parallelism(df), id_col, vec_col, dims, "c", "c_id")
+    qs = _vectors(queries, query_id_col, query_vec_col, dims, "q", "query_id")
+    return _rank_topk(_scored(corpus.crossJoin(F.broadcast(qs)), dims), k)
 
 
 def _plane_component(plane: int, dim: int) -> float:
@@ -329,20 +374,12 @@ def lsh_topk(
     """
     if not 0 <= multi_probe <= n_planes:
         raise ValueError("multi_probe must be in [0, n_planes]")
-    corpus = (
-        ensure_min_parallelism(df)
-        .select(F.col(id_col).alias("c_id"), _as_double(F.col(vec_col)).alias("c_v"))
-        .withColumn("bucket", lsh_signature("c_v", n_planes, dims))
-        .withColumn("c_n", _norm("c_v", dims))
-    )
-    qs = (
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            _as_double(F.col(query_vec_col)).alias("q_v"),
-        )
-        .withColumn("sig", lsh_signature("q_v", n_planes, dims))
-        .withColumn("q_n", _norm("q_v", dims))
-    )
+    corpus = _vectors(
+        ensure_min_parallelism(df), id_col, vec_col, dims, "c", "c_id"
+    ).withColumn("bucket", lsh_signature("c_v", n_planes, dims))
+    qs = _vectors(
+        queries, query_id_col, query_vec_col, dims, "q", "query_id"
+    ).withColumn("sig", lsh_signature("q_v", n_planes, dims))
     if multi_probe:
         masks = [
             m
@@ -358,16 +395,7 @@ def lsh_topk(
     else:
         qs = qs.withColumn("bucket", F.col("sig"))
     qs = qs.drop("sig")
-
-    scored = corpus.join(F.broadcast(qs), "bucket").select(
-        "query_id",
-        F.col("c_id").alias("vec_id"),
-        _safe_div_cos(
-            _fold("q_v", "c_v", dims), F.col("q_n"), F.col("c_n")
-        ).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _rank_topk(_scored(corpus.join(F.broadcast(qs), "bucket"), dims), k)
 
 
 def _kmeans_assign(pts: DataFrame, cent_df: DataFrame, dims: int) -> DataFrame:
@@ -439,17 +467,18 @@ def kmeans_centroids(
     The 2^-20 mean quantization (~1e-6) is orders of magnitude below
     coarse-quantizer noise.
 
-    Scale shape: each iteration assigns points via
-    ``crossJoin(broadcast(centroid_table))`` with an unrolled O(dims)
-    squared-distance expression over the joined ``g_v`` column — **plan
-    size is independent of k** (an earlier revision inlined the k×dims
-    centroid components as literals, which recompiled an O(k·dims)-term
-    expression every iteration and stopped planning at production
-    centroid counts). The per-point argmin is ``min(struct(d2,
-    cent_id))``: the k candidate rows of a point are produced
-    consecutively by the broadcast nested-loop join, so the hash
-    aggregate completes the min map-side and the shuffle carries one
-    reduced row per point. Centroids come back to the driver between
+    Scale shape: each iteration assigns points with
+    :func:`_kmeans_assign` — the centroid table rides as ONE broadcast
+    row holding a centroid array, and each point's argmin is a per-row
+    ``array_min`` over ``struct(d2, cent_id)``: no fan-out ×k and no
+    shuffle. The squared distance is :func:`_fold`'s O(dims)
+    expression (unrolled up to :data:`UNROLL_DIMS_LIMIT`, the HOF fold
+    past it) over the broadcast ``g_v`` — **plan size is independent of
+    k** (an earlier revision inlined the k×dims centroid components as
+    literals, which recompiled an O(k·dims)-term expression every
+    iteration and stopped planning at production centroid counts). The
+    only shuffle per iteration is the per-cell mean aggregate.
+    Centroids come back to the driver between
     iterations (k·dims doubles — tiny; the same sync MLlib's KMeans
     does): a fully lazy chain was tried and rejected because the
     empty-cell fallback references the previous centroid table twice,
@@ -515,10 +544,13 @@ def _coarse_centroids(
     centroid_k: Optional[int] = None,
     kmeans_iters: int = 3,
     kmeans_sample_mod: Optional[int] = None,
+    centroids: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Resolve the coarse-quantizer table ``(cent_id, g_v, g_n)`` for
     :func:`ivf_topk` / :func:`ivf_pq_topk`.
 
+    * explicit ``centroids`` → that ``(cent_id, g_v[, g_n])`` table,
+      with ``g_n`` filled in when absent.
     * explicit ``centroid_stride`` → the deterministic stride subset
       ``id % stride == 0``. Fully lazy and SQL-oracle-replayable, but
       C grows ∝ N with the corpus (index build N·C turns superlinear —
@@ -535,15 +567,13 @@ def _coarse_centroids(
       (fixed-point means, stride seeds), so same inputs → identical
       index on any cluster.
     """
+    if centroids is not None:
+        if "g_n" in centroids.columns:
+            return centroids
+        return centroids.withColumn("g_n", _norm("g_v", dims))
     if centroid_stride is not None:
-        return (
-            df.where(F.col(id_col) % centroid_stride == 0)
-            .select(
-                F.col(id_col).alias("cent_id"),
-                _as_double(F.col(vec_col)).alias("g_v"),
-            )
-            .withColumn("g_n", _norm("g_v", dims))
-        )
+        subset = df.where(F.col(id_col) % centroid_stride == 0)
+        return _vectors(subset, id_col, vec_col, dims, "g", "cent_id")
     k, sample_mod = centroid_k, kmeans_sample_mod
     if k is None or sample_mod is None:
         n = df.count()
@@ -921,21 +951,17 @@ def ivf_pq_topk(
     if dims % m:
         raise ValueError(f"dims={dims} not divisible by m={m}")
     dsub = dims // m
-    if centroids is not None:
-        cents = centroids
-        if "g_n" not in cents.columns:
-            cents = cents.withColumn("g_n", _norm("g_v", dims))
-    else:
-        cents = _coarse_centroids(
-            df,
-            dims,
-            id_col,
-            vec_col,
-            centroid_stride=centroid_stride,
-            centroid_k=centroid_k,
-            kmeans_iters=kmeans_iters,
-            kmeans_sample_mod=kmeans_sample_mod,
-        )
+    cents = _coarse_centroids(
+        df,
+        dims,
+        id_col,
+        vec_col,
+        centroid_stride=centroid_stride,
+        centroid_k=centroid_k,
+        kmeans_iters=kmeans_iters,
+        kmeans_sample_mod=kmeans_sample_mod,
+        centroids=centroids,
+    )
     if codebooks is None:
         codebooks = pq_codebooks(
             df,
@@ -976,11 +1002,7 @@ def ivf_pq_topk(
         )
     ksub = next(iter(stats.values()))[0]
 
-    corpus = (
-        ensure_min_parallelism(df)
-        .select(F.col(id_col).alias("c_id"), _as_double(F.col(vec_col)).alias("c_v"))
-        .withColumn("c_n", _norm("c_v", dims))
-    )
+    corpus = _vectors(ensure_min_parallelism(df), id_col, vec_col, dims, "c", "c_id")
     cells = _nearest_cells(corpus, cents, "c_v", "c_n", 1, dims).select(
         "c_id", "cell"
     )
@@ -992,10 +1014,7 @@ def ivf_pq_topk(
         encoded.select(F.col(id_col).alias("c_id"), "codes", "recon_n"), "c_id"
     )
 
-    qs = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        _as_double(F.col(query_vec_col)).alias("q_v"),
-    ).withColumn("q_n", _norm("q_v", dims))
+    qs = _vectors(queries, query_id_col, query_vec_col, dims, "q", "query_id")
     # per-query ADC array ordered j·ksub + code, computed PER ROW from
     # the one-row broadcast codebook array (r13 — the old form exploded
     # Q·m subvector rows, joined the codebooks and re-collapsed the
@@ -1031,34 +1050,16 @@ def ivf_pq_topk(
         "q_v",
         "q_n",
     )
-    w_a = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cos").desc(), F.col("vec_id")
-    )
     if refine is None:
-        return (
-            scored.drop("q_v", "q_n")
-            .withColumn("rank", F.row_number().over(w_a))
-            .where(F.col("rank") <= k)
-        )
+        return _rank_topk(scored.drop("q_v", "q_n"), k, score="approx_cos")
     if refine < k:
         raise ValueError(f"refine={refine} must be >= k={k}")
-    cands = (
-        scored.withColumn("arank", F.row_number().over(w_a))
-        .where(F.col("arank") <= refine)
-        .drop("approx_cos", "arank")
+    cands = _rank_topk(scored, refine, score="approx_cos", rank="arank").drop(
+        "approx_cos", "arank"
     )
     # full-precision read of ONLY the surviving Q·refine candidate ids
-    rescored = cands.join(corpus, cands["vec_id"] == corpus["c_id"]).select(
-        "query_id",
-        "vec_id",
-        _safe_div_cos(
-            _fold("q_v", "c_v", dims), F.col("q_n"), F.col("c_n")
-        ).alias("cos"),
-    )
-    w_e = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    return rescored.withColumn("rank", F.row_number().over(w_e)).where(
-        F.col("rank") <= k
-    )
+    rescored = cands.join(corpus, cands["vec_id"] == corpus["c_id"]).drop("vec_id")
+    return _rank_topk(_scored(rescored, dims), k)
 
 
 def ivf_topk(
@@ -1104,47 +1105,22 @@ def ivf_topk(
     Recall < 1 by design (a true neighbor can live in an unprobed
     cell); raise ``nprobe`` to trade cost for recall.
     """
-    if centroids is not None:
-        cents = centroids
-        if "g_n" not in cents.columns:
-            cents = cents.withColumn("g_n", _norm("g_v", dims))
-    else:
-        cents = _coarse_centroids(
-            df,
-            dims,
-            id_col,
-            vec_col,
-            centroid_stride=centroid_stride,
-            centroid_k=centroid_k,
-            kmeans_iters=kmeans_iters,
-            kmeans_sample_mod=kmeans_sample_mod,
-        )
-
-    corpus = (
-        ensure_min_parallelism(df)
-        .select(F.col(id_col).alias("c_id"), _as_double(F.col(vec_col)).alias("c_v"))
-        .withColumn("c_n", _norm("c_v", dims))
+    cents = _coarse_centroids(
+        df,
+        dims,
+        id_col,
+        vec_col,
+        centroid_stride=centroid_stride,
+        centroid_k=centroid_k,
+        kmeans_iters=kmeans_iters,
+        kmeans_sample_mod=kmeans_sample_mod,
+        centroids=centroids,
     )
+    corpus = _vectors(ensure_min_parallelism(df), id_col, vec_col, dims, "c", "c_id")
     indexed = _nearest_cells(corpus, cents, "c_v", "c_n", 1, dims)
-
-    qs = (
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            _as_double(F.col(query_vec_col)).alias("q_v"),
-        )
-        .withColumn("q_n", _norm("q_v", dims))
-    )
+    qs = _vectors(queries, query_id_col, query_vec_col, dims, "q", "query_id")
     probes = _nearest_cells(qs, cents, "q_v", "q_n", nprobe, dims)
-
-    scored = indexed.join(F.broadcast(probes), "cell").select(
-        "query_id",
-        F.col("c_id").alias("vec_id"),
-        _safe_div_cos(
-            _fold("q_v", "c_v", dims), F.col("q_n"), F.col("c_n")
-        ).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _rank_topk(_scored(indexed.join(F.broadcast(probes), "cell"), dims), k)
 
 
 def hard_negative_topk(
@@ -1195,25 +1171,11 @@ def hard_negative_topk(
     which falls back to a hash-partitioned anti-join.
     """
     if candidates is None:
-        corpus = (
-            ensure_min_parallelism(df)
-            .select(
-                F.col(id_col).alias("c_id"),
-                _as_double(F.col(vec_col)).alias("c_v"),
-            )
-            .withColumn("c_n", _norm("c_v", dims))
+        corpus = _vectors(
+            ensure_min_parallelism(df), id_col, vec_col, dims, "c", "c_id"
         )
-        qs = queries.select(
-            F.col(query_id_col).alias("query_id"),
-            _as_double(F.col(query_vec_col)).alias("q_v"),
-        ).withColumn("q_n", _norm("q_v", dims))
-        scored = corpus.crossJoin(F.broadcast(qs)).select(
-            "query_id",
-            F.col("c_id").alias("vec_id"),
-            _safe_div_cos(
-                _fold("q_v", "c_v", dims), F.col("q_n"), F.col("c_n")
-            ).alias("cos"),
-        )
+        qs = _vectors(queries, query_id_col, query_vec_col, dims, "q", "query_id")
+        scored = _scored(corpus.crossJoin(F.broadcast(qs)), dims)
     else:
         score_col = "cos" if "cos" in candidates.columns else "approx_cos"
         scored = candidates.select(
@@ -1233,8 +1195,7 @@ def hard_negative_topk(
         scored = scored.where(F.col("cos") <= F.lit(float(max_cos)))
     if min_cos is not None:
         scored = scored.where(F.col("cos") >= F.lit(float(min_cos)))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _rank_topk(scored, k)
 
 
 def build_contrastive_rows(
@@ -1296,13 +1257,8 @@ def build_contrastive_rows(
         )
     )
 
-    corpus = df.select(
-        F.col(id_col).alias("p_vid"), _as_double(F.col(vec_col)).alias("p_v")
-    ).withColumn("p_n", _norm("p_v", dims))
-    qs = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        _as_double(F.col(query_vec_col)).alias("q_v"),
-    ).withColumn("q_n", _norm("q_v", dims))
+    corpus = _vectors(df, id_col, vec_col, dims, "p", "p_vid")
+    qs = _vectors(queries, query_id_col, query_vec_col, dims, "q", "query_id")
     pos_scored = (
         positives.select(
             F.col(positives.columns[0]).alias("query_id"),
@@ -1314,19 +1270,12 @@ def build_contrastive_rows(
         .select(
             "query_id",
             F.col("p_vid").alias("pos_id"),
-            _safe_div_cos(
-                _fold("q_v", "p_v", dims), F.col("q_n"), F.col("p_n")
-            ).alias("pos_cos"),
+            _cos("q", "p", dims).alias("pos_cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("pos_cos").desc(), F.col("pos_id")
-    )
-    best_pos = (
-        pos_scored.withColumn("__rn__", F.row_number().over(w))
-        .where(F.col("__rn__") == 1)
-        .drop("__rn__")
-    )
+    best_pos = _rank_topk(
+        pos_scored, 1, score="pos_cos", item="pos_id", rank="__rn__"
+    ).drop("__rn__")
     return best_pos.join(neg_rows, "query_id").select(
         "query_id", "pos_id", "pos_cos", "neg_ids", "neg_cos"
     )

@@ -32,6 +32,7 @@ from typing import Any, Callable, Dict, List, Optional
 import pandas as pd
 from py4j.java_gateway import is_instance_of
 from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -411,7 +412,7 @@ def fs_delete(spark: SparkSession, path: str, recursive: bool = True) -> bool:
     fs, jpath = pair
     try:
         return bool(fs.delete(jpath, recursive))
-    except Exception:
+    except (Py4JJavaError, PySparkException):
         return False
 
 
@@ -431,7 +432,7 @@ def fs_rename(spark: SparkSession, src: str, dst: str) -> bool:
     try:  # an unparseable dst is a failed rename too: False, not raise
         jdst = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(dst)
         return bool(fs.rename(jsrc, jdst))
-    except Exception:
+    except (Py4JJavaError, PySparkException):
         return False
 
 
@@ -462,7 +463,7 @@ def fs_rename_overwrite(spark: SparkSession, src: str, dst: str) -> bool:
         jpath = jvm.org.apache.hadoop.fs.Path
         fctx.rename(jpath(src), jpath(dst), opts)
         return True
-    except Exception:
+    except (Py4JJavaError, PySparkException):
         return False
 
 
@@ -495,7 +496,7 @@ def fs_read_text(spark: SparkSession, path: str) -> Optional[str]:
             return bytes(data).decode("utf-8")
         finally:
             stream.close()
-    except Exception:
+    except (Py4JJavaError, PySparkException, UnicodeDecodeError):
         return None
 
 

@@ -157,6 +157,48 @@ def test_one_state_probe_call_site():
     assert "self.read(" in seen and ".exists()" in seen
 
 
+def test_one_cosine_ranking_core():
+    """The dense-vector family ranks through ``similarity._rank_topk``
+    and scores pairs through ``similarity._cos``: ``llm/`` holds one
+    ``query_id`` rank window, and ``_safe_div_cos`` is called only by
+    ``_cos`` and the scorers of other shapes (``cosine``, the
+    per-centroid score of ``_nearest_cells``, ``ivf_pq_topk``'s ADC
+    gather)."""
+    import ast
+    import pathlib
+
+    from kolang_spark import llm
+
+    windows, cos_calls = [], []
+    for path in sorted(pathlib.Path(llm.__file__).parent.glob("*.py")):
+        for fn in ast.parse(path.read_text()).body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            where = f"{path.stem}.{fn.name}"
+            for node in ast.walk(fn):
+                if not isinstance(node, ast.Call):
+                    continue
+                f = node.func
+                if isinstance(f, ast.Name) and f.id == "_safe_div_cos":
+                    cos_calls.append(where)
+                if (
+                    isinstance(f, ast.Attribute)
+                    and f.attr == "partitionBy"
+                    and isinstance(f.value, ast.Name)
+                    and f.value.id == "Window"
+                    and [getattr(a, "value", None) for a in node.args]
+                    == ["query_id"]
+                ):
+                    windows.append(where)
+    assert windows == ["similarity._rank_topk"]
+    assert sorted(cos_calls) == [
+        "similarity._cos",
+        "similarity._nearest_cells",
+        "similarity.cosine",
+        "similarity.ivf_pq_topk",
+    ]
+
+
 def _plan_nodes(node):
     yield node
     kids = node.children()

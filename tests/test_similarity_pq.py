@@ -11,7 +11,10 @@ from pyspark.sql import functions as F
 
 from kolang_spark.llm.similarity import (
     brute_force_topk,
+    hard_negative_topk,
     ivf_pq_topk,
+    ivf_topk,
+    lsh_topk,
     pq_codebooks,
     pq_encode,
 )
@@ -153,8 +156,6 @@ def test_hard_negative_topk(corpus):
     """Same-cluster positives are excluded even though they dominate
     every anchor's raw top-10 (filters run BEFORE ranking); the
     max_cos false-negative guard and candidates path behave."""
-    from kolang_spark.llm.similarity import hard_negative_topk
-
     anchors = corpus.where(F.col("vec_id") % 10 == 0)
     clusters = corpus.select(
         "vec_id", (F.col("vec_id") - F.col("vec_id") % 10).alias("cl")
@@ -200,10 +201,7 @@ def test_build_contrastive_rows(corpus):
     """Training-row assembly: best positive is the nearest same-cluster
     member, negatives are rank-ordered cross-cluster, and anchors
     missing a positive drop out."""
-    from kolang_spark.llm.similarity import (
-        build_contrastive_rows,
-        hard_negative_topk,
-    )
+    from kolang_spark.llm.similarity import build_contrastive_rows
 
     anchors = corpus.where(F.col("vec_id") % 10 == 0)
     clusters = corpus.select(
@@ -235,3 +233,48 @@ def test_build_contrastive_rows(corpus):
         assert list(r.neg_ids) == expect[qid]
         assert list(r.neg_cos) == sorted(r.neg_cos, reverse=True)
         assert r.pos_cos > max(r.neg_cos)  # planted clusters separate
+
+
+_RANK_VARIANTS = {
+    "brute_force": lambda c, q: brute_force_topk(c, q, k=6, dims=4),
+    "lsh": lambda c, q: lsh_topk(c, q, k=6, n_planes=1, multi_probe=1, dims=4),
+    "ivf": lambda c, q: ivf_topk(c, q, k=6, centroid_stride=1, nprobe=6, dims=4),
+    "ivf_pq": lambda c, q: ivf_pq_topk(
+        c, q, k=6, nprobe=6, m=2, ksub=6, centroid_stride=1,
+        codebook_stride=1, dims=4,
+    ),
+    "ivf_pq_refine": lambda c, q: ivf_pq_topk(
+        c, q, k=6, nprobe=6, m=2, ksub=6, centroid_stride=1,
+        codebook_stride=1, dims=4, refine=6,
+    ),
+    "hard_negative": lambda c, q: hard_negative_topk(
+        c, q, k=6, dims=4, exclude_self=False
+    ),
+}
+
+
+@pytest.mark.parametrize("variant", sorted(_RANK_VARIANTS))
+def test_rank_contract_ties_and_zero_vector(spark, variant):
+    """Every top-k operator ranks by one rule: score descending, a tie
+    to the smaller corpus id, and a zero vector (undefined cosine,
+    NULL score) last."""
+    corpus = spark.createDataFrame(
+        [
+            (1, [1.0, 0.0, 0.0, 0.0]),
+            (2, [1.0, 0.0, 0.0, 0.0]),
+            (3, [0.9, 0.1, 0.0, 0.0]),
+            (4, [0.0, 0.0, 0.0, 0.0]),
+            (5, [0.0, 1.0, 0.0, 0.0]),
+            (6, [-1.0, 0.0, 0.0, 0.0]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    queries = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0, 0.0])], "vec_id long, embedding array<double>"
+    )
+    out = _RANK_VARIANTS[variant](corpus, queries)
+    score = "approx_cos" if "approx_cos" in out.columns else "cos"
+    rows = out.orderBy("rank").collect()
+    assert [r.vec_id for r in rows] == [1, 2, 3, 5, 6, 4]
+    assert [r.rank for r in rows] == [1, 2, 3, 4, 5, 6]
+    assert rows[-1][score] is None

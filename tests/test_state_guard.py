@@ -698,6 +698,8 @@ def test_fs_rename_overwrite_atomic_swap(spark, tmp_path):
     assert fs_rename_overwrite(spark, src, dst) is True
     assert fs_read_text(spark, dst) == "new"
     assert not os.path.exists(src)
+    # a failed rename (the source is gone now) is False, not an error
+    assert fs_rename_overwrite(spark, src, dst) is False
 
 
 def test_pin_state_meta_replaces_existing_sidecar_no_tmp_residue(
