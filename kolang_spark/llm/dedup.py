@@ -925,18 +925,7 @@ def dedup_lines_global(
     data, no driver collect. The per-doc ``collect_list`` is bounded
     by the document's own line count (already one row's payload).
     """
-    import re as _re
-
-    out_col = out_col or f"{text_col}_deduped"
-    lines = df.select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(
-            F.split(F.col(text_col), _re.escape(delim), -1)
-        ).alias("_pos", "_line"),
-    )
-    keyed = lines.withColumn("_key", F.md5(F.trim(F.col("_line")))).withColumn(
-        "_ws", F.trim(F.col("_line")) == ""
-    )
+    keyed = _keyed_lines(df, id_col, text_col, delim)
     keeper = (
         keyed.where(~F.col("_ws"))
         .groupBy("_key")
@@ -948,36 +937,30 @@ def dedup_lines_global(
             ).alias("_k")
         )
     )
-    kept = keyed.join(keeper, "_key", "left").where(
+    marked = keyed.join(keeper, "_key", "left").withColumn(
+        "_keep",
         F.col("_ws")
-        | (
-            (F.col("_id") == F.col("_k.k_id"))
-            & (F.col("_pos") == F.col("_k.k_pos"))
-        )
+        | ((F.col("_id") == F.col("_k.k_id")) & (F.col("_pos") == F.col("_k.k_pos"))),
     )
-    rebuilt = kept.groupBy("_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_pos", "_line"))),
-                lambda s: s["_line"],
-            ),
-            delim,
-        ).alias(out_col),
-        F.count(F.lit(1)).alias("_n_kept"),
+    return _rebuild_deduped_lines(df, marked, id_col, text_col, delim, out_col)
+
+
+def _keyed_lines(df: DataFrame, id_col: str, text_col: str, delim: str) -> DataFrame:
+    """One row per line of ``text_col`` split on the LITERAL ``delim``:
+    ``(_id, _pos, _line, _key, _ws)`` — ``_key`` the md5 of the
+    ``trim``-ed line, ``_ws`` true for a whitespace-only line. The line
+    keying of :func:`dedup_lines_global` and the incremental line
+    family (one key rule, so batch and state keys always agree)."""
+    import re as _re
+
+    lines = df.select(
+        F.col(id_col).alias("_id"),
+        F.posexplode(
+            F.split(F.col(text_col), _re.escape(delim), -1)
+        ).alias("_pos", "_line"),
     )
-    totals = lines.groupBy("_id").agg(F.count(F.lit(1)).alias("_total"))
-    base = df.select(F.col(id_col).alias("_id"))
-    return (
-        base.join(rebuilt, "_id", "left")
-        .join(totals, "_id", "left")
-        .select(
-            F.col("_id").alias(id_col),
-            F.coalesce(F.col(out_col), F.lit("")).alias(out_col),
-            F.coalesce("_n_kept", F.lit(0)).cast("long").alias("n_kept"),
-            (F.coalesce("_total", F.lit(0)) - F.coalesce("_n_kept", F.lit(0)))
-            .cast("long")
-            .alias("n_removed"),
-        )
+    return lines.withColumn("_key", F.md5(F.trim(F.col("_line")))).withColumn(
+        "_ws", F.trim(F.col("_line")) == ""
     )
 
 
@@ -1059,17 +1042,7 @@ def _incremental_lines_flagged(
     row per batch line whatever the state holds, so duplicate state
     rows cannot inflate ``n_removed``.
     """
-    import re as _re
-
-    lines = new_df.select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(
-            F.split(F.col(text_col), _re.escape(delim), -1)
-        ).alias("_pos", "_line"),
-    )
-    keyed = lines.withColumn("_key", F.md5(F.trim(F.col("_line")))).withColumn(
-        "_ws", F.trim(F.col("_line")) == ""
-    )
+    keyed = _keyed_lines(new_df, id_col, text_col, delim)
     store = _LINE_STATE.bind(spark, state_path, delim)
     store.verify()
     pre = store.seen(keyed, {"_key": "line_key"}, exclude_batch)
@@ -1102,29 +1075,28 @@ def _rebuild_deduped_lines(
     delim: str,
     out_col: Optional[str],
 ) -> DataFrame:
-    """Re-assemble per-document text from the kept lines of
-    ``_incremental_lines_flagged``'s ``marked`` frame →
-    ``(id_col, out_col, n_kept, n_removed)``."""
+    """Re-assemble per-document text from the lines a ``_keep``-flagged
+    ``marked`` frame (:func:`_keyed_lines` plus ``_keep``; a NULL flag
+    drops the line) keeps → ``(id_col, out_col, n_kept, n_removed)``.
+    One per-document aggregate counts the kept and the total lines."""
     out_col = out_col or f"{text_col}_deduped"
-    rebuilt = (
-        marked.where(F.col("_keep"))
-        .groupBy("_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("_pos", "_line"))),
-                    lambda s: s["_line"],
+    keep = F.col("_keep")
+    rebuilt = marked.groupBy("_id").agg(
+        F.array_join(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(F.when(keep, F.struct("_pos", "_line")))
                 ),
-                delim,
-            ).alias(out_col),
-            F.count(F.lit(1)).alias("_n_kept"),
-        )
+                lambda s: s["_line"],
+            ),
+            delim,
+        ).alias(out_col),
+        F.count(F.when(keep, 1)).alias("_n_kept"),
+        F.count(F.lit(1)).alias("_total"),
     )
-    totals = marked.groupBy("_id").agg(F.count(F.lit(1)).alias("_total"))
     base = new_df.select(F.col(id_col).alias("_id"))
     return (
         base.join(rebuilt, "_id", "left")
-        .join(totals, "_id", "left")
         .select(
             F.col("_id").alias(id_col),
             F.coalesce(F.col(out_col), F.lit("")).alias(out_col),

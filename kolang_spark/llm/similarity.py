@@ -62,7 +62,7 @@ __all__ = [
 _Ref = Union[Column, str]
 
 #: Widest embedding for which the unrolled product-chain form is used.
-#: MEASURED boundary (r13 width sweep — scripts/sweep_r13.py + a
+#: MEASURED boundary (r13 width sweep — `scripts/perf.py width` + a
 #: fresh-JVM-per-config A/B at dims 16/64/128, BASELINE.md r13). TWO
 #: cliffs stack against the unrolled form in the fused
 #: BroadcastNestedLoopJoin+Sort subtrees every scoring path compiles
@@ -828,19 +828,28 @@ def pq_encode(
     double-groupBy form, which shuffled m·N subvector rows through TWO
     exchanges. The corpus is now never shuffled at all; no UDF.
     """
+    rows = df.select(F.col(id_col), _as_double(F.col(vec_col)).alias("__v__"))
+    return _pq_codes(rows, codebooks, m, dims, "__v__").select(
+        id_col, "codes", "recon_n"
+    )
+
+
+def _pq_codes(
+    rows: DataFrame, codebooks: DataFrame, m: int, dims: int, vec: str
+) -> DataFrame:
+    """``rows`` plus its PQ ``codes`` and ``recon_n``, encoded from the
+    ``array<double>`` column ``vec`` — the encoder of :func:`pq_encode`
+    and of :func:`ivf_pq_topk`'s index, which encodes the frame it
+    assigned cells on rather than a second projection of the corpus."""
     if dims % m:
         raise ValueError(f"dims={dims} not divisible by m={m}")
     dsub = dims // m
-    books1 = _pq_books_one_row(codebooks)
-    rows = df.select(
-        F.col(id_col).alias("p_id"), _as_double(F.col(vec_col)).alias("__v__")
-    ).crossJoin(F.broadcast(books1))
 
     # factory, NOT a default-arg lambda: F.transform dispatches on the
     # lambda's arity, so a 2-parameter lambda would receive the element
     # INDEX as its second argument and silently clobber the capture
     def _argmin_j(j: int) -> Column:
-        sub = F.slice(F.col("__v__"), j * dsub + 1, dsub)
+        sub = F.slice(F.col(vec), j * dsub + 1, dsub)
         return F.array_min(
             F.transform(
                 F.col("__books__")[j],
@@ -867,12 +876,11 @@ def pq_encode(
     gb = F.col("__g__")
     vhat = F.flatten(F.transform(gb, lambda x: x["s_v"]))
     return (
-        rows.withColumn("__g__", F.explode_outer(F.array(g)))
+        rows.crossJoin(F.broadcast(_pq_books_one_row(codebooks)))
+        .withColumn("__g__", F.explode_outer(F.array(g)))
         .select(
-            F.col("p_id").alias(id_col),
-            F.transform(gb, lambda x: x["code"].cast("smallint")).alias(
-                "codes"
-            ),
+            *rows.columns,
+            F.transform(gb, lambda x: x["code"].cast("smallint")).alias("codes"),
             _norm(vhat).alias("recon_n"),
         )
     )
@@ -1003,15 +1011,12 @@ def ivf_pq_topk(
     ksub = next(iter(stats.values()))[0]
 
     corpus = _vectors(ensure_min_parallelism(df), id_col, vec_col, dims, "c", "c_id")
-    cells = _nearest_cells(corpus, cents, "c_v", "c_n", 1, dims).select(
-        "c_id", "cell"
-    )
-    # the searchable index: cell + m smallint codes + one double — the
-    # raw vector column is DROPPED here; everything downstream scores
-    # from codes only
-    encoded = pq_encode(df, codebooks, m=m, dims=dims, id_col=id_col, vec_col=vec_col)
-    indexed = cells.join(
-        encoded.select(F.col(id_col).alias("c_id"), "codes", "recon_n"), "c_id"
+    # the searchable index: cell + m smallint codes + one double, from
+    # one projection of one corpus scan — the raw vector column is
+    # DROPPED here; everything downstream scores from codes only
+    cells = _nearest_cells(corpus, cents, "c_v", "c_n", 1, dims)
+    indexed = _pq_codes(cells, codebooks, m, dims, "c_v").select(
+        "c_id", "cell", "codes", "recon_n"
     )
 
     qs = _vectors(queries, query_id_col, query_vec_col, dims, "q", "query_id")

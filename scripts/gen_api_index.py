@@ -35,8 +35,8 @@ END = "<!-- API-INDEX:END -->"
 
 # Per-operator scale notes (VERDICT r10 item 6), sourced from the
 # committed sweep records in BASELINE.md — each note cites the round
-# whose sweep (scripts/sweep_r*.py, disjoint replicated copies at
-# 1x/4x/16x) backs it. Only sweep-backed or plan-audited facts belong
+# whose sweep (disjoint replicated copies at 1x/4x/16x, now run by
+# `scripts/perf.py sweep`) backs it. Only sweep-backed or plan-audited facts belong
 # here; design intent without a measurement does not.
 SCALE_NOTES = {
     "minhash_candidate_pairs": "band equi-join, no n²; xxhash64 default (r11 sweep: md5 tax grows with corpus)",

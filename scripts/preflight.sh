@@ -20,6 +20,7 @@
 #                                 registry ~8 min)
 #   scripts/preflight.sh core     mid-iteration tier (~6 min): plan
 #                                 audit + registry meta-tests + the
+#                                 perf tool's tests + the
 #                                 current 50-query external window
 #                                 through correctness_local. Use while
 #                                 iterating; the FULL gate remains
@@ -30,7 +31,8 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 if [[ "${1:-}" == "core" ]]; then
   python -m pytest tests/test_plan_audit.py tests/test_oracle_parity.py::test_external_window_composition \
-      tests/test_oracle_parity.py::test_next_window_simulation tests/test_oracle_parity.py::test_entry_runs -q
+      tests/test_oracle_parity.py::test_next_window_simulation tests/test_oracle_parity.py::test_entry_runs \
+      tests/test_perf_tool.py -q
   WINDOW=$(python - <<'EOF'
 import __spark_entry__ as m
 print(" ".join(list(m.queries())[:50]))

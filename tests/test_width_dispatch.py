@@ -1,5 +1,5 @@
 """Production-width dispatch of the embedding arithmetic (r12 verdict
-item 3, measured in r13 — scripts/sweep_r13.py + BASELINE.md): the
+item 3, measured in r13 — `scripts/perf.py width` + BASELINE.md): the
 unrolled product-chain form blows the JVM JIT's 8 KB method limit by
 64 dims (runs in the bytecode interpreter, 3-14x slower) and janino's
 64 KB hard limit by 192 dims (whole-stage codegen silently disabled),
