@@ -1059,10 +1059,9 @@ def _incremental_lines_flagged(
     # first action on the returned frames must agree, and the frames
     # must not lazily re-read state an append is about to grow
     marked = marked.localCheckpoint(eager=True)
-    novel = (
-        marked.where(F.col("_keep") & ~F.col("_ws"))
-        .select(F.col("_key").alias("line_key"))
-        .distinct()
+    # a kept non-whitespace line is its key's _rn == 1: one row per key
+    novel = marked.where(F.col("_keep") & ~F.col("_ws")).select(
+        F.col("_key").alias("line_key")
     )
     return marked, novel, store
 
@@ -1501,11 +1500,8 @@ def incremental_exact_dedup(
     # AND the caller's first action, which would otherwise each re-run
     # the batch scan + state probe + window
     marked = marked.localCheckpoint(eager=True)
-    novel = (
-        marked.where(~F.col("is_duplicate"))
-        .select("fingerprint")
-        .distinct()
-    )
+    # a novel row is its fingerprint's __rn__ == 1: one row per key
+    novel = marked.where(~F.col("is_duplicate")).select("fingerprint")
     store.append(novel)
     return marked
 

@@ -69,25 +69,30 @@ def pagerank(
     Keep ``max(r) · max(w) < 2^63`` (≈ weights below ~4·10^9 at the
     default scale) — the product is 64-bit.
 
-    Scale shape: the edge list joins its out-degrees ONCE up front and
-    is eagerly checkpointed (it never changes across iterations — the
-    expensive side of every join is scanned, not rebuilt). Each
-    iteration is exactly one shuffle join (ranks ⋈ edges on src), one
-    map-side-combinable groupBy (dst), and one left join back onto the
-    node spine; the rank frame (|V| rows) is ``localCheckpoint``-ed per
-    round so the plan stays O(1) deep instead of O(iterations). The
-    only per-round driver sync is the dangling-mass scalar, and it is
-    fused into the checkpoint's own action via ``DataFrame.observe``
-    (the connected_components trick) — ONE Spark job per iteration
-    total; round 0's dangling mass is pure arithmetic because initial
-    ranks are uniform. No collect of node or edge data, no cross join,
-    no Python UDF. Each superseded round's pin is released once the next
-    one materializes, and the spine and edge pins once the loop ends,
-    so only the returned frame's pin stays in executor storage.
+    Scale shape: no node spine. The deduplicated edges, each carrying
+    its source's out-weight, are pinned ONCE together with one marker
+    row per node (``src = dst = node``, ``w = 0``, the node's own
+    out-weight), so every node is a ``dst`` of the pinned frame; the
+    node and dangling counts ride that pin's job via
+    ``DataFrame.observe``. A round is ranks ⋈ edges on ``src`` and one
+    map-side-combinable groupBy(``dst``) that sums the real edges'
+    contributions and reads the node's has-outgoing flag off its
+    marker row — no join back onto a node set. Round 1 joins nothing:
+    the initial ranks are the literal ``scale // n``. The rank frame
+    (|V| rows) is ``localCheckpoint``-ed per round so the plan stays
+    O(1) deep, and the next round's dangling mass rides that pin's
+    job, so the only per-round driver sync costs no job of its own.
+    With ``broadcast_ranks`` a round after the first is two Spark
+    jobs (the broadcast build and the pin) with no shuffle stage; round
+    1 is one job. No collect of node or edge data, no cross join, no
+    Python UDF. Each superseded round's pin is released once the next
+    one materializes, and the edge pin once the loop ends, so only the
+    returned frame's pin stays in executor storage.
 
     ``broadcast_ranks=True`` hints the per-iteration ranks ⋈ edges join
-    to broadcast the rank table, so the (checkpointed) edge frame is
-    scanned in place instead of re-shuffled every round — the right
+    to broadcast the rank table, and the edge frame is pinned
+    partitioned by ``dst`` (otherwise by ``src``, the sort-merge join
+    key), so it is scanned in place instead of re-shuffled — the right
     call whenever |V| fits comfortably in executor memory (entity
     graphs, host graphs up to ~10M nodes). Leave False for web-scale
     vertex sets; AQE may still pick a broadcast at runtime when the
@@ -99,14 +104,16 @@ def pagerank(
     BIGINT overflow risk at num·(in+dang)) for larger graphs.
 
     ``checkpoint_dir`` (r11 verdict item 5) switches every
-    per-iteration pin — the node spine, the degree-joined edge frame,
-    and each round's rank frame — from ``localCheckpoint`` (blocks die
+    per-iteration pin — the degree-joined edge frame and each round's
+    rank frame — from ``localCheckpoint`` (blocks die
     with their executor; one preempted node past round 1 kills the
     job outside local mode) to a RELIABLE checkpoint under that
     fault-tolerant path, so long rank chains survive executor loss.
     One distributed write per round; the caller owns the dir's
     lifecycle. Default None keeps the fast local behavior.
     """
+    from kolang_spark.utils import iter_checkpoint, release_checkpoints
+
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
     if not (0 < damping_num < damping_den):
@@ -134,94 +141,86 @@ def pagerank(
             .groupBy("src", "dst")
             .agg(F.sum("w").alias("w"))
         )
-    # per-source weight total: with unit weights this IS the out-degree
-    outdeg = e.groupBy("src").agg(F.sum("w").alias("outdeg"))
-    # node spine with a has-outgoing flag, pinned once: the flag lets
-    # each round's dangling mass come out of the SAME action that
-    # checkpoints the new ranks (observe-fusion, the
-    # connected_components trick) instead of a separate collect job.
-    from kolang_spark.utils import iter_checkpoint, release_checkpoints
-
-    nodes = (
-        e.select(F.col("src").alias(node_col))
-        .unionAll(e.select(F.col("dst").alias(node_col)))
-        .distinct()
-        .join(
-            outdeg.select(
-                F.col("src").alias(node_col), F.lit(True).alias("_has_out")
-            ),
-            node_col,
-            "left",
-        )
-        .select(
-            node_col, F.coalesce("_has_out", F.lit(False)).alias("_has_out")
+    # per-node out-weight (0 for a sink): with unit weights this IS the
+    # out-degree. One aggregate over both endpoints yields every node.
+    deg = (
+        e.select(F.col("src").alias("node"), "w")
+        .unionAll(e.select(F.col("dst").alias("node"), F.lit(0).cast("long")))
+        .groupBy("node")
+        .agg(F.sum("w").alias("outdeg"))
+    )
+    # edges with their source's out-weight, plus one marker row per node
+    # (see Scale shape); ``__self__``, not src == dst, tells a marker
+    # from a real self-loop
+    e_att = (
+        e.join(deg.select(F.col("node").alias("src"), "outdeg"), "src")
+        .withColumn("__self__", F.lit(False))
+        .unionByName(
+            deg.select(
+                F.col("node").alias("src"),
+                F.col("node").alias("dst"),
+                F.lit(0).cast("long").alias("w"),
+                "outdeg",
+                F.lit(True).alias("__self__"),
+            )
         )
     )
-    # node count + dangling count ride the spine checkpoint's own action
-    nodes, setup, spine_ids = iter_checkpoint(
-        nodes,
+    # Broadcast ranks: the join is shuffle-free and keeps the streamed
+    # side's partitioning, so hash(dst) lets the per-round groupBy(dst)
+    # aggregate in place. Otherwise hash(src), so the per-round
+    # sort-merge join never re-exchanges the edges.
+    key = "dst" if broadcast_ranks else "src"
+    marker = F.col("__self__")
+    e_od, setup, edge_ids = iter_checkpoint(
+        e_att.repartition(key),
         checkpoint_dir,
+        keep_partitioning=True,
         observe={
-            "n": F.count(F.lit(1)),
-            "nd": F.sum((~F.col("_has_out")).cast("long")),
+            "n": F.count(F.when(marker, 1)),
+            "nd": F.count(F.when(marker & (F.col("outdeg") == 0), 1)),
         },
     )
     n = setup["n"]
     if n == 0:
-        return nodes.select(
-            node_col, F.lit(0).cast("long").alias(rank_col)
+        return e_od.select(
+            F.col("src").alias(node_col), F.lit(0).cast("long").alias(rank_col)
         )
-    # initial ranks are uniform, so round 0's dangling mass is pure
-    # arithmetic on those two counts
-    dangling = (scale // n) * int(setup["nd"])
-
-    # edges never change across iterations: attach out-degrees once and
-    # pin the frame so each round scans it instead of re-joining.
-    # r13: under broadcast ranks, lay the pinned frame out by ``dst``
-    # first — the broadcast join preserves the streamed side's
-    # partitioning, so the per-round ``groupBy("dst")`` then aggregates
-    # in place and an iteration shuffles NOTHING edge-sized (the |E|
-    # contrib exchange per round was the dominant iteration cost at
-    # scale). Non-broadcast keeps the join-keyed layout: there the
-    # per-round SMJ on ``src`` is what must not re-shuffle the edges.
-    e_att = e.join(outdeg, "src")
-    if broadcast_ranks:
-        e_att = e_att.repartition("dst")
-    e_od, _, edge_ids = iter_checkpoint(
-        e_att, checkpoint_dir, keep_partitioning=broadcast_ranks
-    )
-
+    # initial ranks are uniform: round 1 reads them as a literal, and
+    # its dangling mass is pure arithmetic on the two counts
+    r0 = scale // n
+    dangling = r0 * setup["nd"]
     teleport = (scale * (damping_den - damping_num)) // (damping_den * n)
-    ranks = nodes.withColumn("r", F.lit(int(scale // n)).cast("long"))
-    rank_ids = frozenset()
+    ranks, rank_ids = None, frozenset()
 
     for _ in range(iterations):
-        rside = F.broadcast(ranks) if broadcast_ranks else ranks
-        in_sum = (
-            e_od.join(rside, e_od["src"] == ranks[node_col])
-            .select(
-                F.col("dst"),
-                F.expr("(r * w) div outdeg").alias("contrib"),
+        if ranks is None:
+            rows = e_od.withColumn("r", F.lit(r0).cast("long"))
+        else:
+            rside = ranks.select(F.col("dst").alias("src"), "r")
+            rows = e_od.join(
+                F.broadcast(rside) if broadcast_ranks else rside, "src"
             )
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("in_sum"))
+        nxt = (
+            rows.groupBy("dst")
+            .agg(
+                F.sum(
+                    F.when(~marker, F.expr("(r * w) div outdeg"))
+                ).alias("in_sum"),
+                F.max(F.when(marker, F.col("outdeg") > 0)).alias("_has_out"),
+            )
+            .select(
+                "dst",
+                "_has_out",
+                (
+                    F.lit(int(teleport))
+                    + F.expr(
+                        f"({damping_num} * (coalesce(in_sum, 0L)"
+                        f" + {dangling // n}L)) div {damping_den}"
+                    )
+                ).cast("long").alias("r"),
+            )
         )
-        uniform_dang = dangling // n
-        nxt = nodes.join(
-            in_sum, nodes[node_col] == in_sum["dst"], "left"
-        ).select(
-            nodes[node_col],
-            F.col("_has_out"),
-            (
-                F.lit(int(teleport))
-                + F.expr(
-                    f"({damping_num} * (coalesce(in_sum, 0L)"
-                    f" + {uniform_dang}L)) div {damping_den}"
-                )
-            ).cast("long").alias("r"),
-        )
-        # next round's dangling mass rides the checkpoint's own action:
-        # one Spark job per iteration, total
+        # next round's dangling mass rides the checkpoint's own action
         ranks, m, ids = iter_checkpoint(
             nxt,
             checkpoint_dir,
@@ -237,8 +236,8 @@ def pagerank(
         dangling = int(m["dang"])
 
     # the returned frame reads only the last round's pin
-    release_checkpoints(edges.sparkSession, spine_ids | edge_ids)
-    return ranks.select(F.col(node_col), F.col("r").alias(rank_col))
+    release_checkpoints(edges.sparkSession, edge_ids)
+    return ranks.select(F.col("dst").alias(node_col), F.col("r").alias(rank_col))
 
 
 def label_propagation(
@@ -275,22 +274,25 @@ def label_propagation(
     deterministic stopping rule — there is deliberately no convergence
     probe, so the whole run is a pure function of the input.
 
-    Scale shape: the symmetrized edge list is built ONCE and eagerly
-    pinned (localCheckpoint) — each round scans it in place. A round is
-    one equi-join (labels ⋈ edges on the neighbor key) and two
-    map-side-combinable aggregates: count per (node, label), then
-    min(struct(-count, label)) per node — the argmax-with-min-tiebreak
-    as a single aggregate, NO window function (a row_number window
-    would sort every partition; min(struct) combines map-side). The
-    label frame (|V| rows) is checkpointed per round so the plan stays
-    O(1) deep, and pins the returned frame no longer reads are released
-    as in :func:`pagerank`. ``broadcast_labels=True`` broadcasts the label table
-    into the per-round join when |V| fits in executor memory — the
-    edge frame is then never re-shuffled. ``checkpoint_dir`` switches
-    every pin (node spine, symmetrized edges, per-round labels) to a
-    RELIABLE checkpoint that survives executor loss (r11 verdict item
-    5 — see :func:`pagerank`); default None keeps the fast
-    ``localCheckpoint`` behavior.
+    Scale shape: no node spine. The symmetrized edge list, self-loops
+    kept as ``(v, v)`` rows, is pinned ONCE (localCheckpoint), so every
+    node is a ``v`` of the pinned frame. A round is one equi-join
+    (labels ⋈ edges on the neighbor key) and two map-side-combinable
+    aggregates: the real-neighbor count per (node, label) — a self row
+    counts 0, so it never outvotes a neighbor and is the only group of
+    a self-loop-only node — then min(struct(-count, label)) per node,
+    the argmax-with-min-tiebreak with NO window (a row_number window
+    would sort every partition). Round 1 joins nothing (label_0[u] =
+    u). The label frame (|V| rows) is pinned per round so the plan
+    stays O(1) deep; pins the returned frame no longer reads are
+    released as in :func:`pagerank`. ``broadcast_labels=True``
+    broadcasts the label table when |V| fits in executor memory and
+    pins the edges partitioned by ``v``: a round after the first is
+    then two Spark jobs (broadcast build, pin) with no shuffle stage.
+    ``checkpoint_dir`` switches every pin to a RELIABLE checkpoint
+    that survives executor loss (r11 verdict item 5 — see
+    :func:`pagerank`); default None keeps the fast ``localCheckpoint``
+    behavior.
     """
     from kolang_spark.utils import iter_checkpoint, release_checkpoints
 
@@ -300,30 +302,15 @@ def label_propagation(
     e_raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
         F.col("u").isNotNull() & F.col("v").isNotNull()
     )
-    # node spine keeps self-loop-only nodes alive
-    nodes = (
-        e_raw.select(F.col("u").alias(node_col))
-        .unionAll(e_raw.select(F.col("v").alias(node_col)))
-        .distinct()
-    )
-    nodes, _, spine_ids = iter_checkpoint(nodes, checkpoint_dir)
-    # r13: pick the pinned edge layout by how each round consumes it.
-    # Broadcast labels: the join is shuffle-free, so partition by the
-    # AGGREGATION key ``v`` — hash(v) satisfies both the following
-    # distinct's (u,v) clustering and both per-round groupBys ((v,lbl)
-    # then (v)), making a broadcast round shuffle nothing edge-sized.
-    # Non-broadcast: partition by the JOIN key ``u`` so the per-round
-    # SMJ never re-exchanges the edge frame. localCheckpoint preserves
-    # the physical partitioning either way.
+    # both directions of every edge, self-loops kept as (v, v) rows, so
+    # every node is a ``v``. Broadcast labels: the join is shuffle-free,
+    # so partition by the AGGREGATION key ``v`` — hash(v) also clusters
+    # the distinct and both per-round groupBys, so a round shuffles
+    # nothing. Otherwise by the JOIN key ``u``, so the per-round SMJ
+    # never re-exchanges the edges.
     sym_key = "v" if broadcast_labels else "u"
     sym = (
-        e_raw.where(F.col("u") != F.col("v"))
-        .select("u", "v")
-        .unionAll(
-            e_raw.where(F.col("u") != F.col("v")).select(
-                F.col("v").alias("u"), F.col("u").alias("v")
-            )
-        )
+        e_raw.unionAll(e_raw.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .repartition(sym_key)
         .distinct()
     )
@@ -331,15 +318,20 @@ def label_propagation(
         sym, checkpoint_dir, keep_partitioning=True
     )
 
-    labels = nodes.select(node_col, F.col(node_col).alias("__lbl__"))
-    label_ids = frozenset()
+    labels, label_ids = None, frozenset()
     for _ in range(iterations):
-        lside = F.broadcast(labels) if broadcast_labels else labels
-        # neighbor labels: edge (u → v) delivers u's current label to v
+        if labels is None:  # label_0[u] = u: round 1 joins nothing
+            rows = sym.withColumn("__lbl__", F.col("u"))
+        else:
+            lside = labels.select(F.col("v").alias("u"), "__lbl__")
+            rows = sym.join(
+                F.broadcast(lside) if broadcast_labels else lside, "u"
+            )
+        # edge (u → v) delivers u's current label to v; a self row counts
+        # 0, so its group loses to any real neighbor's (-0 > -c, c >= 1)
         best = (
-            sym.join(lside, sym["u"] == labels[node_col])
-            .groupBy(F.col("v"), F.col("__lbl__"))
-            .agg(F.count(F.lit(1)).alias("__c__"))
+            rows.groupBy("v", "__lbl__")
+            .agg(F.count(F.when(F.col("u") != F.col("v"), 1)).alias("__c__"))
             .groupBy("v")
             .agg(
                 F.min(
@@ -349,20 +341,11 @@ def label_propagation(
                     )
                 ).alias("__best__")
             )
-            .select(F.col("v"), F.col("__best__.l").alias("__new__"))
+            .select("v", F.col("__best__.l").alias("__lbl__"))
         )
-        labels, _, ids = iter_checkpoint(
-            nodes.join(best, nodes[node_col] == best["v"], "left")
-            .select(
-                nodes[node_col],
-                F.coalesce(F.col("__new__"), nodes[node_col]).alias(
-                    "__lbl__"
-                ),
-            ),
-            checkpoint_dir,
-        )
+        labels, _, ids = iter_checkpoint(best, checkpoint_dir)
         release_checkpoints(edges.sparkSession, label_ids)
         label_ids = ids
     # the returned frame reads only the last round's pin
-    release_checkpoints(edges.sparkSession, spine_ids | sym_ids)
-    return labels.select(node_col, F.col("__lbl__").alias(label_col))
+    release_checkpoints(edges.sparkSession, sym_ids)
+    return labels.select(F.col("v").alias(node_col), F.col("__lbl__").alias(label_col))

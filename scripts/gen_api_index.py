@@ -67,8 +67,8 @@ SCALE_NOTES = {
     "cumulative_sum": "bucketed two-pass prefix sum at scale — no single-partition window (r8 sweep)",
     "percent": "broadcast-total rewrite (with_percent) keeps detail rows unshuffled (r8)",
     "with_percent": "grand total as a broadcast 1-row aggregate (r8)",
-    "pagerank": "iterative joins with observe-fused convergence checks (r9)",
-    "label_propagation": "same iterative equi-join shape as pagerank (r9)",
+    "pagerank": "one edge pin with a marker row per node, no node spine; a broadcast round is 2 jobs, no shuffle stage (plan-audit job budget)",
+    "label_propagation": "one edge pin with a self row per node, no node spine; a broadcast round is 2 jobs, no shuffle stage (plan-audit job budget)",
     "target_encode": "one map-side-combinable groupBy + broadcast re-attach; integer units mode replays bit-exact (r11)",
     "trailing_window_agg": "same-spec RANGE frames share ONE shuffle + sort — plan-pinned (r11 audit)",
     "bloom_semi_join": "16-KiB in-plan bitmask kills non-matches inside the scan (r9)",

@@ -7,7 +7,8 @@ default ``--sf``) and reads its counters through
 ``perfbench/sparkstats.SparkStats``:
 
   profile q... | --all     best-of-reps seconds plus jobs, stages, shuffle
-                           bytes, spill and exchange / Python-node /
+                           bytes, spill, exchanges over every job, and
+                           the returned frame's exchange / Python-node /
                            non-codegen-node counts per query
   plans q... [--repo P]    explain("formatted") of each query
   ab q... --before P       fresh-JVM A/B of checkout P against this one,
@@ -130,14 +131,36 @@ def final_plan(df: DataFrame):
     return plan
 
 
+def exec_exchanges(spark, after_id: int) -> int:
+    """Shuffle and broadcast exchanges over the plan graphs of every SQL
+    execution with id > ``after_id``, read from the SQL status store.
+    Unlike the returned frame's plan, this counts the exchanges of a
+    multi-job query's eager pins and probes too."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    n = 0
+    for i in range(execs.size() - 1, -1, -1):
+        eid = execs.apply(i).executionId()
+        if eid <= after_id:
+            break
+        nodes = store.planGraph(eid).allNodes()
+        n += sum(
+            nodes.apply(j).name() in ("Exchange", "BroadcastExchange")
+            for j in range(nodes.size())
+        )
+    return n
+
+
 def measure(spark, stats: SparkStats, fn, sf: str, reps: int) -> dict:
     """Best-of-``reps`` seconds of ``fn(spark, sf)`` through the noop
-    sink, with the last rep's jobs, stage totals and the plan-node
-    counts of its final plan (the last rep is the steady state: caches
-    and memos are warm)."""
+    sink, with the last rep's jobs, stage totals and exchanges over all
+    its SQL executions (``exec_exchanges``), and the plan-node counts of
+    the returned frame's final plan (the last rep is the steady state:
+    caches and memos are warm)."""
     best = None
     for _ in range(reps):
         j0, s0 = stats.next_job_id(), stats.next_stage_id()
+        e0 = stats.last_execution_id()
         t0 = time.perf_counter()
         df = fn(spark, sf)
         _noop(df)
@@ -148,7 +171,7 @@ def measure(spark, stats: SparkStats, fn, sf: str, reps: int) -> dict:
     st = stats.stages(s0, s1)
     del st["intervals"]
     rec = {k: round(v, 3) if isinstance(v, float) else v for k, v in st.items()}
-    rec.update(sec=round(best, 3), jobs=j1 - j0)
+    rec.update(sec=round(best, 3), jobs=j1 - j0, exec_exchanges=exec_exchanges(spark, e0))
     final_plan(df)  # outside the job and stage window above
     rec.update(stats.plan_counts(df))
     return rec
@@ -166,7 +189,7 @@ def cmd_profile(spark, a) -> dict:
         q = rec["queries"][name] = measure(spark, stats, qs[name], a.sf, a.reps)
         log(
             f"{q['sec']:7.2f}s {q['jobs']:4d} jobs {q['stages']:4d} stages "
-            f"{q['exchanges']:3d} exch {q['non_codegen_nodes']:3d} interp  {name}"
+            f"{q['exec_exchanges']:3d}/{q['exchanges']:d} exch {q['non_codegen_nodes']:3d} interp  {name}"
         )
     spark.sparkContext.setJobDescription(None)
     rec["canary_post"] = round(_canary(spark, a.sf), 3)

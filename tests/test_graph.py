@@ -34,9 +34,9 @@ def _replica(edges, iterations, scale=SCALE, num=NUM, den=DEN):
     return r
 
 
-def _run(spark, edges, iterations=5):
+def _run(spark, edges, iterations=5, broadcast_ranks=False):
     df = spark.createDataFrame(edges, "src string, dst string")
-    out = pagerank(df, iterations=iterations)
+    out = pagerank(df, iterations=iterations, broadcast_ranks=broadcast_ranks)
     return {row["node"]: row["rank_fp"] for row in out.collect()}
 
 
@@ -123,6 +123,19 @@ def test_weighted_matches_replica_and_shifts_rank(spark):
     assert got["x"] > got["y"]  # weight concentration shifts rank
 
 
+@pytest.mark.parametrize("broadcast_ranks", [False, True])
+def test_weighted_self_loop_is_a_real_edge(spark, broadcast_ranks):
+    # a→a is an edge of weight 3 (not the per-node marker row): a keeps
+    # 3/4 of its own rank, and d is a sink
+    edges = [("a", "a", 3), ("a", "b", 1), ("b", "a", 2), ("c", "a", 1),
+             ("c", "d", 4)]
+    df = spark.createDataFrame(edges, "src string, dst string, wt long")
+    got = {r["node"]: r["rank_fp"]
+           for r in pagerank(df, iterations=3, weight_col="wt",
+                             broadcast_ranks=broadcast_ranks).collect()}
+    assert got == _replica_weighted(edges, 3)
+
+
 def test_weighted_unit_weights_equal_unweighted(spark):
     edges = [("a", "b"), ("b", "c"), ("c", "a"), ("d", "c")]
     df = spark.createDataFrame(edges, "src string, dst string")
@@ -178,8 +191,9 @@ def test_custom_columns_and_scale(spark):
 )
 def test_exact_model_random_graphs(spark_session_global, edges, iterations):
     # self-loops, multi-edges, disconnected nodes, pure sinks — all fair
-    got = _run(spark_session_global, edges, iterations=iterations)
-    assert got == _replica(edges, iterations)
+    want = _replica(edges, iterations)
+    for bc in (False, True):
+        assert _run(spark_session_global, edges, iterations, bc) == want
 
 
 @pytest.fixture(scope="module")

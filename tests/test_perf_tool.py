@@ -1,5 +1,5 @@
-"""scripts/perf.py: the disjoint replicas of its higher-SF tier, one
-``profile`` record, and the argument parsing of every subcommand (no
+"""scripts/perf.py: the disjoint replicas of its higher-SF tier, two
+``profile`` records, and the argument parsing of every subcommand (no
 subprocess JVM is started here)."""
 
 import importlib.util
@@ -118,7 +118,8 @@ def test_profile_record(spark, perf, sf_dir):
     q = rec["queries"][name]
     assert {
         "sec", "jobs", "stages", "shuffle_write_bytes", "shuffle_read_bytes",
-        "spill_bytes", "exchanges", "python_nodes", "non_codegen_nodes",
+        "spill_bytes", "exchanges", "exec_exchanges", "python_nodes",
+        "non_codegen_nodes",
     } <= set(q)
     assert q["jobs"] > 0 and q["stages"] > 0 and q["sec"] > 0
     assert rec["canary_pre"] > 0 and rec["canary_post"] > 0
@@ -130,6 +131,17 @@ def test_profile_record(spark, perf, sf_dir):
     assert q["non_codegen_nodes"] < _operators(final)
     counts = ("exchanges", "python_nodes", "non_codegen_nodes")
     assert {k: q[k] for k in counts} == perf.SparkStats(spark).plan_counts(df)
+
+
+def test_profile_counts_exchanges_of_every_job(spark, perf, sf_dir):
+    """A pinned multi-job query returns a frame that reads only its last
+    pin, so the frame's plan has no exchange; its edge pin and broadcast
+    rounds do, and ``exec_exchanges`` counts them."""
+    name = "label_propagation_purchases"
+    a = perf.parse_args(["profile", "--sf", sf_dir, "--reps", "1", name])
+    q = perf.cmd_profile(spark, a)["queries"][name]
+    assert q["exchanges"] == 0
+    assert q["exec_exchanges"] >= 1
 
 
 @pytest.mark.parametrize(

@@ -440,3 +440,55 @@ def test_repaired_r10_queries_shuffle_counts_pinned(spark):
 
     assert counts("trailing_features_events") == (1, 0, 1)
     assert counts("target_encode_orders") == (1, 1, 0)
+
+
+# Spark jobs of one call of an iterative graph operator with a broadcast
+# rank/label table, on the graph below at GRAPH_ROUNDS rounds: the edge
+# pin, round 1 (a literal initial table, no join) and one broadcast
+# build plus one pin per later round
+GRAPH_ROUNDS = 2
+GRAPH_JOB_BUDGETS = {"label_propagation": 4, "pagerank": 4}
+
+
+@pytest.mark.parametrize("op", sorted(GRAPH_JOB_BUDGETS))
+def test_iterative_graph_job_budget(spark, monkeypatch, op):
+    """One pin before the round loop (the edge frame, which carries a
+    row per node, so no node spine is pinned beside it) and one per
+    round; a call stays within its job budget, and each further
+    broadcast round adds at most 2 jobs of one stage each, so it
+    shuffles nothing."""
+    from kolang_spark import utils
+    from kolang_spark.operators.graph import label_propagation, pagerank
+    from perfbench.sparkstats import SparkStats
+
+    run = {
+        "label_propagation": lambda e, k: label_propagation(
+            e, iterations=k, broadcast_labels=True
+        ),
+        "pagerank": lambda e, k: pagerank(e, iterations=k, broadcast_ranks=True),
+    }[op]
+    edges = spark.createDataFrame(
+        [(f"n{i % 12}", f"n{(7 * i + 1) % 12}") for i in range(30)],
+        "src string, dst string",
+    )
+    pins = []
+    pin = utils.iter_checkpoint
+
+    def spy(df, *args, **kwargs):
+        pins.append(kwargs.get("keep_partitioning", False))
+        return pin(df, *args, **kwargs)
+
+    monkeypatch.setattr(utils, "iter_checkpoint", spy)
+    stats = SparkStats(spark)
+    used = {}
+    for k in (GRAPH_ROUNDS, GRAPH_ROUNDS + 1):
+        pins.clear()
+        j0, s0 = stats.next_job_id(), stats.next_stage_id()
+        run(edges, k)
+        used[k] = (stats.next_job_id() - j0, stats.next_stage_id() - s0)
+        assert pins == [True] + [False] * k
+    jobs, stages = used[GRAPH_ROUNDS]
+    more_jobs, more_stages = used[GRAPH_ROUNDS + 1]
+    assert jobs <= GRAPH_JOB_BUDGETS[op]
+    assert more_jobs - jobs <= 2
+    assert more_stages - stages == more_jobs - jobs

@@ -119,9 +119,11 @@ def _lp_replica(edges, iterations):
     return lbl
 
 
-def _lp_run(spark, edges, iterations):
+def _lp_run(spark, edges, iterations, broadcast_labels=False):
     df = spark.createDataFrame(edges, "src string, dst string")
-    out = label_propagation(df, iterations=iterations)
+    out = label_propagation(
+        df, iterations=iterations, broadcast_labels=broadcast_labels
+    )
     return {r["node"]: r["label"] for r in out.collect()}
 
 
@@ -144,6 +146,17 @@ def test_label_propagation_self_loop_isolate(spark):
     assert got == _lp_replica(edges, 2)
 
 
+@pytest.mark.parametrize("broadcast_labels", [False, True])
+def test_label_propagation_self_loop_never_outvotes_a_neighbor(
+    spark, broadcast_labels
+):
+    # "a"'s self row carries its own, smaller label with count 0: the one
+    # real neighbor's label must still win
+    edges = [("a", "a"), ("a", "b")]
+    got = _lp_run(spark, edges, 1, broadcast_labels)
+    assert got == {"a": "b", "b": "a"} == _lp_replica(edges, 1)
+
+
 def test_label_propagation_matches_replica_random_graphs(spark):
     import random
 
@@ -158,11 +171,13 @@ def test_label_propagation_matches_replica_random_graphs(spark):
             (rng.choice(nodes), rng.choice(nodes)) for _ in range(20)
         ]
         for it in (1, 2, 4):
-            assert _lp_run(spark, edges, it) == _lp_replica(edges, it), (
-                trial,
-                it,
-                edges,
-            )
+            for bc in (False, True):
+                assert _lp_run(spark, edges, it, bc) == _lp_replica(edges, it), (
+                    trial,
+                    it,
+                    bc,
+                    edges,
+                )
 
 
 def test_detect_pii_columns(spark):

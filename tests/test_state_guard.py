@@ -346,6 +346,28 @@ def test_replay_doubled_state_changes_no_flag_or_count(spark, tmp_path, kind):
     assert summary(outs[1]) == expect
 
 
+@pytest.mark.parametrize(
+    "kind, key, batch, n_keys",
+    [
+        ("exact", "fingerprint", [(1, TEXT), (2, TEXT), (3, _OTHER), (4, TEXT)], 2),
+        ("lines", "line_key",
+         [(1, "alpha\nshared"), (2, "shared\nbeta"), (3, "alpha\nalpha")], 3),
+    ],
+)
+def test_in_batch_duplicates_append_one_state_row_per_key(
+    spark, tmp_path, kind, key, batch, n_keys
+):
+    """A batch's novel rows are the first occurrence of each key, so a
+    batch holding its own duplicates appends exactly one state row per
+    key, with no distinct() before the append."""
+    state = str(tmp_path / "state")
+    _probe_ops()[kind](
+        spark, spark.createDataFrame(batch, "doc_id long, text string"), state
+    ).collect()
+    keys = [r[key] for r in spark.read.parquet(state).select(key).collect()]
+    assert len(keys) == len(set(keys)) == n_keys
+
+
 def test_minhash_r11_twin_sidecar_migrates(spark, tmp_path):
     """A state pinned only by the r11 `_ks_hashfn.json` (no
     `_ks_state.json`): a matching-hash probe works and upgrades the
