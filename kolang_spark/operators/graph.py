@@ -91,8 +91,8 @@ def pagerank(
 
     ``broadcast_ranks=True`` hints the per-iteration ranks ⋈ edges join
     to broadcast the rank table, and the edge frame is pinned
-    partitioned by ``dst`` (otherwise by ``src``, the sort-merge join
-    key), so it is scanned in place instead of re-shuffled — the right
+    partitioned by ``dst``, so it is scanned in place instead of
+    re-shuffled (without it the edge pin keeps no layout) — the right
     call whenever |V| fits comfortably in executor memory (entity
     graphs, host graphs up to ~10M nodes). Leave False for web-scale
     vertex sets; AQE may still pick a broadcast at runtime when the
@@ -167,14 +167,13 @@ def pagerank(
     )
     # Broadcast ranks: the join is shuffle-free and keeps the streamed
     # side's partitioning, so hash(dst) lets the per-round groupBy(dst)
-    # aggregate in place. Otherwise hash(src), so the per-round
-    # sort-merge join never re-exchanges the edges.
-    key = "dst" if broadcast_ranks else "src"
+    # aggregate in place. Otherwise the pin keeps no layout and runs
+    # with AQE on; each round's sort-merge join exchanges both sides.
     marker = F.col("__self__")
     e_od, setup, edge_ids = iter_checkpoint(
-        e_att.repartition(key),
+        e_att.repartition("dst") if broadcast_ranks else e_att,
         checkpoint_dir,
-        keep_partitioning=True,
+        keep_partitioning=broadcast_ranks,
         observe={
             "n": F.count(F.when(marker, 1)),
             "nd": F.count(F.when(marker & (F.col("outdeg") == 0), 1)),

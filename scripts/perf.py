@@ -160,6 +160,7 @@ def measure(spark, stats: SparkStats, fn, sf: str, reps: int) -> dict:
     best = None
     for _ in range(reps):
         j0, s0 = stats.next_job_id(), stats.next_stage_id()
+        stats.drain()  # the previous rep's executions are in the store
         e0 = stats.last_execution_id()
         t0 = time.perf_counter()
         df = fn(spark, sf)
