@@ -19,12 +19,13 @@ hash aggregate — map-side combinable, AQE-skew-splittable, no window,
 no driver state. At 100 TB the weight table rides a broadcast and the
 corpus is scanned exactly once per pass.
 
-Float determinism: weights are stored as integer MICRO-nats
-(``round(ln_ratio · 1e6)``), so every per-document sum is an exact long
-sum — order-independent across partitions/retries and reproducible
-bit-for-bit by a SQL oracle (the same fixed-point idiom as
-``llm/lmscore.py``). The only floats are the final ``score``/``prob``
-computed per-row from the exact sum.
+Float determinism: weights are stored as integer micro-nats
+(``textstats._micro`` of the log-ratio of two ``textstats._ln_smoothed``
+terms), so every per-document sum is an exact long sum —
+order-independent across partitions/retries and reproducible
+bit-for-bit by a SQL oracle. Tokens follow ``textstats._words``. The
+only floats are the final ``score``/``prob`` computed per-row from the
+exact sum.
 """
 
 from __future__ import annotations
@@ -34,18 +35,9 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kolang_spark.llm.textstats import tokenize
+from kolang_spark.llm.textstats import MICRO, _ln_smoothed, _micro, _words
 
 __all__ = ["train_token_logodds", "linear_text_classifier"]
-
-_MICRO = 1e6
-
-
-def _toks(text_col: str, lowercase: bool):
-    t = tokenize(F.col(text_col))
-    if lowercase:
-        t = F.transform(t, lambda x: F.lower(x))
-    return t
 
 
 def train_token_logodds(
@@ -74,7 +66,7 @@ def train_token_logodds(
         raise ValueError("alpha must be > 0")
     lab = F.col(label_col).cast("boolean")
     counts = (
-        df.select(lab.alias("__y__"), F.explode(_toks(text_col, lowercase)).alias("term"))
+        df.select(lab.alias("__y__"), F.explode(_words(text_col, lowercase)).alias("term"))
         .where(F.col("term") != "")
         .groupBy("term")
         .agg(
@@ -87,16 +79,11 @@ def train_token_logodds(
         F.sum("__n__").alias("__tn__"),
         F.count(F.lit(1)).alias("__v__"),
     )
-    a = F.lit(float(alpha))
-    ln_pos = F.log(F.col("__p__").cast("double") + a) - F.log(
-        F.col("__tp__").cast("double") + a * F.col("__v__").cast("double")
-    )
-    ln_neg = F.log(F.col("__n__").cast("double") + a) - F.log(
-        F.col("__tn__").cast("double") + a * F.col("__v__").cast("double")
-    )
+    v = F.col("__v__").cast("double")
+    ln_pos = _ln_smoothed(F.col("__p__"), F.col("__tp__"), alpha, v)
+    ln_neg = _ln_smoothed(F.col("__n__"), F.col("__tn__"), alpha, v)
     return counts.crossJoin(F.broadcast(consts)).select(
-        "term",
-        F.round((ln_pos - ln_neg) * F.lit(_MICRO)).cast("long").alias("w_micro"),
+        "term", _micro(ln_pos - ln_neg).alias("w_micro")
     )
 
 
@@ -132,7 +119,7 @@ def linear_text_classifier(
     w = weights.select("term", "w_micro")
     if broadcast_weights:
         w = F.broadcast(w)
-    ex = df.select(F.col(id_col), F.explode_outer(_toks(text_col, lowercase)).alias("term")).where(
+    ex = df.select(F.col(id_col), F.explode_outer(_words(text_col, lowercase)).alias("term")).where(
         F.col("term").isNotNull() & (F.col("term") != "")
     )
     summed = (
@@ -145,9 +132,9 @@ def linear_text_classifier(
         )
     )
     denom = (
-        F.col("n_tokens").cast("double") * F.lit(_MICRO)
+        F.col("n_tokens").cast("double") * F.lit(MICRO)
         if normalize
-        else F.lit(_MICRO)
+        else F.lit(MICRO)
     )
     score = F.col("__s__").cast("double") / denom + F.lit(float(bias))
     scored = summed.select(

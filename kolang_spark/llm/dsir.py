@@ -19,11 +19,13 @@ construction, unlike a raw vocabulary). The resample is a Gumbel-top-k
 replacement ∝ softmax(log-ratio / temperature), no shuffle beyond the
 top-k.
 
-Float determinism: per-feature log-ratio contributions are rounded to
-integer micro-nats BEFORE the per-document sum (the engine's standard
-fixed-point idiom), so scores are exact longs — order-independent and
-bit-for-bit replayable by the DuckDB oracle; Gumbel keys are
-md5-derived, so the resample is deterministic too.
+Float determinism: per-feature log-ratios of two
+``textstats._ln_smoothed`` terms are rounded to integer micro-nats
+(``textstats._micro``) BEFORE the per-document sum, so scores are exact
+longs — order-independent and bit-for-bit replayable by the DuckDB
+oracle. Features are ``textstats._words`` grams bucketed by the 60-bit
+md5 gate ``utils._md5_60``, and the Gumbel keys come from the same
+gate, so the resample is deterministic too.
 """
 
 from __future__ import annotations
@@ -31,29 +33,22 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from kolang_spark.llm.textstats import tokenize, word_ngrams
+from kolang_spark.llm.textstats import MICRO, _ln_smoothed, _micro, _words, word_ngrams
+from kolang_spark.utils import _md5_60
 
 __all__ = ["dsir_logratios", "dsir_resample"]
-
-_MICRO = 1e6
 
 
 def _feature_buckets(
     text_col: str, hash_buckets: int, use_bigrams: bool, lowercase: bool
 ) -> Column:
-    """Hashed (uni+bi)gram feature array: each gram → a 60-bit md5
-    integer mod ``hash_buckets`` (the engine-portable hash gate idiom —
-    DuckDB computes the identical bucket)."""
-    toks = tokenize(F.col(text_col))
-    if lowercase:
-        toks = F.transform(toks, lambda t: F.lower(t))
-    toks = F.filter(toks, lambda t: t != "")
+    """Hashed (uni+bi)gram feature array: each gram → its 60-bit md5
+    bucket (:func:`utils._md5_60`) mod ``hash_buckets``, so DuckDB
+    computes the identical bucket."""
+    toks = F.filter(_words(text_col, lowercase), lambda t: t != "")
     grams = F.concat(toks, word_ngrams(toks, 2)) if use_bigrams else toks
     return F.transform(
-        grams,
-        lambda g: F.conv(F.substring(F.md5(F.encode(g, "UTF-8")), 18, 15), 16, 10)
-        .cast("long")
-        % hash_buckets,
+        grams, lambda g: _md5_60(F.encode(g, "UTF-8")) % hash_buckets
     )
 
 
@@ -107,15 +102,10 @@ def dsir_logratios(
         F.coalesce(F.sum("__cr__"), F.lit(0)).alias("__tr__"),
     )
 
-    a = F.lit(float(alpha))
     b = F.lit(float(hash_buckets))
-    ln_t = F.log(F.coalesce(F.col("__ct__"), F.lit(0)).cast("double") + a) - F.log(
-        F.col("__tt__").cast("double") + a * b
-    )
-    ln_r = F.log(F.coalesce(F.col("__cr__"), F.lit(0)).cast("double") + a) - F.log(
-        F.col("__tr__").cast("double") + a * b
-    )
-    contrib = F.round((ln_t - ln_r) * F.lit(_MICRO)).cast("long")
+    ln_t = _ln_smoothed(F.col("__ct__"), F.col("__tt__"), alpha, b)
+    ln_r = _ln_smoothed(F.col("__cr__"), F.col("__tr__"), alpha, b)
+    contrib = _micro(ln_t - ln_r)
 
     ex = df.select(
         F.col(id_col),
@@ -140,7 +130,7 @@ def dsir_logratios(
         "logratio_micro",
         (
             F.col("logratio_micro").cast("double")
-            / (F.col("n_feats").cast("double") * F.lit(_MICRO))
+            / (F.col("n_feats").cast("double") * F.lit(MICRO))
         ).alias("avg_logratio"),
     )
 
@@ -175,21 +165,11 @@ def dsir_resample(
         raise ValueError("temperature must be > 0")
     lr = dsir_logratios(df, target, id_col=id_col, text_col=text_col, **logratio_kwargs)
     score = F.col("avg_logratio") if normalize else (
-        F.col("logratio_micro").cast("double") / F.lit(_MICRO)
+        F.col("logratio_micro").cast("double") / F.lit(MICRO)
     )
     # u in (0,1): 60-bit md5 slice, +1 to dodge exact zero
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.encode(F.concat(F.col(id_col).cast("string"), F.lit(salt)), "UTF-8")),
-                18,
-                15,
-            ),
-            16,
-            10,
-        ).cast("double")
-        + F.lit(1.0)
-    ) / F.lit(float(1 << 60))
+    h = _md5_60(F.encode(F.concat(F.col(id_col).cast("string"), F.lit(salt)), "UTF-8"))
+    u = (h.cast("double") + F.lit(1.0)) / F.lit(float(1 << 60))
     gumbel = -F.log(-F.log(u))
     keyed = lr.where(F.col("logratio_micro").isNotNull()).select(
         id_col,

@@ -30,12 +30,12 @@ embarrassingly parallel. Class count L multiplies the join fan-out
 this targets; for hundreds of languages, pre-aggregate per (doc,
 bucket) counts first.
 
-Float determinism: weights and priors are integer MICRO-nats
-(``round(ln · 1e6)``), so per-document scores are exact long sums —
-order-independent across partitions/retries and replayable
-bit-for-bit by a DuckDB oracle (same fixed-point idiom as
-``llm/classify.py`` / ``llm/lmscore.py``). Bucket hashing is the
-engine-portable md5→60-bit→mod gate from ``llm/dsir.py``.
+Float determinism: weights and priors are integer micro-nats
+(``textstats._micro``; the weights of ``textstats._ln_smoothed``), so
+per-document scores are exact long sums — order-independent across
+partitions/retries and replayable bit-for-bit by a DuckDB oracle.
+Bucket hashing is the engine-portable 60-bit md5 gate
+``utils._md5_60``, mod the bucket count.
 """
 
 from __future__ import annotations
@@ -45,11 +45,10 @@ from typing import Tuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from kolang_spark.utils import ColumnOrName, to_col
+from kolang_spark.llm.textstats import _ln_smoothed, _micro
+from kolang_spark.utils import ColumnOrName, _md5_60, to_col
 
 __all__ = ["char_ngram_buckets", "train_char_langid", "classify_lang"]
-
-_MICRO = 1e6
 
 
 def char_ngram_buckets(
@@ -63,9 +62,9 @@ def char_ngram_buckets(
     Canonical form: lowercase, whitespace collapsed to single spaces,
     one boundary space on each end (so word-initial/final grams are
     distinct features — the Cavnar-Trenkle trick). For each n in
-    [n_min, n_max], every length-n substring; each gram → 60-bit md5
-    integer mod ``hash_buckets`` (engine-portable: DuckDB computes the
-    identical bucket via ``('0x' || substr(md5(g), 18, 15))::BIGINT``).
+    [n_min, n_max], every length-n substring; each gram → its 60-bit
+    md5 bucket (:func:`utils._md5_60`) mod ``hash_buckets``, so DuckDB
+    computes the identical bucket.
     NULL/blank text → empty array. Pure Column algebra — no UDF.
     """
     if not 1 <= n_min <= n_max:
@@ -78,20 +77,15 @@ def char_ngram_buckets(
     )
     ln = F.length(canon)
 
-    def hash_gram(g: Column) -> Column:
-        return (
-            F.conv(F.substring(F.md5(F.encode(g, "UTF-8")), 18, 15), 16, 10)
-            .cast("long")
-            % hash_buckets
-        )
-
     def gram_at(n: int):
         # a real closure, NOT ``lambda i, n=n``: PySpark derives the
         # HOF lambda's arity from its parameter count, and a
         # two-parameter lambda becomes the (element, index) binary
         # form — the default-arg trick silently binds n to the array
         # INDEX and hashes garbage substrings
-        return lambda i: hash_gram(F.substring(canon, i, n))
+        return lambda i: (
+            _md5_60(F.encode(F.substring(canon, i, n), "UTF-8")) % hash_buckets
+        )
 
     per_n = []
     for n in range(n_min, n_max + 1):
@@ -129,10 +123,12 @@ def train_char_langid(
     * ``priors`` — ``(lang, prior_micro)`` with
       ``prior = ln(docs_lang / docs_total)``.
 
-    One explode + hash aggregate over the corpus; the dense grid is a
-    ``spark.range(B)`` cross-joined with the (tiny, broadcast)
-    language list, left-joined to the counts — never a corpus-sized
-    structure.
+    One explode + hash aggregate over the corpus, pinned eagerly (at
+    most B × languages rows) so the language totals and the grid's join
+    read the pin instead of each exploding and hashing the corpus
+    again; the dense grid is a ``spark.range(B)`` cross-joined with the
+    (tiny, broadcast) language list, left-joined to the counts — never
+    a corpus-sized structure.
     """
     if alpha <= 0:
         raise ValueError("alpha must be > 0")
@@ -146,6 +142,7 @@ def train_char_langid(
         )
         .groupBy("lang", "bucket")
         .agg(F.count(F.lit(1)).cast("long").alias("__c__"))
+        .localCheckpoint(eager=True)
     )
     tots = counts.groupBy("lang").agg(F.sum("__c__").cast("long").alias("__tot__"))
     spark = df.sparkSession
@@ -157,18 +154,11 @@ def train_char_langid(
         .select(
             "bucket",
             "lang",
-            F.round(
-                (
-                    F.log(F.coalesce(F.col("__c__"), F.lit(0)).cast("double") + F.lit(float(alpha)))
-                    - F.log(
-                        F.col("__tot__").cast("double")
-                        + F.lit(float(alpha)) * F.lit(float(hash_buckets))
-                    )
+            _micro(
+                _ln_smoothed(
+                    F.col("__c__"), F.col("__tot__"), alpha, F.lit(float(hash_buckets))
                 )
-                * F.lit(_MICRO)
-            )
-            .cast("long")
-            .alias("w_micro"),
+            ).alias("w_micro"),
         )
     )
     docs = df.select(lab.alias("lang")).groupBy("lang").agg(
@@ -177,12 +167,9 @@ def train_char_langid(
     total = docs.agg(F.sum("__d__").alias("__t__"))
     priors = docs.crossJoin(F.broadcast(total)).select(
         "lang",
-        F.round(
-            (F.log(F.col("__d__").cast("double")) - F.log(F.col("__t__").cast("double")))
-            * F.lit(_MICRO)
-        )
-        .cast("long")
-        .alias("prior_micro"),
+        _micro(
+            F.log(F.col("__d__").cast("double")) - F.log(F.col("__t__").cast("double"))
+        ).alias("prior_micro"),
     )
     return grid, priors
 

@@ -15,10 +15,10 @@ aggregate. The vocabulary/total constants ride a 1-row broadcast. No
 window, no UDF, no driver state.
 
 Float determinism: per-token log contributions are rounded to integer
-micro-nats BEFORE the per-document sum, so the aggregate is an exact
-long sum (order-independent across partitions/retries) — the same
-fixed-point idiom as the engine's revenue sums — and an external SQL
-oracle reproduces the score bit-exactly.
+micro-nats (``textstats._micro``) BEFORE the per-document sum, so the
+aggregate is an exact long sum (order-independent across
+partitions/retries) and an external SQL oracle reproduces the score
+bit-exactly. Tokens follow ``textstats._words``.
 """
 
 from __future__ import annotations
@@ -28,7 +28,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kolang_spark.llm.textstats import tokenize
+from kolang_spark.llm.textstats import MICRO, _micro, _words
 
 __all__ = ["unigram_lm_scores", "bigram_lm_scores", "perplexity_buckets"]
 
@@ -66,16 +66,9 @@ def unigram_lm_scores(
     """
     if alpha <= 0:
         raise ValueError("alpha must be > 0")
-    toks = tokenize(F.col(text_col))
-    if lowercase:
-        toks = F.transform(toks, lambda t: F.lower(t))
-
     src = lm_df if lm_df is not None else df
-    lm_toks = tokenize(F.col(text_col))
-    if lowercase:
-        lm_toks = F.transform(lm_toks, lambda t: F.lower(t))
     counts = (
-        src.select(F.explode_outer(lm_toks).alias("__tok__"))
+        src.select(F.explode_outer(_words(text_col, lowercase)).alias("__tok__"))
         .where(F.col("__tok__") != "")
         .groupBy("__tok__")
         .agg(F.count(F.lit(1)).cast("long").alias("__cnt__"))
@@ -85,20 +78,16 @@ def unigram_lm_scores(
         F.count(F.lit(1)).alias("__vocab__"),
     )
 
-    ex = df.select(F.col(id_col), F.explode_outer(toks).alias("__tok__")).where(
-        F.col("__tok__").isNotNull() & (F.col("__tok__") != "")
-    )
+    ex = df.select(
+        F.col(id_col), F.explode_outer(_words(text_col, lowercase)).alias("__tok__")
+    ).where(F.col("__tok__").isNotNull() & (F.col("__tok__") != ""))
     # micro-nat fixed point: exact long sum, order-independent
-    contrib = F.round(
-        F.log(F.col("__cnt__").cast("double") + F.lit(float(alpha))) * 1e6
-    ).cast("long")
+    contrib = _micro(F.log(F.col("__cnt__").cast("double") + F.lit(float(alpha))))
     scored = (
         ex.join(counts, "__tok__", "left")
         .select(
             id_col,
-            F.coalesce(contrib, F.round(F.log(F.lit(float(alpha))) * 1e6).cast("long")).alias(
-                "__c__"
-            ),
+            F.coalesce(contrib, _micro(F.log(F.lit(float(alpha))))).alias("__c__"),
         )
         .groupBy(id_col)
         .agg(
@@ -113,7 +102,7 @@ def unigram_lm_scores(
     out = scored.crossJoin(F.broadcast(consts)).select(
         id_col,
         "n_tokens",
-        (denom - F.col("__sum__") / (F.col("n_tokens") * F.lit(1e6))).alias(
+        (denom - F.col("__sum__") / (F.col("n_tokens") * F.lit(MICRO))).alias(
             "avg_neg_logprob"
         ),
     )
@@ -163,18 +152,12 @@ def bigram_lm_scores(
     if not 0.0 < lam < 1.0:
         raise ValueError("lam must be in (0, 1)")
 
-    def toks_of(c):
-        t = tokenize(c)
-        if lowercase:
-            t = F.transform(t, lambda x: F.lower(x))
-        return F.filter(t, lambda x: x != "")
-
     def pair_stream(frame: DataFrame, with_id: bool) -> DataFrame:
         """Positional (prev, cur) stream; position 0 gets the BOS
         context. Built from one posexplode with the token array
         carried alongside (``element_at(pos)`` for the predecessor) —
         no self-join, no window."""
-        t = toks_of(F.col(text_col))
+        t = F.filter(_words(text_col, lowercase), lambda x: x != "")
         cols = [F.col(id_col)] if with_id else []
         base = frame.select(*cols, t.alias("__t__"))
         return base.select(
@@ -211,7 +194,7 @@ def bigram_lm_scores(
         F.col("__total__").cast("double") + a * F.col("__vocab__").cast("double")
     )
     p = F.lit(float(lam)) * p_bi + F.lit(1.0 - float(lam)) * p_uni
-    contrib = F.round(-F.log(p) * F.lit(1e6)).cast("long")
+    contrib = _micro(-F.log(p))
 
     ex = pair_stream(df, with_id=True)
     scored = (
@@ -231,7 +214,7 @@ def bigram_lm_scores(
         "n_tokens",
         (
             F.col("__sum__").cast("double")
-            / (F.col("n_tokens").cast("double") * F.lit(1e6))
+            / (F.col("n_tokens").cast("double") * F.lit(MICRO))
         ).alias("avg_neg_logprob"),
     )
     spine = df.select(F.col(id_col)).distinct()

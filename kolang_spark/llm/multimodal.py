@@ -37,7 +37,7 @@ from __future__ import annotations
 from typing import Optional, Tuple
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -150,6 +150,28 @@ def synth_ppm_blobs(
     return df.withColumn(out, blob)
 
 
+def _hex2(c: Column) -> Column:
+    """One byte as two hex digits."""
+    return F.lpad(F.hex(c), 2, "0")
+
+
+def _hex8(c: Column) -> Column:
+    """A 32-bit value as eight big-endian hex digits."""
+    return F.lpad(F.hex(c), 8, "0")
+
+
+def _le16(c: Column) -> Column:
+    """A 16-bit value as four little-endian hex digits."""
+    return F.concat(_hex2(c % 256), _hex2(((c - c % 256) / 256).cast("long")))
+
+
+def _le32(c: Column) -> Column:
+    """A 32-bit value as eight little-endian hex digits."""
+    lo = c % 65536
+    hi = ((c - lo) / 65536).cast("long")
+    return F.concat(_le16(lo), _le16(hi))
+
+
 def synth_png_blobs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -183,15 +205,6 @@ def synth_png_blobs(
     def byte_at(j):  # pixel byte j (row-major, filter bytes excluded)
         return (i * 7 + j * 13) % 256
 
-    def hex2(c):
-        return F.lpad(F.hex(c), 2, "0")
-
-    def hex8(c):
-        return F.lpad(F.hex(c), 8, "0")
-
-    def le16(c):  # 2-byte little-endian hex
-        return F.concat(hex2(c % 256), hex2(((c - c % 256) / 256).cast("long")))
-
     # raw stream: per row, one 0x00 filter byte then the row's pixels
     raw_hex = F.array_join(
         F.transform(
@@ -201,7 +214,7 @@ def synth_png_blobs(
                 F.array_join(
                     F.transform(
                         F.sequence(F.lit(0).cast("long"), rowbytes - 1),
-                        lambda k: hex2(byte_at(r * rowbytes + k)),
+                        lambda k: _hex2(byte_at(r * rowbytes + k)),
                     ),
                     "",
                 ),
@@ -231,28 +244,28 @@ def synth_png_blobs(
     )
     adler_a = (s_sum + 1) % 65521
     adler_b = (stream_len + w_sum) % 65521
-    adler_hex = hex8(adler_b * 65536 + adler_a)
+    adler_hex = _hex8(adler_b * 65536 + adler_a)
 
     # zlib: 0x78 0x01 header, one final stored block (BFINAL=1 BTYPE=00),
     # LEN/NLEN little-endian, raw bytes, adler32 big-endian
     z_hex = F.concat(
         F.lit("780101"),
-        le16(stream_len),
-        le16(65535 - stream_len),
+        _le16(stream_len),
+        _le16(65535 - stream_len),
         raw_hex,
         adler_hex,
     )
 
-    ihdr_data_hex = F.concat(hex8(w), hex8(h), F.lit("0802000000"))
-    crc_ihdr = hex8(F.crc32(F.unhex(F.concat(F.lit("49484452"), ihdr_data_hex))))
-    crc_idat = hex8(F.crc32(F.unhex(F.concat(F.lit("49444154"), z_hex))))
+    ihdr_data_hex = F.concat(_hex8(w), _hex8(h), F.lit("0802000000"))
+    crc_ihdr = _hex8(F.crc32(F.unhex(F.concat(F.lit("49484452"), ihdr_data_hex))))
+    crc_idat = _hex8(F.crc32(F.unhex(F.concat(F.lit("49444154"), z_hex))))
 
     blob_hex = F.concat(
         F.lit("89504E470D0A1A0A"),  # PNG signature
         F.lit("0000000D49484452"),  # IHDR length + type
         ihdr_data_hex,
         crc_ihdr,
-        hex8(stream_len + 11),  # IDAT length (zlib hdr 2 + stored hdr 5 + L + adler 4)
+        _hex8(stream_len + 11),  # IDAT length (zlib hdr 2 + stored hdr 5 + L + adler 4)
         F.lit("49444154"),
         z_hex,
         crc_idat,
@@ -299,33 +312,27 @@ def synth_gif_blobs(
     nf = (i % 3 + 2).cast("long")
     npix = w * h
 
-    def hex2(c):
-        return F.lpad(F.hex(c), 2, "0")
-
-    def le16(c):
-        return F.concat(hex2(c % 256), hex2(((c - c % 256) / 256).cast("long")))
-
     frames_hex = F.array_join(
         F.transform(
             F.sequence(F.lit(0).cast("long"), nf - 1),
             lambda f: F.concat(
                 # Graphic Control Extension: delay = frame index (cs)
                 F.lit("21F90400"),
-                le16(f),
+                _le16(f),
                 F.lit("0000"),
                 # Image Descriptor at (0,0), no local color table
                 F.lit("2C00000000"),
-                le16(w),
-                le16(h),
+                _le16(w),
+                _le16(h),
                 F.lit("00"),
                 # LZW: min code size 7, one sub-block of npix+2 codes
                 F.lit("07"),
-                hex2(npix + 2),
+                _hex2(npix + 2),
                 F.lit("80"),  # CLEAR
                 F.array_join(
                     F.transform(
                         F.sequence(F.lit(0).cast("long"), npix - 1),
-                        lambda p: hex2((i * 7 + f * 31 + p * 13) % 128),
+                        lambda p: _hex2((i * 7 + f * 31 + p * 13) % 128),
                     ),
                     "",
                 ),
@@ -336,8 +343,8 @@ def synth_gif_blobs(
     )
     blob_hex = F.concat(
         F.lit("474946383961"),  # "GIF89a"
-        le16(w),
-        le16(h),
+        _le16(w),
+        _le16(h),
         # LSD packed: GCT present, color res 7, table size 2^7
         F.lit("F60000"),
         F.lit(_GIF_PALETTE_HEX),
@@ -371,43 +378,29 @@ def synth_wav_blobs(
     n = (i % 64 + 64).cast("long")
     data_size = n * 2
 
-    def hex2(c):
-        return F.lpad(F.hex(c), 2, "0")
-
-    def le16(c):
-        return F.concat(hex2(c % 256), hex2(((c - c % 256) / 256).cast("long")))
-
-    def le32(c):
-        lo = c % 65536
-        hi = ((c - lo) / 65536).cast("long")
-        return F.concat(le16(lo), le16(hi))
-
-    def le32_const(v: int) -> str:
-        return bytes([v & 255, (v >> 8) & 255, (v >> 16) & 255, (v >> 24) & 255]).hex().upper()
-
     # unsigned 16-bit word per sample: (id*31 + k*17) % 65536 is the
     # two's-complement bit pattern of the int16 sample — emit it LE
     samples_hex = F.array_join(
         F.transform(
             F.sequence(F.lit(0).cast("long"), n - 1),
-            lambda k: le16((i * 31 + k * 17) % 65536),
+            lambda k: _le16((i * 31 + k * 17) % 65536),
         ),
         "",
     )
     blob_hex = F.concat(
         F.lit("52494646"),  # 'RIFF'
-        le32(data_size + 36),
+        _le32(data_size + 36),
         F.lit("57415645"),  # 'WAVE'
         F.lit("666D7420"),  # 'fmt '
-        F.lit(le32_const(16)),  # fmt chunk size
+        _le32(F.lit(16)),  # fmt chunk size
         F.lit("0100"),  # PCM
         F.lit("0100"),  # mono
-        F.lit(le32_const(sample_rate)),
-        F.lit(le32_const(sample_rate * 2)),  # byte rate
+        _le32(F.lit(sample_rate)),
+        _le32(F.lit(sample_rate * 2)),  # byte rate
         F.lit("0200"),  # block align
         F.lit("1000"),  # 16 bits
         F.lit("64617461"),  # 'data'
-        le32(data_size),
+        _le32(data_size),
         samples_hex,
     )
     return df.withColumn(out, F.unhex(blob_hex))
@@ -1359,7 +1352,7 @@ def frame_index_ahash(indices: "F.Column") -> "F.Column":
     )
 
 
-def _le32(v: int) -> bytes:
+def _le32_bytes(v: int) -> bytes:
     return int(v).to_bytes(4, "little")
 
 
@@ -1367,7 +1360,7 @@ def _riff_chunk(tag: bytes, payload: bytes) -> bytes:
     """One RIFF chunk: fourcc + u32 little-endian size + payload,
     padded to even length (the RIFF word-alignment rule)."""
     pad = b"\x00" if len(payload) % 2 else b""
-    return tag + _le32(len(payload)) + payload + pad
+    return tag + _le32_bytes(len(payload)) + payload + pad
 
 
 def _riff_list(list_type: bytes, payload: bytes) -> bytes:
@@ -1383,33 +1376,33 @@ def _build_avi(frames_jpeg, w: int, h: int, usec_per_frame: int) -> bytes:
     nf = len(frames_jpeg)
     avih = b"".join(
         [
-            _le32(usec_per_frame),  # dwMicroSecPerFrame
-            _le32(0),  # dwMaxBytesPerSec
-            _le32(0),  # dwPaddingGranularity
-            _le32(0),  # dwFlags
-            _le32(nf),  # dwTotalFrames
-            _le32(0),  # dwInitialFrames
-            _le32(1),  # dwStreams
-            _le32(0),  # dwSuggestedBufferSize
-            _le32(w),
-            _le32(h),
-            _le32(0) * 4,  # dwReserved
+            _le32_bytes(usec_per_frame),  # dwMicroSecPerFrame
+            _le32_bytes(0),  # dwMaxBytesPerSec
+            _le32_bytes(0),  # dwPaddingGranularity
+            _le32_bytes(0),  # dwFlags
+            _le32_bytes(nf),  # dwTotalFrames
+            _le32_bytes(0),  # dwInitialFrames
+            _le32_bytes(1),  # dwStreams
+            _le32_bytes(0),  # dwSuggestedBufferSize
+            _le32_bytes(w),
+            _le32_bytes(h),
+            _le32_bytes(0) * 4,  # dwReserved
         ]
     )
     strh = b"".join(
         [
             b"vids",
             b"MJPG",
-            _le32(0),  # dwFlags
-            _le32(0),  # wPriority + wLanguage
-            _le32(0),  # dwInitialFrames
-            _le32(1),  # dwScale
-            _le32(max(1, 1_000_000 // max(1, usec_per_frame))),  # dwRate
-            _le32(0),  # dwStart
-            _le32(nf),  # dwLength
-            _le32(0),  # dwSuggestedBufferSize
-            _le32(0xFFFFFFFF),  # dwQuality (-1: default)
-            _le32(0),  # dwSampleSize
+            _le32_bytes(0),  # dwFlags
+            _le32_bytes(0),  # wPriority + wLanguage
+            _le32_bytes(0),  # dwInitialFrames
+            _le32_bytes(1),  # dwScale
+            _le32_bytes(max(1, 1_000_000 // max(1, usec_per_frame))),  # dwRate
+            _le32_bytes(0),  # dwStart
+            _le32_bytes(nf),  # dwLength
+            _le32_bytes(0),  # dwSuggestedBufferSize
+            _le32_bytes(0xFFFFFFFF),  # dwQuality (-1: default)
+            _le32_bytes(0),  # dwSampleSize
             (0).to_bytes(2, "little") * 2  # rcFrame left/top
             + int(w).to_bytes(2, "little")
             + int(h).to_bytes(2, "little"),
@@ -1417,14 +1410,14 @@ def _build_avi(frames_jpeg, w: int, h: int, usec_per_frame: int) -> bytes:
     )
     strf = b"".join(
         [
-            _le32(40),  # biSize
-            _le32(w),
-            _le32(h),
+            _le32_bytes(40),  # biSize
+            _le32_bytes(w),
+            _le32_bytes(h),
             (1).to_bytes(2, "little"),  # biPlanes
             (24).to_bytes(2, "little"),  # biBitCount
             b"MJPG",  # biCompression
-            _le32(w * h * 3),  # biSizeImage
-            _le32(0) * 4,  # xpels/ypels/clrused/clrimportant
+            _le32_bytes(w * h * 3),  # biSizeImage
+            _le32_bytes(0) * 4,  # xpels/ypels/clrused/clrimportant
         ]
     )
     hdrl = _riff_list(
@@ -1438,7 +1431,7 @@ def _build_avi(frames_jpeg, w: int, h: int, usec_per_frame: int) -> bytes:
         b"movi", b"".join(_riff_chunk(b"00dc", j) for j in frames_jpeg)
     )
     body = b"AVI " + hdrl + movi
-    return b"RIFF" + _le32(len(body)) + body
+    return b"RIFF" + _le32_bytes(len(body)) + body
 
 
 def synth_avi_blobs(

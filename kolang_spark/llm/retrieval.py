@@ -14,9 +14,10 @@ pair, and the top-k is a (query-partitioned) window — never global.
 Corpus constants (N, avgdl) ride a 1-row broadcast.
 
 Float determinism: per-term BM25 contributions are rounded to integer
-micro-units before the per-pair sum (the engine's standard fixed-point
-idiom), so scores are exact longs — order-independent under partial
-aggregation and bit-for-bit replayable by a SQL oracle.
+micro-units (``textstats._micro``) before the per-pair sum, so scores
+are exact longs — order-independent under partial aggregation and
+bit-for-bit replayable by a SQL oracle. Documents and queries are
+tokenized by ``textstats._words``.
 """
 
 from __future__ import annotations
@@ -25,18 +26,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kolang_spark.llm.similarity import _cos, _rank_topk, _vectors
-from kolang_spark.llm.textstats import tokenize
+from kolang_spark.llm.textstats import MICRO, _micro, _words
 
 __all__ = ["bm25_topk", "mmr_rerank", "retrieval_metrics"]
-
-_MICRO = 1e6
-
-
-def _tok(text_col: str, lowercase: bool):
-    t = tokenize(F.col(text_col))
-    if lowercase:
-        t = F.transform(t, lambda x: F.lower(x))
-    return F.filter(t, lambda x: x != "")
 
 
 def bm25_topk(
@@ -68,7 +60,7 @@ def bm25_topk(
     # postings: (term, doc, tf) + doc length
     toks = docs.select(
         F.col(id_col).alias("__d__"),
-        F.explode(_tok(text_col, lowercase)).alias("term"),
+        F.explode(F.filter(_words(text_col, lowercase), lambda x: x != "")).alias("term"),
     )
     tf = toks.groupBy("__d__", "term").agg(
         F.count(F.lit(1)).cast("long").alias("tf")
@@ -83,7 +75,9 @@ def bm25_topk(
     qterms = (
         queries.select(
             F.col(query_id_col).alias("query_id"),
-            F.explode(_tok(query_text_col, lowercase)).alias("term"),
+            F.explode(
+                F.filter(_words(query_text_col, lowercase), lambda x: x != "")
+            ).alias("term"),
         )
         .distinct()
     )
@@ -107,7 +101,7 @@ def bm25_topk(
         + F.lit(float(k1))
         * (F.lit(1.0 - float(b)) + F.lit(float(b)) * F.col("dl").cast("double") / avgdl)
     )
-    contrib = F.round(idf * tfn * F.lit(_MICRO)).cast("long")
+    contrib = _micro(idf * tfn)
 
     # tf ⋈ dl is the one corpus×corpus join — an equi-join on the doc
     # id, the natural co-partitioning (both sides are aggregates of the
@@ -125,7 +119,7 @@ def bm25_topk(
         .select(
             "query_id",
             F.col("__d__").alias(id_col),
-            (F.col("__s__").cast("double") / F.lit(_MICRO)).alias("score"),
+            (F.col("__s__").cast("double") / F.lit(MICRO)).alias("score"),
             "rank",
         )
     )

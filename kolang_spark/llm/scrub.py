@@ -459,7 +459,7 @@ def flag_blocked_terms(
     """
     from pyspark.sql import DataFrame as _DF
 
-    from kolang_spark.llm.textstats import tokenize, word_ngrams
+    from kolang_spark.llm.textstats import _words, word_ngrams
 
     if isinstance(terms, _DF):
         entries = [
@@ -485,10 +485,7 @@ def flag_blocked_terms(
     spark = df.sparkSession
     tdf = spark.createDataFrame([(t,) for t in norm], ["g"])
 
-    toks = tokenize(F.col(text_col))
-    if lowercase:
-        toks = F.transform(toks, lambda t: F.lower(t))
-    toks = F.filter(toks, lambda t: t != "")
+    toks = F.filter(_words(text_col, lowercase), lambda t: t != "")
 
     gram_frames = []
     for ln in lengths:

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from kolang_spark.llm.textstats import tokenize, word_ngrams
+from kolang_spark.llm.textstats import _micro, _words, tokenize, word_ngrams
 
 __all__ = ["tfidf_top_terms", "vocabulary", "ngram_novelty", "pmi_collocations", "oov_stats"]
 
@@ -41,9 +41,7 @@ def tfidf_top_terms(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    toks = tokenize(F.col(text_col))
-    if lowercase:
-        toks = F.transform(toks, lambda t: F.lower(t))
+    toks = _words(text_col, lowercase)
     # explode_outer, not explode: bare explode makes the optimizer infer
     # and push `size(toks)>0`, re-running the tokenizer in the filter;
     # the existing `term != ''` already drops the outer NULL rows
@@ -100,9 +98,7 @@ def vocabulary(
         raise ValueError("max_size must be >= 1")
     if min_df < 1:
         raise ValueError("min_df must be >= 1")
-    toks = tokenize(F.col(text_col))
-    if lowercase:
-        toks = F.transform(toks, lambda t: F.lower(t))
+    toks = _words(text_col, lowercase)
     # explode_outer: see tfidf_top_terms — bare explode would push a
     # size()>0 filter that re-runs the tokenizer expression
     terms = df.select(F.col(id_col), F.explode_outer(toks).alias("term")).where(
@@ -212,9 +208,9 @@ def pmi_collocations(
     no UDF, no driver collect.
 
     Determinism: PMI is stored as exact micro-nats
-    (``round(ln(·)·1e6)`` — the engine's fixed-point idiom), and the
-    top-k order is total: ``pmi_micro`` desc, then ``(term_a,
-    term_b)`` asc, so the selected set is engine-reproducible.
+    (``textstats._micro`` of ``ln(·)``), and the top-k order is total:
+    ``pmi_micro`` desc, then ``(term_a, term_b)`` asc, so the selected
+    set is engine-reproducible.
 
     Returns ``(term_a, term_b, c_ab, c_a, c_b, pmi_micro)``.
     """
@@ -222,10 +218,7 @@ def pmi_collocations(
         raise ValueError("top_k must be >= 1")
     if min_count < 1:
         raise ValueError("min_count must be >= 1")
-    toks = tokenize(F.col(text_col))
-    if lowercase:
-        toks = F.transform(toks, lambda t: F.lower(t))
-    toks = F.filter(toks, lambda t: t != "")
+    toks = F.filter(_words(text_col, lowercase), lambda t: t != "")
 
     big = df.select(F.explode_outer(word_ngrams(toks, 2)).alias("bg")).where(
         F.col("bg").isNotNull()
@@ -247,13 +240,12 @@ def pmi_collocations(
     # fixed parenthesization (c_ab·N) / (c_a·c_b), doubles first — the
     # oracle mirrors it exactly; integer products could overflow at
     # corpus scale
-    pmi = F.round(
+    pmi = _micro(
         F.log(
             (F.col("c_ab").cast("double") * F.col("__n_total__"))
             / (F.col("c_a").cast("double") * F.col("c_b").cast("double"))
         )
-        * F.lit(1e6)
-    ).cast("long")
+    )
     return (
         pairs.join(a, "term_a")
         .join(b, "term_b")
@@ -297,9 +289,7 @@ def oov_stats(
         F.col(term_col).cast("string").alias("__vt__"),
         F.lit(True).alias("__in_vocab__"),
     ).distinct()
-    toks = tokenize(F.col(text_col))
-    if lowercase:
-        toks = F.transform(toks, lambda t: F.lower(t))
+    toks = _words(text_col, lowercase)
     terms = df.select(
         F.col(id_col), F.explode_outer(toks).alias("__t__")
     ).where((F.col("__t__") != "") & F.col("__t__").isNotNull())

@@ -3,6 +3,14 @@ fingerprinting, SimHash — all pure Column algebra (no UDFs).
 
 Scale posture: every function here is a per-row scalar expression —
 embarrassingly parallel, codegen-compiled, no shuffle, no Python.
+
+It also holds the fixed-point core of the count-model text scorers
+(language ID, the log-odds classifier, DSIR, the LMs, BM25, PMI), which
+the DuckDB oracle replays with the same arithmetic: one token rule
+(:func:`_words`), integer micro-units (:data:`MICRO`, :func:`_micro`)
+and one additively-smoothed log-probability (:func:`_ln_smoothed`).
+Their hashed features use the 60-bit md5 gate
+:func:`kolang_spark.utils._md5_60`.
 """
 
 from __future__ import annotations
@@ -12,7 +20,7 @@ from typing import Dict, List, Optional
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from kolang_spark.utils import ColumnOrName, bind_once, to_col
+from kolang_spark.utils import ColumnOrName, _md5_60, bind_once, to_col
 
 __all__ = [
     "tokenize",
@@ -31,6 +39,38 @@ def tokenize(col: ColumnOrName, pattern: str = r"\s+") -> Column:
     c = F.trim(to_col(col))
     return F.when(c == "", F.array().cast("array<string>")).otherwise(
         F.split(c, pattern)
+    )
+
+
+def _words(col: ColumnOrName, lowercase: bool) -> Column:
+    """The scorers' token rule: :func:`tokenize`, then each token
+    lowercased when ``lowercase``. Empty tokens stay in the array; each
+    caller drops them where its plan always has (in the array, or after
+    the explode)."""
+    t = tokenize(col)
+    if lowercase:
+        t = F.transform(t, lambda x: F.lower(x))
+    return t
+
+
+MICRO = 1e6
+"""Micro-units per unit: the scorers store ``round(x · MICRO)`` longs,
+so per-document sums are exact and order-independent."""
+
+
+def _micro(x: Column) -> Column:
+    """``x`` in integer micro-units: ``round(x · MICRO)`` as a long."""
+    return F.round(x * F.lit(MICRO)).cast("long")
+
+
+def _ln_smoothed(cnt: Column, tot: Column, alpha: float, size: Column) -> Column:
+    """Additively-smoothed log-probability
+    ``ln(coalesce(cnt, 0) + α) − ln(tot + α·size)`` over an event space
+    of ``size`` (a double Column); a NULL ``cnt`` (an unseen event) gets
+    the smoothed floor."""
+    a = F.lit(float(alpha))
+    return F.log(F.coalesce(cnt, F.lit(0)).cast("double") + a) - F.log(
+        tot.cast("double") + a * size
     )
 
 
@@ -248,18 +288,15 @@ def _token_hash60(token: Column, hash_fn: str = "xxhash64") -> Column:
     Signed 64-bit, but simhash only inspects bits 0..59, where two's
     complement agrees with the unsigned bit pattern.
 
-    ``hash_fn='md5'``: md5 hex → conv of 15 hex chars.
-    Engine-portable: DuckDB computes the same value with
-    ``('0x' || substr(md5(t), 18, 15))::BIGINT`` — the knob the
-    oracle-replayed driver queries pin explicitly (oracle isolation).
+    ``hash_fn='md5'``: the engine-portable gate of
+    :func:`kolang_spark.utils._md5_60` — the knob the oracle-replayed
+    driver queries pin explicitly (oracle isolation).
     """
     if hash_fn == "xxhash64":
         return F.xxhash64(token)
     if hash_fn != "md5":
         raise ValueError("hash_fn must be 'md5' or 'xxhash64'")
-    return F.conv(F.substring(F.md5(F.encode(token, "UTF-8")), 18, 15), 16, 10).cast(
-        "long"
-    )
+    return _md5_60(F.encode(token, "UTF-8"))
 
 
 def simhash(col: ColumnOrName, bits: int = 16, hash_fn: str = "xxhash64") -> Column:

@@ -26,6 +26,8 @@ from typing import List, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kolang_spark.utils import _jvm_session
+
 __all__ = ["morton_code", "with_zorder_key", "zorder_by"]
 
 
@@ -86,11 +88,13 @@ def zorder_by(
     if missing:
         raise ValueError(f"unknown columns: {sorted(missing)}")
     coded = with_zorder_key(df, cols, bits, key_col="__ks_zorder__")
-    try:
-        default_parts = df.sparkSession.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect: no sparkContext — same guard as
-        default_parts = 200  # ensure_min_parallelism; shuffle default
-    parts = num_partitions or default_parts
+    spark = df.sparkSession
+    if num_partitions:
+        parts = num_partitions
+    elif _jvm_session(spark) is None:  # no sparkContext: shuffle default
+        parts = 200
+    else:
+        parts = spark.sparkContext.defaultParallelism
     return (
         coded.repartitionByRange(parts, F.col("__ks_zorder__"))
         .sortWithinPartitions("__ks_zorder__")

@@ -25,6 +25,8 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from kolang_spark.utils import _md5_60
+
 __all__ = [
     "k_anonymity_report",
     "k_anonymize",
@@ -259,15 +261,7 @@ def dp_noisy_counts(
             F.concat(F.lit("|"), F.length(cs).cast("string"), F.lit(":"), cs)
         )
 
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(str(seed)), *[_tok(k) for k in keys])),
-            18,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = _md5_60(F.concat(F.lit(str(seed)), *[_tok(k) for k in keys]))
     u = (h.cast("double") + F.lit(0.5)) / F.lit(float(1 << 60))
     centered = u - F.lit(0.5)
     noise = (

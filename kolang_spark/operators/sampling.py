@@ -12,7 +12,7 @@ from typing import Optional, Sequence, Union
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from kolang_spark.utils import ColumnOrName, to_col, to_col_list
+from kolang_spark.utils import ColumnOrName, _md5_60, to_col, to_col_list
 
 __all__ = [
     "top_k_per_group",
@@ -85,8 +85,7 @@ def deterministic_sample(
 
 
 def _hash60(key: ColumnOrName, salt: str) -> Column:
-    """60-bit md5 bucket of ``key`` (engine-portable; see
-    ``llm.textstats._token_hash60``).
+    """60-bit md5 bucket of ``key`` + ``salt`` (:func:`utils._md5_60`).
 
     NULL keys hash like the empty string (one shared, deterministic
     fate) rather than propagating NULL — a NULL hash made every
@@ -95,11 +94,7 @@ def _hash60(key: ColumnOrName, salt: str) -> Column:
     them all into its last split. Non-NULL keys are unaffected (and so
     are every existing oracle/sample membership)."""
     c = F.coalesce(to_col(key).cast("string"), F.lit(""))
-    return F.conv(
-        F.substring(F.md5(F.encode(F.concat(c, F.lit(salt)), "UTF-8")), 18, 15),
-        16,
-        10,
-    ).cast("long")
+    return _md5_60(F.encode(F.concat(c, F.lit(salt)), "UTF-8"))
 
 
 def stratified_sample(

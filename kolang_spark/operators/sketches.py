@@ -24,7 +24,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from kolang_spark.utils import ColumnOrName, to_col
+from kolang_spark.utils import ColumnOrName, _md5_60, to_col
 
 __all__ = [
     "hll_sketch",
@@ -77,18 +77,11 @@ def approx_quantiles(
 
 
 def _cms_bucket(col: ColumnOrName, row: int, width: int, salt: str) -> Column:
-    """Deterministic md5 bucket for CMS row ``row`` — engine-portable
-    (same 60-bit idiom as the sampling/LSH oracles), so a DuckDB oracle
-    rebuilds the identical sketch."""
+    """Deterministic md5 bucket for CMS row ``row`` — the 60-bit gate of
+    :func:`utils._md5_60`, so a DuckDB oracle rebuilds the identical
+    sketch."""
     c = to_col(col).cast("string")
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(f"{row}:{salt}:"), c)), 18, 15
-        ),
-        16,
-        10,
-    ).cast("long")
-    return h % width
+    return _md5_60(F.concat(F.lit(f"{row}:{salt}:"), c)) % width
 
 
 def cms_table(

@@ -110,10 +110,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # be restored immediately afterwards — reading one table must not
     # permanently mutate the caller's session config.
     conf_key = "spark.sql.legacy.parquet.nanosAsLong"
-    try:
-        prev_conf = spark.conf.get(conf_key, None)
-    except Exception:
-        prev_conf = None
+    prev_conf = spark.conf.get(conf_key, None)
     df = None
     read_err: Optional[Exception] = None
     try:

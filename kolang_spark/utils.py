@@ -95,6 +95,16 @@ def bind_once(expr: Column, build) -> Column:
     return F.element_at(F.transform(F.array(expr), build), 1)
 
 
+def _md5_60(b: Column) -> Column:
+    """The engine-portable 60-bit md5 bucket of ``b`` (binary, or a
+    string md5 casts itself): hex chars 18-32 of the digest as a long.
+    DuckDB computes the identical value with
+    ``('0x' || substr(md5(b), 18, 15))::BIGINT``, so every sampler,
+    sketch row and hashed text feature built on it replays in the
+    oracle."""
+    return F.conv(F.substring(F.md5(b), 18, 15), 16, 10).cast("long")
+
+
 def pushdown_fence(c: Column) -> Column:
     """Optimizer fence: mark an expensive expression non-deterministic so
     Catalyst will not duplicate it into a join condition or a pushed-down

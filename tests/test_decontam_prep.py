@@ -2,6 +2,8 @@
 screening, token-window chunking, robust MAD outliers, TF-IDF top
 terms."""
 
+import re
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -290,6 +292,23 @@ def test_zorder_by_tightens_file_statistics(spark, tmp_path):
         zorder_by(big, ["x"], bits=0)
     with pytest.raises(ValueError):
         zorder_by(big, ["nope"])
+
+
+def test_zorder_by_without_jvm_uses_shuffle_default(spark, monkeypatch):
+    """With no JVM session (no sparkContext to read the parallelism
+    from), ``zorder_by`` range-partitions into Spark's shuffle default
+    of 200 partitions; an explicit ``num_partitions`` still wins."""
+    from kolang_spark.operators import layout
+
+    df = spark.createDataFrame([(i, 7 * i % 11) for i in range(20)], "x long, y long")
+    monkeypatch.setattr(layout, "_jvm_session", lambda s: None)
+
+    def parts(out):
+        plan = out._jdf.queryExecution().analyzed().toString()
+        return int(re.search(r"RepartitionByExpression \[[^\]]*\], (\d+)", plan).group(1))
+
+    assert parts(layout.zorder_by(df, ["x", "y"], bits=4)) == 200
+    assert parts(layout.zorder_by(df, ["x", "y"], bits=4, num_partitions=3)) == 3
 
 
 def test_pack_examples_offsets_and_spans(spark):

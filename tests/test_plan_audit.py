@@ -199,6 +199,89 @@ def test_one_cosine_ranking_core():
     ]
 
 
+def test_one_text_scoring_core():
+    """The count-model text scorers share one fixed-point core: the
+    60-bit md5 gate ``substring(md5(b), 18, 15)`` is built only in
+    ``utils._md5_60``; ``textstats.MICRO`` is the one micro-unit
+    constant (no ``_MICRO``, no bare ``1e6`` in ``llm/``); tokens are
+    lowercased (a ``lambda x: F.lower(x)``) only in ``textstats._words``;
+    and the five smoothed log-probabilities call
+    ``textstats._ln_smoothed``."""
+    import ast
+    import pathlib
+
+    import kolang_spark
+
+    def name(f):
+        return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+    root = pathlib.Path(kolang_spark.__file__).parent
+    gates, micro_defs, private_micro, bare_1e6, lowers = [], [], [], [], []
+    smoothed = {}
+    for path in sorted(root.rglob("*.py")):
+        mod = ".".join(path.relative_to(root).with_suffix("").parts)
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            where = f"{mod}.{getattr(top, 'name', '<module>')}"
+            for node in ast.walk(top):
+                if isinstance(node, ast.Name) and node.id == "_MICRO":
+                    private_micro.append(where)
+                if (
+                    isinstance(node, ast.Constant)
+                    and isinstance(node.value, float)
+                    and node.value == 1e6
+                    and mod.startswith("llm.")
+                ):
+                    bare_1e6.append(where)
+                if isinstance(node, ast.Lambda) and isinstance(node.body, ast.Call):
+                    if name(node.body.func) == "lower":
+                        lowers.append(where)
+                if not isinstance(node, ast.Call):
+                    continue
+                if (
+                    name(node.func) == "substring"
+                    and node.args
+                    and isinstance(node.args[0], ast.Call)
+                    and name(node.args[0].func) == "md5"
+                    and [getattr(a, "value", None) for a in node.args[1:]] == [18, 15]
+                ):
+                    gates.append(where)
+                if name(node.func) == "_ln_smoothed":
+                    smoothed[where] = smoothed.get(where, 0) + 1
+            if isinstance(top, ast.Assign) and any(
+                getattr(t, "id", None) == "MICRO" for t in top.targets
+            ):
+                micro_defs.append(mod)
+    assert gates == ["utils._md5_60"]
+    assert micro_defs == ["llm.textstats"]
+    assert private_micro == [] and bare_1e6 == ["llm.textstats.<module>"]
+    assert lowers == ["llm.textstats._words"]
+    assert smoothed == {
+        "llm.classify.train_token_logodds": 2,
+        "llm.dsir.dsir_logratios": 2,
+        "llm.langid.train_char_langid": 1,
+    }
+
+
+def test_md5_60_matches_python_md5(spark):
+    """``utils._md5_60`` is the int of hex chars 18-32 of the md5 digest
+    of the input bytes — the value the DuckDB oracle replays — for
+    ASCII, non-ASCII and empty input."""
+    import hashlib
+
+    from kolang_spark.utils import _md5_60
+
+    texts = ["token", "سلام دنیا", "naïve 文字", ""]
+    got = (
+        spark.createDataFrame([(t,) for t in texts], "t string")
+        .select("t", _md5_60(F.encode("t", "UTF-8")).alias("h"))
+        .collect()
+    )
+    assert {r["t"]: r["h"] for r in got} == {
+        t: int(hashlib.md5(t.encode()).hexdigest()[17:32], 16) for t in texts
+    }
+
+
 def _plan_nodes(node):
     yield node
     kids = node.children()
