@@ -1843,7 +1843,7 @@ def _q_bpe_encode_documents(spark, sf_dir):
 
     dc = _t(spark, sf_dir, "documents").select("doc_id", "text")
     merges = bpe_train(dc, num_merges=_BPE_M, max_words=_BPE_W)
-    out = bpe_encode(ensure_min_parallelism(dc), merges)
+    out = bpe_encode(dc, merges)
     return out.select(
         "doc_id",
         F.size("bpe_tokens").cast("long").alias("n_tokens"),
@@ -1882,7 +1882,7 @@ def _q_bpe_encode_loaded(spark, sf_dir):
         shutil.rmtree(base, ignore_errors=True)
     if loaded != merges:
         raise AssertionError("tokenizer round-trip diverged from training")
-    out = bpe_encode(ensure_min_parallelism(dc), loaded)
+    out = bpe_encode(dc, loaded)
     return out.select(
         "doc_id",
         F.size("bpe_tokens").cast("long").alias("n_tokens"),
@@ -1909,9 +1909,7 @@ def _q_bpe_encode_ids(spark, sf_dir):
     # extra bounded Spark job, and this vocab comes straight from
     # bpe_vocab_ids (distinct tokens, unique by construction) — the
     # documented skip case in bpe_encode_ids' docstring
-    out = bpe_encode_ids(
-        ensure_min_parallelism(dc), merges, vocab, validate_vocab=False
-    )
+    out = bpe_encode_ids(dc, merges, vocab, validate_vocab=False)
     return out.select(
         "doc_id",
         F.size("token_ids").cast("long").alias("n_tokens"),
@@ -1945,9 +1943,7 @@ def _q_pack_examples_bpe(spark, sf_dir):
         .select("doc_id", "text")
     )
     merges = bpe_train(dc, num_merges=_BPE_M, max_words=_BPE_W)
-    withn = ensure_min_parallelism(dc).withColumn(
-        "n_bpe", bpe_token_count("text", merges)
-    )
+    withn = dc.withColumn("n_bpe", bpe_token_count("text", merges))
     return pack_examples(
         withn, tokens_col="n_bpe", example_tokens=256, bucket_size=100
     )
@@ -3724,14 +3720,10 @@ def _q_pca_embeddings(spark, sf_dir):
     import numpy as np
 
     from kolang_spark.llm import pca_fit, pca_project
-    from kolang_spark.utils import ensure_min_parallelism
 
-    # for the PROJECTION scan: 64 dot products per row must not run on
-    # one split (pca_fit guards its own moment pass internally; this
-    # wrapper covers the second, projection-side consumption of em)
-    em = ensure_min_parallelism(
-        _t(spark, sf_dir, "embeddings").where(F.col("embedding").isNotNull())
-    )
+    # _t spreads embeddings, so the projection scan (64 dot products per
+    # row) runs at the cluster width too, not only pca_fit's moment pass
+    em = _t(spark, sf_dir, "embeddings").where(F.col("embedding").isNotNull())
     model = pca_fit(em, dims=64, k=64)
     comp = np.array(model.components)
     resid = float(np.abs(comp @ comp.T - np.eye(64)).max())

@@ -92,7 +92,7 @@ def funnel_steps(
         ),
     )
     ev = (
-        df.where(F.col(type_col).isin(list(set(steps))))
+        df.where(F.col(type_col).isin(sorted(set(steps))))
         .select(
             F.col(user_col),
             F.col(ts_col).cast("long").alias("__ts__"),

@@ -122,25 +122,77 @@ def pushdown_fence(c: Column) -> Column:
 
 
 def ensure_min_parallelism(df, min_partitions: int | None = None):
-    """Round-robin repartition iff the plan has too few input partitions.
+    """Round-robin repartition iff the plan has too few output partitions.
 
     Small single-file inputs arrive as one split, serializing per-row
     compute-heavy stages (shingling, hashing, similarity scoring) onto a
     single core. At production scale (thousands of input splits) the
     check short-circuits and this is a no-op — the shuffle is only paid
     exactly when the input cannot otherwise use the cluster.
+
+    The count is read from ``df``'s physical plan and starts no Spark
+    job (asking the frame's RDD would make the adaptive executor run
+    every shuffle and broadcast stage below it, outside any SQL
+    execution, only for the real action to run them again). From the
+    root down (:func:`_planned_partitions`):
+
+    - a node whose output partitioning states a count (a round-robin,
+      hash or range exchange, a single partition) has that count;
+    - a ``Union`` has the sum of its children's counts;
+    - a narrow node, and a broadcast join, has the count of its child
+      (the join's streamed side);
+    - a leaf has its RDD's split count. Building a scan's RDD lists its
+      splits and runs nothing, unless the scan carries a subquery of
+      its own (a scalar subquery pushed into its filters): that runs.
+
+    An adaptive plan that has not run yet is counted by its planned
+    shuffle partitions, before AQE coalesces them: a grouped aggregate
+    counts ``spark.sql.shuffle.partitions`` even if it will run as one
+    partition. A plan that already ran is counted as it ran.
     """
     spark = df.sparkSession
     if _jvm_session(spark) is None:
-        # Spark Connect: no sparkContext/rdd access. We cannot probe the
-        # input split count, and an unconditional repartition would tax
+        # Spark Connect: no physical plan access. We cannot probe the
+        # partition count, and an unconditional repartition would tax
         # well-partitioned production inputs — leave the plan unchanged.
         return df
     target = min_partitions or spark.sparkContext.defaultParallelism
-    current = df.rdd.getNumPartitions()
+    current = _planned_partitions(df._jdf.queryExecution().executedPlan())
     if current >= target:
         return df
     return df.repartition(target)
+
+
+def _planned_partitions(node) -> int:
+    """Output partition count of the physical plan ``node`` (a JVM
+    ``SparkPlan``), by the rule in :func:`ensure_min_parallelism`."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        # its own partitioning reads as unknown; the plan it holds is the
+        # initial one (exchanges placed, nothing run) until it executes
+        return _planned_partitions(node.executedPlan())
+    stated = node.outputPartitioning().numPartitions()
+    kids = node.children()
+    kids = [kids.apply(i) for i in range(kids.size())]
+    if name == "CoalesceExec":  # states its target, an upper bound
+        return min(stated, _planned_partitions(kids[0]))
+    if stated > 0:
+        return stated
+    if name == "InMemoryTableScanExec":
+        # building an unfilled cache's RDD would run the cached plan
+        return _planned_partitions(node.relation().cachedPlan())
+    if name == "UnionExec":
+        return sum(_planned_partitions(k) for k in kids)
+    if name.startswith("Broadcast") and name.endswith("JoinExec"):
+        build_left = node.buildSide().toString() == "BuildLeft"
+        return _planned_partitions(kids[1] if build_left else kids[0])
+    if name == "CartesianProductExec":
+        return _planned_partitions(kids[0]) * _planned_partitions(kids[1])
+    if len(kids) == 1:
+        return _planned_partitions(kids[0])
+    if not kids:
+        return node.execute().getNumPartitions()
+    raise ValueError(f"no partition count rule for plan node {name}")
 
 
 def _map_rows(df: DataFrame, schema: str, fn) -> DataFrame:

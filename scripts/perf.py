@@ -6,7 +6,8 @@ Every subcommand opens its session with ``bench.build_spark()`` (so
 default ``--sf``) and reads its counters through
 ``perfbench/sparkstats.SparkStats``:
 
-  profile q... | --all     best-of-reps seconds plus jobs, stages, shuffle
+  profile q... | --all     best-of-reps seconds plus jobs (per rep, and
+                           the last rep's by call site), stages, shuffle
                            bytes, spill, exchanges over every job, and
                            the returned frame's exchange / Python-node /
                            non-codegen-node counts per query
@@ -151,13 +152,46 @@ def exec_exchanges(spark, after_id: int) -> int:
     return n
 
 
+NO_EXECUTION = "<no execution>"
+_CHECKOUT = re.compile(r"(?<= at )/\S*/(?=kolang_spark/|__spark_entry__\.py)")
+
+
+def job_sites(spark, first: int, end: int, after_id: int) -> dict[str, int]:
+    """Jobs ``first <= id < end`` counted by call site (the job's name
+    in the status store, with a library file's path taken relative to
+    its checkout, so records of two checkouts diff). A job that ran
+    outside every SQL execution with id > ``after_id`` (an RDD action,
+    a partition count that made AQE run stages) counts under
+    :data:`NO_EXECUTION` instead, so such a job shows up by kind
+    whatever its call site."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    in_sql = set()
+    for i in range(execs.size() - 1, -1, -1):
+        e = execs.apply(i)
+        if e.executionId() <= after_id:
+            break
+        it = e.jobs().keysIterator()
+        while it.hasNext():
+            in_sql.add(it.next())
+    core = spark.sparkContext._jsc.sc().statusStore()
+    sites: dict[str, int] = {}
+    for jid in range(first, end):
+        site = _CHECKOUT.sub("", core.job(jid).name()) if jid in in_sql else NO_EXECUTION
+        sites[site] = sites.get(site, 0) + 1
+    return sites
+
+
 def measure(spark, stats: SparkStats, fn, sf: str, reps: int) -> dict:
     """Best-of-``reps`` seconds of ``fn(spark, sf)`` through the noop
-    sink, with the last rep's jobs, stage totals and exchanges over all
-    its SQL executions (``exec_exchanges``), and the plan-node counts of
-    the returned frame's final plan (the last rep is the steady state:
-    caches and memos are warm)."""
+    sink, with the jobs of every rep (``jobs_by_rep``: a first rep may
+    fill caches and memos the later ones reuse), and the last rep's
+    jobs, their call sites (``job_sites``), stage totals and exchanges
+    over all its SQL executions (``exec_exchanges``), and the plan-node
+    counts of the returned frame's final plan (the last rep is the
+    steady state: caches and memos are warm)."""
     best = None
+    jobs_by_rep = []
     for _ in range(reps):
         j0, s0 = stats.next_job_id(), stats.next_stage_id()
         stats.drain()  # the previous rep's executions are in the store
@@ -167,12 +201,17 @@ def measure(spark, stats: SparkStats, fn, sf: str, reps: int) -> dict:
         _noop(df)
         dt = time.perf_counter() - t0
         j1, s1 = stats.next_job_id(), stats.next_stage_id()
+        jobs_by_rep.append(j1 - j0)
         best = dt if best is None else min(best, dt)
     stats.drain()
     st = stats.stages(s0, s1)
     del st["intervals"]
     rec = {k: round(v, 3) if isinstance(v, float) else v for k, v in st.items()}
-    rec.update(sec=round(best, 3), jobs=j1 - j0, exec_exchanges=exec_exchanges(spark, e0))
+    rec.update(
+        sec=round(best, 3), jobs=j1 - j0, jobs_by_rep=jobs_by_rep,
+        job_sites=job_sites(spark, j0, j1, e0),
+        exec_exchanges=exec_exchanges(spark, e0),
+    )
     final_plan(df)  # outside the job and stage window above
     rec.update(stats.plan_counts(df))
     return rec

@@ -182,3 +182,17 @@ def test_funnel_counts_rejects_quoted_step_names(spark):
     import pytest as _pt
     with _pt.raises(ValueError, match="quotes"):
         funnel_counts(df, ["a'b"])
+
+
+def test_funnel_in_list_sorted(spark):
+    """The step filter's IN-list is in sorted order, so a funnel's plan
+    is the same on every run whatever the process's string-hash seed."""
+    import re
+
+    steps = ["view", "click", "cart", "pay", "ship", "buy", "view"]
+    df = spark.createDataFrame(
+        [(1, 10, "view")], "user_id long, ts_ms long, event_type string"
+    )
+    plan = funnel_steps(df, steps)._jdf.queryExecution().analyzed().toString()
+    (listed,) = re.findall(r"event_type#\d+ IN \(([^)]*)\)", plan)
+    assert listed.split(",") == sorted(set(steps))

@@ -113,15 +113,19 @@ def _operators(node):
 
 def test_profile_record(spark, perf, sf_dir):
     name = "percent_by_returnflag"  # aggregates through a shuffle
-    a = perf.parse_args(["profile", "--sf", sf_dir, "--reps", "1", name])
+    a = perf.parse_args(["profile", "--sf", sf_dir, "--reps", "2", name])
     rec = perf.cmd_profile(spark, a)
     q = rec["queries"][name]
     assert {
-        "sec", "jobs", "stages", "shuffle_write_bytes", "shuffle_read_bytes",
-        "spill_bytes", "exchanges", "exec_exchanges", "python_nodes",
-        "non_codegen_nodes",
+        "sec", "jobs", "jobs_by_rep", "job_sites", "stages",
+        "shuffle_write_bytes", "shuffle_read_bytes", "spill_bytes",
+        "exchanges", "exec_exchanges", "python_nodes", "non_codegen_nodes",
     } <= set(q)
     assert q["jobs"] > 0 and q["stages"] > 0 and q["sec"] > 0
+    # every rep's jobs; the last rep's by call site, all in SQL executions
+    assert len(q["jobs_by_rep"]) == 2 and q["jobs_by_rep"][-1] == q["jobs"]
+    assert sum(q["job_sites"].values()) == q["jobs"]
+    assert perf.NO_EXECUTION not in q["job_sites"]
     assert rec["canary_pre"] > 0 and rec["canary_post"] > 0
     # the counts describe AQE's final plan, where codegen stages exist;
     # its initial plan has none, so every operator would read interpreted
@@ -142,6 +146,21 @@ def test_profile_counts_exchanges_of_every_job(spark, perf, sf_dir):
     q = perf.cmd_profile(spark, a)["queries"][name]
     assert q["exchanges"] == 0
     assert q["exec_exchanges"] >= 1
+
+
+def test_profile_names_jobs_outside_sql_executions(spark, perf, sf_dir):
+    """A job no SQL execution owns (here an RDD partition count, which
+    makes AQE run the aggregate's shuffle stage) counts under one
+    ``<no execution>`` key, whatever its call site."""
+
+    def fn(spark, sf):
+        df = spark.range(100).groupBy((F.col("id") % 3).alias("k")).count()
+        df.rdd.getNumPartitions()
+        return df
+
+    q = perf.measure(spark, perf.SparkStats(spark), fn, sf_dir, 1)
+    assert q["job_sites"][perf.NO_EXECUTION] == 1
+    assert sum(q["job_sites"].values()) == q["jobs"] == q["jobs_by_rep"][0]
 
 
 @pytest.mark.parametrize(

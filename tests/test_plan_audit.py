@@ -3,7 +3,8 @@
 Enforces the engine's stated execution rules (SURVEY §4): no
 row-at-a-time Python evaluation anywhere (``BatchEvalPython``), Arrow
 map/eval nodes only in the explicitly-UDF-sanctioned queries below, one
-library call site for the Arrow row boundary, and no cartesian products.
+library call site for the Arrow row boundary, no cartesian products, and
+a parallelism probe that reads the plan and starts no Spark job.
 """
 
 import re
@@ -575,3 +576,95 @@ def test_iterative_graph_job_budget(spark, monkeypatch, op):
     assert jobs <= GRAPH_JOB_BUDGETS[op]
     assert more_jobs - jobs <= 2
     assert more_stages - stages == more_jobs - jobs
+
+
+def _probe(spark, df):
+    """``(ensure_min_parallelism(df), Spark jobs the probe started)``."""
+    from kolang_spark.utils import ensure_min_parallelism
+    from tests.conftest import jobs_started
+
+    return jobs_started(spark, lambda: ensure_min_parallelism(df))
+
+
+@pytest.fixture(scope="module")
+def one_split(spark, tmp_path_factory):
+    """A parquet table written as one file of one split."""
+    path = str(tmp_path_factory.mktemp("one_split") / "t")
+    spark.range(200).selectExpr("id", "id % 7 AS k").coalesce(1).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_parallelism_probe_starts_no_job(spark, one_split):
+    """``ensure_min_parallelism`` reads the partition count from the
+    physical plan and starts no Spark job, also where the frame's RDD
+    would run the plan's shuffle or broadcast stages (the union, the
+    aggregate, the broadcast join). An aggregate that has not run is
+    counted by its planned shuffle partitions, before AQE coalesces
+    them."""
+    target = spark.sparkContext.defaultParallelism
+    assert one_split.rdd.getNumPartitions() == 1 < target
+
+    def spread(df):
+        return df.repartition(target)
+
+    def probe_with(confs, build):
+        """Probe ``build()`` with the session ``confs`` set, then restore."""
+        prev = {k: spark.conf.get(k) for k in confs}
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        try:
+            df = build()
+            return (df,) + _probe(spark, df)
+        finally:
+            for k, v in prev.items():
+                spark.conf.set(k, v)
+
+    cases = {  # frame: is it returned unchanged?
+        "single split": (lambda: one_split, False),
+        "spread to the target": (lambda: spread(one_split), True),
+        "spread below the target": (lambda: one_split.repartition(target - 1), False),
+        "union of spread frames": (
+            lambda: spread(one_split).union(spread(one_split)), True
+        ),
+        "aggregate": (lambda: one_split.groupBy("k").count(), True),
+    }
+    shuffle = {"spark.sql.shuffle.partitions": str(2 * target)}
+    for label, (build, kept) in cases.items():
+        df, out, jobs = probe_with(shuffle, build)
+        assert jobs == 0, label
+        assert (out is df) == kept, label
+        if not kept:
+            assert out.rdd.getNumPartitions() == target, label
+
+    small = one_split.where("k = 0").select("id")
+    for aqe in ("true", "false"):
+        joined, out, jobs = probe_with(
+            {"spark.sql.adaptive.enabled": aqe},
+            lambda: one_split.join(F.broadcast(small), "id"),
+        )
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan, aqe
+        assert jobs == 0, aqe
+        assert out is not joined, aqe  # the streamed side is one split
+
+
+def test_parallelism_probe_is_the_only_rdd_read():
+    """No library module reads a frame's RDD: ``.rdd`` and
+    ``getNumPartitions`` (each of which can run the plan's stages as a
+    job of its own) appear nowhere in ``kolang_spark/`` but the
+    probe's leaf rule."""
+    import inspect
+    import pathlib
+
+    import kolang_spark
+    from kolang_spark import utils
+
+    call = re.compile(r"\.rdd\b|getNumPartitions")
+    root = pathlib.Path(kolang_spark.__file__).parent
+    hits = [
+        (str(p.relative_to(root)), m.group(0))
+        for p in sorted(root.rglob("*.py"))
+        for m in call.finditer(p.read_text())
+    ]
+    assert hits == [("utils.py", "getNumPartitions")], hits
+    assert call.search(inspect.getsource(utils._planned_partitions))
