@@ -1,10 +1,10 @@
 """kolang_spark — a PySpark-native analytics engine.
 
 A from-scratch re-expression of the operator semantics of the reference
-library MahdiHGZ/kolang (a PySpark utility package, see
-``/root/reference/kolang``) as idiomatic, Spark-Connect-compatible,
-100-TB-scale-minded PySpark, plus the LLM-data-pipeline extensions
-(dedup, similarity search, multimodal columns, text analysis).
+library MahdiHGZ/kolang (a PySpark utility package) as idiomatic,
+100-TB-scale-minded PySpark on a classic PySpark 4.x session, plus the
+LLM-data-pipeline extensions (dedup, similarity search, multimodal
+columns, text analysis).
 
 Design rules (SURVEY.md §1.4 / §4):
 

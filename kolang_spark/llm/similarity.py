@@ -290,10 +290,9 @@ def _plane_component(plane: int, dim: int) -> float:
 # Parsed-signature cache, keyed by the ACTIVE SESSION then the argument
 # tuple: F.expr pays a ~0.7 s JVM parse for the unrolled 8x64-term
 # chains and callers rebuild identical signatures every batch/rep, but
-# a bare lru_cache would pin Column objects across session/backend
-# changes (a classic-PySpark Column wraps a py4j handle; handing it to
-# a later Spark Connect session — or a session whose gateway is gone —
-# fails). WeakKeyDictionary drops each session's entries when the
+# a bare lru_cache would pin Column objects across sessions (a Column
+# wraps a py4j handle; handing it to a later session whose gateway is
+# gone fails). WeakKeyDictionary drops each session's entries when the
 # session is collected; with no active session the build is uncached.
 _SIG_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 

@@ -26,8 +26,6 @@ from typing import List, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from kolang_spark.utils import _jvm_session
-
 __all__ = ["morton_code", "with_zorder_key", "zorder_by"]
 
 
@@ -88,13 +86,7 @@ def zorder_by(
     if missing:
         raise ValueError(f"unknown columns: {sorted(missing)}")
     coded = with_zorder_key(df, cols, bits, key_col="__ks_zorder__")
-    spark = df.sparkSession
-    if num_partitions:
-        parts = num_partitions
-    elif _jvm_session(spark) is None:  # no sparkContext: shuffle default
-        parts = 200
-    else:
-        parts = spark.sparkContext.defaultParallelism
+    parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     return (
         coded.repartitionByRange(parts, F.col("__ks_zorder__"))
         .sortWithinPartitions("__ks_zorder__")

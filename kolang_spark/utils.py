@@ -151,11 +151,6 @@ def ensure_min_parallelism(df, min_partitions: int | None = None):
     partition. A plan that already ran is counted as it ran.
     """
     spark = df.sparkSession
-    if _jvm_session(spark) is None:
-        # Spark Connect: no physical plan access. We cannot probe the
-        # partition count, and an unconditional repartition would tax
-        # well-partitioned production inputs — leave the plan unchanged.
-        return df
     target = min_partitions or spark.sparkContext.defaultParallelism
     current = _planned_partitions(df._jdf.queryExecution().executedPlan())
     if current >= target:
@@ -245,12 +240,6 @@ OBSERVE_WAIT_S = 60.0
 before computing them with one aggregate over the pinned frame."""
 
 
-def _jvm_session(spark):
-    """The session's JVM handle, or ``None`` on a JVM-less runtime (Spark
-    Connect sessions raise ``AttributeError`` for it)."""
-    return getattr(spark, "_jsparkSession", None)
-
-
 def iter_checkpoint(df, checkpoint_dir=None, keep_partitioning=False, observe=None):
     """Eager lineage pin for iterative operators → ``(pinned_df, metrics,
     rdd_ids)``.
@@ -270,8 +259,7 @@ def iter_checkpoint(df, checkpoint_dir=None, keep_partitioning=False, observe=No
     already points at ``checkpoint_dir`` (whole-path compare of the UUID
     subdir's parent, both qualified through the Hadoop FileSystem — a
     substring test would skip the set for ``/x/ck`` after ``/x/ck-old``),
-    so an N-round loop issues one set. Reliable pins need a classic
-    session.
+    so an N-round loop issues one set.
 
     **Keeping the partitioning.** ``checkpoint`` copies the executed
     plan's output partitioning into its ``LogicalRDD``, but under AQE the
@@ -285,9 +273,7 @@ def iter_checkpoint(df, checkpoint_dir=None, keep_partitioning=False, observe=No
     session-agnostic ``LogicalRDD`` is re-wrapped in the original session.
     The clone's listener manager is a copy of the original's, so observed
     metrics still fire. Clones are not cached: a cached clone would keep a
-    stale conf, and per-call clones do not accumulate listeners. A
-    JVM-less session (Spark Connect) cannot clone and toggles AQE
-    session-wide for the duration of the pin instead.
+    stale conf, and per-call clones do not accumulate listeners.
 
     **Metrics.** ``observe`` maps metric names to aggregate Columns over
     ``df``; they ride the pin's own job via ``DataFrame.observe``, so a
@@ -297,16 +283,16 @@ def iter_checkpoint(df, checkpoint_dir=None, keep_partitioning=False, observe=No
     that is NULL (an empty frame) comes back as ``None``. ``metrics`` is
     ``{}`` without ``observe``.
 
-    **Release.** ``rdd_ids`` are the persistent RDDs the pin registered
-    (empty on Spark Connect), for :func:`release_checkpoints` once no live
-    plan reads the pin: ``unpersist()`` only talks to the SQL cache
-    manager, so without release every superseded round's blocks stay
-    pinned until JVM GC. The ids are a before/after diff of the context's
+    **Release.** ``rdd_ids`` are the persistent RDDs the pin registered,
+    for :func:`release_checkpoints` once no live plan reads the pin:
+    ``unpersist()`` only talks to the SQL cache manager, so without
+    release every superseded round's blocks stay pinned until JVM GC.
+    The ids are a before/after diff of the context's
     persistent-RDD registry, so a concurrent persist from another driver
     thread would be captured too — serialize such calls.
     """
     spark = df.sparkSession
-    jspark = _jvm_session(spark)
+    jspark = spark._jsparkSession
     obs = None
     if observe:
         obs = Observation()
@@ -345,23 +331,12 @@ def _eager_checkpoint(df, jspark, reliable: bool, keep_partitioning: bool):
         spark.conf.get("spark.sql.adaptive.enabled", "true").lower() != "true"
     ):
         return pin(df)
-    if jspark is not None:
-        from py4j.java_gateway import JavaClass
-
-        # py4j resolves an unknown class to a JavaPackage: the one guard,
-        # before anything runs; errors past it propagate
-        ds_cls = spark._jvm.org.apache.spark.sql.classic.Dataset
-        if isinstance(ds_cls, JavaClass):
-            jclone = jspark.cloneSession()
-            jclone.conf().set("spark.sql.adaptive.enabled", "false")
-            jck = pin(ds_cls.ofRows(jclone, df._jdf.queryExecution().logical()))
-            jout = ds_cls.ofRows(jspark, jck.queryExecution().logical())
-            return DataFrame(jout, spark)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        return pin(df)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    ds_cls = spark._jvm.org.apache.spark.sql.classic.Dataset
+    jclone = jspark.cloneSession()
+    jclone.conf().set("spark.sql.adaptive.enabled", "false")
+    jck = pin(ds_cls.ofRows(jclone, df._jdf.queryExecution().logical()))
+    jout = ds_cls.ofRows(jspark, jck.queryExecution().logical())
+    return DataFrame(jout, spark)
 
 
 def _observed(obs) -> dict:
@@ -387,22 +362,14 @@ def _qualify_dir(spark, path: str) -> str:
     """Fully-qualified, trailing-slash-free form of ``path`` through the
     Hadoop FileSystem (``file:/abs`` for local, scheme-preserved for
     object stores), so checkpoint-dir comparisons are whole-segment
-    exact regardless of how the caller spelled the path. Falls back to
-    a driver-local abspath on Spark Connect (local paths only there)."""
+    exact regardless of how the caller spelled the path."""
     from kolang_spark.sources.io import _hadoop_fs
 
-    pair = _hadoop_fs(spark, path)
-    if pair is None:
-        import os
-
-        return os.path.abspath(path).rstrip("/")
-    fs, jpath = pair
+    fs, jpath = _hadoop_fs(spark, path)
     return fs.makeQualified(jpath).toString().rstrip("/")
 
 
 def _persistent_rdd_ids(jspark) -> frozenset:
-    if jspark is None:
-        return frozenset()
     it = jspark.sparkContext().getPersistentRDDs().iterator()
     ids = set()
     while it.hasNext():
@@ -413,15 +380,12 @@ def _persistent_rdd_ids(jspark) -> frozenset:
 def release_checkpoints(spark, rdd_ids) -> None:
     """Drop the RDD-level blocks of pins tracked by
     :func:`iter_checkpoint` (non-blocking). Safe to call with ids already
-    collected by the ContextCleaner; a no-op on Spark Connect.
+    collected by the ContextCleaner.
 
     Only release pins that no live DataFrame's plan reads —
     localCheckpoint truncates lineage, so evicted blocks cannot be
     recomputed."""
-    jspark = _jvm_session(spark)
-    if jspark is None:
-        return
-    m = jspark.sparkContext().getPersistentRDDs()
+    m = spark._jsparkSession.sparkContext().getPersistentRDDs()
     for pid in rdd_ids:
         if m.contains(pid):
             m.apply(pid).unpersist(False)

@@ -107,6 +107,44 @@ def test_pandas_to_spark_float64_is_double(spark):
     assert dict(out.dtypes)["a"] == "double"
 
 
+def test_pandas_to_spark_uninferable_column_falls_back_to_string(spark):
+    """With Arrow off, Spark cannot type an all-``None`` object column
+    (``CANNOT_DETERMINE_TYPE``, a ``ValueError``): the dtype map applies
+    and the column becomes ``string``."""
+    import pandas as pd
+
+    pdf = pd.DataFrame({"a": [1, 2], "b": [None, None]})
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    try:
+        out = ks.pandas_to_spark(pdf, spark)
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert dict(out.dtypes) == {"a": "bigint", "b": "string"}
+    assert [tuple(r) for r in out.collect()] == [(1, None), (2, None)]
+
+
+def test_pandas_to_spark_propagates_other_errors(spark, monkeypatch):
+    """Only a type/value rejection takes the dtype-map route; any other
+    error from ``createDataFrame`` reaches the caller with no retry."""
+    import pandas as pd
+
+    calls = []
+
+    def refuse(*args, **kwargs):
+        calls.append(args)
+        raise RuntimeError("gateway down")
+
+    monkeypatch.setattr(spark, "createDataFrame", refuse)
+    with pytest.raises(RuntimeError, match="gateway down"):
+        ks.pandas_to_spark(pd.DataFrame({"a": [1]}), spark)
+    assert len(calls) == 1
+
+
 def test_load_or_calculate_parquet(spark, tmp_path):
     calls = []
 

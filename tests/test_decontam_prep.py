@@ -247,7 +247,8 @@ def test_morton_code_matches_reference(spark):
 def test_zorder_by_tightens_file_statistics(spark, tmp_path):
     """The point of Z-ordering: per-file min/max spans shrink on BOTH
     participating columns vs a random layout, so parquet stats prune
-    filters on either column."""
+    filters on either column. The range partitioning takes
+    ``num_partitions``, else the context's default parallelism."""
     import glob
     import os
     import random
@@ -293,22 +294,12 @@ def test_zorder_by_tightens_file_statistics(spark, tmp_path):
     with pytest.raises(ValueError):
         zorder_by(big, ["nope"])
 
-
-def test_zorder_by_without_jvm_uses_shuffle_default(spark, monkeypatch):
-    """With no JVM session (no sparkContext to read the parallelism
-    from), ``zorder_by`` range-partitions into Spark's shuffle default
-    of 200 partitions; an explicit ``num_partitions`` still wins."""
-    from kolang_spark.operators import layout
-
-    df = spark.createDataFrame([(i, 7 * i % 11) for i in range(20)], "x long, y long")
-    monkeypatch.setattr(layout, "_jvm_session", lambda s: None)
-
     def parts(out):
         plan = out._jdf.queryExecution().analyzed().toString()
         return int(re.search(r"RepartitionByExpression \[[^\]]*\], (\d+)", plan).group(1))
 
-    assert parts(layout.zorder_by(df, ["x", "y"], bits=4)) == 200
-    assert parts(layout.zorder_by(df, ["x", "y"], bits=4, num_partitions=3)) == 3
+    assert parts(zorder_by(big, ["x", "y"], bits=4, num_partitions=3)) == 3
+    assert parts(zorder_by(big, ["x", "y"], bits=4)) == spark.sparkContext.defaultParallelism
 
 
 def test_pack_examples_offsets_and_spans(spark):

@@ -691,12 +691,9 @@ def test_iterative_operator_uses_fused_observation(spark, monkeypatch, op, pairs
     (``DataFrame.agg``), and the operators have no count of their own,
     so any ``agg``/``count`` call while building the result means a fused
     path silently degraded."""
-    # pyspark>=4: pyspark.sql.DataFrame is a facade; instances are the
-    # classic subclass, so patch the class the instances actually use
-    try:
-        from pyspark.sql.classic.dataframe import DataFrame
-    except ImportError:  # pyspark 3.x
-        from pyspark.sql import DataFrame
+    # pyspark.sql.DataFrame is a facade; instances are the classic
+    # subclass, so patch the class the instances actually use
+    from pyspark.sql.classic.dataframe import DataFrame
 
     edges = spark.createDataFrame(pairs, "id_a long, id_b long")
     calls = []

@@ -3,8 +3,9 @@
 Enforces the engine's stated execution rules (SURVEY §4): no
 row-at-a-time Python evaluation anywhere (``BatchEvalPython``), Arrow
 map/eval nodes only in the explicitly-UDF-sanctioned queries below, one
-library call site for the Arrow row boundary, no cartesian products, and
-a parallelism probe that reads the plan and starts no Spark job.
+library call site for the Arrow row boundary, no cartesian products, a
+parallelism probe that reads the plan and starts no Spark job, and one
+runtime (a classic session; no JVM-less filesystem or pin twins).
 """
 
 import re
@@ -262,6 +263,50 @@ def test_one_text_scoring_core():
         "llm.dsir.dsir_logratios": 2,
         "llm.langid.train_char_langid": 1,
     }
+
+
+def test_one_runtime_no_jvm_less_twins():
+    """The library runs on a classic PySpark session only: no session
+    probe that reads as ``None`` without a JVM (``_jvm_session``, a
+    ``getattr`` of ``_jsparkSession``), no ``JavaClass`` guard for a
+    pre-4.0 ``classic.Dataset``, and no driver-local ``os``/``shutil``/
+    ``open`` twin in the bodies of ``path_exists`` and the ``fs_*``
+    Hadoop FileSystem helpers."""
+    import ast
+    import inspect
+    import pathlib
+
+    import kolang_spark
+    from kolang_spark.sources import io
+
+    root = pathlib.Path(kolang_spark.__file__).parent
+    probe = re.compile(r'_jvm_session|JavaClass|getattr\(spark, "_jsparkSession"')
+    hits = [
+        (str(p.relative_to(root)), m.group(0))
+        for p in sorted(root.rglob("*.py"))
+        for m in probe.finditer(p.read_text())
+    ]
+    assert hits == [], hits
+    local = {"os", "shutil", "open"}
+    for fn in (
+        io.path_exists,
+        io.fs_delete,
+        io.fs_rename,
+        io.fs_rename_overwrite,
+        io.fs_read_text,
+        io.fs_write_text,
+        io.fs_list_files,
+    ):
+        tree = ast.parse(inspect.getsource(fn))
+        used = set()
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Name):
+                used.add(n.id)
+            elif isinstance(n, ast.Import):
+                used |= {a.name.split(".")[0] for a in n.names}
+            elif isinstance(n, ast.ImportFrom):
+                used.add((n.module or "").split(".")[0])
+        assert not used & local, (fn.__name__, sorted(used & local))
 
 
 def test_md5_60_matches_python_md5(spark):
