@@ -103,8 +103,9 @@ def linear_text_classifier(
     ``prob = 1/(1+exp(−score))``. ``weights`` is any ``(term, w_micro)``
     frame — :func:`train_token_logodds` output or weights exported from
     an offline model. Unseen tokens contribute 0 (they carry no
-    evidence either way under the NB view). Documents with no tokens
-    get NULL score/prob and ``n_tokens = 0``.
+    evidence either way under the NB view). One row per distinct id (a
+    NULL id is one group); documents with no tokens get NULL
+    score/prob and ``n_tokens = 0``.
 
     Length normalization (fastText's mean-of-features) keeps long
     documents from saturating the sigmoid; turn it off for pure NB
@@ -113,22 +114,24 @@ def linear_text_classifier(
     Scale: ``broadcast_weights=True`` (default) pins the vocabulary on
     the map side — the corpus never shuffles for the join; only the
     per-document aggregate shuffles, carrying one reduced row per
-    (partition, doc). With a weight table too big to broadcast, flip it
-    off and the join hash-partitions both sides on the term.
+    (partition, doc); a zero-token document keeps one NULL-token row
+    through the explode, so no second read of ``df`` re-attaches it.
+    With a weight table too big to broadcast, flip it off and the join
+    hash-partitions both sides on the term.
     """
     w = weights.select("term", "w_micro")
     if broadcast_weights:
         w = F.broadcast(w)
-    ex = df.select(F.col(id_col), F.explode_outer(_words(text_col, lowercase)).alias("term")).where(
-        F.col("term").isNotNull() & (F.col("term") != "")
-    )
+    toks = F.filter(_words(text_col, lowercase), lambda t: t != "")
+    ex = df.select(F.col(id_col), F.explode_outer(toks).alias("term"))
     summed = (
         ex.join(w, "term", "left")
-        .select(id_col, F.coalesce(F.col("w_micro"), F.lit(0)).alias("__w__"))
         .groupBy(id_col)
         .agg(
-            F.count(F.lit(1)).cast("long").alias("n_tokens"),
-            F.sum("__w__").cast("long").alias("__s__"),
+            F.count("term").cast("long").alias("n_tokens"),
+            F.sum(F.when(F.col("term").isNotNull(), F.coalesce("w_micro", F.lit(0))))
+            .cast("long")
+            .alias("__s__"),
         )
     )
     denom = (
@@ -137,18 +140,9 @@ def linear_text_classifier(
         else F.lit(MICRO)
     )
     score = F.col("__s__").cast("double") / denom + F.lit(float(bias))
-    scored = summed.select(
+    return summed.select(
         id_col,
         "n_tokens",
         score.alias("score"),
         (F.lit(1.0) / (F.lit(1.0) + F.exp(-score))).alias("prob"),
-    )
-    # re-attach zero-token documents with NULL score (same spine shape
-    # as unigram_lm_scores)
-    spine = df.select(id_col)
-    return spine.join(scored, id_col, "left").select(
-        id_col,
-        F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),
-        "score",
-        "prob",
     )

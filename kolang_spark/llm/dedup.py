@@ -349,8 +349,9 @@ def edit_distance_pairs(
     # dist]). The accepted cost is levenshtein on RAW candidates (a
     # bounded ≤(d+1)(2d+1) duplicate factor) plus a second evaluation
     # in the projection for survivors — a threshold-banded O(d·len)
-    # scan per eval; bytes moved beat CPU re-done at scale. dist is a
-    # pure function of (id_a, id_b), so the pair set is identical.
+    # scan per eval; bytes moved beat CPU re-done at scale. Under the
+    # docstring's unique-id precondition dist is a pure function of
+    # (id_a, id_b), so the pair set is identical.
     dist = F.levenshtein(
         F.when(F.col("a.id") < F.col("b.id"), F.col("a.t")).otherwise(
             F.col("b.t")
@@ -914,14 +915,16 @@ def dedup_lines_global(
     always kept. ``delim`` is a LITERAL separator (escaped before the
     split) and is also used to re-join.
 
-    Returns one row per input row: ``(id_col, out_col, n_kept,
+    Returns one row per distinct id (a NULL id is one group, and it
+    sorts first in the keep-first order): ``(id_col, out_col, n_kept,
     n_removed)`` with ``out_col`` (default ``{text_col}_deduped``) the
     re-assembled text, line order preserved; a document whose every
-    line was removed comes back as ``''``.
+    line was removed, or whose text is NULL, comes back as ``''``
+    (NULL text: ``('', 0, 0)``).
 
     Scale shape: one map-side-combinable ``min(struct(id, pos))`` per
     line key, one equi-join of lines against keepers on the key, one
-    groupBy(doc) re-assembly — three shuffles total, no window over
+    groupBy(doc) re-assembly — two shuffles total, no window over
     data, no driver collect. The per-doc ``collect_list`` is bounded
     by the document's own line count (already one row's payload).
     """
@@ -937,25 +940,32 @@ def dedup_lines_global(
             ).alias("_k")
         )
     )
+    # null-safe: a NULL id sorts first in min(struct), so it can be the
+    # keeper, and plain equality would then drop the line everywhere
     marked = keyed.join(keeper, "_key", "left").withColumn(
         "_keep",
         F.col("_ws")
-        | ((F.col("_id") == F.col("_k.k_id")) & (F.col("_pos") == F.col("_k.k_pos"))),
+        | (
+            F.col("_id").eqNullSafe(F.col("_k.k_id"))
+            & (F.col("_pos") == F.col("_k.k_pos"))
+        ),
     )
-    return _rebuild_deduped_lines(df, marked, id_col, text_col, delim, out_col)
+    return _rebuild_deduped_lines(marked, id_col, text_col, delim, out_col)
 
 
 def _keyed_lines(df: DataFrame, id_col: str, text_col: str, delim: str) -> DataFrame:
     """One row per line of ``text_col`` split on the LITERAL ``delim``:
     ``(_id, _pos, _line, _key, _ws)`` — ``_key`` the md5 of the
-    ``trim``-ed line, ``_ws`` true for a whitespace-only line. The line
-    keying of :func:`dedup_lines_global` and the incremental line
-    family (one key rule, so batch and state keys always agree)."""
+    ``trim``-ed line, ``_ws`` true for a whitespace-only line; a NULL
+    text keeps its document as one row whose line, key and ``_ws`` are
+    NULL. The line keying of :func:`dedup_lines_global` and the
+    incremental line family (one key rule, so batch and state keys
+    always agree)."""
     import re as _re
 
     lines = df.select(
         F.col(id_col).alias("_id"),
-        F.posexplode(
+        F.posexplode_outer(
             F.split(F.col(text_col), _re.escape(delim), -1)
         ).alias("_pos", "_line"),
     )
@@ -994,13 +1004,14 @@ def incremental_line_dedup(
     TEXT is never rescanned); the within-batch keep-first window
     partitions by line key over batch lines only; re-assembly is the
     same per-doc groupBy as the batch operator. Returns ``(id_col,
-    out_col, n_kept, n_removed)``.
+    out_col, n_kept, n_removed)``, one row per distinct id (a NULL id
+    is one group), as the batch operator does.
     """
     marked, novel, store = _incremental_lines_flagged(
         spark, new_df, state_path, id_col, text_col, delim
     )
     store.append(novel)
-    return _rebuild_deduped_lines(new_df, marked, id_col, text_col, delim, out_col)
+    return _rebuild_deduped_lines(marked, id_col, text_col, delim, out_col)
 
 
 # keys are md5 of lines SPLIT BY ``delim``: a different delimiter hashes
@@ -1067,7 +1078,6 @@ def _incremental_lines_flagged(
 
 
 def _rebuild_deduped_lines(
-    new_df: DataFrame,
     marked: DataFrame,
     id_col: str,
     text_col: str,
@@ -1076,10 +1086,12 @@ def _rebuild_deduped_lines(
 ) -> DataFrame:
     """Re-assemble per-document text from the lines a ``_keep``-flagged
     ``marked`` frame (:func:`_keyed_lines` plus ``_keep``; a NULL flag
-    drops the line) keeps → ``(id_col, out_col, n_kept, n_removed)``.
-    One per-document aggregate counts the kept and the total lines."""
+    drops the line) keeps → ``(id_col, out_col, n_kept, n_removed)``,
+    one row per distinct id. One per-document aggregate counts the kept
+    and the total non-NULL lines, so a NULL-text document (one NULL
+    line) returns ``('', 0, 0)`` with no second read of the input."""
     out_col = out_col or f"{text_col}_deduped"
-    keep = F.col("_keep")
+    keep = F.col("_keep") & F.col("_line").isNotNull()
     rebuilt = marked.groupBy("_id").agg(
         F.array_join(
             F.transform(
@@ -1091,19 +1103,13 @@ def _rebuild_deduped_lines(
             delim,
         ).alias(out_col),
         F.count(F.when(keep, 1)).alias("_n_kept"),
-        F.count(F.lit(1)).alias("_total"),
+        F.count("_line").alias("_total"),
     )
-    base = new_df.select(F.col(id_col).alias("_id"))
-    return (
-        base.join(rebuilt, "_id", "left")
-        .select(
-            F.col("_id").alias(id_col),
-            F.coalesce(F.col(out_col), F.lit("")).alias(out_col),
-            F.coalesce("_n_kept", F.lit(0)).cast("long").alias("n_kept"),
-            (F.coalesce("_total", F.lit(0)) - F.coalesce("_n_kept", F.lit(0)))
-            .cast("long")
-            .alias("n_removed"),
-        )
+    return rebuilt.select(
+        F.col("_id").alias(id_col),
+        out_col,
+        F.col("_n_kept").cast("long").alias("n_kept"),
+        (F.col("_total") - F.col("_n_kept")).cast("long").alias("n_removed"),
     )
 
 
@@ -2317,6 +2323,8 @@ def incremental_cdc_ingest(
         )
     )
     zero = F.lit(0).cast("long")
+    # the one id spine left: the Python chunker emits no row for an
+    # empty document, so only a second read of new_df can keep it
     return (
         new_df.select(F.col(id_col)).distinct()
         .join(report, id_col, "left")

@@ -70,8 +70,9 @@ def dsir_logratios(
     get a well-defined floor. Returns ``(id_col, n_feats,
     logratio_micro, avg_logratio)``: the exact micro-nat long sum and
     the length-normalized double (use the normalized form when
-    comparing documents of very different lengths). Zero-feature
-    documents get NULL scores.
+    comparing documents of very different lengths). One row per
+    distinct id (a NULL id is one group); zero-feature documents get
+    ``n_feats = 0`` and NULL scores.
     """
     if alpha <= 0:
         raise ValueError("alpha must be > 0")
@@ -112,21 +113,21 @@ def dsir_logratios(
         F.explode_outer(
             _feature_buckets(text_col, hash_buckets, use_bigrams, lowercase)
         ).alias("bucket"),
-    ).where(F.col("bucket").isNotNull())
+    )
     scored = (
         ex.join(F.broadcast(counts), "bucket", "left")
         .crossJoin(F.broadcast(tot))
-        .select(id_col, contrib.alias("__c__"))
         .groupBy(id_col)
         .agg(
-            F.count(F.lit(1)).cast("long").alias("n_feats"),
-            F.sum("__c__").cast("long").alias("logratio_micro"),
+            F.count("bucket").cast("long").alias("n_feats"),
+            F.sum(F.when(F.col("bucket").isNotNull(), contrib))
+            .cast("long")
+            .alias("logratio_micro"),
         )
     )
-    spine = df.select(id_col)
-    return spine.join(scored, id_col, "left").select(
+    return scored.select(
         id_col,
-        F.coalesce("n_feats", F.lit(0)).alias("n_feats"),
+        "n_feats",
         "logratio_micro",
         (
             F.col("logratio_micro").cast("double")

@@ -119,7 +119,7 @@ def train_char_langid(
       observed languages: ``w = ln((cnt + α) / (tot_lang + α·B))`` in
       integer micro-nats. Dense coverage (zero-count buckets get the
       smoothed floor) is what lets :func:`classify_lang` run a single
-      inner join with no OOV branch.
+      join with no OOV branch.
     * ``priors`` — ``(lang, prior_micro)`` with
       ``prior = ln(docs_lang / docs_total)``.
 
@@ -188,11 +188,13 @@ def classify_lang(
     """Score documents against a trained char-n-gram NB model.
 
     ``score(doc, lang) = prior(lang) + Σ_grams w(lang, bucket)`` —
-    exact long arithmetic in micro-nats. Output one row per input
-    document: ``(id, lang_pred, score_micro, margin_micro, n_grams)``
-    where ``margin_micro`` is best − runner-up (a confidence signal;
-    CCNet thresholds on exactly this). Documents with no grams (blank
-    text) predict ``default`` with NULL score/margin.
+    exact long arithmetic in micro-nats. Output one row per distinct
+    id (a NULL id is one group): ``(id, lang_pred, score_micro,
+    margin_micro, n_grams)`` where ``margin_micro`` is best − runner-up
+    (a confidence signal; CCNet thresholds on exactly this) and
+    ``n_grams`` counts the grams the grid matched. Documents with no
+    matched grams (blank or NULL text) predict ``default`` with NULL
+    score/margin.
 
     Ties (possible only on degenerate inputs — scores are integer
     sums) break toward the lexicographically LAST language, matching
@@ -222,15 +224,15 @@ def classify_lang(
     )
     ex = df.select(
         F.col(id_col),
-        F.explode(char_ngram_buckets(text_col, hash_buckets, n_min, n_max)).alias(
-            "bucket"
-        ),
+        F.explode_outer(
+            char_ngram_buckets(text_col, hash_buckets, n_min, n_max)
+        ).alias("bucket"),
     )
     agg = (
-        ex.join(F.broadcast(grid_arr), "bucket")
+        ex.join(F.broadcast(grid_arr), "bucket", "left")
         .groupBy(id_col)
         .agg(
-            F.count(F.lit(1)).cast("long").alias("n_grams"),
+            F.count("__warr__").cast("long").alias("n_grams"),
             *[
                 F.sum(F.col("__warr__")[i]).cast("long").alias(f"__s{i}__")
                 for i in range(n_langs)
@@ -249,20 +251,14 @@ def classify_lang(
     ranked = F.reverse(F.array_sort(cands))
     top = ranked[0]
     second = F.when(F.lit(n_langs > 1), ranked[1])
-    picked = agg.select(
+    return agg.select(
         id_col,
-        top["lang"].alias("lang_pred"),
+        F.when(F.col("n_grams") > 0, top["lang"])
+        .otherwise(F.lit(default))
+        .alias("lang_pred"),
         top["__score__"].alias("score_micro"),
         (top["__score__"] - F.coalesce(second["__score__"], top["__score__"])).alias(
             "margin_micro"
         ),
         "n_grams",
-    )
-    spine = df.select(id_col)
-    return spine.join(picked, id_col, "left").select(
-        id_col,
-        F.coalesce("lang_pred", F.lit(default)).alias("lang_pred"),
-        "score_micro",
-        "margin_micro",
-        F.coalesce("n_grams", F.lit(0)).cast("long").alias("n_grams"),
     )

@@ -53,8 +53,9 @@ def unigram_lm_scores(
     only with an external ``lm_df``) get the smoothed floor
     ``alpha / (total + alpha * vocab)``.
 
-    Returns ``(id_col, n_tokens, avg_neg_logprob)``; documents with no
-    tokens get a NULL score. Lower = more typical; filter with e.g.
+    Returns ``(id_col, n_tokens, avg_neg_logprob)``, one row per
+    distinct id (a NULL id is one group); documents with no tokens get
+    ``n_tokens = 0`` and a NULL score. Lower = more typical; filter with e.g.
     ``score < corpus quantile`` (pair with
     :func:`kolang_spark.operators.binning.equi_depth_bin`).
 
@@ -78,42 +79,33 @@ def unigram_lm_scores(
         F.count(F.lit(1)).alias("__vocab__"),
     )
 
-    ex = df.select(
-        F.col(id_col), F.explode_outer(_words(text_col, lowercase)).alias("__tok__")
-    ).where(F.col("__tok__").isNotNull() & (F.col("__tok__") != ""))
+    toks = F.filter(_words(text_col, lowercase), lambda t: t != "")
+    ex = df.select(F.col(id_col), F.explode_outer(toks).alias("__tok__"))
     # micro-nat fixed point: exact long sum, order-independent
     contrib = _micro(F.log(F.col("__cnt__").cast("double") + F.lit(float(alpha))))
     scored = (
         ex.join(counts, "__tok__", "left")
-        .select(
-            id_col,
-            F.coalesce(contrib, _micro(F.log(F.lit(float(alpha))))).alias("__c__"),
-        )
         .groupBy(id_col)
         .agg(
-            F.count(F.lit(1)).cast("long").alias("n_tokens"),
-            F.sum("__c__").alias("__sum__"),
+            F.count("__tok__").cast("long").alias("n_tokens"),
+            F.sum(
+                F.when(
+                    F.col("__tok__").isNotNull(),
+                    F.coalesce(contrib, _micro(F.log(F.lit(float(alpha))))),
+                )
+            ).alias("__sum__"),
         )
     )
     denom = F.log(
         F.col("__total__").cast("double")
         + F.lit(float(alpha)) * F.col("__vocab__").cast("double")
     )
-    out = scored.crossJoin(F.broadcast(consts)).select(
+    return scored.crossJoin(F.broadcast(consts)).select(
         id_col,
         "n_tokens",
         (denom - F.col("__sum__") / (F.col("n_tokens") * F.lit(MICRO))).alias(
             "avg_neg_logprob"
         ),
-    )
-    # re-attach zero-token documents with NULL score (left anti would
-    # cost a second scan of df; a left join from the id spine does it
-    # in the same pass shape)
-    spine = df.select(F.col(id_col)).distinct()
-    return spine.join(out, id_col, "left").select(
-        id_col,
-        F.coalesce("n_tokens", F.lit(0).cast("long")).alias("n_tokens"),
-        "avg_neg_logprob",
     )
 
 
@@ -144,8 +136,9 @@ def bigram_lm_scores(
     Same fixed-point contract as the unigram scorer: per-position
     ``−ln(P)`` is rounded to integer micro-nats before the per-document
     sum, so scores are exact and SQL-replayable. Returns
-    ``(id_col, n_tokens, avg_neg_logprob)``; zero-token documents get
-    NULL scores. Lower = more typical.
+    ``(id_col, n_tokens, avg_neg_logprob)``, one row per distinct id (a
+    NULL id is one group); zero-token documents get ``n_tokens = 0``
+    and NULL scores. Lower = more typical.
     """
     if alpha <= 0:
         raise ValueError("alpha must be > 0")
@@ -156,16 +149,19 @@ def bigram_lm_scores(
         """Positional (prev, cur) stream; position 0 gets the BOS
         context. Built from one posexplode with the token array
         carried alongside (``element_at(pos)`` for the predecessor) —
-        no self-join, no window."""
+        no self-join, no window. With ``with_id`` a zero-token document
+        keeps one NULL ``__cur__`` row."""
         t = F.filter(_words(text_col, lowercase), lambda x: x != "")
-        cols = [F.col(id_col)] if with_id else []
-        base = frame.select(*cols, t.alias("__t__"))
-        return base.select(
-            *[F.col(c) for c in ([id_col] if with_id else [])],
+        ids = [F.col(id_col)] if with_id else []
+        pairs = frame.select(*ids, t.alias("__t__")).select(
+            *ids,
             F.posexplode_outer("__t__").alias("__pos__", "__cur__"),
             F.col("__t__").alias("__ta__"),
-        ).where(F.col("__cur__").isNotNull()).select(
-            *[F.col(c) for c in ([id_col] if with_id else [])],
+        )
+        if not with_id:
+            pairs = pairs.where(F.col("__cur__").isNotNull())
+        return pairs.select(
+            *ids,
             F.when(F.col("__pos__") == 0, F.lit(_BOS))
             .otherwise(F.element_at("__ta__", F.col("__pos__").cast("int")))
             .alias("__prev__"),
@@ -202,26 +198,19 @@ def bigram_lm_scores(
         .join(ctx, "__prev__", "left")
         .join(uni, "__cur__", "left")
         .crossJoin(F.broadcast(consts))
-        .select(id_col, contrib.alias("__c__"))
         .groupBy(id_col)
         .agg(
-            F.count(F.lit(1)).cast("long").alias("n_tokens"),
-            F.sum("__c__").alias("__sum__"),
+            F.count("__cur__").cast("long").alias("n_tokens"),
+            F.sum(F.when(F.col("__cur__").isNotNull(), contrib)).alias("__sum__"),
         )
     )
-    out = scored.select(
+    return scored.select(
         id_col,
         "n_tokens",
         (
             F.col("__sum__").cast("double")
             / (F.col("n_tokens").cast("double") * F.lit(MICRO))
         ).alias("avg_neg_logprob"),
-    )
-    spine = df.select(F.col(id_col)).distinct()
-    return spine.join(out, id_col, "left").select(
-        id_col,
-        F.coalesce("n_tokens", F.lit(0).cast("long")).alias("n_tokens"),
-        "avg_neg_logprob",
     )
 
 

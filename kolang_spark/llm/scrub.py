@@ -453,9 +453,10 @@ def flag_blocked_terms(
     aggregate — the corpus never shuffles on a non-key, and the gram
     explode is bounded by the lengths actually present in the list.
 
-    Returns one row per input id: ``(id_col, n_hits, n_terms,
-    is_blocked)`` — total occurrences, distinct blocklist entries
-    present, and the C4 drop flag ``n_hits > 0``.
+    Returns one row per distinct id (a NULL id is one group):
+    ``(id_col, n_hits, n_terms, is_blocked)`` — total occurrences,
+    distinct blocklist entries present, and the C4 drop flag
+    ``n_hits > 0``; a document with no hits gets ``(0, 0, false)``.
     """
     from pyspark.sql import DataFrame as _DF
 
@@ -483,7 +484,7 @@ def flag_blocked_terms(
     lengths = sorted({len(t.split()) for t in norm})
 
     spark = df.sparkSession
-    tdf = spark.createDataFrame([(t,) for t in norm], ["g"])
+    tdf = spark.createDataFrame([(t, True) for t in norm], ["g", "__hit__"])
 
     toks = F.filter(_words(text_col, lowercase), lambda t: t != "")
 
@@ -491,29 +492,22 @@ def flag_blocked_terms(
     for ln in lengths:
         grams = toks if ln == 1 else word_ngrams(toks, ln)
         gram_frames.append(
-            df.select(F.col(id_col), F.explode_outer(grams).alias("g")).where(
-                F.col("g").isNotNull()
-            )
+            df.select(F.col(id_col), F.explode_outer(grams).alias("g"))
         )
     all_grams = gram_frames[0]
     for gf in gram_frames[1:]:
         all_grams = all_grams.unionByName(gf)
 
     hits = (
-        all_grams.join(F.broadcast(tdf), "g")
+        all_grams.join(F.broadcast(tdf), "g", "left")
         .groupBy(id_col)
         .agg(
-            F.count(F.lit(1)).cast("long").alias("n_hits"),
-            F.count_distinct("g").cast("long").alias("n_terms"),
+            F.count("__hit__").cast("long").alias("n_hits"),
+            F.count_distinct(F.when(F.col("__hit__"), F.col("g")))
+            .cast("long")
+            .alias("n_terms"),
         )
     )
-    return (
-        df.select(F.col(id_col)).distinct()
-        .join(hits, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("n_hits", F.lit(0).cast("long")).alias("n_hits"),
-            F.coalesce("n_terms", F.lit(0).cast("long")).alias("n_terms"),
-            (F.coalesce("n_hits", F.lit(0)) > 0).alias("is_blocked"),
-        )
+    return hits.select(
+        id_col, "n_hits", "n_terms", (F.col("n_hits") > 0).alias("is_blocked")
     )

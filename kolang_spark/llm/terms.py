@@ -140,9 +140,9 @@ def ngram_novelty(
     (the df side is one row per distinct shingle). No window, no UDF,
     no driver collect.
 
-    Returns ``(id_col, n_shingles, n_novel, novelty)``; documents
-    shorter than ``n`` words have no shingles and get
-    ``(0, 0, NULL)``.
+    Returns ``(id_col, n_shingles, n_novel, novelty)``, one row per
+    distinct id (a NULL id is one group); documents shorter than ``n``
+    words have no shingles and get ``(0, 0, NULL)``.
     """
     if n < 1:
         raise ValueError("n must be >= 1")
@@ -158,32 +158,30 @@ def ngram_novelty(
                 F.array_distinct(word_ngrams(F.col(tok), n))
             ).alias("shingle"),
         )
-        .where(F.col("shingle").isNotNull())
     )
     # each doc contributes a distinct shingle once, so COUNT == doc freq
-    dfreq = ex.groupBy("shingle").agg(
-        F.count(F.lit(1)).cast("long").alias("__df_cnt")
+    dfreq = (
+        ex.where(F.col("shingle").isNotNull())
+        .groupBy("shingle")
+        .agg(F.count(F.lit(1)).cast("long").alias("__df_cnt"))
     )
     per_doc = (
-        ex.join(dfreq, "shingle")
+        ex.join(dfreq, "shingle", "left")
         .groupBy(id_col)
         .agg(
-            F.count(F.lit(1)).cast("long").alias("n_shingles"),
-            F.sum((F.col("__df_cnt") == 1).cast("long"))
+            F.count("shingle").cast("long").alias("n_shingles"),
+            F.count(F.when(F.col("__df_cnt") == 1, 1))
             .cast("long")
             .alias("n_novel"),
         )
     )
-    # left join keeps sub-n-word documents (no shingles at all)
-    return (
-        df.select(F.col(id_col)).distinct()
-        .join(per_doc, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("n_shingles", F.lit(0).cast("long")).alias("n_shingles"),
-            F.coalesce("n_novel", F.lit(0).cast("long")).alias("n_novel"),
-            (F.col("n_novel") / F.col("n_shingles")).alias("novelty"),
-        )
+    return per_doc.select(
+        id_col,
+        "n_shingles",
+        "n_novel",
+        F.when(
+            F.col("n_shingles") > 0, F.col("n_novel") / F.col("n_shingles")
+        ).alias("novelty"),
     )
 
 
@@ -282,34 +280,33 @@ def oov_stats(
     own, but a character-level or n-gram "vocabulary" can be 10⁸) →
     one map-side-combinable per-doc aggregate.
 
-    Returns ``(id_col, n_tokens, n_oov, oov_rate)``; documents with no
-    tokens get ``(0, 0, NULL)``.
+    Returns ``(id_col, n_tokens, n_oov, oov_rate)``, one row per
+    distinct id (a NULL id is one group); documents with no tokens get
+    ``(0, 0, NULL)``.
     """
     v = vocab.select(
         F.col(term_col).cast("string").alias("__vt__"),
         F.lit(True).alias("__in_vocab__"),
     ).distinct()
-    toks = _words(text_col, lowercase)
-    terms = df.select(
-        F.col(id_col), F.explode_outer(toks).alias("__t__")
-    ).where((F.col("__t__") != "") & F.col("__t__").isNotNull())
+    toks = F.filter(_words(text_col, lowercase), lambda t: t != "")
+    terms = df.select(F.col(id_col), F.explode_outer(toks).alias("__t__"))
     per_doc = (
         terms.join(v, terms["__t__"] == v["__vt__"], "left")
         .groupBy(id_col)
         .agg(
-            F.count(F.lit(1)).cast("long").alias("n_tokens"),
-            F.sum(F.col("__in_vocab__").isNull().cast("long"))
+            F.count("__t__").cast("long").alias("n_tokens"),
+            F.count(
+                F.when(F.col("__t__").isNotNull() & F.col("__in_vocab__").isNull(), 1)
+            )
             .cast("long")
             .alias("n_oov"),
         )
     )
-    return (
-        df.select(F.col(id_col)).distinct()
-        .join(per_doc, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("n_tokens", F.lit(0).cast("long")).alias("n_tokens"),
-            F.coalesce("n_oov", F.lit(0).cast("long")).alias("n_oov"),
-            (F.col("n_oov") * F.lit(1.0) / F.col("n_tokens")).alias("oov_rate"),
-        )
+    return per_doc.select(
+        id_col,
+        "n_tokens",
+        "n_oov",
+        F.when(
+            F.col("n_tokens") > 0, F.col("n_oov") * F.lit(1.0) / F.col("n_tokens")
+        ).alias("oov_rate"),
     )

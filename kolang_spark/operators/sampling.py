@@ -156,14 +156,9 @@ def stratified_fixed_sample(
     """
     if n_per_stratum < 1:
         raise ValueError("n_per_stratum must be >= 1")
-    h = _hash60(key, salt)
-    w = Window.partitionBy(to_col(strata)).orderBy(
-        h.asc(), to_col(key).cast("string").asc()
-    )
-    return (
-        df.withColumn("__ks_rn__", F.row_number().over(w))
-        .where(F.col("__ks_rn__") <= n_per_stratum)
-        .drop("__ks_rn__")
+    order = [_hash60(key, salt), to_col(key).cast("string")]
+    return top_k_per_group(
+        df, strata, order, n_per_stratum, ascending=True, rank_col=None
     )
 
 
@@ -318,19 +313,40 @@ def mix_datasets(
             raise ValueError(f"weight for domain {name!r} must be >= 0")
     if sum(weights.values()) <= 0:
         raise ValueError("weights must sum to > 0")
-    d = to_col(domain)
     size = (
         F.count(F.lit(1)).cast("double")
         if weight is None
         else F.sum(F.coalesce(to_col(weight).cast("double"), F.lit(0.0)))
     )
-    counts = {
+    d = to_col(domain)
+    counts = _domain_sizes(df, d, d.isin(*weights.keys()), size)
+    return _mix_by_sizes(df, domain, weights, counts, key, salt)
+
+
+def _domain_sizes(df: DataFrame, d: Column, where: Column, size: Column) -> dict:
+    """``{domain: size}`` over the rows ``where`` selects: one
+    map-side-combinable ``groupBy(domain)`` whose driver payload is one
+    row per domain."""
+    return {
         r["__ks_dom__"]: r["n"]
-        for r in df.where(d.isin(*weights.keys()))
+        for r in df.where(where)
         .groupBy(d.alias("__ks_dom__"))
         .agg(size.alias("n"))
-        .collect()  # bounded: one row per listed domain
+        .collect()  # bounded: one row per domain
     }
+
+
+def _mix_by_sizes(
+    df: DataFrame,
+    domain: ColumnOrName,
+    weights: "dict[str, float]",
+    counts: dict,
+    key: ColumnOrName,
+    salt: str,
+) -> DataFrame:
+    """The tail of :func:`mix_datasets` once the domain sizes are read:
+    validate them against ``weights``, derive the per-domain fractions
+    and hash-gate the rows."""
     missing = [
         name for name, p in weights.items() if p > 0 and counts.get(name) is None
     ]
@@ -395,34 +411,24 @@ def mix_datasets_temperature(
     plain ``sqrt``).
 
     ``domains`` limits the mixture (rows outside are dropped, matching
-    :func:`mix_datasets`); ``None`` discovers all non-NULL domains
-    with a bounded ``distinct().collect()`` (one row per domain —
-    domains are languages/sources, not data-scale). Selection is the
-    same md5 hash-gate: deterministic across runs, partitionings, and
-    engines.
+    :func:`mix_datasets`); ``None`` mixes all non-NULL domains. Either
+    way the domain sizes are one bounded aggregate collect (one row per
+    domain — domains are languages/sources, not data-scale), shared
+    with :func:`mix_datasets`' thresholds, so the call runs one Spark
+    job before it returns. Selection is the same md5 hash-gate:
+    deterministic across runs, partitionings, and engines.
     """
     if temperature <= 0:
         raise ValueError("temperature must be > 0")
     d = to_col(domain)
+    where = d.isNotNull() if domains is None else d.isin(*domains)
+    counts = _domain_sizes(df, d, where, F.count(F.lit(1)).cast("double"))
     if domains is None:
-        domains = [
-            r["__ks_dom__"]
-            for r in df.select(d.alias("__ks_dom__"))
-            .where(d.isNotNull())
-            .distinct()
-            .collect()  # bounded: one row per distinct domain
-        ]
-    counts = {
-        r["__ks_dom__"]: r["n"]
-        for r in df.where(d.isin(*domains))
-        .groupBy(d.alias("__ks_dom__"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()  # bounded: one row per listed domain
-    }
+        domains = sorted(counts)
     missing = sorted(set(domains) - set(counts))
     if missing:
         raise ValueError(f"listed domains absent from the data: {missing}")
     weights = {
         name: counts[name] ** (1.0 / temperature) for name in domains
     }
-    return mix_datasets(df, domain, weights, key, salt=salt)
+    return _mix_by_sizes(df, domain, weights, counts, key, salt)

@@ -829,14 +829,9 @@ def upsert_partitioned(
     if not partition_by:
         raise ValueError("partition_by must name at least one column")
     if order_col is not None:
-        from pyspark.sql import Window
+        from kolang_spark.operators.sampling import top_k_per_group
 
-        w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
-        updates = (
-            updates.withColumn("__ks_rn__", F.row_number().over(w))
-            .where(F.col("__ks_rn__") == 1)
-            .drop("__ks_rn__")
-        )
+        updates = top_k_per_group(updates, keys, order_col, 1, rank_col=None)
 
     affected = updates.select(*partition_by).distinct().limit(
         max_affected_partitions + 1

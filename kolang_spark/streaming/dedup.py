@@ -13,8 +13,7 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from kolang_spark.llm.textstats import doc_fingerprint
 
@@ -64,10 +63,9 @@ def dedup_stream(
             "__ks_fp__"
         )
     if order_col is not None:
-        w = Window.partitionBy("__ks_fp__").orderBy(order_col)
-        return (
-            out.withColumn("__ks_rn__", F.row_number().over(w))
-            .where(F.col("__ks_rn__") == 1)
-            .drop("__ks_fp__", "__ks_rn__")
-        )
+        from kolang_spark.operators.sampling import top_k_per_group
+
+        return top_k_per_group(
+            out, "__ks_fp__", order_col, 1, ascending=True, rank_col=None
+        ).drop("__ks_fp__")
     return out.dropDuplicates(["__ks_fp__"]).drop("__ks_fp__")

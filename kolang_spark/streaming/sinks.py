@@ -139,13 +139,10 @@ def upsert_sink(
         # 'path already exists'
         if not path_exists(spark, path):
             if order_col is not None:
-                from pyspark.sql import Window
+                from kolang_spark.operators.sampling import top_k_per_group
 
-                w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
-                batch_df = (
-                    batch_df.withColumn("__ks_rn__", F.row_number().over(w))
-                    .where(F.col("__ks_rn__") == 1)
-                    .drop("__ks_rn__")
+                batch_df = top_k_per_group(
+                    batch_df, keys, order_col, 1, rank_col=None
                 )
             batch_df.write.partitionBy(*partition_by).parquet(path)
         else:
@@ -266,7 +263,7 @@ def line_dedup_sink(
             delim, exclude_batch=batch_id,
         ),
         lambda batch_df, marked: _rebuild_deduped_lines(
-            batch_df, marked, id_col, text_col, delim, out_col
+            marked, id_col, text_col, delim, out_col
         ),
         output_path,
         idempotent_output,

@@ -176,3 +176,126 @@ def test_winsorize_and_standardize_contracts(spark):
         winsorize(df, "v", 0.9, 0.1)
     with pytest.raises(ValueError):
         standardize(df, "v", method="nope")
+
+
+# The per-document text scorers: one groupBy(id) over the exploded
+# tokens (a zero-token document keeps one NULL-token row) is the whole
+# result, so each returns one row per distinct id, a NULL id is one
+# real group, and empty, blank and NULL text get the documented
+# zero-token defaults straight from the aggregate.
+SPINE_FREE_DOCS = [
+    (1, "alpha beta gamma"),
+    (2, ""),
+    (3, "   "),
+    (4, None),
+    (None, "alpha beta delta"),
+    (5, "alpha beta"),
+    (5, "gamma delta"),
+]
+ZERO_TOKEN_IDS = (2, 3, 4)
+LABELED = [
+    ("en", "alpha beta gamma delta"),
+    ("en", "alpha gamma beta"),
+    ("fr", "le la les une des"),
+    ("fr", "la les une"),
+]
+
+
+def _spine_free_scorers():
+    from kolang_spark.llm import dedup_lines_global
+    from kolang_spark.llm.classify import linear_text_classifier, train_token_logodds
+    from kolang_spark.llm.dsir import dsir_logratios
+    from kolang_spark.llm.langid import classify_lang, train_char_langid
+    from kolang_spark.llm.lmscore import bigram_lm_scores, unigram_lm_scores
+    from kolang_spark.llm.scrub import flag_blocked_terms
+    from kolang_spark.llm.terms import ngram_novelty, oov_stats
+
+    def labeled(spark):
+        return spark.createDataFrame(LABELED, "lang string, text string")
+
+    def classifier(spark, df):
+        lab = labeled(spark).withColumn("y", F.col("lang") == "en")
+        return linear_text_classifier(df, train_token_logodds(lab, "y"))
+
+    def langid(spark, df):
+        grid, priors = train_char_langid(labeled(spark), hash_buckets=64)
+        return classify_lang(df, grid, priors, hash_buckets=64)
+
+    def oov(spark, df):
+        return oov_stats(df, spark.createDataFrame([("alpha",)], "term string"))
+
+    zero = lambda **kw: {i: kw for i in ZERO_TOKEN_IDS}  # noqa: E731
+    # name: (call, the count column, the defaults per zero-token id)
+    return {
+        "linear_text_classifier": (
+            classifier, "n_tokens", zero(n_tokens=0, score=None, prob=None)
+        ),
+        "dsir_logratios": (
+            lambda spark, df: dsir_logratios(df, labeled(spark), hash_buckets=64),
+            "n_feats",
+            zero(n_feats=0, logratio_micro=None, avg_logratio=None),
+        ),
+        "classify_lang": (
+            langid,
+            "n_grams",
+            zero(lang_pred="und", score_micro=None, margin_micro=None, n_grams=0),
+        ),
+        "unigram_lm_scores": (
+            lambda spark, df: unigram_lm_scores(df),
+            "n_tokens",
+            zero(n_tokens=0, avg_neg_logprob=None),
+        ),
+        "bigram_lm_scores": (
+            lambda spark, df: bigram_lm_scores(df),
+            "n_tokens",
+            zero(n_tokens=0, avg_neg_logprob=None),
+        ),
+        "ngram_novelty": (
+            lambda spark, df: ngram_novelty(df, n=2),
+            "n_shingles",
+            zero(n_shingles=0, n_novel=0, novelty=None),
+        ),
+        "oov_stats": (oov, "n_tokens", zero(n_tokens=0, n_oov=0, oov_rate=None)),
+        "flag_blocked_terms": (
+            lambda spark, df: flag_blocked_terms(df, ["alpha", "beta delta"]),
+            "n_hits",
+            zero(n_hits=0, n_terms=0, is_blocked=False),
+        ),
+        # an empty or blank text is one whitespace line, kept as is
+        "dedup_lines_global": (
+            lambda spark, df: dedup_lines_global(df),
+            "n_kept",
+            {
+                2: dict(text_deduped="", n_kept=1, n_removed=0),
+                3: dict(text_deduped="   ", n_kept=1, n_removed=0),
+                4: dict(text_deduped="", n_kept=0, n_removed=0),
+            },
+        ),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_spine_free_scorers()))
+def test_spine_free_scorers_one_row_per_distinct_id(spark, name):
+    call, count_col, defaults = _spine_free_scorers()[name]
+    df = spark.createDataFrame(SPINE_FREE_DOCS, "doc_id long, text string")
+    rows = call(spark, df).collect()
+    ids = [r.doc_id for r in rows]
+    assert sorted(ids, key=lambda i: (i is not None, i)) == [None, 1, 2, 3, 4, 5]
+    got = {r.doc_id: r.asDict() for r in rows}
+    for i, expect in defaults.items():
+        assert {k: got[i][k] for k in expect} == expect, (i, got[i])
+    # the NULL id and the repeated id are scored, not defaulted
+    assert got[None][count_col] > 0 and got[5][count_col] > 0
+
+
+def test_dedup_lines_global_null_id_keeps_its_line(spark):
+    """A NULL id sorts first in the keep-first order, so it keeps a line
+    it shares with later documents; the others lose it."""
+    from kolang_spark.llm import dedup_lines_global
+
+    df = spark.createDataFrame(
+        [(None, "shared\nx1"), (1, "shared\ny1"), (2, "shared\nz1")],
+        "doc_id long, text string",
+    )
+    got = {r.doc_id: r.text_deduped for r in dedup_lines_global(df).collect()}
+    assert got == {None: "shared\nx1", 1: "y1", 2: "z1"}

@@ -309,6 +309,70 @@ def test_one_runtime_no_jvm_less_twins():
         assert not used & local, (fn.__name__, sorted(used & local))
 
 
+def test_one_id_spine_join():
+    """No operator re-attaches documents by joining onto a second read
+    of its input's id column (``<input>.select(<id>)``, optionally
+    ``.distinct()``, joined directly or through a variable): a
+    per-document scorer keeps zero-token documents through
+    ``explode_outer`` and one ``groupBy(id)``. The one spine left is
+    ``incremental_cdc_ingest``'s, whose Python chunker emits no row
+    for an empty document. ``dedup_keep_list`` has the same shape but
+    no second read: its id column is its only read of ``df``, looked up
+    in the components of ``pairs``, which hold no singleton."""
+    import ast
+    import pathlib
+
+    import kolang_spark
+
+    id_arg = re.compile(r"^(F\.col\()?id_col\)?(\.alias\(.*\))?$")
+
+    def spine(node):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "distinct"
+        ):
+            node = node.func.value
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "select"
+            and len(node.args) == 1
+            and not node.keywords
+            and bool(id_arg.match(ast.unparse(node.args[0])))
+        )
+
+    root = pathlib.Path(kolang_spark.__file__).parent
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        mod = ".".join(path.relative_to(root).with_suffix("").parts)
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            names = {
+                t.id
+                for n in ast.walk(fn)
+                if isinstance(n, ast.Assign) and spine(n.value)
+                for t in n.targets
+                if isinstance(t, ast.Name)
+            }
+            for n in ast.walk(fn):
+                if (
+                    isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and n.func.attr == "join"
+                ):
+                    recv = n.func.value
+                    if spine(recv) or (
+                        isinstance(recv, ast.Name) and recv.id in names
+                    ):
+                        hits.append(f"{mod}.{fn.name}")
+    assert hits == [
+        "llm.dedup.dedup_keep_list",
+        "llm.dedup.incremental_cdc_ingest",
+    ], hits
+
+
 def test_md5_60_matches_python_md5(spark):
     """``utils._md5_60`` is the int of hex chars 18-32 of the md5 digest
     of the input bytes — the value the DuckDB oracle replays — for
@@ -382,6 +446,32 @@ def test_state_probe_plan(spark, tmp_path, monkeypatch, kind):
     assert [p for p in _scanned_paths(build) if state in p]
     assert not [n for n in _plan_nodes(build) if n.nodeName() == "Aggregate"]
     assert summary(out) == expect
+
+
+def test_rebuild_deduped_lines_reads_only_marked(spark, tmp_path):
+    """The line re-assembly of the batch, incremental and streaming
+    line dedup is one aggregate over the flagged lines: it scans the
+    ``marked`` frame once and joins nothing, and a NULL-text document
+    (one NULL line) comes back as ``('', 0, 0)``."""
+    from kolang_spark.llm.dedup import _keyed_lines, _rebuild_deduped_lines
+
+    docs = spark.createDataFrame(
+        [(1, "a\nb"), (2, None), (3, "")], "doc_id long, text string"
+    )
+    path = str(tmp_path / "marked")
+    _keyed_lines(docs, "doc_id", "text", "\n").withColumn(
+        "_keep", F.col("_line") != "b"
+    ).write.parquet(path)
+    marked = spark.read.parquet(path)
+    out = _rebuild_deduped_lines(marked, "doc_id", "text", "\n", None)
+    plan = out._jdf.queryExecution().optimizedPlan()
+    assert not [n for n in _plan_nodes(plan) if n.nodeName() == "Join"]
+    assert len(_scanned_paths(plan)) == 1 and path in _scanned_paths(plan)[0]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, "a", 1, 1),
+        (2, "", 0, 0),
+        (3, "", 1, 0),
+    ]
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))

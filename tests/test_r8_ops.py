@@ -437,14 +437,23 @@ def test_mix_temperature_invalid_args(spark):
 
 
 def test_mix_temperature_discovery_equals_explicit(spark):
+    from tests.conftest import jobs_started
+
     rows = [(k, "abc"[k % 3]) for k in range(60)]
     df = _mix_df(spark, rows)
-    auto = sorted(r.k for r in
-                  mix_datasets_temperature(df, "dom", 2.0, "k").collect())
-    expl = sorted(r.k for r in
-                  mix_datasets_temperature(df, "dom", 2.0, "k",
-                                           domains=["a", "b", "c"]).collect())
-    assert auto == expl
+    # the domain sizes are one aggregate collect, discovered or listed
+    auto, n_auto = jobs_started(
+        spark, lambda: mix_datasets_temperature(df, "dom", 2.0, "k")
+    )
+    expl, n_expl = jobs_started(
+        spark,
+        lambda: mix_datasets_temperature(
+            df, "dom", 2.0, "k", domains=["a", "b", "c"]
+        ),
+    )
+    _, n_one = jobs_started(spark, lambda: df.groupBy("dom").count().collect())
+    assert (n_auto, n_expl) == (n_one, n_one)
+    assert sorted(r.k for r in auto.collect()) == sorted(r.k for r in expl.collect())
 
 
 def test_pow_half_equals_sqrt_assumption():

@@ -567,7 +567,7 @@ SINK_KINDS = {
             spark, b, st, "doc_id", "text", "\n", exclude_batch=exclude_batch
         ),
         output=lambda b, marked: _rebuild_deduped_lines(
-            b, marked, "doc_id", "text", "\n", None
+            marked, "doc_id", "text", "\n", None
         ),
         op=incremental_line_dedup,
         sink=line_dedup_sink,
