@@ -993,19 +993,18 @@ def incremental_line_dedup(
     Whitespace-only lines are structural and always survive.
 
     Same contract as :func:`incremental_exact_dedup`: flags are pinned
-    (eager ``localCheckpoint``) BEFORE the state append, and the append
-    happens before return — a crashed-and-replayed batch can duplicate
-    output, never lose state; all path probes route through the Hadoop
-    ``FileSystem`` API so ``state_path`` may be an object-store URI.
+    BEFORE the state append, and the append happens before return — a
+    crashed-and-replayed batch can duplicate output, never lose state;
+    all path probes route through the Hadoop ``FileSystem`` API so
+    ``state_path`` may be an object-store URI.
 
-    Scale shape: the state probe is one ExistenceJoin on the 32-char
-    key with the state as the build side — broadcast when small,
-    shuffled above the broadcast threshold (the accumulated corpus
-    TEXT is never rescanned); the within-batch keep-first window
-    partitions by line key over batch lines only; re-assembly is the
-    same per-doc groupBy as the batch operator. Returns ``(id_col,
-    out_col, n_kept, n_removed)``, one row per distinct id (a NULL id
-    is one group), as the batch operator does.
+    Scale shape: the per-line flags come from the state protocol's
+    flag step (:meth:`kolang_spark.sources.state.BoundState.flag_new`,
+    keyed by the 32-char line key, first by ``(id, pos)``) over batch
+    lines only — the accumulated corpus TEXT is never rescanned;
+    re-assembly is the same per-doc groupBy as the batch operator.
+    Returns ``(id_col, out_col, n_kept, n_removed)``, one row per
+    distinct id (a NULL id is one group), as the batch operator does.
     """
     marked, novel, store = _incremental_lines_flagged(
         spark, new_df, state_path, id_col, text_col, delim
@@ -1042,35 +1041,26 @@ def _incremental_lines_flagged(
     per-line keep flags computed against the CURRENT state, plus the
     batch's novel line keys and the verified state — with NOTHING
     written, so each caller controls its own crash-safety write order.
-    ``marked`` is eagerly ``localCheckpoint``-ed: the flags are pinned
-    against whatever state appends happen next and never lazily
-    re-read the state.
+    ``marked`` derives from the pinned frame of
+    :meth:`kolang_spark.sources.state.BoundState.flag_new`.
 
     ``exclude_batch`` is the streaming sink's replay guard
     (:meth:`kolang_spark.sources.state.BoundState.read`). A crashed
     replay can legitimately append the same keys twice; the probe
-    (:meth:`kolang_spark.sources.state.BoundState.seen`) emits one
-    row per batch line whatever the state holds, so duplicate state
-    rows cannot inflate ``n_removed``.
+    emits one row per batch line whatever the state holds, so
+    duplicate state rows cannot inflate ``n_removed``.
     """
     keyed = _keyed_lines(new_df, id_col, text_col, delim)
     store = _LINE_STATE.bind(spark, state_path, delim)
     store.verify()
-    pre = store.seen(keyed, {"_key": "line_key"}, exclude_batch)
-    w = Window.partitionBy("_key").orderBy("_id", "_pos")
     marked = (
-        pre.withColumn("_rn", F.row_number().over(w))
-        .withColumn(
-            "_keep",
-            F.col("_ws") | ((F.col("_rn") == 1) & ~F.col("__seen__")),
+        store.flag_new(
+            keyed, {"_key": "line_key"}, ["_id", "_pos"], exclude_batch=exclude_batch
         )
-        .drop("__seen__", "_rn")
+        .withColumn("_keep", F.col("_ws") | F.col("__new__"))
+        .drop("__new__")
     )
-    # pin flags BEFORE any state append: the caller's writes and its
-    # first action on the returned frames must agree, and the frames
-    # must not lazily re-read state an append is about to grow
-    marked = marked.localCheckpoint(eager=True)
-    # a kept non-whitespace line is its key's _rn == 1: one row per key
+    # a kept non-whitespace line is its key's first: one row per key
     novel = marked.where(F.col("_keep") & ~F.col("_ws")).select(
         F.col("_key").alias("line_key")
     )
@@ -1471,18 +1461,11 @@ def incremental_exact_dedup(
 
     Scale shape: the state table holds ONE md5 row per distinct
     document ever accepted (~16 bytes + overhead vs the full text);
-    the membership check is one ExistenceJoin on the fingerprint
-    (:meth:`kolang_spark.sources.state.BoundState.seen`) with the state
-    as the build side — broadcast while it is under
-    ``spark.sql.autoBroadcastJoinThreshold``, shuffled (sort-merge)
-    above it.
-
-    The returned frame is eagerly ``localCheckpoint``-ed: the flags
-    feed both the state append and the caller's first action, which
-    would otherwise each re-run the batch scan + state probe + window.
-    This trades one batch-sized write to executor-local storage for
-    the recompute — the batch is the small side by definition (the
-    state is what's billion-row).
+    the flags come from the state protocol's one flag step
+    (:meth:`kolang_spark.sources.state.BoundState.flag_new`, keyed by
+    the fingerprint, first by ``id_col``), which probes the state and
+    pins the flagged batch before the append, so the returned frame is
+    pinned too.
 
     All state file management routes through the Hadoop
     ``FileSystem`` API (:func:`kolang_spark.sources.io.path_exists`
@@ -1495,21 +1478,10 @@ def incremental_exact_dedup(
     store = _EXACT_STATE.bind(spark, state_path)
     store.verify()
     batch = new_df.withColumn("fingerprint", doc_fingerprint(text_col))
-    pre = store.seen(batch, {"fingerprint": "fingerprint"})
-    w = Window.partitionBy("fingerprint").orderBy(id_col)
-    marked = (
-        pre.withColumn("__rn__", F.row_number().over(w))
-        .withColumn("is_duplicate", F.col("__seen__") | (F.col("__rn__") > 1))
-        .drop("__seen__", "__rn__")
-    )
-    # pin the flagged batch once: it feeds the novel-state write below
-    # AND the caller's first action, which would otherwise each re-run
-    # the batch scan + state probe + window
-    marked = marked.localCheckpoint(eager=True)
-    # a novel row is its fingerprint's __rn__ == 1: one row per key
-    novel = marked.where(~F.col("is_duplicate")).select("fingerprint")
-    store.append(novel)
-    return marked
+    flagged = store.flag_new(batch, {"fingerprint": "fingerprint"}, [id_col])
+    # one novel row per fingerprint: only its first row is __new__
+    store.append(flagged.where(F.col("__new__")).select("fingerprint"))
+    return flagged.withColumn("is_duplicate", ~F.col("__new__")).drop("__new__")
 
 
 # the keys are unparameterized md5 document fingerprints (deliberately
@@ -1627,9 +1599,9 @@ def incremental_embedding_dedup(
     matters. Malformed embeddings (NULL, short, or containing NULL
     elements) are always accepted and never persisted.
 
-    Scale shape: identical to the MinHash variant — one ExistenceJoin
-    probe on (band_id, band_key) against state, one band-partitioned
-    window; state grows by ``bands`` rows per accepted vector;
+    Scale shape: identical to the MinHash variant — one flag step
+    (:meth:`kolang_spark.sources.state.BoundState.flag_new`) over the
+    batch's bands; state grows by ``bands`` rows per accepted vector;
     ``state_path`` may be an object-store URI (Hadoop FS probes).
 
     The state's construction params ``{dims, planes_per_band, bands}``
@@ -1879,11 +1851,11 @@ def incremental_minhash_dedup(
     S-curve's selectivity; chain a Jaccard verify on the flagged subset
     when precision matters more than a second look at the text.
 
-    Scale shape: one ExistenceJoin probe on (band_id, band_key)
-    against state, with the state as the build side (broadcast when
-    small, shuffled above the broadcast threshold), and one
-    band-partitioned window for the within-batch rule. State grows by
-    ``bands`` rows per accepted doc; compact it periodically with
+    Scale shape: the per-band flags come from the state protocol's
+    flag step (:meth:`kolang_spark.sources.state.BoundState.flag_new`,
+    keyed by ``(band_id, band_key)``, every doc tied at the smallest id
+    first) over the batch's bands only. State grows by ``bands`` rows
+    per accepted doc; compact it periodically with
     :func:`kolang_spark.sources.io.compact_parquet`. The state probe
     routes through the Hadoop ``FileSystem`` API, so ``state_path``
     may be an object-store URI (``s3a://``/``hdfs://``/``abfs://``).
@@ -2081,31 +2053,19 @@ def _incremental_banded_flagged(
     sinks' replay guard
     (:meth:`kolang_spark.sources.state.BoundState.read`)."""
     flag_col = "is_near_duplicate"
-    # ONE eager pin per batch (r13; was two): the band-level frame
-    # enriched with the state hit + within-batch first-wins columns is
-    # materialized once — banding (the dominant per-row cost), the
-    # state probe and the band window all run exactly once per
-    # batch, and the flags stay pinned against the caller's state
-    # appends (they derive deterministically from this checkpoint, no
-    # lazy state re-read). The per-doc flag groupBy is re-derived by
-    # each downstream action, but over the pinned ≤bands-rows-per-doc
-    # frame that costs microseconds — where the second eager pin cost
-    # a whole extra job/barrier per micro-batch (trigger latency at
-    # second-scale intervals; one more cluster-wide sync at 100 TB).
-    w = Window.partitionBy("band_id", "band_key").orderBy("id")
-    enriched = (
-        store.seen(
-            banded, {"band_id": "band_id", "band_key": "band_key"}, exclude_batch
-        )
-        .withColumn("__first__", F.min("id").over(w))
-        .localCheckpoint(eager=True)
+    # a band is new when unseen and no smaller id shares it (NULL ids
+    # sort last, so one never beats a real id); the per-doc flag is
+    # re-derived by each action over the pinned ≤bands-rows-per-doc
+    # frame, which costs less than a second eager pin
+    enriched = store.flag_new(
+        banded,
+        {"band_id": "band_id", "band_key": "band_key"},
+        [F.col("id").asc_nulls_last()],
+        ties_first=True,
+        exclude_batch=exclude_batch,
     )
     flags = enriched.groupBy("id").agg(
-        (
-            F.max(F.col("__seen__").cast("int"))
-            + F.max((F.col("__first__") < F.col("id")).cast("int"))
-            > 0
-        ).alias(flag_col)
+        (~F.bool_and("__new__")).alias(flag_col)
     )
     # sentinel join-key name: a bare drop("id") would also remove the
     # caller's column when id_col == "id"
@@ -2116,11 +2076,10 @@ def _incremental_banded_flagged(
         flag_col,
         F.coalesce(flag_col, F.lit(False)),
     )
-    # no distinct (r13): accepted docs' band keys are unique BY
-    # CONSTRUCTION — if two batch docs share (band_id, band_key), the
-    # window's first-wins rule flags every one but the min id, so at
-    # most one accepted doc ever emits a given key. A distinct here
-    # re-proved that at the price of one more exchange per batch.
+    # no distinct: with unique ids only the min id keeps a shared band,
+    # so each key is appended once. A repeated id ties for first and a
+    # NULL id never meets the anti join, so both append a key again;
+    # the probe is an EXISTS, so a doubled state key changes no flag
     novel = enriched.join(
         flags.where(F.col(flag_col)).select("id"), "id", "left_anti"
     ).select("band_id", "band_key")
@@ -2258,21 +2217,20 @@ def incremental_cdc_ingest(
     by ``(id, chunk_idx)``).
 
     Same crash contract as the other incremental operators: per-chunk
-    flags are pinned (eager ``localCheckpoint``) BEFORE the state
-    append, the append happens before return, and the state probe
-    routes through the Hadoop ``FileSystem`` API (``state_path`` may
-    be an object-store URI); a crashed-and-replayed batch can
-    duplicate output, never lose state, and duplicate appends are
-    harmless (the probe emits one row per chunk however many state
-    rows match).
+    flags are pinned BEFORE the state append, the append happens
+    before return, and the state probe routes through the Hadoop
+    ``FileSystem`` API (``state_path`` may be an object-store URI); a
+    crashed-and-replayed batch can duplicate output, never lose state,
+    and duplicate appends are harmless (the probe emits one row per
+    chunk however many state rows match).
 
-    Scale shape: the state probe is one ExistenceJoin on the 32-char
-    key with the state as the build side — broadcast when small,
-    shuffled above the broadcast threshold (stored chunk CONTENT is
-    never rescanned); the within-batch first-wins window partitions
-    by chunk hash over batch chunks only. Returns one row per input
-    document: ``(id_col, n_chunks, n_novel_chunks, total_bytes,
-    novel_bytes, dup_bytes)``; empty documents get all zeros.
+    Scale shape: the per-chunk flags come from the state protocol's
+    flag step (:meth:`kolang_spark.sources.state.BoundState.flag_new`,
+    keyed by the 32-char chunk hash, first by ``(id, chunk_idx)``)
+    over batch chunks only — stored chunk CONTENT is never rescanned.
+    Returns one row per input document: ``(id_col, n_chunks,
+    n_novel_chunks, total_bytes, novel_bytes, dup_bytes)``; empty
+    documents get all zeros.
 
     The store's construction params ``{window, mask_bits, base, mod}``
     are pinned by the ``_ks_state.json`` sidecar (r12): chunk
@@ -2284,20 +2242,10 @@ def incremental_cdc_ingest(
     store = _CDC_STATE.bind(spark, state_path, window, mask_bits, base, mod)
     store.verify()
     chunks = cdc_chunks(new_df, id_col, text_col, window, mask_bits, base, mod)
-    pre = store.seen(chunks, {"chunk_hash": "chunk_key"})
-    w = Window.partitionBy("chunk_hash").orderBy(
-        F.col(id_col), F.col("chunk_idx")
-    )
-    marked = (
-        pre.withColumn("__rn__", F.row_number().over(w))
-        .withColumn(
-            "is_novel",
-            (F.col("__rn__") == 1) & ~F.col("__seen__"),
-        )
-        .drop("__seen__", "__rn__")
-        .localCheckpoint(eager=True)
-    )
-    # rn==1 makes novel rows unique per chunk_hash by construction
+    marked = store.flag_new(
+        chunks, {"chunk_hash": "chunk_key"}, [id_col, "chunk_idx"]
+    ).withColumnRenamed("__new__", "is_novel")
+    # only a chunk hash's first row is novel: one row per key
     store.append(
         marked.where(F.col("is_novel")).select(
             F.col("chunk_hash").alias("chunk_key"),

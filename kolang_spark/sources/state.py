@@ -38,8 +38,11 @@ every call runs the same sequence through :meth:`StateSpec.bind`:
    state "have you seen these keys?" — a non-null ``__seen__`` per
    batch row, from one ExistenceJoin against the read (no join at all
    while nothing is persisted).
-4. **flag**: the operator's own algebra over ``__seen__``, pinned by
-   one eager ``localCheckpoint`` before anything is written.
+4. **flag** (:meth:`BoundState.flag_new`): a non-null ``__new__`` per
+   batch row — not seen, and first by the kind's order among the batch
+   rows that share its key — pinned by the one eager
+   ``localCheckpoint`` before anything is written. The operator only
+   maps ``__new__`` to its own flag or counts.
 5. **append** (:meth:`BoundState.append`): optional int64 ``batch_id``
    stamp, the parquet write, then the fast pin
    (:func:`ensure_state_pinned`) that stamps a state this call created.
@@ -77,9 +80,9 @@ import json
 import operator
 from dataclasses import dataclass
 from functools import reduce
-from typing import Any, Callable, Mapping, Optional
+from typing import Any, Callable, Mapping, Optional, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -328,7 +331,8 @@ class StateSpec:
 @dataclass(frozen=True)
 class BoundState:
     """A :class:`StateSpec` bound to one state dir and one call's
-    params: the verify / read / probe / append steps of the protocol."""
+    params: the verify / read / probe / flag / append steps of the
+    protocol."""
 
     spec: StateSpec
     spark: Any
@@ -425,6 +429,36 @@ class BoundState:
             operator.and_, [F.col(s) == F.col(b).outer() for s, b in zip(sk, bk)]
         )
         return probe.withColumn("__seen__", state.where(match).exists()).drop(*bk)
+
+    def flag_new(
+        self,
+        rows: DataFrame,
+        keys: Mapping[str, str],
+        order: Sequence,
+        ties_first: bool = False,
+        exclude_batch: Optional[int] = None,
+    ) -> DataFrame:
+        """``rows`` plus a non-null boolean ``__new__``: true when the
+        row's ``keys`` (batch column → state column) are not in the
+        state (:meth:`seen`) and the row comes first by ``order`` among
+        the batch rows that share them. First is ``row_number() == 1``,
+        so one copy of a tied row wins; with ``ties_first`` it is
+        ``rank() == 1``, so every row tied for first does.
+
+        The result is pinned by one eager ``localCheckpoint``: the
+        flags feed both the caller's output and its state append, and
+        must neither re-run the batch, probe and window for each nor
+        lazily re-read a state an append is about to grow. The batch is
+        the small side by definition, so the pin costs one batch-sized
+        write to executor-local storage."""
+        w = Window.partitionBy(*keys).orderBy(*order)
+        first = (F.rank() if ties_first else F.row_number()).over(w) == 1
+        return (
+            self.seen(rows, keys, exclude_batch)
+            .withColumn("__new__", first & ~F.col("__seen__"))
+            .drop("__seen__")
+            .localCheckpoint(eager=True)
+        )
 
     def append(self, df: DataFrame, batch_id: Optional[int] = None) -> None:
         """Write ``df`` (stamped with ``batch_id`` when given), then the

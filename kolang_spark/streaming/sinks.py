@@ -71,7 +71,7 @@ def _dedup_sink(
     """The crash-safe batch sequence shared by the dedup sinks, in
     write ORDER: (1) ``flagged(batch_df, batch_id)`` → ``(marked,
     novel, store)`` computes flags against the pre-batch state and
-    pins them (its eager ``localCheckpoint``), ignoring state rows
+    pins them (:meth:`BoundState.flag_new`), ignoring state rows
     stamped with this ``batch_id`` — stable across restart replays —
     so a replay recomputes IDENTICAL flags in every crash window;
     (2) ``output(batch_df, marked)`` appends to ``output_path``;

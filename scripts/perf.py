@@ -11,7 +11,8 @@ default ``--sf``) and reads its counters through
                            bytes, spill, exchanges over every job, and
                            the returned frame's exchange / Python-node /
                            non-codegen-node counts per query
-  plans q... [--repo P]    explain("formatted") of each query
+  plans q... [--repo P]    explain("formatted") of each query, masked so
+                           two checkouts' dumps diff with plain diff
   ab q... --before P       fresh-JVM A/B of checkout P against this one,
                            with untouched control queries and canaries
   sweep q... --copies 1,4  registry queries over a disjoint xN replica
@@ -241,13 +242,30 @@ def cmd_profile(spark, a) -> dict:
     return _emit(rec, a.out)
 
 
+def mask_plan(plan: str, repo: str) -> str:
+    """``plan`` with what differs between two checkouts' runs of one
+    query masked: expression ids (``#12`` → ``#N``), ``plan_id=``
+    numbers, the RDD ids a pinned frame's scan names (``RDD[212]`` →
+    ``RDD[N]``; they count every RDD earlier work in the JVM made), and
+    the checkout path ``repo`` (→ ``<repo>``)."""
+    for path in {os.path.realpath(repo), os.path.abspath(repo)}:
+        plan = plan.replace(path, "<repo>")
+    for pattern, mask in ((r"#\d+", "#N"), (r"plan_id=\d+", "plan_id=N"),
+                          (r"RDD\[\d+\]", "RDD[N]")):
+        plan = re.sub(pattern, mask, plan)
+    return plan
+
+
 def cmd_plans(spark, a) -> dict:
     qs = _registry(a.repo)
     plans = {}
     for name in _pick(qs, a.queries, a.all):
         df = qs[name](spark, a.sf)
-        plan = plans[name] = spark._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
+        plan = plans[name] = mask_plan(
+            spark._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            ),
+            a.repo,
         )
         if a.out:
             os.makedirs(a.out, exist_ok=True)
@@ -539,8 +557,16 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p = add("profile", "per-query time, jobs, stages, bytes and plan nodes", 3)
     p.add_argument("--all", action="store_true", help="every registry query")
     p.add_argument("--repo", default=ROOT, help="checkout whose registry runs")
-    p = add("plans", 'explain("formatted") per query',
+    p = add("plans", 'explain("formatted") per query, masked',
             out="write <out>/<query>_<suffix>.txt instead of printing")
+    p.description = (
+        "Expression ids, plan_id= numbers, RDD ids and the --repo path are "
+        "masked, so two checkouts' dumps diff with plain diff. One known "
+        "false diff: the distinct-aggregate rewrite orders profile_orders' "
+        "Expand/HashAggregate grouping columns by how many expressions "
+        "earlier queries created in the same JVM, so dump profile_orders on "
+        "its own before reading a diff there as real."
+    )
     p.add_argument("--all", action="store_true", help="every registry query")
     p.add_argument("--repo", default=ROOT, help="checkout whose registry is explained")
     p.add_argument("--suffix", default="after", help="file name suffix under --out")

@@ -4,6 +4,7 @@ subprocess JVM is started here)."""
 
 import importlib.util
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -161,6 +162,34 @@ def test_profile_names_jobs_outside_sql_executions(spark, perf, sf_dir):
     q = perf.measure(spark, perf.SparkStats(spark), fn, sf_dir, 1)
     assert q["job_sites"][perf.NO_EXECUTION] == 1
     assert sum(q["job_sites"].values()) == q["jobs"] == q["jobs_by_rep"][0]
+
+
+def test_plans_mask_ids_and_checkout_path(spark, perf, tmp_path, monkeypatch):
+    """Two checkouts' dumps of one query diff clean: expression ids,
+    ``plan_id=`` numbers, RDD ids and the ``--repo`` path are masked."""
+    assert perf.mask_plan(
+        "Project [a#12, b#3L] plan_id=45 /r/x MapPartitionsRDD[212] at", "/r"
+    ) == "Project [a#N, b#NL] plan_id=N <repo>/x MapPartitionsRDD[N] at"
+    dumps = []
+    for side in ("before", "after"):
+        repo = tmp_path / side
+        spark.range(10).write.parquet(str(repo / "t"))
+
+        def q(spark, sf, repo=repo):
+            return spark.read.parquet(str(repo / "t")).groupBy(
+                (F.col("id") % 3).alias("k")
+            ).count()
+
+        monkeypatch.setattr(perf, "_registry", lambda _: {"q": q})
+        a = perf.parse_args(
+            ["plans", "q", "--repo", str(repo), "--out", str(tmp_path / "plans"),
+             "--suffix", side]
+        )
+        perf.cmd_plans(spark, a)
+        dumps.append((tmp_path / "plans" / f"q_{side}.txt").read_text())
+    assert dumps[0] == dumps[1]
+    assert "#N" in dumps[0] and "<repo>/t" in dumps[0]
+    assert not re.search(r"#\d", dumps[0]) and str(tmp_path) not in dumps[0]
 
 
 @pytest.mark.parametrize(

@@ -142,21 +142,58 @@ def test_one_arrow_row_boundary_call_site():
 
 
 def test_one_state_probe_call_site():
-    """Every incremental dedup kind asks its state "seen?" through
-    ``BoundState.seen``: ``llm/dedup.py`` holds no state ``.read(``
-    call of its own, so no hand-written join (and no whole-state
-    ``distinct()``) can probe a state read."""
+    """Every incremental dedup kind flags its batch through
+    ``BoundState.flag_new``, the one caller of ``BoundState.seen``:
+    ``llm/dedup.py`` holds no state ``.read(`` or ``store.seen(`` call,
+    and its incremental kinds pin nothing and open no window of their
+    own, so the probe, the first-wins rule and the pin before the state
+    append are written once."""
+    import ast
     import inspect
     import pathlib
 
+    import kolang_spark
     from kolang_spark.llm import dedup
     from kolang_spark.sources.state import BoundState
 
     src = pathlib.Path(dedup.__file__).read_text()
     assert not re.findall(r"\.read\(", src)
-    assert len(re.findall(r"\bstore\.seen\(", src)) == 4  # banded covers two kinds
+    assert not re.findall(r"\bstore\.seen\(", src)
+    incremental = [
+        fn
+        for fn in ast.parse(src).body
+        if isinstance(fn, ast.FunctionDef) and "incremental" in fn.name
+    ]
+    assert len(incremental) == 9
+    for fn in incremental:
+        for node in ast.walk(fn):
+            assert not (
+                isinstance(node, ast.Attribute)
+                and node.attr in ("localCheckpoint", "over")
+            ), f"{fn.name}: .{node.attr}"
+            assert not (isinstance(node, ast.Name) and node.id == "Window"), fn.name
+
+    def defs(body, prefix):
+        for node in body:
+            if isinstance(node, ast.ClassDef):
+                yield from defs(node.body, f"{prefix}{node.name}.")
+            elif isinstance(node, ast.FunctionDef):
+                yield f"{prefix}{node.name}", node
+
+    root = pathlib.Path(kolang_spark.__file__).parent
+    callers = [
+        name
+        for path in sorted(root.rglob("*.py"))
+        for name, fn in defs(ast.parse(path.read_text()).body, f"{path.stem}.")
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "seen"
+    ]
+    assert callers == ["state.BoundState.flag_new"], callers
     seen = inspect.getsource(BoundState.seen)
     assert "self.read(" in seen and ".exists()" in seen
+    assert ".localCheckpoint(eager=True)" in inspect.getsource(BoundState.flag_new)
 
 
 def test_one_cosine_ranking_core():

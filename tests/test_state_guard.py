@@ -346,12 +346,19 @@ def test_replay_doubled_state_changes_no_flag_or_count(spark, tmp_path, kind):
     assert summary(outs[1]) == expect
 
 
+_DUPS = [(1, TEXT), (2, TEXT), (3, _OTHER), (4, TEXT)]
+_BANDS = ("band_id", "band_key")
+
+
 @pytest.mark.parametrize(
     "kind, key, batch, n_keys",
     [
-        ("exact", "fingerprint", [(1, TEXT), (2, TEXT), (3, _OTHER), (4, TEXT)], 2),
+        ("exact", "fingerprint", _DUPS, 2),
         ("lines", "line_key",
          [(1, "alpha\nshared"), (2, "shared\nbeta"), (3, "alpha\nalpha")], 3),
+        ("cdc", "chunk_key", _DUPS, 2),  # each text is one chunk
+        ("minhash", _BANDS, _DUPS, 6),  # 3 bands per accepted doc
+        ("embedding", _BANDS, [(1, _VA), (2, _VA), (3, _VC), (4, _VA)], 4),
     ],
 )
 def test_in_batch_duplicates_append_one_state_row_per_key(
@@ -361,11 +368,85 @@ def test_in_batch_duplicates_append_one_state_row_per_key(
     batch holding its own duplicates appends exactly one state row per
     key, with no distinct() before the append."""
     state = str(tmp_path / "state")
-    _probe_ops()[kind](
-        spark, spark.createDataFrame(batch, "doc_id long, text string"), state
-    ).collect()
-    keys = [r[key] for r in spark.read.parquet(state).select(key).collect()]
+    schema = PROBE_KINDS[kind][0]
+    _probe_ops()[kind](spark, spark.createDataFrame(batch, schema), state).collect()
+    key = [key] if isinstance(key, str) else list(key)
+    keys = [tuple(r) for r in spark.read.parquet(state).select(*key).collect()]
     assert len(keys) == len(set(keys)) == n_keys
+
+
+_NEW = "entirely fresh wording that neither earlier batch ever carried"
+_VD = [-1.0, 2.0, -3.0, 4.0, -5.0, 6.0, -7.0, 8.0]
+
+# per kind: a batch 2 (after PROBE_KINDS's batch 1) holding a NULL id
+# and a repeated id, its output rows sorted by repr, and the state rows
+# it appends as (rows, distinct keys). A NULL id sorts FIRST in the
+# keyed kinds' first-wins order (doc 4 loses to it) and never wins in
+# the banded kinds' (doc 4 keeps its flag); a NULL-id document is never
+# flagged by the banded kinds and reads all zeros in the CDC report
+NULL_REPEAT_KINDS = {
+    "exact": (
+        [(None, TEXT), (None, _NEW), (4, _NEW), (2, _OTHER), (2, _OTHER)],
+        ("doc_id", "is_duplicate"),
+        [(2, False), (2, True), (4, True), (None, False), (None, True)],
+        (2, 2),
+    ),
+    "lines": (
+        [(None, "shared line\nnew a"), (4, "new a\nnew b"), (2, "x\ny"),
+         (2, "x\nz")],
+        ("doc_id", "text_deduped", "n_kept", "n_removed"),
+        [(2, "x\ny\nz", 3, 1), (4, "new b", 1, 1), (None, "new a", 1, 1)],
+        (5, 5),
+    ),
+    "cdc": (
+        [(None, _NEW), (4, _NEW), (2, _OTHER), (2, _OTHER), (5, TEXT)],
+        ("doc_id", "n_chunks", "n_novel_chunks", "total_bytes",
+         "novel_bytes", "dup_bytes"),
+        [(2, 2, 1, 2 * len(_OTHER), len(_OTHER), len(_OTHER)),
+         (4, 1, 0, len(_NEW), 0, len(_NEW)),
+         (5, 1, 0, len(TEXT), 0, len(TEXT)),
+         (None, 0, 0, 0, 0, 0)],
+        (2, 2),
+    ),
+    # every accepted document appends its bands, so the NULL-id doc and
+    # doc 4 (one text) append the same keys twice, as do the id-2 docs
+    "minhash": (
+        [(None, _NEW), (4, _NEW), (2, _OTHER), (2, _OTHER), (5, TEXT)],
+        ("doc_id", "is_near_duplicate"),
+        [(2, False), (2, False), (4, False), (5, True), (None, False)],
+        (12, 6),
+    ),
+    "embedding": (
+        [(None, _VD), (4, _VD), (2, _VC), (2, _VC), (5, _VA)],
+        ("vec_id", "is_near_duplicate"),
+        [(2, False), (2, False), (4, False), (5, True), (None, False)],
+        (8, 4),
+    ),
+}
+
+
+@pytest.mark.parametrize("kind", list(PROBE_KINDS))
+def test_null_and_repeated_ids_flag_and_append(spark, tmp_path, kind):
+    """The first-wins rule of each kind over a batch with a NULL id and
+    a repeated id: its flags or counts, and the state rows it appends."""
+    schema, b1 = PROBE_KINDS[kind][:2]
+    batch, cols, expect, appended = NULL_REPEAT_KINDS[kind]
+    op = _probe_ops()[kind]
+    state = str(tmp_path / "state")
+
+    def sizes():
+        rows = spark.read.parquet(state)
+        key = [c for c in rows.columns if c not in ("batch_id", "hash_fn", "n_bytes")]
+        return rows.count(), rows.select(*key).distinct().count()
+
+    op(spark, spark.createDataFrame(b1, schema), state).collect()
+    n0, k0 = sizes()
+    out = op(spark, spark.createDataFrame(batch, schema), state)
+    got = sorted((tuple(r) for r in out.select(*cols).collect()), key=repr)
+    assert got == expect
+    n1, k1 = sizes()
+    # appended keys are novel, so the distinct count grows by theirs
+    assert (n1 - n0, k1 - k0) == appended
 
 
 def test_minhash_r11_twin_sidecar_migrates(spark, tmp_path):
