@@ -518,11 +518,13 @@ def _q_url_domain_stats(spark, sf_dir):
 def _q_profile_orders(spark, sf_dir):
     """One-pass table profile
     (`kolang_spark/operators/profile.py::profile_table`): per-column
-    count/null/distinct/min/max over orders in a single aggregation job
-    (map-side combinable; stack reshape is metadata work on the 1-row
-    result). exact_distinct=True here for oracle parity; the default is
-    the HLL path at scale. Doubles excluded (engine float-formatting
-    differs; the numeric profile is exercised via bigint columns)."""
+    count/null/distinct/min/max over orders. exact_distinct=True here
+    for oracle parity: one codegen HashAggregate deduplicates
+    (column, value) pairs map-side, a keyless fold reads every metric
+    off the distinct rows (no Expand, no Sort), and the stack reshape
+    is metadata work on the 1-row result; the default is the HLL path
+    at scale. Doubles excluded (engine float-formatting differs; the
+    numeric profile is exercised via bigint columns)."""
     from kolang_spark.operators import profile_table
 
     od = _t(spark, sf_dir, "orders")

@@ -922,11 +922,14 @@ def dedup_lines_global(
     line was removed, or whose text is NULL, comes back as ``''``
     (NULL text: ``('', 0, 0)``).
 
-    Scale shape: one map-side-combinable ``min(struct(id, pos))`` per
-    line key, one equi-join of lines against keepers on the key, one
-    groupBy(doc) re-assembly — two shuffles total, no window over
-    data, no driver collect. The per-doc ``collect_list`` is bounded
-    by the document's own line count (already one row's payload).
+    Scale shape: one ``min(struct(id, pos))`` per line key, combined
+    map-side; a struct is not a fixed-width aggregation buffer, so
+    Spark plans it as Sort → SortAggregate on ``_key``, not as a
+    codegen HashAggregate. Then one equi-join of lines against keepers
+    on the key and one groupBy(doc) re-assembly — two shuffles total,
+    no window over data, no driver collect. The per-doc
+    ``collect_list`` is bounded by the document's own line count
+    (already one row's payload).
     """
     keyed = _keyed_lines(df, id_col, text_col, delim)
     keeper = (

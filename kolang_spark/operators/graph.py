@@ -280,8 +280,10 @@ def label_propagation(
     aggregates: the real-neighbor count per (node, label) — a self row
     counts 0, so it never outvotes a neighbor and is the only group of
     a self-loop-only node — then min(struct(-count, label)) per node,
-    the argmax-with-min-tiebreak with NO window (a row_number window
-    would sort every partition). Round 1 joins nothing (label_0[u] =
+    the argmax-with-min-tiebreak with no window. A struct is not a
+    fixed-width aggregation buffer, so Spark plans that second
+    aggregate as Sort → SortAggregate: a sort of the per-(node, label)
+    counts, not of the edge rows. Round 1 joins nothing (label_0[u] =
     u). The label frame (|V| rows) is pinned per round so the plan
     stays O(1) deep; pins the returned frame no longer reads are
     released as in :func:`pagerank`. ``broadcast_labels=True``

@@ -2,17 +2,28 @@
 min / max — the data-quality sweep run before pointing a training
 pipeline at a new source.
 
-Scale shape: ONE aggregation job for the whole profile. Every metric is
-an aggregate expression in a single ``agg`` (count and min/max combine
-map-side; with ``exact_distinct=False`` — the 100 TB default posture —
-distinct uses HyperLogLog++ sketches, also map-side mergeable, so the
-shuffle carries one partial-agg row per partition regardless of table
-width). The wide single-row result is reshaped to one row per column
-with ``stack`` — driver-side metadata work, no second pass over data.
+Scale shape: both paths end in ONE keyless aggregate (the fold) whose
+single wide row is reshaped to one row per column with ``stack`` —
+driver-side metadata work, no second pass over data. With
+``exact_distinct=False`` — the 100 TB default posture — the fold runs
+over the input itself: count and min/max combine map-side and distinct
+uses HyperLogLog++ sketches, also map-side mergeable, so the shuffle
+carries one partial-agg row per partition regardless of table width.
 
-``exact_distinct=True`` switches to ``count(DISTINCT col)`` per column:
-engine-exact (DuckDB-oracle-comparable) but each distinct adds an
-``Expand`` duplication of the scan rows — use at validation scale.
+``exact_distinct=True`` (engine-exact, DuckDB-oracle-comparable) first
+deduplicates: one ``stack`` turns each input row into one row per
+profiled column ``i`` (``__g__ = i``, slot ``i`` holds the value, every
+other slot a typed NULL) and one ``groupBy(__g__, slots)`` counts them.
+That keyed aggregate's buffers are fixed-width (the count; min/max of
+float slots), so Spark plans a codegen ``HashAggregate`` with map-side
+combine, and strings, dates and structs travel as keys, never as
+buffers. The fold
+then reads each column's count, nulls, distinct values and min/max off
+the deduplicated rows. A keyless aggregate needs no sort whatever its
+buffer types, so the plan has no ``Expand`` and no ``Sort`` — Spark's
+own rewrite of one ``count(DISTINCT)`` per column expands every row
+once per column plus once, and string min/max turn each keyed aggregate
+above that ``Expand`` into ``Sort → SortAggregate``.
 """
 
 from __future__ import annotations
@@ -21,6 +32,13 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    DoubleType,
+    FloatType,
+    StructType,
+)
 
 __all__ = ["profile_table", "join_key_profile", "psi_drift"]
 
@@ -36,7 +54,9 @@ def profile_table(
     Returns one row per column: ``(column, n_rows, n_null, n_distinct,
     min_value, max_value)`` with min/max rendered as strings (profiles
     mix types; casting to a common surface keeps the output one frame).
-    NULLs don't count toward ``n_distinct`` (Spark and ANSI semantics).
+    NULLs don't count toward ``n_distinct`` (Spark and ANSI semantics);
+    ``-0.0`` and ``0.0`` are one distinct value, and so are all NaNs.
+    A column listed twice raises ``ValueError``.
     """
     cols = list(columns) if columns is not None else list(df.columns)
     missing = set(cols) - set(df.columns)
@@ -44,37 +64,115 @@ def profile_table(
         raise ValueError(f"unknown columns: {sorted(missing)}")
     if not cols:
         raise ValueError("no columns to profile")
-    # names flow into the stack() SQL string below — a quote/backtick
-    # would silently misparse there, so fail loudly instead
+    if len(set(cols)) < len(cols):
+        raise ValueError(f"columns listed twice: {cols!r}")
+    # names flow into the SQL text below — a quote/backtick would
+    # silently misparse there, so fail loudly instead
     bad = [c for c in cols if "`" in c or "'" in c or "\n" in c]
     if bad:
         raise ValueError(
             f"column names with quotes/backticks are not supported: {bad!r}"
         )
-
-    aggs = [F.count(F.lit(1)).alias("__n__")]
-    for c in cols:
-        col = F.col(c)
-        aggs.append(F.count(F.when(col.isNull(), 1)).alias(f"__null_{c}__"))
-        aggs.append(
+    if exact_distinct:
+        src, n_rows, stats = _deduplicated(df, cols)
+    else:
+        src, n_rows = df, "count(1)"
+        stats = [
             (
-                F.count_distinct(col)
-                if exact_distinct
-                else F.approx_count_distinct(col)
-            ).alias(f"__dist_{c}__")
+                f"count(CASE WHEN `{c}` IS NULL THEN 1 END)",
+                f"approx_count_distinct(`{c}`)",
+                f"min(`{c}`)",
+                f"max(`{c}`)",
+            )
+            for c in cols
+        ]
+    return _fold(src, cols, n_rows, stats)
+
+
+def _has_float(dt: DataType) -> bool:
+    """Whether grouping on ``dt`` normalizes a float (``-0.0`` → ``0.0``)."""
+    if isinstance(dt, (FloatType, DoubleType)):
+        return True
+    if isinstance(dt, ArrayType):
+        return _has_float(dt.elementType)
+    if isinstance(dt, StructType):
+        return any(_has_float(f.dataType) for f in dt.fields)
+    return False
+
+
+def _deduplicated(df: DataFrame, cols: list[str]):
+    """The exact path's fold source — one row per distinct ``(column,
+    value)`` with its row count ``__cnt__`` — and the fold's aggregates
+    over it. Slot ``__v{i}__`` is NULL on every other column's rows
+    (``stack`` types each NULL after its column), so plain
+    ``count``/``min``/``max`` of a slot read only its column. Grouping
+    normalizes ``-0.0`` to ``0.0``, so a float slot's min/max come from
+    raw-value buffers (``__lo{i}__``/``__hi{i}__``) kept beside the
+    count, which renders ``-0.0`` as the plain aggregate does; only a
+    float nested in an array or struct makes such a buffer variable-width
+    (and that keyed aggregate sort-based). The slots and the fold's
+    aggregates are SQL text: one plan-building call each instead of one
+    per Column node."""
+    types = {f.name: f.dataType for f in df.schema.fields}
+    slots = [f"__v{i}__" for i in range(len(cols))]
+    rows = [
+        ", ".join(
+            [str(i)] + [f"`{c}`" if j == i else "NULL" for j, c in enumerate(cols)]
         )
-        aggs.append(F.min(col).cast("string").alias(f"__min_{c}__"))
-        aggs.append(F.max(col).cast("string").alias(f"__max_{c}__"))
-    one = df.agg(*aggs)
+        for i in range(len(cols))
+    ]
+    per_column = f"stack({len(cols)}, {', '.join(rows)}) AS (__g__, {', '.join(slots)})"
+    raw = [i for i, c in enumerate(cols) if _has_float(types[c])]
+    keyed = (
+        df.selectExpr(per_column)
+        .groupBy("__g__", *slots)
+        .agg(
+            F.count(F.lit(1)).alias("__cnt__"),
+            *[F.min(slots[i]).alias(f"__lo{i}__") for i in raw],
+            *[F.max(slots[i]).alias(f"__hi{i}__") for i in raw],
+        )
+    )
+    stats = []
+    for i, v in enumerate(slots):
+        lo, hi = (f"__lo{i}__", f"__hi{i}__") if i in raw else (v, v)
+        stats.append(
+            (
+                f"coalesce(sum(CASE WHEN __g__ = {i} AND {v} IS NULL"
+                " THEN __cnt__ END), 0)",
+                f"count({v})",
+                f"min({lo})",
+                f"max({hi})",
+            )
+        )
+    n_rows = "coalesce(sum(CASE WHEN __g__ = 0 THEN __cnt__ END), 0)"
+    return keyed, n_rows, stats
+
+
+def _fold(
+    src: DataFrame,
+    cols: list[str],
+    n_rows: str,
+    stats: list[tuple[str, str, str, str]],
+) -> DataFrame:
+    """One keyless aggregate of ``n_rows`` and each column's ``(n_null,
+    n_distinct, min, max)`` aggregates (SQL text) over ``src``, reshaped
+    to one row per column."""
+    aggs = [f"{n_rows} AS __n__"]
+    for i, (n_null, n_distinct, lo, hi) in enumerate(stats):
+        aggs += [
+            f"{n_null} AS __null{i}__",
+            f"{n_distinct} AS __dist{i}__",
+            f"CAST({lo} AS STRING) AS __min{i}__",
+            f"CAST({hi} AS STRING) AS __max{i}__",
+        ]
+    one = src.selectExpr(*aggs)
 
     # wide single row → long: stack is a per-row expression over the
     # 1-row aggregate result (metadata-scale work)
     stack_args = []
-    for c in cols:
+    for i, c in enumerate(cols):
         stack_args.append(f"'{c}'")
-        stack_args.extend(
-            [f"`__null_{c}__`", f"`__dist_{c}__`", f"`__min_{c}__`", f"`__max_{c}__`"]
-        )
+        stack_args += [f"__null{i}__", f"__dist{i}__", f"__min{i}__", f"__max{i}__"]
     stacked = one.select(
         F.col("__n__").alias("n_rows"),
         F.expr(

@@ -561,11 +561,7 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
             out="write <out>/<query>_<suffix>.txt instead of printing")
     p.description = (
         "Expression ids, plan_id= numbers, RDD ids and the --repo path are "
-        "masked, so two checkouts' dumps diff with plain diff. One known "
-        "false diff: the distinct-aggregate rewrite orders profile_orders' "
-        "Expand/HashAggregate grouping columns by how many expressions "
-        "earlier queries created in the same JVM, so dump profile_orders on "
-        "its own before reading a diff there as real."
+        "masked, so two checkouts' dumps diff with plain diff."
     )
     p.add_argument("--all", action="store_true", help="every registry query")
     p.add_argument("--repo", default=ROOT, help="checkout whose registry is explained")
@@ -573,7 +569,7 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p = add("ab", "fresh-JVM A/B against another checkout", 3, "+")
     p.add_argument("--before", required=True, help="checkout of the before side")
     p.add_argument("--cycles", type=int, default=3, help="A/B cycles (default %(default)s)")
-    p.add_argument("--controls", default="profile_orders,pca_embeddings",
+    p.add_argument("--controls", default="percent_by_returnflag,pca_embeddings",
                    help="comma-separated untouched control queries")
     p = add("sweep", "registry queries over disjoint xN replicas", queries="+")
     p.add_argument("--copies", type=_ints, default=[1, 4, 16])

@@ -1,5 +1,7 @@
 """Golden tests for DataFrame operators (fixtures: reference docstrings)."""
 
+import datetime
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -303,3 +305,68 @@ def test_profile_table(spark):
     assert len(sub) == 1
     with pytest.raises(ValueError):
         profile_table(df, columns=["nope"])
+
+
+def _profile_count_distinct_form(df, cols):
+    """The exact profile as one plain ``count_distinct``/``min``/``max``
+    aggregate: the reference ``profile_table(exact_distinct=True)``
+    must reproduce row for row."""
+    aggs = [F.count(F.lit(1))]
+    for c in cols:
+        aggs += [
+            F.count(F.when(F.col(c).isNull(), 1)),
+            F.count_distinct(c),
+            F.min(c).cast("string"),
+            F.max(c).cast("string"),
+        ]
+    r = df.agg(*aggs).first()
+    return [(c, r[0], *r[1 + 4 * i : 5 + 4 * i]) for i, c in enumerate(cols)]
+
+
+def test_profile_table_exact_matches_count_distinct_form(spark):
+    """``exact_distinct=True`` equals the ``count_distinct`` form on
+    NULLs, an all-NULL column, ``-0.0``/``0.0``/``NaN`` doubles, string,
+    date, timestamp, boolean and array columns, a column subset and the
+    empty frame. Grouping normalizes ``-0.0`` to ``0.0``, so ``dneg``
+    (smallest value ``-0.0``, no ``0.0``) pins the rendering ``'-0.0'``,
+    and ``arr`` (largest value ``[-0.0]``) the same inside an array.
+    ``dz`` holds only ``-0.0`` and ``0.0``, which compare equal, so its
+    min and max are the first one seen; one partition fixes that order
+    for both forms."""
+    from pyspark.errors import AnalysisException
+
+    from kolang_spark.operators import profile_table
+
+    nan = float("nan")
+    day, ts = datetime.date, datetime.datetime
+    df = spark.createDataFrame(
+        [
+            (1, "b", -0.0, -0.0, -0.0, None, day(2020, 1, 2), ts(2020, 1, 1, 5), True, [-0.0]),
+            (2, None, 0.0, 2.5, 0.0, None, None, None, False, [-1.0, 1.0]),
+            (2, "a", nan, nan, None, None, day(2019, 1, 2), ts(2021, 1, 1), None, None),
+            (None, "a", 1.5, None, 0.0, None, day(2019, 1, 2), None, True, [-0.0]),
+            (3, "", -2.0, 2.5, -0.0, None, day(2024, 2, 29), ts(1999, 12, 31), False, []),
+        ],
+        "id long, s string, d double, dneg double, dz double, z string, dt date, "
+        "ts timestamp, b boolean, arr array<double>",
+    ).coalesce(1)
+
+    def rows(frame, cols=None):
+        return [tuple(r) for r in profile_table(frame, cols, exact_distinct=True).collect()]
+
+    got = rows(df)
+    assert got == _profile_count_distinct_form(df, df.columns)
+    by_col = {r[0]: r for r in got}
+    assert by_col["dneg"][4:] == ("-0.0", "NaN")
+    assert by_col["d"][3:] == (4, "-2.0", "NaN")
+    assert by_col["dz"][2:] == (1, 1, "-0.0", "-0.0")
+    assert by_col["z"][1:] == (5, 5, 0, None, None)
+    assert by_col["arr"][4:] == ("[]", "[-0.0]")
+    sub = ["ts", "id", "dneg"]
+    assert rows(df, sub) == _profile_count_distinct_form(df, sub)
+    empty = df.limit(0)
+    assert rows(empty) == _profile_count_distinct_form(empty, df.columns)
+    assert rows(empty)[0] == ("id", 0, 0, 0, None, None)
+    # a column listed twice is refused, not profiled twice
+    with pytest.raises((ValueError, AnalysisException)):
+        profile_table(df, ["id", "s", "id"], exact_distinct=True).collect()

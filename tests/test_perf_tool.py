@@ -197,7 +197,7 @@ def test_plans_mask_ids_and_checkout_path(spark, perf, tmp_path, monkeypatch):
     [
         (["ab", "q1", "q2", "--before", "/before", "--cycles", "2"],
          {"queries": ["q1", "q2"], "before": "/before", "cycles": 2, "reps": 3,
-          "controls": "profile_orders,pca_embeddings"}),
+          "controls": "percent_by_returnflag,pca_embeddings"}),
         (["plans", "q1", "--repo", "/before", "--out", "plans", "--suffix", "before"],
          {"queries": ["q1"], "repo": "/before", "out": "plans", "suffix": "before", "all": False}),
         (["sweep", "q1", "q2", "--copies", "1,4"],

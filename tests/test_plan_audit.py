@@ -698,6 +698,30 @@ def test_repaired_r10_queries_shuffle_counts_pinned(spark):
     assert counts("target_encode_orders") == (1, 1, 0)
 
 
+def test_exact_profile_is_sort_free(spark):
+    """``profile_table(..., exact_distinct=True)`` (``profile_orders``)
+    deduplicates in one codegen HashAggregate keyed on the column slots
+    and folds the result with keyless aggregates: the executed plan has
+    no Expand, no Sort and no SortAggregate with grouping keys. The HLL
+    path stays one keyless aggregate over the scan, with no dedup step."""
+    from kolang_spark.operators import profile_table
+
+    df = QUERIES["profile_orders"](spark, SF_ORACLE)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Expand" not in plan
+    assert not re.search(r"\bSort \[", plan)
+    assert not re.search(r"SortAggregate\(key=\[[^\]]", plan)
+    assert re.search(r"\*\(\d+\) HashAggregate\(keys=\[__g__", plan)
+
+    orders = spark.read.parquet(f"{SF_ORACLE}/orders.parquet")
+    approx = profile_table(orders, ["o_orderkey", "o_orderstatus"])
+    approx.collect()
+    plan = approx._jdf.queryExecution().executedPlan().toString()
+    assert not re.search(r"Aggregate\(keys?=\[[^\]]", plan)
+    assert "Expand" not in plan and "__g__" not in plan
+
+
 # Spark jobs of one call of an iterative graph operator with a broadcast
 # rank/label table, on the graph below at GRAPH_ROUNDS rounds: the edge
 # pin, round 1 (a literal initial table, no join) and one broadcast
